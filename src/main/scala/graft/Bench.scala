@@ -122,8 +122,6 @@ object Bench {
 
   private def envSfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    math.min(32, Runtime.getRuntime.availableProcessors).toString)
 
   def f3(d: Double): String =
     java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
@@ -179,7 +177,7 @@ object Bench {
     env.put("SPARK_GRAFT_CHILD", "1")
     env.put("SPARK_GRAFT_ISOLATED", "0")
     env.put("SPARK_GRAFT_SF_DIR", envSfDir)
-    env.put("SPARK_GRAFT_CPUS", envCpus)
+    env.put("SPARK_GRAFT_CPUS", GraftSession.defaultThreads.toString)
     val p = pb.start()
     val finished = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
     if (!finished) { p.destroyForcibly(); None }
@@ -526,39 +524,8 @@ object Bench {
 
   private def sweep(): Unit = {
     val sfDir = envSfDir
-    // grading config: the driver runs this main with no overrides on a
-    // 32-cpu box -> local[32], shuffle=32 (BASELINE.md's local[4] note
-    // predates round 1's grading run; keep THIS config stable so
-    // round-over-round deltas stay comparable)
-    val cpus = envCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bench-SF input files are ~0.3-10 MB — far under the 128 MB
-      // default split, so every scan (and the partial aggregate above
-      // it) would run as ONE task and serialize the whole-stage work
-      // on a single core. 1 MB splits restore scan parallelism at
-      // this SF; at production scale files exceed the default split
-      // and this knob is moot (sized per TESTDATA, per the
-      // partitions-fit-memory sizing rule).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"))
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
-      // ContextCleaner's periodic GC defaults to 30 min — longer than
-      // the whole run, so dead shuffle files, broadcasts and released
-      // localCheckpoint blocks from early queries pile onto the tail
-      // (the q187/q185/q115 position-dependence in PLANS.md). A 60 s
-      // cadence reclaims them while the suite is still running; the
-      // per-query System.gc() below stays as the reference-dropping
-      // trigger the cleaner needs.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultThreads
+    val spark = GraftSession(cpus)
     // JVM/codegen warmup outside the timed region: exercise the code
     // paths the queries hit (scan, hash agg, broadcast + shuffle join,
     // window, sort) over the 5-row region table, so the first timed
@@ -600,14 +567,8 @@ object Bench {
         val wantBucketed =
           selected("b01_flagship_bucketed") || selected("b02_history_join_bucketed")
         if (wantBucketed) {
-          spark.sql("DROP TABLE IF EXISTS lineitem_b")
-          // the metastore is per-session but the warehouse dir persists:
-          // clear a stale location from a previous run
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir") + "/lineitem_b")
-          loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
           operators.WritePath.writeBucketed(
-            Tables.load(spark, sfDir, "lineitem"), "lineitem_b", "l_suppkey", cpus.toInt)
+            Tables.load(spark, sfDir, "lineitem"), "lineitem_b", "l_suppkey", cpus)
         }
         // b03: z-order layout read benefit — write lineitem z-ordered
         // on (l_partkey, l_suppkey) ONCE (untimed, like the bucketing
@@ -625,25 +586,18 @@ object Bench {
         // plans with ZERO exchanges (PlansSpec pins the plan; this
         // measures it against q296's unbucketed 0.35 s in-suite cost)
         if (selected("b04_asof_bucketed")) {
-          Seq("purch_b", "signup_b").foreach { t =>
-            spark.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(
-              spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-            loc.getFileSystem(spark.sessionState.newHadoopConf())
-              .delete(loc, true)
-          }
           val ev = Tables.load(spark, sfDir, "events")
             .withColumn("ms", operators.Relational.tsMs("ts"))
           operators.WritePath.writeBucketed(
             ev.filter(col("event_type") === "purchase")
               .select(col("event_id").as("purchase_id"), col("user_id"),
                 col("ms").as("p_ms")),
-            "purch_b", "user_id", cpus.toInt)
+            "purch_b", "user_id", cpus)
           operators.WritePath.writeBucketed(
             ev.filter(col("event_type") === "signup")
               .groupBy(col("user_id"), col("ms").as("s_ms"))
               .agg(max(col("event_id")).as("signup_id")),
-            "signup_b", "user_id", cpus.toInt)
+            "signup_b", "user_id", cpus)
         }
         Seq(
           "b01_flagship_bucketed" -> (() => operators.Relational.popularityCore(

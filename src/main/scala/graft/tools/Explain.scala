@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Plan auditor: dumps the formatted physical plan for selected
   * queries so pushdown / broadcast / codegen posture can be reviewed
@@ -12,19 +10,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession()
     // SPARK_GRAFT_NOAQE=1: static plans with [codegen id : N]
     // annotations (AdaptiveSparkPlan hides codegen info until runtime)
     // for WholeStageCodegen span audits
-    val spark = (if (sys.env.get("SPARK_GRAFT_NOAQE").contains("1"))
-      builder.config("spark.sql.adaptive.enabled", "false") else builder)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    if (sys.env.get("SPARK_GRAFT_NOAQE").contains("1"))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, dir).explain("formatted")

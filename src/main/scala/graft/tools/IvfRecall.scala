@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Similarity
 
 /** Recall report for the trained-IVF ANN path (VERDICT round-1 item 7):
@@ -13,14 +13,7 @@ import graft.operators.Similarity
 object IvfRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val exact = Similarity.knnBrute(spark, dir).localCheckpoint()
     // baseline: the oracle-checked label-centroid IVF (q37, nprobe=1)
     val labelRec = Similarity.ivfRecall(Similarity.knnIvf(spark, dir), exact)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Reliable-checkpoint recovery rehearsal: proves the fixpoint
@@ -29,12 +28,7 @@ object RecoveryDrill {
   private val fuseB = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4, 2]") // maxFailures=2: each task gets one retry
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(threads = 4, taskRetries = 1)
     import spark.implicits._
     val ck = java.nio.file.Files.createTempDirectory("graft-drill-ck")
     spark.sparkContext.setCheckpointDir(ck.toString)

@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Layout
 
 /** Z-order layout read audit: writes lineitem (a) z-ordered on
@@ -21,16 +20,9 @@ import graft.operators.Layout
 object ZorderAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static plans: read scan metrics without digging through AQE
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // static plans: read scan metrics without digging through AQE
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val base = java.nio.file.Files.createTempDirectory("graft-zaudit").toString
     val li = Tables.load(spark, sfDir, "lineitem")

@@ -28,6 +28,14 @@ class DupCheckSpec extends AnyFunSuite {
     }
   }
 
+  test("the registry refuses a repeated query name and an empty oracle") {
+    import SparkEntry.Query
+    val q = Query("q03_popularity", operators.Relational.popularity(_, _), "SELECT 1")
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(Seq(q, q)))
+    assert(e.getMessage.contains("q03_popularity"))
+    intercept[IllegalArgumentException](Query("q999_draft", q.build, " ").oracle)
+  }
+
   test("a seeded synthetic duplicate is caught") {
     // the exact failure mode the screen exists for: someone re-registers
     // an existing operator under a new name with cosmetic edits (alias

@@ -4,57 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.GraftExtensions
-
-/** The W2 rewrite rule: OVER () global aggregates become broadcast
-  * scalar joins — same results, no single-partition Window in the
-  * physical plan.
+/** Physical-plan shapes the operators rely on: partial top-k limits,
+  * broadcast pins, shuffle-free layouts, and the as-of join exec.
   */
 class PlansSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
-
-  private def globalMaxDf = {
-    val df = Seq((1, 10.0), (2, 30.0), (3, 20.0)).toDF("k", "v")
-    df.withColumn("mx", max($"v").over(Window.partitionBy()))
-      .withColumn("share", $"v" / $"mx")
-  }
-
-  test("rewrite preserves results and removes the Window operator") {
-    GraftExtensions.install(spark)
-    try {
-      val out = globalMaxDf
-      val plan = out.queryExecution.executedPlan.toString
-      assert(!plan.contains("Window"), s"Window survived:\n$plan")
-      assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("Broadcast"),
-        s"no broadcast join:\n$plan")
-      val rows = out.orderBy($"k").as[(Int, Double, Double, Double)].collect().toSeq
-      assert(rows === Seq((1, 10.0, 30.0, 10.0 / 30.0), (2, 30.0, 30.0, 1.0),
-        (3, 20.0, 30.0, 20.0 / 30.0)))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.RewriteGlobalMaxWindow)
-    }
-  }
-
-  test("rewrite bails out on a non-deterministic child") {
-    // duplicating a rand() subtree into both join sides would compute
-    // the max over a different sample than the joined rows — the rule
-    // must leave such plans as windows
-    GraftExtensions.install(spark)
-    try {
-      // spark.range, not a literal Seq: ConvertToLocalRelation eagerly
-      // evaluates projections (even rand) over LocalRelation, which
-      // would make the child deterministic before the rule runs
-      val df = spark.range(3).toDF("k").withColumn("v", rand(7))
-      val out = df.withColumn("mx", max($"v").over(Window.partitionBy()))
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("Window"), s"non-deterministic child was rewritten:\n$plan")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.RewriteGlobalMaxWindow)
-    }
-  }
 
   test("knn top-k plans a PARTIAL WindowGroupLimit before the shuffle") {
     // VERDICT round-1 wrong #1: the per-query top-k must not shuffle
@@ -107,22 +62,6 @@ class PlansSpec extends AnyFunSuite {
     assert(exIdx >= 0 && partialIdx >= 0 &&
       plan.substring(partialIdx).takeWhile(_ != '\n').contains("Partial"),
       s"ADC shuffle is not fed by a Partial WindowGroupLimit:\n$plan")
-  }
-
-  test("rank-family and framed windows are left alone") {
-    GraftExtensions.install(spark)
-    try {
-      val df = Seq((1, 10.0), (2, 30.0)).toDF("k", "v")
-      val out = df.withColumn("rn",
-        row_number().over(Window.partitionBy().orderBy($"v")))
-      // row_number over the global window still needs a Window operator
-      assert(out.queryExecution.executedPlan.toString.contains("Window"))
-      assert(out.orderBy($"k").as[(Int, Double, Int)].collect().toSeq
-        === Seq((1, 10.0, 1), (2, 30.0, 2)))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.RewriteGlobalMaxWindow)
-    }
   }
 
   test("globalRank equals the global window row_number, without its single partition") {

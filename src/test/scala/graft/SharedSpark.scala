@@ -2,20 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession for the whole test JVM (suites share it). */
+/** One SparkSession for the whole test JVM (suites share it). Four
+  * threads on every host, so test plans do not depend on the machine.
+  */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(threads = 4)
 }
