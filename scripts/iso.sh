@@ -9,7 +9,7 @@ MOD="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang
 TMP=$(mktemp -d /tmp/graft-iso.XXXX)
 cd "$TMP"
 SPARK_GRAFT_ONLY="$NAMES" SPARK_GRAFT_REPS="$REPS" SPARK_GRAFT_WARMUP_REPS="$WARM" \
-SPARK_GRAFT_CHILD=1 SPARK_GRAFT_ISOLATED=0 \
+SPARK_GRAFT_CHILD=1 \
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 java -Xmx${ISO_XMX:-8g} $MOD -cp "$CLS:/opt/spark/jars/*" graft.Bench 2>/dev/null \

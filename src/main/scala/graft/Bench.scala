@@ -132,8 +132,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val isChild = sys.env.get("SPARK_GRAFT_CHILD").contains("1") ||
-      sys.env.get("SPARK_GRAFT_ISOLATED").contains("0")
+    val isChild = sys.env.get("SPARK_GRAFT_CHILD").contains("1")
     val bucketed = sys.env.get("SPARK_GRAFT_BUCKETED").contains("1")
     // 8 chunks of ~70 (was 4 of ~135 — round-13 verdict item 3: the
     // late-chunk tail still carried up to ~3x within-chunk aging; at
@@ -150,8 +149,7 @@ object Bench {
 
   /** Run `graft.Bench` in a fresh JVM restricted to `names`; return the
     * child's full-fidelity bench_detail.json content. Children inherit
-    * SPARK_GRAFT_CHILD=1 (and the legacy ISOLATED=0 guard) so the
-    * recursion is structurally closed.
+    * SPARK_GRAFT_CHILD=1 so the recursion is structurally closed.
     */
   private def runChild(names: Seq[String], reps: Int, warmup: Int,
       xmx: String, timeoutSec: Long): Option[String] = try {
@@ -175,7 +173,6 @@ object Bench {
     env.put("SPARK_GRAFT_REPS", reps.toString)
     env.put("SPARK_GRAFT_WARMUP_REPS", warmup.toString)
     env.put("SPARK_GRAFT_CHILD", "1")
-    env.put("SPARK_GRAFT_ISOLATED", "0")
     env.put("SPARK_GRAFT_SF_DIR", envSfDir)
     env.put("SPARK_GRAFT_CPUS", GraftSession.defaultThreads.toString)
     val p = pb.start()
@@ -203,8 +200,7 @@ object Bench {
     * number arrays) with ONE exception: the `isolated` dict nests
     * `{median,spread}` objects, so `section(out, "isolated")` would
     * truncate at the first inner `}` — callers must not use this
-    * helper for that key (none do; the isolated readers match the
-    * nested fields with their own regexes).
+    * helper for that key (none do).
     */
   private[graft] def section(out: String, key: String): String = {
     val tag = "\"" + key + "\":"
@@ -215,6 +211,17 @@ object Bench {
     val s = i + tag.length
     val e = out.indexOf(close, s)
     if (e < 0) "" else out.substring(s + 1, e)
+  }
+
+  /** An isolated child's (median, spread) for `name`, read from its
+    * detail line's `queries` and `spread` dicts. */
+  private[graft] def isolatedStats(out: String, name: String)
+      : Option[(Double, Double)] = {
+    val q = java.util.regex.Pattern.quote(name)
+    def value(key: String): Option[Double] =
+      (s""""$q":([0-9.]+)""".r).findFirstMatchIn(section(out, key))
+        .map(_.group(1).toDouble)
+    value("queries").flatMap(m => value("spread").map(s => (m, s)))
   }
 
   /** Parse a child's detail JSON back into the in-memory result shape:
@@ -364,22 +371,7 @@ object Bench {
         n -> (if (!canaryBudgetOk || remainingS < 120) None
         else runChild(Seq(n), 5, 1,
             sys.env.getOrElse("SPARK_GRAFT_ISOLATED_XMX", "8g"),
-            math.min(300L, remainingS)) match {
-          case Some(out) =>
-            val q = java.util.regex.Pattern.quote(n)
-            def field(key: String): Option[Double] =
-              (s""""$key":\\{"$q":([0-9.]+)""".r).findFirstMatchIn(out)
-                .map(_.group(1).toDouble)
-            // the child's detail dicts hold exactly this one query, so
-            // the first value in each section is it
-            val med = (s""""$q":([0-9.]+)""".r)
-              .findFirstMatchIn(section(out, "queries")).map(_.group(1).toDouble)
-            val spr = (s""""$q":([0-9.]+)""".r)
-              .findFirstMatchIn(section(out, "spread")).map(_.group(1).toDouble)
-            (med, spr) match { case (Some(m), Some(s)) => Some((m, s))
-              case _ => field("queries").flatMap(m => field("spread").map(s => (m, s))) }
-          case None => None
-        })
+            math.min(300L, remainingS)).flatMap(isolatedStats(_, n)))
       }
     emit(results, isolated, reps, sfDir, Some((canary, hostFactor, slices.size)))
   }
@@ -627,22 +619,8 @@ object Bench {
     val extras: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
       extraSpecs.map { case (n, fn) => n -> (() => fn(spark, sfDir)) }
 
-    // SPARK_GRAFT_ORDER: measurement-hygiene knob (graded run = unset
-    // = alphabetical). "reverse" or "seed:<n>" (deterministic
-    // Fisher-Yates) re-order the suite so a query's position in the
-    // aging JVM can be separated from its cost — the PLANS.md CF-tail
-    // diagnosis tool: if the tail family's times follow its POSITION
-    // under reordering, the drift is JVM state, not code.
-    val order = sys.env.getOrElse("SPARK_GRAFT_ORDER", "alpha")
-    val standardAlpha = SparkEntry.queries.toSeq.sortBy(_._1)
-    val standardOrdered = order match {
-      case "reverse" => standardAlpha.reverse
-      case s if s.startsWith("seed:") =>
-        val rnd = new scala.util.Random(s.drop(5).toLong)
-        rnd.shuffle(standardAlpha)
-      case _ => standardAlpha
-    }
-    val standard = standardOrdered
+    // graded order: alphabetical
+    val standard = SparkEntry.queries.toSeq.sortBy(_._1)
       .map { case (n, fn) => n -> (() => fn(spark, sfDir)) }
     // median of `reps` timed passes per query: the driver grades one
     // artifact, so a late-run GC pause or shared-box hiccup must not
@@ -698,15 +676,10 @@ object Bench {
     // "this median proves nothing" re-run in FRESH single-query JVMs
     // (5 reps, same session config) and BOTH numbers ship.
     def spreadOfTs(ts: Seq[Double]): Double = ts.max - ts.min
-    val childGuard = sys.env.get("SPARK_GRAFT_ISOLATED").contains("0") ||
-      sys.env.get("SPARK_GRAFT_CHILD").contains("1")
-    // SPARK_GRAFT_ISOLATE=q1,q2 forces a specific list (diagnosis);
-    // default = auto-select the noisiest survivors of the full sweep
-    val isoCandidates = sys.env.get("SPARK_GRAFT_ISOLATE") match {
-      case _ if childGuard => Seq.empty
-      case Some(list) => list.split(",").toSeq.filter(_.nonEmpty)
-      case None if only.nonEmpty => Seq.empty
-      case None =>
+    // auto-select the noisiest survivors of a full, non-child sweep
+    val isoCandidates =
+      if (sys.env.get("SPARK_GRAFT_CHILD").contains("1") || only.nonEmpty) Seq.empty
+      else
         results.filter { case (n, m, ts, ok) =>
             n.startsWith("q") && ok && spreadOfTs(ts) > math.max(1.0, 0.3 * m) }
           .sortBy { case (_, _, ts, _) => -spreadOfTs(ts) }
@@ -715,20 +688,11 @@ object Bench {
           // medians unpinned)
           .take(sys.env.getOrElse("SPARK_GRAFT_ISOLATED_N", "8").toInt)
           .map(_._1)
-    }
     val isolated: Seq[(String, Option[(Double, Double)])] =
       isoCandidates.map { n =>
-        n -> (runChild(Seq(n), 5, 1,
-            sys.env.getOrElse("SPARK_GRAFT_ISOLATED_XMX", "8g"), 300) match {
-          case Some(out) =>
-            val q = java.util.regex.Pattern.quote(n)
-            val med = (s""""$q":([0-9.]+)""".r)
-              .findFirstMatchIn(section(out, "queries")).map(_.group(1).toDouble)
-            val spr = (s""""$q":([0-9.]+)""".r)
-              .findFirstMatchIn(section(out, "spread")).map(_.group(1).toDouble)
-            med.flatMap(m => spr.map(s => (m, s)))
-          case None => None
-        })
+        n -> runChild(Seq(n), 5, 1,
+            sys.env.getOrElse("SPARK_GRAFT_ISOLATED_XMX", "8g"), 300)
+          .flatMap(isolatedStats(_, n))
       }
     emit(results, isolated, reps, sfDir, None)
     spark.stop()

@@ -117,24 +117,59 @@ object Dedup {
         graft.functions.WordNGrams.ngrams(docs.sparkSession, col("toks"), k)
       )).as("shingle"))
 
-  /** The shared DuckDB CTE prefix: distinct k-shingles + df-cap
-    * pruning — the exact twin of [[shingles]] + the dfCap filter,
-    * parameterized so non-default invocations keep an exact oracle.
-    */
-  private def shingleCtesFor(k: Int, dfCap: Int): String =
-    s"""sh AS (
+  /** Each doc's distinct k-token shingles as CTE `name` (doc_id,
+    * shingle): the SQL twin of [[shingles]]. */
+  private def docShinglesCte(name: String, k: Int): String =
+    s"""$name AS (
       |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+${k - 1}], ' ')
       |    for i in range(1, len(toks) - ${k - 2})])) AS shingle
       |  FROM (SELECT doc_id,
       |          list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
       |        FROM documents)
       |  WHERE len(toks) >= $k
-      |), kept AS (
+      |)""".stripMargin
+
+  /** [[docShinglesCte]] `sh0` and each source's distinct shingles `sf`. */
+  private def sourceShinglesCtes(k: Int): String =
+    s"""${docShinglesCte("sh0", k)}, sf AS (
+      |  SELECT DISTINCT d.source, sh0.shingle
+      |  FROM sh0 JOIN documents d ON sh0.doc_id = d.doc_id
+      |)""".stripMargin
+
+  /** The shared DuckDB CTE prefix: distinct k-shingles + df-cap
+    * pruning — the exact twin of [[shingles]] + the dfCap filter,
+    * parameterized so non-default invocations keep an exact oracle.
+    */
+  private def shingleCtesFor(k: Int, dfCap: Int): String =
+    s"""${docShinglesCte("sh", k)}, kept AS (
       |  SELECT doc_id, shingle FROM sh
       |  WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= $dfCap)
       |)""".stripMargin
 
   private val shingleCtes: String = shingleCtesFor(3, 200)
+
+  /** Per-doc shingle counts (`sizes`) and the shared-shingle count of
+    * every doc pair with one in common (`shared`), over `kept`. */
+  private val sharedShinglesCtes: String =
+    """sizes AS (
+      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
+      |), shared AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
+      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** `sizes`, and `shared` restricted to the candidate pairs `cand`. */
+  private val candSharedCtes: String =
+    """sizes AS (
+      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
+      |), shared AS (
+      |  SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS n_shared
+      |  FROM cand c
+      |  JOIN kept ka ON ka.doc_id = c.doc_a
+      |  JOIN kept kb ON kb.doc_id = c.doc_b AND kb.shingle = ka.shingle
+      |  GROUP BY c.doc_a, c.doc_b
+      |)""".stripMargin
 
   /** df-capped shingle table, materialized ONCE: explode → checkpoint,
     * partial+final df aggregate, join-back, checkpoint again. Both
@@ -188,6 +223,22 @@ object Dedup {
         sh.join(rare, "shingle").localCheckpoint()
       })
 
+  /** Every doc pair sharing a df-capped k-shingle: `n_shared`, and each
+    * side's shingle count `n_a`, `n_b`. */
+  private def sharedShingleCounts(spark: SparkSession, dir: String, k: Int,
+                                  dfCap: Int): DataFrame = {
+    val docs = Tables.load(spark, dir, "documents")
+    val kept = keptShingles(docs, k, dfCap)
+    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val pairsShared = kept.as("a").join(kept.as("b"), "shingle")
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+    pairsShared
+      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
+      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+  }
+
   /** q26 — n-gram Jaccard near-dup pairs: inverted-index candidate
     * generation (pairs sharing >= 1 surviving shingle) + exact Jaccard
     * verification. Because threshold > 0 implies a shared shingle, the
@@ -199,16 +250,7 @@ object Dedup {
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String, k: Int = 3,
                         threshold: Double = 0.6, dfCap: Int = 200): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val kept = keptShingles(docs, k, dfCap)
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val pairsShared = kept.as("a").join(kept.as("b"), "shingle")
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    pairsShared
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+    sharedShingleCounts(spark, dir, k, dfCap)
       .withColumn("jaccard",
         round(col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")), 6))
       .filter(col("jaccard") >= threshold)
@@ -217,13 +259,7 @@ object Dedup {
   }
 
   val ngramJaccardPairsSql: String =
-    s"""WITH $shingleCtes, sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |)
+    s"""WITH $shingleCtes, $sharedShinglesCtes
       |SELECT doc_a, doc_b, jaccard FROM (
       |  SELECT s.doc_a, s.doc_b,
       |    ROUND(CAST(s.n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - s.n_shared), 6) AS jaccard
@@ -561,13 +597,7 @@ object Dedup {
       thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9)): String = {
     val tmin = thresholds.min
     val list = thresholds.mkString("[", ", ", "]")
-    s"""WITH $shingleCtes, sizes AS (
-       |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-       |), shared AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), pairs AS (
+    s"""WITH $shingleCtes, $sharedShinglesCtes, pairs AS (
        |  SELECT doc_a, doc_b, jaccard FROM (
        |    SELECT s.doc_a, s.doc_b,
        |      ROUND(CAST(s.n_shared AS DOUBLE)
@@ -617,16 +647,7 @@ object Dedup {
     */
   def containmentPairs(spark: SparkSession, dir: String, k: Int = 3,
                        threshold: Double = 0.8, dfCap: Int = 200): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val kept = keptShingles(docs, k, dfCap)
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val pairsShared = kept.as("a").join(kept.as("b"), "shingle")
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    pairsShared
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+    sharedShingleCounts(spark, dir, k, dfCap)
       .withColumn("contain_a", round(col("n_shared").cast("double") / col("n_a"), 6))
       .withColumn("contain_b", round(col("n_shared").cast("double") / col("n_b"), 6))
       .withColumn("containment", greatest(col("contain_a"), col("contain_b")))
@@ -641,13 +662,7 @@ object Dedup {
     */
   def containmentPairsSql(k: Int = 3, threshold: Double = 0.8,
                           dfCap: Int = 200): String =
-    s"""WITH ${shingleCtesFor(k, dfCap)}, sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |)
+    s"""WITH ${shingleCtesFor(k, dfCap)}, $sharedShinglesCtes
       |SELECT doc_a, doc_b, contain_a, contain_b, containment FROM (
       |  SELECT s.doc_a, s.doc_b,
       |    ROUND(CAST(s.n_shared AS DOUBLE) / sa.n_sh, 6) AS contain_a,
@@ -895,13 +910,7 @@ object Dedup {
   }
 
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE $shingleCtes, sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
+    s"""WITH RECURSIVE $shingleCtes, $sharedShinglesCtes, pairs AS (
       |  SELECT doc_a, doc_b FROM (
       |    SELECT s.doc_a, s.doc_b,
       |      ROUND(CAST(s.n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - s.n_shared), 6) AS jaccard
@@ -924,6 +933,48 @@ object Dedup {
       |GROUP BY d.doc_id
       |ORDER BY d.doc_id""".stripMargin
 
+  /** Each signature's `bands` band keys (doc_id, band, bucket); the
+    * bucket is the '|'-joined slice of `numHashes / bands` slots. */
+  private def bandBuckets(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    val rows = numHashes / bands
+    val bandStructs = (0 until bands).map { b =>
+      val slice = (0 until rows).map(r => col(s"h${b * rows + r}").cast("string"))
+      struct(lit(b).as("band"), concat_ws("|", slice: _*).as("bucket"))
+    }
+    sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  }
+
+  /** Distinct pairs (doc_a < doc_b) that share a band bucket. */
+  private def bandCandidates(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+
+  /** The SQL twin of [[minhashSignatures]] + [[bandBuckets]] +
+    * [[bandCandidates]] over `kept`: `sig`, `banded` and `cand`. */
+  private def minhashCandidateCtes(numHashes: Int, bands: Int): String = {
+    val rows = numHashes / bands
+    s"""hx AS (
+      |  SELECT doc_id, shingle,
+      |    CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) % 2147483647 AS x
+      |  FROM kept
+      |), sig AS (
+      |  SELECT doc_id, slots.i AS slot, MIN((slots.a * x + slots.b) % 2147483647) AS h
+      |  FROM hx, ${graft.functions.PortableHash.slotConstantsSql(numHashes)}
+      |  GROUP BY doc_id, slots.i
+      |), banded AS (
+      |  SELECT doc_id, slot // $rows AS band,
+      |    string_agg(CAST(h AS VARCHAR), '|' ORDER BY slot) AS bucket
+      |  FROM sig GROUP BY doc_id, slot // $rows
+      |), cand AS (
+      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
+      |    AND a.doc_id < b.doc_id
+      |)""".stripMargin
+  }
+
   /** q27 — MinHash + LSH banding near-dup pairs (oracle-checked in
     * round 2: the md5 universal family is stated identically in DuckDB,
     * so the candidate set — not just the verified output — matches).
@@ -940,23 +991,13 @@ object Dedup {
                       threshold: Double = 0.6): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val rows = numHashes / bands
     val sig = minhashSignatures(spark, kept, numHashes)
     // band keys via one explode (a union of per-band selects would
     // recompute the signature aggregation once per band — the plan
     // audit showed 19 shuffles); the bucket is the '|'-joined slice —
     // a plain string equi-join key both engines state identically
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (0 until rows).map(r => col(s"h${b * rows + r}").cast("string"))
-      struct(lit(b).as("band"), concat_ws("|", slice: _*).as("bucket"))
-    }
-    val banded = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .localCheckpoint()
-    val candidates = banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val banded = bandBuckets(sig, numHashes, bands).localCheckpoint()
+    val candidates = bandCandidates(banded)
     // exact-Jaccard verification of candidates ONLY (no all-pairs work:
     // the candidate set is the LSH payoff — keep it that way).
     val sets = kept.groupBy(col("doc_id")).agg(collect_set(col("shingle")).as("sh_set"))
@@ -977,23 +1018,7 @@ object Dedup {
     * exact-Jaccard verification — bit-identical end to end.
     */
   val minhashLshPairsSql: String =
-    s"""WITH $shingleCtes, hx AS (
-      |  SELECT doc_id, shingle,
-      |    CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) % 2147483647 AS x
-      |  FROM kept
-      |), sig AS (
-      |  SELECT doc_id, slots.i AS slot, MIN((slots.a * x + slots.b) % 2147483647) AS h
-      |  FROM hx, ${graft.functions.PortableHash.slotConstantsSql(24)}
-      |  GROUP BY doc_id, slots.i
-      |), banded AS (
-      |  SELECT doc_id, slot // 3 AS band,
-      |    string_agg(CAST(h AS VARCHAR), '|' ORDER BY slot) AS bucket
-      |  FROM sig GROUP BY doc_id, slot // 3
-      |), cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
-      |    AND a.doc_id < b.doc_id
-      |), sizes AS (
+    s"""WITH $shingleCtes, ${minhashCandidateCtes(24, 8)}, sizes AS (
       |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
       |), shared AS (
       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_shared
@@ -1594,13 +1619,7 @@ object Dedup {
     val ori = graft.Iterate.cut(withDeg.select(
       when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("u"),
       when(aFirst, col("doc_b")).otherwise(col("doc_a")).as("v")))
-    val adj = ori.groupBy(col("u"))
-      .agg(array_sort(collect_list(col("v"))).as("nbrs"))
-    val tri = ori
-      .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
-      .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"))
-      .agg(coalesce(sum(graft.functions.SortedIntersectCount.intersectCount(
-        spark, col("nu"), col("nv"))), lit(0L)).as("n_triangles"))
+    val tri = Graph.orientedTriangles(spark, ori)
     val summary = deg.agg(
       count(lit(1)).as("n_nodes"),
       (sum(col("d")) / 2).cast("long").as("n_edges"),
@@ -2032,13 +2051,7 @@ object Dedup {
     * driver's match is the losslessness proof for q97's pruning.
     */
   def prefixJaccardPairsSql(k: Int = 3, tNum: Int = 3, tDen: Int = 5): String =
-    s"""WITH ${shingleCtesFor(k, Int.MaxValue)}, sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |)
+    s"""WITH ${shingleCtesFor(k, Int.MaxValue)}, $sharedShinglesCtes
       |SELECT s.doc_a, s.doc_b, s.n_shared,
       |  sa.n_sh AS n_a, sb.n_sh AS n_b,
       |  ROUND(CAST(s.n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - s.n_shared), 6) AS jaccard
@@ -2145,17 +2158,7 @@ object Dedup {
     crossSourceOverlap(spark, dir, mode = graft.ScaleMode.Sketch)
 
   def crossSourceOverlapSql(k: Int = 3): String =
-    s"""WITH sh0 AS (
-      |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+${k - 1}], ' ')
-      |    for i in range(1, len(toks) - ${k - 2})])) AS shingle
-      |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
-      |        FROM documents)
-      |  WHERE len(toks) >= $k
-      |), sf AS (
-      |  SELECT DISTINCT d.source, sh0.shingle
-      |  FROM sh0 JOIN documents d ON sh0.doc_id = d.doc_id
-      |), sizes AS (
+    s"""WITH ${sourceShinglesCtes(k)}, sizes AS (
       |  SELECT source, COUNT(*) AS n_sh FROM sf GROUP BY source
       |), shared AS (
       |  SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
@@ -2252,14 +2255,7 @@ object Dedup {
   }
 
   def kmvOverlapSql(k: Int = 3, kMin: Int = 128): String =
-    s"""WITH sh0 AS (
-      |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+${k - 1}], ' ')
-      |    for i in range(1, len(toks) - ${k - 2})])) AS shingle
-      |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
-      |        FROM documents)
-      |  WHERE len(toks) >= $k
-      |), sf AS (
+    s"""WITH ${docShinglesCte("sh0", k)}, sf AS (
       |  SELECT DISTINCT d.source,
       |    CAST(('0x' || substr(md5(sh0.shingle), 1, 15)) AS BIGINT) AS h
       |  FROM sh0 JOIN documents d ON sh0.doc_id = d.doc_id
@@ -2366,14 +2362,7 @@ object Dedup {
   }
 
   def topBoilerplateSql(k: Int = 3, topK: Int = 5): String =
-    s"""WITH sh0 AS (
-      |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+${k - 1}], ' ')
-      |    for i in range(1, len(toks) - ${k - 2})])) AS shingle
-      |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
-      |        FROM documents)
-      |  WHERE len(toks) >= $k
-      |), df AS (
+    s"""WITH ${docShinglesCte("sh0", k)}, df AS (
       |  SELECT d.source, sh0.shingle, COUNT(DISTINCT sh0.doc_id) AS df
       |  FROM sh0 JOIN documents d ON sh0.doc_id = d.doc_id
       |  GROUP BY d.source, sh0.shingle
@@ -2408,19 +2397,9 @@ object Dedup {
                            numHashes: Int = 24, bands: Int = 8): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val rows = numHashes / bands
     val sig = minhashSignatures(spark, kept, numHashes).localCheckpoint()
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (0 until rows).map(r => col(s"h${b * rows + r}").cast("string"))
-      struct(lit(b).as("band"), concat_ws("|", slice: _*).as("bucket"))
-    }
-    val banded = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .localCheckpoint()
-    val candidates = banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val banded = bandBuckets(sig, numHashes, bands).localCheckpoint()
+    val candidates = bandCandidates(banded)
     val agree = (0 until numHashes)
       .map(i => (col(s"sa.h$i") === col(s"sb.h$i")).cast("long")).reduce(_ + _)
     val sets = kept.groupBy(col("doc_id")).agg(collect_set(col("shingle")).as("sh_set"))
@@ -2442,39 +2421,14 @@ object Dedup {
   }
 
   def minhashEstimateAuditSql(numHashes: Int = 24, bands: Int = 8): String = {
-    val rows = numHashes / bands
-    s"""WITH $shingleCtes, hx AS (
-      |  SELECT doc_id, shingle,
-      |    CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) % 2147483647 AS x
-      |  FROM kept
-      |), sig AS (
-      |  SELECT doc_id, slots.i AS slot, MIN((slots.a * x + slots.b) % 2147483647) AS h
-      |  FROM hx, ${graft.functions.PortableHash.slotConstantsSql(numHashes)}
-      |  GROUP BY doc_id, slots.i
-      |), banded AS (
-      |  SELECT doc_id, slot // $rows AS band,
-      |    string_agg(CAST(h AS VARCHAR), '|' ORDER BY slot) AS bucket
-      |  FROM sig GROUP BY doc_id, slot // $rows
-      |), cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
-      |    AND a.doc_id < b.doc_id
-      |), agree AS (
+    s"""WITH $shingleCtes, ${minhashCandidateCtes(numHashes, bands)}, agree AS (
       |  SELECT c.doc_a, c.doc_b,
       |    CAST(SUM(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
       |  FROM cand c
       |  JOIN sig sa ON sa.doc_id = c.doc_a
       |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.slot = sa.slot
       |  GROUP BY c.doc_a, c.doc_b
-      |), sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS n_shared
-      |  FROM cand c
-      |  JOIN kept ka ON ka.doc_id = c.doc_a
-      |  JOIN kept kb ON kb.doc_id = c.doc_b AND kb.shingle = ka.shingle
-      |  GROUP BY c.doc_a, c.doc_b
-      |)
+      |), $candSharedCtes
       |SELECT g.doc_a, g.doc_b, g.n_agree,
       |  COALESCE(s.n_shared, 0) AS n_shared,
       |  ROUND(CAST(g.n_agree AS DOUBLE) / $numHashes, 6) AS est_jaccard,
@@ -2513,19 +2467,9 @@ object Dedup {
                        numHashes: Int = 24, bands: Int = 8): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val rows = numHashes / bands
     val sig = minhashSignatures(spark, kept, numHashes).localCheckpoint()
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (0 until rows).map(r => col(s"h${b * rows + r}").cast("string"))
-      struct(lit(b).as("band"), concat_ws("|", slice: _*).as("bucket"))
-    }
-    val banded = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
-    val candidates = banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val banded = bandBuckets(sig, numHashes, bands)
+    val candidates = bandCandidates(banded)
     val agreeFull = (0 until numHashes)
       .map(i => (col(s"sa.h$i") === col(s"sb.h$i")).cast("long")).reduce(_ + _)
     val agreeBit = (0 until numHashes)
@@ -2557,24 +2501,7 @@ object Dedup {
   }
 
   def bbitMinhashAuditSql(numHashes: Int = 24, bands: Int = 8): String = {
-    val rows = numHashes / bands
-    s"""WITH $shingleCtes, hx AS (
-      |  SELECT doc_id, shingle,
-      |    CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) % 2147483647 AS x
-      |  FROM kept
-      |), sig AS (
-      |  SELECT doc_id, slots.i AS slot, MIN((slots.a * x + slots.b) % 2147483647) AS h
-      |  FROM hx, ${graft.functions.PortableHash.slotConstantsSql(numHashes)}
-      |  GROUP BY doc_id, slots.i
-      |), banded AS (
-      |  SELECT doc_id, slot // $rows AS band,
-      |    string_agg(CAST(h AS VARCHAR), '|' ORDER BY slot) AS bucket
-      |  FROM sig GROUP BY doc_id, slot // $rows
-      |), cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
-      |    AND a.doc_id < b.doc_id
-      |), agree AS (
+    s"""WITH $shingleCtes, ${minhashCandidateCtes(numHashes, bands)}, agree AS (
       |  SELECT c.doc_a, c.doc_b,
       |    CAST(SUM(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END) AS BIGINT)
       |      AS n_agree_full,
@@ -2584,15 +2511,7 @@ object Dedup {
       |  JOIN sig sa ON sa.doc_id = c.doc_a
       |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.slot = sa.slot
       |  GROUP BY c.doc_a, c.doc_b
-      |), sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS n_shared
-      |  FROM cand c
-      |  JOIN kept ka ON ka.doc_id = c.doc_a
-      |  JOIN kept kb ON kb.doc_id = c.doc_b AND kb.shingle = ka.shingle
-      |  GROUP BY c.doc_a, c.doc_b
-      |), fin AS (
+      |), $candSharedCtes, fin AS (
       |  SELECT g.doc_a, g.doc_b, g.n_agree_full, g.n_agree_bit,
       |    ROUND(CAST(COALESCE(s.n_shared, 0) AS DOUBLE)
       |      / (sa.n_sh + sb.n_sh - COALESCE(s.n_shared, 0)), 6) AS jaccard,
@@ -2653,13 +2572,7 @@ object Dedup {
   }
 
   def dupDistanceSpectrumSql(threshold: Double = 0.6): String =
-    s"""WITH $shingleCtes, sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
+    s"""WITH $shingleCtes, $sharedShinglesCtes, pairs AS (
       |  SELECT doc_a, doc_b FROM (
       |    SELECT s.doc_a, s.doc_b,
       |      ROUND(CAST(s.n_shared AS DOUBLE)
@@ -2738,13 +2651,7 @@ object Dedup {
   def dupQualityPointBiserialSql(threshold: Double = 0.6): String = {
     // the exact q23 oracle expression — one definition of "quality"
     val qualityExpr = TextAnalysis.qualityExprSql
-    s"""WITH $shingleCtes, sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-      |), shared AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), removable AS (
+    s"""WITH $shingleCtes, $sharedShinglesCtes, removable AS (
       |  SELECT DISTINCT doc_b AS doc_id FROM (
       |    SELECT s.doc_a, s.doc_b,
       |      ROUND(CAST(s.n_shared AS DOUBLE)
@@ -2800,14 +2707,7 @@ object Dedup {
   }
 
   def noveltyScoresSql(k: Int = 3): String =
-    s"""WITH sh AS (
-      |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+${k - 1}], ' ')
-      |    for i in range(1, len(toks) - ${k - 2})])) AS shingle
-      |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
-      |        FROM documents)
-      |  WHERE len(toks) >= $k
-      |), fd AS (
+    s"""WITH ${docShinglesCte("sh", k)}, fd AS (
       |  SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY shingle
       |)
       |SELECT sh.doc_id, COUNT(*) AS n_shingles,
@@ -3649,17 +3549,7 @@ object Dedup {
 
   def maxCoverageSourcesSql(k: Int = 3, rounds: Int = 4): String = {
     val sh0 =
-      s"""sh0 AS (
-         |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+${k - 1}], ' ')
-         |    for i in range(1, len(toks) - ${k - 2})])) AS shingle
-         |  FROM (SELECT doc_id,
-         |          list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
-         |        FROM documents)
-         |  WHERE len(toks) >= $k
-         |), sf AS (
-         |  SELECT DISTINCT d.source, sh0.shingle
-         |  FROM sh0 JOIN documents d ON sh0.doc_id = d.doc_id
-         |), srcs AS (
+      s"""${sourceShinglesCtes(k)}, srcs AS (
          |  SELECT DISTINCT source FROM sf
          |), tot AS (
          |  SELECT COUNT(DISTINCT shingle) AS total FROM sf

@@ -24,6 +24,41 @@ object Events {
   private[operators] val epochDayExpr: Column = expr(
     "(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) div 86400000000")
 
+  /** The daily series: per (event_type, day) value sum `v` (DECIMAL). */
+  private def dailyValues(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "events")
+      .groupBy(col("event_type"), epochDayExpr.as("day"))
+      .agg(decSum(col("value")).as("v"))
+
+  /** Per (event_type, day) event count `v`. */
+  private def dailyCounts(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "events")
+      .groupBy(col("event_type"), epochDayExpr.as("day"))
+      .agg(count(lit(1)).as("v"))
+
+  /** The SQL twins of [[dailyValues]] and [[dailyCounts]], and the
+    * daily sum in integer micro-units (`v_e6`). */
+  private val dailyValuesCte: String =
+    """daily AS (
+      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
+      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+      |  FROM events GROUP BY 1, 2
+      |)""".stripMargin
+
+  private val dailyCountsCte: String =
+    """daily AS (
+      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
+      |    CAST(COUNT(*) AS BIGINT) AS v
+      |  FROM events GROUP BY 1, 2
+      |)""".stripMargin
+
+  private val dailyMicrosCte: String =
+    """daily AS (
+      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
+      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS v_e6
+      |  FROM events GROUP BY 1, 2
+      |)""".stripMargin
+
   /** q19 — tumbling window aggregate: hourly counts/sums per event
     * type via the `window()` function (the same expression Structured
     * Streaming uses, so the batch and streaming plans share semantics).
@@ -48,6 +83,42 @@ object Events {
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1, 2 ORDER BY hour_ms, event_type""".stripMargin
 
+  /** `ev` (with `ts_ms`) plus a per-user `session_id`: a user's first
+    * event, and any event more than `gapMinutes` after the previous
+    * one, opens a new session. */
+  private def withSessionIds(ev: DataFrame, gapMinutes: Int): DataFrame = {
+    val gapMs = gapMinutes * 60000L
+    val wOrder = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts_ms"), col("event_id"))
+    ev.withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
+      .withColumn("new_session",
+        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
+          .otherwise(0L))
+      .withColumn("session_id",
+        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** The SQL twin of [[withSessionIds]]' first step: `new_session`
+    * flags each event that opens a session. */
+  private def sessionFlagsCte(gapMinutes: Int): String =
+    s"""flagged AS (
+      |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ts_ms,
+      |    CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
+      |              OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > ${gapMinutes * 60000L}
+      |         THEN 1 ELSE 0 END AS new_session
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id)
+      |)""".stripMargin
+
+  /** [[sessionFlagsCte]] plus the running `session_id` (`sess`). */
+  private def sessionCtes(gapMinutes: Int): String =
+    s"""${sessionFlagsCte(gapMinutes)}, sess AS (
+      |  SELECT user_id, event_id, event_type, ts_ms,
+      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
+      |      ROWS UNBOUNDED PRECEDING) AS session_id
+      |  FROM flagged
+      |)""".stripMargin
+
   /** q20 — gap-based sessionization (SURVEY §2.10: `ts - lag(ts) > gap`
     * cumulative-sum pattern): a new session starts after a 30-minute
     * silence. Deterministic ordering via (ts_ms, event_id).
@@ -56,17 +127,8 @@ object Events {
     * by AQE or a two-level (user, coarse-time-bucket) pre-session pass.
     */
   def sessionize(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {
-    val gapMs = gapMinutes * 60000L
     val ev = Tables.load(spark, dir, "events").withColumn("ts_ms", tsMs("ts"))
-    val wOrder = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val flagged = ev
-      .withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+    val flagged = withSessionIds(ev, gapMinutes)
     flagged.groupBy(col("user_id"), col("session_id"))
       .agg(
         min(col("ts_ms")).as("session_start_ms"),
@@ -236,6 +298,24 @@ object Events {
       |FROM cells c JOIN sizes s ON c.cohort = s.cohort
       |ORDER BY c.cohort, c.week_offset""".stripMargin
 
+  /** Each user's first signup (`s1`), first click after it (`s2`) and
+    * first purchase after that (`s3`). */
+  private val funnelStepsCtes: String =
+    """s1 AS (
+      |  SELECT user_id, MIN(epoch_ms(ts)) AS t_signup
+      |  FROM events WHERE event_type = 'signup' GROUP BY user_id
+      |), s2 AS (
+      |  SELECT e.user_id, MIN(epoch_ms(e.ts)) AS t_click
+      |  FROM events e JOIN s1 ON e.user_id = s1.user_id
+      |  WHERE e.event_type = 'click' AND epoch_ms(e.ts) > s1.t_signup
+      |  GROUP BY e.user_id
+      |), s3 AS (
+      |  SELECT e.user_id, MIN(epoch_ms(e.ts)) AS t_purchase
+      |  FROM events e JOIN s2 ON e.user_id = s2.user_id
+      |  WHERE e.event_type = 'purchase' AND epoch_ms(e.ts) > s2.t_click
+      |  GROUP BY e.user_id
+      |)""".stripMargin
+
   /** q84 — ordered funnel (signup → click → purchase): per user, the
     * earliest signup, the earliest click STRICTLY AFTER that signup,
     * and the earliest purchase strictly after that click — order
@@ -311,20 +391,7 @@ object Events {
   }
 
   val funnelConfidenceSql: String =
-    """WITH s1 AS (
-      |  SELECT user_id, MIN(epoch_ms(ts)) AS t_signup
-      |  FROM events WHERE event_type = 'signup' GROUP BY user_id
-      |), s2 AS (
-      |  SELECT e.user_id, MIN(epoch_ms(e.ts)) AS t_click
-      |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-      |  WHERE e.event_type = 'click' AND epoch_ms(e.ts) > s1.t_signup
-      |  GROUP BY e.user_id
-      |), s3 AS (
-      |  SELECT e.user_id, MIN(epoch_ms(e.ts)) AS t_purchase
-      |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-      |  WHERE e.event_type = 'purchase' AND epoch_ms(e.ts) > s2.t_click
-      |  GROUP BY e.user_id
-      |), counts AS (
+    s"""WITH $funnelStepsCtes, counts AS (
       |  SELECT (SELECT COUNT(*) FROM s1) AS n1,
       |         (SELECT COUNT(*) FROM s2) AS n2,
       |         (SELECT COUNT(*) FROM s3) AS n3
@@ -519,17 +586,8 @@ object Events {
     */
   def sessionCooccurrence(spark: SparkSession, dir: String,
                           gapMinutes: Int = 30): DataFrame = {
-    val gapMs = gapMinutes * 60000L
     val ev = Tables.load(spark, dir, "events").withColumn("ts_ms", tsMs("ts"))
-    val wOrder = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val st = ev
-      .withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+    val st = withSessionIds(ev, gapMinutes)
       .select(col("user_id"), col("session_id"), col("event_type"))
       .distinct()
       .localCheckpoint() // three consumers: totals, singles, pair join
@@ -556,15 +614,7 @@ object Events {
   }
 
   def sessionCooccurrenceSql(gapMinutes: Int = 30): String = {
-    val gapMs = gapMinutes * 60000L
-    s"""WITH flagged AS (
-      |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ts_ms,
-      |    CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-      |              OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > $gapMs
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id)
-      |), st AS (
+    s"""WITH ${sessionFlagsCte(gapMinutes)}, st AS (
       |  SELECT DISTINCT user_id, session_id, event_type FROM (
       |    SELECT user_id, event_type,
       |      SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
@@ -644,20 +694,7 @@ object Events {
       |ORDER BY c.from_type, c.to_type""".stripMargin
 
   val funnelSql: String =
-    """WITH s1 AS (
-      |  SELECT user_id, MIN(epoch_ms(ts)) AS t_signup
-      |  FROM events WHERE event_type = 'signup' GROUP BY user_id
-      |), s2 AS (
-      |  SELECT e.user_id, MIN(epoch_ms(e.ts)) AS t_click
-      |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-      |  WHERE e.event_type = 'click' AND epoch_ms(e.ts) > s1.t_signup
-      |  GROUP BY e.user_id
-      |), s3 AS (
-      |  SELECT e.user_id, MIN(epoch_ms(e.ts)) AS t_purchase
-      |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-      |  WHERE e.event_type = 'purchase' AND epoch_ms(e.ts) > s2.t_click
-      |  GROUP BY e.user_id
-      |)
+    s"""WITH $funnelStepsCtes
       |SELECT s1.user_id, s1.t_signup, s2.t_click, s3.t_purchase,
       |  CASE WHEN s3.t_purchase IS NOT NULL THEN 3
       |       WHEN s2.t_click IS NOT NULL THEN 2 ELSE 1 END AS stage
@@ -861,9 +898,7 @@ object Events {
     * corpus time span.
     */
   def sesForecast(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     daily.groupBy(col("event_type"))
       .agg(array_sort(collect_list(struct(col("day"), col("v")))).as("dv"))
       .select(col("event_type"),
@@ -878,11 +913,7 @@ object Events {
   }
 
   val sesForecastSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), series AS (
+    s"""WITH $dailyValuesCte, series AS (
       |  SELECT event_type, list(v ORDER BY day) AS vals FROM daily GROUP BY 1
       |)
       |SELECT event_type,
@@ -907,9 +938,7 @@ object Events {
     * sized, never event-sized.
     */
   def dailyAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val wMed = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val med = daily
       .withColumn("rn", row_number().over(wMed))
@@ -931,11 +960,7 @@ object Events {
   }
 
   val dailyAnomaliesSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), med AS (
+    s"""WITH $dailyValuesCte, med AS (
       |  SELECT event_type,
       |    MAX(CASE WHEN rn = (n + 1) // 2 THEN v END) AS med
       |  FROM (
@@ -1419,17 +1444,8 @@ object Events {
     */
   def sessionPaths(spark: SparkSession, dir: String,
                    gapMinutes: Int = 30, topK: Int = 20): DataFrame = {
-    val gapMs = gapMinutes * 60000L
     val ev = Tables.load(spark, dir, "events").withColumn("ts_ms", tsMs("ts"))
-    val wOrder = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val sess = ev
-      .withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+    val sess = withSessionIds(ev, gapMinutes)
     val wSess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts_ms"), col("event_id"))
     val tri = sess
@@ -1472,17 +1488,8 @@ object Events {
     */
   def markovBacktest(spark: SparkSession, dir: String,
                      gapMinutes: Int = 30): DataFrame = {
-    val gapMs = gapMinutes * 60000L
     val ev = Tables.load(spark, dir, "events").withColumn("ts_ms", tsMs("ts"))
-    val wOrder = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val sess = ev
-      .withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+    val sess = withSessionIds(ev, gapMinutes)
     val wSess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts_ms"), col("event_id"))
     val bounds = ev.agg(min(col("ts_ms")).as("lo"), max(col("ts_ms")).as("hi"))
@@ -1517,20 +1524,7 @@ object Events {
   }
 
   def markovBacktestSql(gapMinutes: Int = 30): String = {
-    val gapMs = gapMinutes * 60000L
-    s"""WITH flagged AS (
-      |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ts_ms,
-      |    CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-      |              OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > $gapMs
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id)
-      |), sess AS (
-      |  SELECT user_id, event_id, event_type, ts_ms,
-      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-      |      ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM flagged
-      |), bounds AS (
+    s"""WITH ${sessionCtes(gapMinutes)}, bounds AS (
       |  SELECT MIN(epoch_ms(ts)) AS lo, MAX(epoch_ms(ts)) AS hi FROM events
       |), tri AS (
       |  SELECT event_type AS e1,
@@ -1620,20 +1614,7 @@ object Events {
   }
 
   def sessionPathsSql(gapMinutes: Int = 30, topK: Int = 20): String = {
-    val gapMs = gapMinutes * 60000L
-    s"""WITH flagged AS (
-      |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ts_ms,
-      |    CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-      |              OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > $gapMs
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id)
-      |), sess AS (
-      |  SELECT user_id, event_id, event_type, ts_ms,
-      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-      |      ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM flagged
-      |), tri AS (
+    s"""WITH ${sessionCtes(gapMinutes)}, tri AS (
       |  SELECT event_type AS e1,
       |    lead(event_type, 1) OVER ws AS e2,
       |    lead(event_type, 2) OVER ws AS e3
@@ -1847,9 +1828,7 @@ object Events {
     * partition-local.
     */
   def changePoints(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val wType = Window.partitionBy(col("event_type"))
     val wCum = wType.orderBy(col("day"))
     val scored = daily
@@ -1876,11 +1855,7 @@ object Events {
   }
 
   val changePointsSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), scored AS (
+    s"""WITH $dailyValuesCte, scored AS (
       |  SELECT event_type, day,
       |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS idx,
       |    SUM(v) OVER (PARTITION BY event_type ORDER BY day) AS cum,
@@ -1933,9 +1908,7 @@ object Events {
   def conformalForecast(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     def dsum(c: Column): Column = sum(c.cast(dec)).cast("double")
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val ranked = daily
       .withColumn("r", row_number().over(w))
@@ -1982,11 +1955,7 @@ object Events {
   }
 
   val conformalForecastSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
       |  SELECT event_type, day, v, CAST(day AS DOUBLE) AS x,
       |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS r,
       |    COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -2061,9 +2030,7 @@ object Events {
     */
   def stlDecompose(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val wMa = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(-3, 3)
     val trended = daily
@@ -2090,11 +2057,7 @@ object Events {
   }
 
   val stlDecomposeSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), trended AS (
+    s"""WITH $dailyValuesCte, trended AS (
       |  SELECT event_type, day, v,
       |    ROUND(CAST(SUM(CAST(v AS DECIMAL(18,6))) OVER w AS DOUBLE) / 7, 6)
       |      AS trend,
@@ -2374,11 +2337,7 @@ object Events {
       |ORDER BY day""".stripMargin
 
   val ewmaControlSql: String =
-    """WITH RECURSIVE daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS v_e6
-      |  FROM events GROUP BY 1, 2
-      |), ranked AS (
+    s"""WITH RECURSIVE $dailyMicrosCte, ranked AS (
       |  SELECT event_type, day, v_e6,
       |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
       |  FROM daily
@@ -2611,17 +2570,8 @@ object Events {
                         channels: Seq[String] =
                           Seq("click", "error", "signup", "view")): DataFrame = {
     val ScaleE12 = 1000000000000L
-    val gapMs = gapMinutes * 60000L
     val ev = Tables.load(spark, dir, "events").withColumn("ts_ms", tsMs("ts"))
-    val wOrder = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val sess = ev
-      .withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+    val sess = withSessionIds(ev, gapMinutes)
     val wSess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts_ms"), col("event_id"))
     val kept = sess
@@ -2820,9 +2770,7 @@ object Events {
     */
   def acfDaily(spark: SparkSession, dir: String,
                lags: Seq[Int] = Seq(1, 2, 3, 7)): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(count(lit(1)).as("v"))
+    val daily = dailyCounts(spark, dir)
     val spine = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(col("event_type"),
@@ -2891,6 +2839,33 @@ object Events {
        |FROM agg ORDER BY event_type, lag""".stripMargin
   }
 
+  /** Purchase, click and view events with `ts_ms` and each event's
+    * `journey`: the number of the user's purchases before it. */
+  private def journeyEvents(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.load(spark, dir, "events")
+      .filter(col("event_type").isin("purchase", "click", "view"))
+      .withColumn("ts_ms", tsMs("ts"))
+    val wPrev = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts_ms"), col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    ev.withColumn("journey",
+      count(when(col("event_type") === "purchase", 1)).over(wPrev))
+  }
+
+  /** Per channel credit count and total: the `credited` touch shares plus
+    * a "direct" credit for each purchase whose journey had no touch. */
+  private def creditTotals(credited: DataFrame, purchases: DataFrame,
+                           touches: DataFrame): DataFrame = {
+    val direct = purchases.join(
+        touches.select(col("user_id"), col("journey")).distinct(),
+        Seq("user_id", "journey"), "left_anti")
+      .select(lit("direct").as("channel"), round(col("value"), 6).as("v"))
+    credited.unionByName(direct)
+      .groupBy(col("channel"))
+      .agg(count(lit(1)).as("n_credits"), decSum(col("v")).as("attributed_value"))
+      .orderBy(col("channel"))
+  }
+
   /** q210 — U-shaped (position-based) multi-touch attribution: each
     * purchase's value splits 40% to the journey's first touch, 40% to
     * the last, and the remaining 20% evenly across middle touches
@@ -2915,14 +2890,7 @@ object Events {
     * passes, no self-join over the stream.
     */
   def uShapedAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(spark, dir, "events")
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .withColumn("ts_ms", tsMs("ts"))
-    val wPrev = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tagged = ev.withColumn("journey",
-      count(when(col("event_type") === "purchase", 1)).over(wPrev))
+    val tagged = journeyEvents(spark, dir)
     val purchases = tagged.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("journey"), col("value"))
     val wJ = Window.partitionBy(col("user_id"), col("journey"))
@@ -2939,14 +2907,7 @@ object Events {
           .when(col("rn") === 1 || col("rn") === col("k"), lit(0.4))
           .otherwise(lit(0.2) / (col("k") - 2)))
       .select(col("channel"), round(col("value") * col("credit"), 6).as("v"))
-    val direct = purchases.join(
-        touches.select(col("user_id"), col("journey")).distinct(),
-        Seq("user_id", "journey"), "left_anti")
-      .select(lit("direct").as("channel"), round(col("value"), 6).as("v"))
-    credited.unionByName(direct)
-      .groupBy(col("channel"))
-      .agg(count(lit(1)).as("n_credits"), decSum(col("v")).as("attributed_value"))
-      .orderBy(col("channel"))
+    creditTotals(credited, purchases, touches)
   }
 
   val uShapedAttributionSql: String =
@@ -2998,14 +2959,7 @@ object Events {
     * a co-partitioned purchase join, a channel-sized rollup.
     */
   def timeDecayAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(spark, dir, "events")
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .withColumn("ts_ms", tsMs("ts"))
-    val wPrev = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tagged = ev.withColumn("journey",
-      count(when(col("event_type") === "purchase", 1)).over(wPrev))
+    val tagged = journeyEvents(spark, dir)
     val purchases = tagged.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("journey"), col("value"),
         col("ts_ms").as("p_ts"))
@@ -3022,14 +2976,7 @@ object Events {
     val credited = touches
       .select(col("channel"),
         round(col("value") * (col("iw").cast("double") / col("sumw")), 6).as("v"))
-    val direct = purchases.join(
-        touches.select(col("user_id"), col("journey")).distinct(),
-        Seq("user_id", "journey"), "left_anti")
-      .select(lit("direct").as("channel"), round(col("value"), 6).as("v"))
-    credited.unionByName(direct)
-      .groupBy(col("channel"))
-      .agg(count(lit(1)).as("n_credits"), decSum(col("v")).as("attributed_value"))
-      .orderBy(col("channel"))
+    creditTotals(credited, purchases, touches)
   }
 
   val timeDecayAttributionSql: String =
@@ -3087,9 +3034,7 @@ object Events {
     * median variant or coarser buckets; the graded shape stays.
     */
   def theilSenTrend(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val pairs = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type") && col("a.day") < col("b.day"))
       .select(col("a.event_type").as("event_type"),
@@ -3108,11 +3053,7 @@ object Events {
   }
 
   val theilSenTrendSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), slopes AS (
+    s"""WITH $dailyValuesCte, slopes AS (
       |  SELECT a.event_type, (b.v - a.v) / (b.day - a.day) AS slope,
       |    a.day AS d1, b.day AS d2
       |  FROM daily a JOIN daily b
@@ -3151,9 +3092,7 @@ object Events {
     */
   def forecastBacktest(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val spine = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(col("event_type"), col("mn"), col("mx"),
@@ -3193,11 +3132,7 @@ object Events {
   }
 
   val forecastBacktestSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), bounds AS (
+    s"""WITH $dailyValuesCte, bounds AS (
       |  SELECT event_type, MIN(day) AS mn, MAX(day) AS mx FROM daily GROUP BY 1
       |), dense AS (
       |  SELECT s.event_type, s.day, COALESCE(d.v, 0.0) AS v, s.mid
@@ -3254,9 +3189,7 @@ object Events {
     */
   def crossCorrelation(spark: SparkSession, dir: String,
                        lags: Seq[Int] = Seq(1, 2, 3)): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(count(lit(1)).as("v"))
+    val daily = dailyCounts(spark, dir)
     val spine = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(explode(sequence(col("mn"), col("mx"))).as("day"))
     val types = daily.select(col("event_type")).distinct()
@@ -3432,9 +3365,7 @@ object Events {
     * survives the first aggregate.
     */
   def burstiness(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(count(lit(1)).as("v"))
+    val daily = dailyCounts(spark, dir)
     val spine = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(col("event_type"),
@@ -3502,9 +3433,7 @@ object Events {
     * series length is time span, never event count).
     */
   def holtForecast(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     daily.groupBy(col("event_type"))
       .agg(array_sort(collect_list(struct(col("day"), col("v")))).as("dv"))
       .select(col("event_type"),
@@ -3530,11 +3459,7 @@ object Events {
   }
 
   val holtForecastSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), series AS (
+    s"""WITH $dailyValuesCte, series AS (
       |  SELECT event_type, CAST(list(v ORDER BY day) AS DOUBLE[]) AS vals
       |  FROM daily GROUP BY 1
       |), folded AS (
@@ -3708,9 +3633,7 @@ object Events {
     * join, one per-type fold over a days-long array.
     */
   def holtWinters(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val bounds = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val spine = bounds.select(col("event_type"), col("mn"),
@@ -3759,11 +3682,7 @@ object Events {
   }
 
   val holtWintersSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), bounds AS (
+    s"""WITH $dailyValuesCte, bounds AS (
       |  SELECT event_type, MIN(day) AS mn, MAX(day) AS mx
       |  FROM daily GROUP BY 1
       |), spine AS (
@@ -3891,17 +3810,8 @@ object Events {
     */
   def entryExit(spark: SparkSession, dir: String,
                 gapMinutes: Int = 30): DataFrame = {
-    val gapMs = gapMinutes * 60000L
     val ev = Tables.load(spark, dir, "events").withColumn("ts_ms", tsMs("ts"))
-    val wOrder = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val flagged = ev
-      .withColumn("prev_ts", lag(col("ts_ms"), 1).over(wOrder))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull || col("ts_ms") - col("prev_ts") > gapMs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(wOrder.rowsBetween(Window.unboundedPreceding, 0)))
+    val flagged = withSessionIds(ev, gapMinutes)
     val sessions = flagged
       .withColumn("rn_first", row_number().over(
         Window.partitionBy(col("user_id"), col("session_id"))
@@ -4022,15 +3932,7 @@ object Events {
       |ORDER BY band""".stripMargin
 
   def entryExitSql(gapMinutes: Int = 30): String = {
-    val gapMs = gapMinutes * 60000L
-    s"""WITH flagged AS (
-      |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ts_ms,
-      |    CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-      |      OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > $gapMs
-      |      THEN 1 ELSE 0 END AS new_session
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id)
-      |), sess AS (
+    s"""WITH ${sessionFlagsCte(gapMinutes)}, sess AS (
       |  SELECT user_id, event_id, event_type, ts_ms,
       |    SUM(new_session) OVER (PARTITION BY user_id
       |      ORDER BY ts_ms, event_id
@@ -4399,9 +4301,7 @@ object Events {
     * aggregate; nothing event-sized is joined.
     */
   def mannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val s = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type") &&
           col("a.day") < col("b.day"))
@@ -4436,11 +4336,7 @@ object Events {
   }
 
   val mannKendallSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), s AS (
+    s"""WITH $dailyValuesCte, s AS (
       |  SELECT a.event_type,
       |    CAST(SUM(CASE WHEN b.v > a.v THEN 1
       |                  WHEN b.v < a.v THEN -1 ELSE 0 END) AS BIGINT)
@@ -4547,11 +4443,7 @@ object Events {
   }
 
   val cusumChartSql: String =
-    """WITH RECURSIVE daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS v_e6
-      |  FROM events GROUP BY 1, 2
-      |), st1 AS (
+    s"""WITH RECURSIVE $dailyMicrosCte, st1 AS (
       |  SELECT event_type, SUM(v_e6) // COUNT(*) AS mu_e6
       |  FROM daily GROUP BY 1
       |), st2 AS (
@@ -4612,9 +4504,7 @@ object Events {
   def pinballBacktest(spark: SparkSession, dir: String, window: Int = 28,
                       quantiles: Seq[Double] = Seq(0.5, 0.9)): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val bounds = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val spine = bounds.select(col("event_type"),
@@ -4654,11 +4544,7 @@ object Events {
     val grid = quantiles.map { q =>
       s"(${q}, ${math.ceil(q * window).toInt})"
     }.mkString(", ")
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-       |  FROM events GROUP BY 1, 2
-       |), bounds AS (
+    s"""WITH $dailyValuesCte, bounds AS (
        |  SELECT event_type, MIN(day) AS mn, MAX(day) AS mx
        |  FROM daily GROUP BY 1
        |), spine AS (
@@ -4811,6 +4697,36 @@ object Events {
        |GROUP BY d.event_type
        |ORDER BY d.event_type""".stripMargin
 
+  /** Per (event_type, user) mean value `u_mean`, ranked within the
+    * type: `i` by (u_mean, user_id), `n` users in the type. */
+  private[operators] def rankedUserMeans(spark: SparkSession, dir: String): DataFrame = {
+    val perUser = Tables.load(spark, dir, "events")
+      .groupBy(col("event_type"), col("user_id"))
+      .agg((graft.operators.Relational.decSum(col("value"))
+        / count(col("value"))).as("u_mean"))
+    val w = Window.partitionBy(col("event_type"))
+      .orderBy(col("u_mean"), col("user_id"))
+    perUser
+      .withColumn("i", row_number().over(w).cast("long"))
+      .withColumn("n",
+        count(lit(1)).over(Window.partitionBy(col("event_type"))))
+  }
+
+  /** The SQL twin of [[rankedUserMeans]] (`ranked`). */
+  private[operators] val rankedUserMeansCtes: String =
+    """per_user AS (
+      |  SELECT event_type, user_id,
+      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value)
+      |      AS u_mean
+      |  FROM events GROUP BY 1, 2
+      |), ranked AS (
+      |  SELECT event_type, u_mean,
+      |    CAST(row_number() OVER (PARTITION BY event_type
+      |      ORDER BY u_mean, user_id) AS BIGINT) AS i,
+      |    COUNT(*) OVER (PARTITION BY event_type) AS n
+      |  FROM per_user
+      |)""".stripMargin
+
   /** q372 — distribution-free 95% CI for the per-type median of
     * per-user mean value, via ORDER STATISTICS: the binomial rank
     * bounds lo = max(1, ⌊(n − z√n)/2⌋), hi = min(n, ⌈(n + z√n)/2⌉ + 1)
@@ -4833,16 +4749,7 @@ object Events {
     */
   def medianCiOrderStat(spark: SparkSession, dir: String,
                         z: Double = 1.959964): DataFrame = {
-    val perUser = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), col("user_id"))
-      .agg((graft.operators.Relational.decSum(col("value"))
-        / count(col("value"))).as("u_mean"))
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("u_mean"), col("user_id"))
-    val ranked = perUser
-      .withColumn("i", row_number().over(w).cast("long"))
-      .withColumn("n",
-        count(lit(1)).over(Window.partitionBy(col("event_type"))))
+    val ranked = rankedUserMeans(spark, dir)
       .withColumn("lo", greatest(lit(1L),
         floor((col("n").cast("double") -
           lit(z) * sqrt(col("n").cast("double"))) / 2).cast("long")))
@@ -4866,18 +4773,7 @@ object Events {
   }
 
   def medianCiOrderStatSql(z: Double = 1.959964): String =
-    s"""WITH per_user AS (
-       |  SELECT event_type, user_id,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value)
-       |      AS u_mean
-       |  FROM events GROUP BY 1, 2
-       |), ranked AS (
-       |  SELECT event_type, u_mean,
-       |    CAST(row_number() OVER (PARTITION BY event_type
-       |      ORDER BY u_mean, user_id) AS BIGINT) AS i,
-       |    COUNT(*) OVER (PARTITION BY event_type) AS n
-       |  FROM per_user
-       |), bounds AS (
+    s"""WITH $rankedUserMeansCtes, bounds AS (
        |  SELECT *,
        |    GREATEST(1, CAST(FLOOR((CAST(n AS DOUBLE)
        |      - $z * sqrt(CAST(n AS DOUBLE))) / 2) AS BIGINT)) AS lo,
@@ -4916,9 +4812,7 @@ object Events {
     * the data.
     */
   def kendallTauMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val joined = graft.Iterate.cut(daily.as("a")
       .join(daily.as("b"),
         col("a.day") === col("b.day") &&
@@ -4952,11 +4846,7 @@ object Events {
   }
 
   val kendallTauMatrixSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), joined AS (
+    s"""WITH $dailyValuesCte, joined AS (
       |  SELECT a.event_type AS ta, b.event_type AS tb, a.day AS day,
       |    a.v AS x, b.v AS y
       |  FROM daily a JOIN daily b
@@ -5945,9 +5835,7 @@ object Events {
   def expectedShortfall(spark: SparkSession, dir: String,
                         alpha: Double = 0.05): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("v"), col("day"))
     val ranked = daily
@@ -5973,11 +5861,7 @@ object Events {
   }
 
   def expectedShortfallSql(alpha: Double = 0.05): String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-       |  FROM events GROUP BY 1, 2
-       |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
        |  SELECT event_type, v,
        |    CAST(row_number() OVER (PARTITION BY event_type
        |      ORDER BY v, day) AS BIGINT) AS rn,
@@ -6141,9 +6025,7 @@ object Events {
   def dieboldMariano(spark: SparkSession, dir: String,
                      h: Int = 7): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val bounds = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val spine = bounds.select(col("event_type"),
@@ -6203,11 +6085,7 @@ object Events {
     val bart = (1 until h).map(k =>
       s"2.0 * ${1.0 - k.toDouble / h} * g$k / CAST(nn AS DOUBLE)")
       .mkString(" + ")
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-       |  FROM events GROUP BY 1, 2
-       |), bounds AS (
+    s"""WITH $dailyValuesCte, bounds AS (
        |  SELECT event_type, MIN(day) AS mn, MAX(day) AS mx
        |  FROM daily GROUP BY 1
        |), spine AS (
@@ -6517,9 +6395,7 @@ object Events {
   def varianceDecomposition(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     def dsum(c: Column): Column = sum(c.cast(dec)).cast("double")
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val bounds = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val dense = bounds.select(col("event_type"),
@@ -6564,11 +6440,7 @@ object Events {
   }
 
   val varianceDecompositionSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), bounds AS (
+    s"""WITH $dailyValuesCte, bounds AS (
       |  SELECT event_type, MIN(day) AS mn, MAX(day) AS mx
       |  FROM daily GROUP BY 1
       |), dense AS (
@@ -6634,9 +6506,7 @@ object Events {
     * all calendar-sized.
     */
   def runsTest(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val wMed = Window.partitionBy(col("event_type"))
       .orderBy(col("v"), col("day"))
     val med = daily
@@ -6681,11 +6551,7 @@ object Events {
   }
 
   val runsTestSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), med AS (
+    s"""WITH $dailyValuesCte, med AS (
       |  SELECT event_type,
       |    (MAX(CASE WHEN rn = (n + 1) // 2 THEN v END)
       |      + MAX(CASE WHEN rn = (n + 2) // 2 THEN v END)) / 2 AS med
@@ -6757,9 +6623,7 @@ object Events {
   def hillTailIndex(spark: SparkSession, dir: String,
                     tailFrac: Double = 0.1): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(graft.operators.Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("v").desc, col("day"))
     val ranked = daily
@@ -6788,11 +6652,7 @@ object Events {
   }
 
   def hillTailIndexSql(tailFrac: Double = 0.1): String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-       |  FROM events GROUP BY 1, 2
-       |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
        |  SELECT event_type, v,
        |    CAST(row_number() OVER (PARTITION BY event_type
        |      ORDER BY v DESC, day) AS BIGINT) AS rn,
@@ -6956,9 +6816,7 @@ object Events {
   /** Shared dense daily count grid: per (type, day in [min, max]) the
     * event count, zero-filled — q209/q393's spine as one helper. */
   private def denseDailyCounts(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(count(lit(1)).as("v"))
+    val daily = dailyCounts(spark, dir)
     val spine = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(col("event_type"),
@@ -6971,11 +6829,7 @@ object Events {
   // def, not val: referenced by SQL vals declared EARLIER in this
   // object (q438), which would see a null during val initialization
   private def denseDailyCountsSql: String =
-    """daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(COUNT(*) AS BIGINT) AS v
-      |  FROM events GROUP BY 1, 2
-      |), spine AS (
+    s"""$dailyCountsCte, spine AS (
       |  SELECT event_type, unnest(range(mn, mx + 1)) AS day
       |  FROM (SELECT event_type, MIN(day) AS mn, MAX(day) AS mx
       |        FROM daily GROUP BY 1)
@@ -8712,9 +8566,7 @@ object Events {
   def chowBreakTest(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     def dsum(c: Column): Column = sum(c.cast(dec))
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val mid = daily.groupBy(col("event_type"))
       .agg(expr("(min(day) + max(day)) div 2").as("m"))
     val tagged = daily.join(broadcast(mid), "event_type")
@@ -8761,11 +8613,7 @@ object Events {
   }
 
   val chowBreakTestSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), mid AS (
+    s"""WITH $dailyValuesCte, mid AS (
       |  SELECT event_type, (MIN(day) + MAX(day)) // 2 AS m
       |  FROM daily GROUP BY 1
       |), tagged AS (
@@ -8940,9 +8788,7 @@ object Events {
     */
   def meanExcessLadder(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val w = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val ranked = daily
       .withColumn("rn", row_number().over(w))
@@ -8971,11 +8817,7 @@ object Events {
   }
 
   val meanExcessLadderSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
       |  SELECT event_type, day, v,
       |    row_number() OVER (PARTITION BY event_type ORDER BY v, day) AS rn,
       |    COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -9279,9 +9121,7 @@ object Events {
   def huberLocation(spark: SparkSession, dir: String,
                     c: Double = 1.345): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
       .localCheckpoint()
     val wMed = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val med = daily
@@ -9347,11 +9187,7 @@ object Events {
          |      AS mu$i
          |  FROM w$i GROUP BY 1
          |)""".stripMargin
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-       |  FROM events GROUP BY 1, 2
-       |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
        |  SELECT event_type, day, v,
        |    row_number() OVER (PARTITION BY event_type ORDER BY v, day) AS rn,
        |    COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -9850,9 +9686,7 @@ object Events {
     * relational form keeps both engines exact and identical.
     */
   def snRobustScale(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
       .localCheckpoint()
     val pairs = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type") &&
@@ -9882,11 +9716,7 @@ object Events {
   }
 
   val snRobustScaleSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), pairs AS (
+    s"""WITH $dailyValuesCte, pairs AS (
       |  SELECT a.event_type, a.day AS di, b.day AS dj,
       |    ABS(a.v - b.v) AS ad
       |  FROM daily a JOIN daily b
@@ -9937,9 +9767,7 @@ object Events {
     * everything after is a |types|-row readout.
     */
   def seasonalMannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
       .withColumn("wd", pmod(col("day"), lit(7)))
     val s = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type") &&
@@ -10038,9 +9866,7 @@ object Events {
     * the q42 shape, calendar-sized.
     */
   def quantileShapeProfile(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
     val w = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val ranked = daily
       .withColumn("rn", row_number().over(w))
@@ -10067,11 +9893,7 @@ object Events {
     val octs = (1 to 7).map(k =>
       s"MAX(CASE WHEN rn = (n * $k + $k) // 8 THEN v END) AS e$k")
       .mkString(",\n      |    ")
-    s"""WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
       |  SELECT event_type, v,
       |    row_number() OVER (PARTITION BY event_type ORDER BY v, day) AS rn,
       |    COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -10112,9 +9934,7 @@ object Events {
     * a ≤|types|×2-row readout.
     */
   def medianSpellProfile(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
       .localCheckpoint()
     val wMed = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val med = daily
@@ -10144,11 +9964,7 @@ object Events {
   }
 
   val medianSpellProfileSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), ranked AS (
+    s"""WITH $dailyValuesCte, ranked AS (
       |  SELECT event_type, day, v,
       |    row_number() OVER (PARTITION BY event_type ORDER BY v, day) AS rn,
       |    COUNT(*) OVER (PARTITION BY event_type) AS n
@@ -10203,9 +10019,7 @@ object Events {
   def olsInfluenceScreen(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     def dsum(c: Column): Column = sum(c.cast(dec))
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(Relational.decSum(col("value")).as("v"))
+    val daily = dailyValues(spark, dir)
       .withColumn("x", col("day").cast("double"))
       .withColumn("tx", col("x").cast(dec))
       .withColumn("ty", col("v").cast(dec))
@@ -10251,11 +10065,7 @@ object Events {
   }
 
   val olsInfluenceScreenSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-      |  FROM events GROUP BY 1, 2
-      |), terms AS (
+    s"""WITH $dailyValuesCte, terms AS (
       |  SELECT event_type, day, v, CAST(day AS DOUBLE) AS x,
       |    CAST(CAST(day AS DOUBLE) AS DECIMAL(28,6)) AS tx,
       |    CAST(v AS DECIMAL(28,6)) AS ty,
@@ -10316,10 +10126,7 @@ object Events {
     * combine + a 1-row p̄ broadcast — calendar-sized output.
     */
   def returnRatePChart(spark: SparkSession, dir: String): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - " +
-        s"pmod(unix_micros(cast($c as timestamp)), 86400000000)) " +
-        "div 86400000000"
+    import Temporal.dayOf
     val li = Tables.load(spark, dir, "lineitem")
       .select(expr(dayOf("l_shipdate")).as("day"),
         (col("l_returnflag") === "R").cast("long").as("r"))
@@ -10626,9 +10433,7 @@ object Events {
   def cointegrationScreen(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     def dsum(c: Column): Column = sum(c.cast(dec)).cast("double")
-    val daily = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), epochDayExpr.as("day"))
-      .agg(count(lit(1)).as("v"))
+    val daily = dailyCounts(spark, dir)
     val spine = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(explode(sequence(col("mn"), col("mx"))).as("day"))
     val types = daily.select(col("event_type")).distinct()
@@ -10693,11 +10498,7 @@ object Events {
   }
 
   val cointegrationScreenSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-      |    CAST(COUNT(*) AS BIGINT) AS v
-      |  FROM events GROUP BY 1, 2
-      |), spine AS (
+    s"""WITH $dailyCountsCte, spine AS (
       |  SELECT unnest(range(mn, mx + 1)) AS day
       |  FROM (SELECT MIN(day) AS mn, MAX(day) AS mx FROM daily)
       |), types AS (SELECT DISTINCT event_type FROM daily

@@ -111,6 +111,92 @@ object Graph {
       graft.Iterate.cut(basketCappedPairs(li, basketCap))
     })
 
+  /** The SQL twin of [[coPurchasePairs]]' input: `li` (distinct
+    * order × part) and the `pairs` CTE over it, pa < pb; `select` is
+    * the pair projection, `tail` what follows the join. */
+  private def coPurchaseCtes(select: String, tail: String): String =
+    s"""li AS (
+      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+      |), pairs AS (
+      |  SELECT $select
+      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
+      |    AND a.l_partkey < b.l_partkey$tail
+      |)""".stripMargin
+
+  private val weightedPairsCtes: String = coPurchaseCtes(
+    "a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w", "\n  GROUP BY 1, 2")
+  private val pairKeysCtes: String = coPurchaseCtes(
+    "a.l_partkey AS pa, b.l_partkey AS pb", "\n  GROUP BY 1, 2")
+  private val distinctPairsCtes: String = coPurchaseCtes(
+    "DISTINCT a.l_partkey AS pa, b.l_partkey AS pb", "")
+
+  /** Both directions of every weighted pair as `edges` (src, dst, w). */
+  private val weightedPairEdgesCtes: String =
+    s"""$weightedPairsCtes, edges AS (
+      |  SELECT pa AS src, pb AS dst, w FROM pairs
+      |  UNION ALL
+      |  SELECT pb AS src, pa AS dst, w FROM pairs
+      |)""".stripMargin
+
+  /** Weighted edges with their source's weighted degree (`edgesw`):
+    * the power-iteration input of the PageRank oracles. */
+  private val weightedEdgesCtes: String =
+    s"""$weightedPairEdgesCtes, wdeg AS (
+      |  SELECT src, CAST(SUM(w) AS BIGINT) AS wdeg FROM edges GROUP BY src
+      |), edgesw AS (
+      |  SELECT e.src, e.dst, e.w, d.wdeg FROM edges e JOIN wdeg d USING (src)
+      |)""".stripMargin
+
+  /** Power-iteration step `t`'s incoming rank per node (`c<t>`): each
+    * edge passes its source's `it<t-1>` rank share by weight. */
+  private def rankContribCte(t: Int): String =
+    s"""c$t AS (
+      |  SELECT e.dst,
+      |    CAST(SUM((r.rank_e12 * e.w) // e.wdeg) AS BIGINT) AS s
+      |  FROM edgesw e JOIN it${t - 1} r ON e.src = r.p
+      |  GROUP BY e.dst
+      |)""".stripMargin
+
+  /** Both directions of every grouped pair as `edges` (src, dst). */
+  private val pairEdgesCtes: String =
+    s"""$pairKeysCtes, edges AS (
+      |  SELECT pa AS src, pb AS dst FROM pairs
+      |  UNION ALL
+      |  SELECT pb AS src, pa AS dst FROM pairs
+      |)""".stripMargin
+
+  /** Distinct pairs, node degrees and each pair oriented from its
+    * lower-(degree, id) end: the triangle-listing prefix. */
+  private val orientedPairsCtes: String =
+    s"""$distinctPairsCtes, deg AS (
+      |  SELECT n, COUNT(*) AS d FROM (
+      |    SELECT pa AS n FROM pairs UNION ALL SELECT pb FROM pairs
+      |  ) GROUP BY n
+      |), ori AS (
+      |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
+      |           THEN pa ELSE pb END AS u,
+      |         CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
+      |           THEN pb ELSE pa END AS v
+      |  FROM pairs JOIN deg da ON da.n = pa JOIN deg db ON db.n = pb
+      |)""".stripMargin
+
+  /** Hop distances from the `k` highest-degree landmarks over `edges`,
+    * up to `maxHops` (needs `WITH RECURSIVE`). */
+  private def landmarkDistCtes(k: Int, maxHops: Int): String =
+    s"""lms AS (
+      |  SELECT src AS landmark FROM edges GROUP BY src
+      |  ORDER BY COUNT(*) DESC, src LIMIT $k
+      |), reach(landmark, p, hop) AS (
+      |  SELECT landmark, landmark, 0 FROM lms
+      |  UNION
+      |  SELECT r.landmark, e.dst, r.hop + 1
+      |  FROM reach r JOIN edges e ON e.src = r.p
+      |  WHERE r.hop < $maxHops
+      |), dist AS (
+      |  SELECT landmark, p, MIN(hop) AS hop
+      |  FROM reach GROUP BY 1, 2
+      |)""".stripMargin
+
   /** q107 — weighted PageRank, fixed `iters` power iterations with
     * damping 17/20 (= 0.85 as a RATIONAL) over the undirected
     * co-purchase graph: each undirected edge becomes two directed
@@ -270,22 +356,7 @@ object Graph {
   def personalizedPagerankSql(seedBrand: String = "Brand#1", iters: Int = 3,
                               dampNum: Int = 17, dampDen: Int = 20): String = {
     val base =
-      s"""WITH li AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |), pairs AS (
-        |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2
-        |), edges AS (
-        |  SELECT pa AS src, pb AS dst, w FROM pairs
-        |  UNION ALL
-        |  SELECT pb AS src, pa AS dst, w FROM pairs
-        |), wdeg AS (
-        |  SELECT src, CAST(SUM(w) AS BIGINT) AS wdeg FROM edges GROUP BY src
-        |), edgesw AS (
-        |  SELECT e.src, e.dst, e.w, d.wdeg FROM edges e JOIN wdeg d USING (src)
-        |), nodes AS (
+      s"""WITH $weightedEdgesCtes, nodes AS (
         |  SELECT DISTINCT li.l_partkey AS p,
         |    COALESCE(pt.p_brand = '$seedBrand', FALSE) AS is_seed
         |  FROM li LEFT JOIN part pt ON pt.p_partkey = li.l_partkey
@@ -296,12 +367,7 @@ object Graph {
         |  FROM nodes CROSS JOIN ns
         |)""".stripMargin
     val steps = (1 to iters).map { t =>
-      s""", c$t AS (
-        |  SELECT e.dst,
-        |    CAST(SUM((r.rank_e12 * e.w) // e.wdeg) AS BIGINT) AS s
-        |  FROM edgesw e JOIN it${t - 1} r ON e.src = r.p
-        |  GROUP BY e.dst
-        |), it$t AS (
+      s""", ${rankContribCte(t)}, it$t AS (
         |  SELECT nodes.p,
         |    (CASE WHEN nodes.is_seed
         |        THEN ((${dampDen - dampNum} * $Scale // $dampDen)) // n
@@ -316,6 +382,39 @@ object Graph {
         |  CAST(r.rank_e12 AS BIGINT) AS rank_e12
         |FROM it$iters r JOIN nodes ON nodes.p = r.p
         |ORDER BY r.rank_e12 DESC, p_partkey""".stripMargin
+  }
+
+  /** The triangle count (`n_triangles`) of a degree-oriented edge list
+    * `ori` (u, v): per edge, |N⁺(u) ∩ N⁺(v)| over sorted out-adjacency
+    * arrays. */
+  private[operators] def orientedTriangles(spark: SparkSession,
+                                           ori: DataFrame): DataFrame = {
+    val adj = ori.groupBy(col("u"))
+      .agg(array_sort(collect_list(col("v"))).as("nbrs"))
+    ori
+      .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
+      .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"))
+      .agg(coalesce(sum(graft.functions.SortedIntersectCount.intersectCount(
+        spark, col("nu"), col("nv"))), lit(0L)).as("n_triangles"))
+  }
+
+  /** Co-purchase pairs, node degrees, and every pair oriented from its
+    * lower-(degree, id) end, checkpointed: the triangle-listing input. */
+  private def degreeOriented(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val pairs = coPurchasePairs(spark, dir).select(col("pa"), col("pb"))
+    val deg = pairs.select(col("pa").as("n"))
+      .unionByName(pairs.select(col("pb").as("n")))
+      .groupBy(col("n")).agg(count(lit(1)).as("d"))
+    val withDeg = pairs
+      .join(deg.select(col("n").as("pa"), col("d").as("da")), "pa")
+      .join(deg.select(col("n").as("pb"), col("d").as("db")), "pb")
+    val aFirst = col("da") < col("db") ||
+      (col("da") === col("db") && col("pa") < col("pb"))
+    val ori = graft.Iterate.cut(withDeg.select(
+      when(aFirst, col("pa")).otherwise(col("pb")).as("u"),
+      when(aFirst, col("pb")).otherwise(col("pa")).as("v")))
+    (pairs, deg, ori)
   }
 
   /** q115 — triangle census of the co-purchase graph: edge count,
@@ -337,18 +436,7 @@ object Graph {
     * integer (Σ d(d−1)/2); the coefficient is the only double.
     */
   def triangleCensus(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = coPurchasePairs(spark, dir).select(col("pa"), col("pb"))
-    val deg = pairs.select(col("pa").as("n"))
-      .unionByName(pairs.select(col("pb").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val withDeg = pairs
-      .join(deg.select(col("n").as("pa"), col("d").as("da")), "pa")
-      .join(deg.select(col("n").as("pb"), col("d").as("db")), "pb")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("pa") < col("pb"))
-    val ori = graft.Iterate.cut(withDeg.select(
-      when(aFirst, col("pa")).otherwise(col("pb")).as("u"),
-      when(aFirst, col("pb")).otherwise(col("pa")).as("v")))
+    val (pairs, deg, ori) = degreeOriented(spark, dir)
     // adjacency-intersection form: per oriented edge (u, v), count
     // |N⁺(u) ∩ N⁺(v)| — each triangle's unique source wedge closes
     // exactly once. This replaces the wedge-materializing three-way
@@ -357,13 +445,7 @@ object Graph {
     // intersection (2.5 s): per-edge work is |N⁺(u)|+|N⁺(v)|, bounded
     // by the orientation's out-degree cap (~√m), and nothing larger
     // than an adjacency array is ever materialized.
-    val adj = ori.groupBy(col("u"))
-      .agg(array_sort(collect_list(col("v"))).as("nbrs"))
-    val tri = ori
-      .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
-      .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"))
-      .agg(coalesce(sum(graft.functions.SortedIntersectCount.intersectCount(
-        spark, col("nu"), col("nv"))), lit(0L)).as("n_triangles"))
+    val tri = orientedTriangles(spark, ori)
     val summary = deg.agg(
       count(lit(1)).as("n_nodes"),
       (sum(expr("d * (d - 1)")) / 2).cast("long").as("n_wedges"))
@@ -376,23 +458,7 @@ object Graph {
   }
 
   val triangleCensusSql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |), deg AS (
-      |  SELECT n, COUNT(*) AS d FROM (
-      |    SELECT pa AS n FROM pairs UNION ALL SELECT pb FROM pairs
-      |  ) GROUP BY n
-      |), ori AS (
-      |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
-      |           THEN pa ELSE pb END AS u,
-      |         CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
-      |           THEN pb ELSE pa END AS v
-      |  FROM pairs JOIN deg da ON da.n = pa JOIN deg db ON db.n = pb
-      |), tri AS (
+    s"""WITH $orientedPairsCtes, tri AS (
       |  SELECT COUNT(*) AS n_triangles
       |  FROM ori e1 JOIN ori e2 ON e1.v = e2.u
       |    JOIN ori e3 ON e3.u = e1.u AND e3.v = e2.v
@@ -461,13 +527,7 @@ object Graph {
     val unions = cutoffs.map(k =>
       s"SELECT $k AS degree_gt, n$k AS n_nodes, e$k AS n_edges FROM e CROSS JOIN nn")
       .mkString("\n      |  UNION ALL ")
-    s"""WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |), edges AS (
+    s"""WITH $distinctPairsCtes, edges AS (
       |  SELECT pa AS u, pb AS v FROM pairs
       |  UNION ALL SELECT pb, pa FROM pairs
       |), deg AS (
@@ -542,13 +602,7 @@ object Graph {
   }
 
   val degreeAssortativitySql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |), edges AS (
+    s"""WITH $distinctPairsCtes, edges AS (
       |  SELECT pa AS u, pb AS v FROM pairs
       |  UNION ALL SELECT pb, pa FROM pairs
       |), deg AS (
@@ -578,22 +632,7 @@ object Graph {
   def pagerankSql(iters: Int = 3, dampNum: Int = 17,
                   dampDen: Int = 20): String = {
     val base =
-      s"""WITH li AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |), pairs AS (
-        |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2
-        |), edges AS (
-        |  SELECT pa AS src, pb AS dst, w FROM pairs
-        |  UNION ALL
-        |  SELECT pb AS src, pa AS dst, w FROM pairs
-        |), wdeg AS (
-        |  SELECT src, CAST(SUM(w) AS BIGINT) AS wdeg FROM edges GROUP BY src
-        |), edgesw AS (
-        |  SELECT e.src, e.dst, e.w, d.wdeg FROM edges e JOIN wdeg d USING (src)
-        |), nodes AS (
+      s"""WITH $weightedEdgesCtes, nodes AS (
         |  SELECT DISTINCT l_partkey AS p FROM li
         |), nn AS (
         |  SELECT COUNT(*) AS n FROM nodes
@@ -601,12 +640,7 @@ object Graph {
         |  SELECT p, $Scale // n AS rank_e12 FROM nodes CROSS JOIN nn
         |)""".stripMargin
     val steps = (1 to iters).map { t =>
-      s""", c$t AS (
-        |  SELECT e.dst,
-        |    CAST(SUM((r.rank_e12 * e.w) // e.wdeg) AS BIGINT) AS s
-        |  FROM edgesw e JOIN it${t - 1} r ON e.src = r.p
-        |  GROUP BY e.dst
-        |), it$t AS (
+      s""", ${rankContribCte(t)}, it$t AS (
         |  SELECT nodes.p,
         |    ((${dampDen - dampNum} * $Scale // $dampDen) // n)
         |      + ($dampNum * COALESCE(c$t.s, 0)) // $dampDen AS rank_e12
@@ -1271,30 +1305,7 @@ object Graph {
   }
 
   def landmarkClosenessSql(k: Int = 8, maxHops: Int = 6): String =
-    s"""WITH RECURSIVE li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), edges AS (
-       |  SELECT pa AS src, pb AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT pb AS src, pa AS dst FROM pairs
-       |), lms AS (
-       |  SELECT src AS landmark FROM edges GROUP BY src
-       |  ORDER BY COUNT(*) DESC, src LIMIT $k
-       |), reach(landmark, p, hop) AS (
-       |  SELECT landmark, landmark, 0 FROM lms
-       |  UNION
-       |  SELECT r.landmark, e.dst, r.hop + 1
-       |  FROM reach r JOIN edges e ON e.src = r.p
-       |  WHERE r.hop < $maxHops
-       |), dist AS (
-       |  SELECT landmark, p, MIN(hop) AS hop
-       |  FROM reach GROUP BY 1, 2
-       |)
+    s"""WITH RECURSIVE $pairEdgesCtes, ${landmarkDistCtes(k, maxHops)}
        |SELECT landmark,
        |  CAST(COUNT(*) AS BIGINT) AS n_reached,
        |  CAST(SUM(hop) AS BIGINT) AS sum_hops,
@@ -1343,30 +1354,7 @@ object Graph {
   }
 
   def hopDistributionSql(k: Int = 8, maxHops: Int = 6): String =
-    s"""WITH RECURSIVE li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), edges AS (
-       |  SELECT pa AS src, pb AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT pb AS src, pa AS dst FROM pairs
-       |), lms AS (
-       |  SELECT src AS landmark FROM edges GROUP BY src
-       |  ORDER BY COUNT(*) DESC, src LIMIT $k
-       |), reach(landmark, p, hop) AS (
-       |  SELECT landmark, landmark, 0 FROM lms
-       |  UNION
-       |  SELECT r.landmark, e.dst, r.hop + 1
-       |  FROM reach r JOIN edges e ON e.src = r.p
-       |  WHERE r.hop < $maxHops
-       |), dist AS (
-       |  SELECT landmark, p, MIN(hop) AS hop
-       |  FROM reach GROUP BY 1, 2
-       |), by_hop AS (
+    s"""WITH RECURSIVE $pairEdgesCtes, ${landmarkDistCtes(k, maxHops)}, by_hop AS (
        |  SELECT hop, CAST(COUNT(*) AS BIGINT) AS n_pairs
        |  FROM dist WHERE hop >= 1 GROUP BY hop
        |), cum AS (
@@ -1437,18 +1425,7 @@ object Graph {
   }
 
   def seededWalksSql(k: Int = 8, steps: Int = 8): String =
-    s"""WITH RECURSIVE li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), edges AS (
-       |  SELECT pa AS src, pb AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT pb AS src, pa AS dst FROM pairs
-       |), adj AS (
+    s"""WITH RECURSIVE $pairEdgesCtes, adj AS (
        |  SELECT src, list(dst ORDER BY dst) AS nbrs,
        |    CAST(COUNT(*) AS BIGINT) AS deg
        |  FROM edges GROUP BY src
@@ -1470,18 +1447,7 @@ object Graph {
        |ORDER BY walk_id, step""".stripMargin
 
   def bfsHopsSql(maxHops: Int = 3): String =
-    s"""WITH RECURSIVE li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), edges AS (
-       |  SELECT pa AS src, pb AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT pb AS src, pa AS dst FROM pairs
-       |), seed AS (
+    s"""WITH RECURSIVE $pairEdgesCtes, seed AS (
        |  SELECT src FROM edges GROUP BY src
        |  ORDER BY COUNT(*) DESC, src LIMIT 1
        |), reach(p, hop) AS (
@@ -1560,14 +1526,7 @@ object Graph {
   }
 
   val brandModularitySql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |  GROUP BY 1, 2
-      |), tw AS (
+    s"""WITH $weightedPairsCtes, tw AS (
       |  SELECT SUM(w) AS total_w FROM pairs
       |), intra AS (
       |  SELECT x.p_brand AS brand, CAST(SUM(p.w) AS BIGINT) AS w_in
@@ -1656,14 +1615,7 @@ object Graph {
   }
 
   def weightedSsspSql(maxHops: Int = 3): String =
-    s"""WITH RECURSIVE li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), mw AS (
+    s"""WITH RECURSIVE $weightedPairsCtes, mw AS (
        |  SELECT MAX(w) AS max_w FROM pairs
        |), edges AS (
        |  SELECT pa AS src, pb AS dst, max_w + 1 - w AS cost FROM pairs, mw
@@ -1753,18 +1705,7 @@ object Graph {
          |      FROM v$i) WHERE rn = 1) w ON w.p = n.p
          |)""".stripMargin
     }.mkString
-    s"""WITH li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), edges AS (
-       |  SELECT pa AS src, pb AS dst, w FROM pairs
-       |  UNION ALL
-       |  SELECT pb AS src, pa AS dst, w FROM pairs
-       |), l0 AS (
+    s"""WITH $weightedPairEdgesCtes, l0 AS (
        |  SELECT DISTINCT l_partkey AS p, l_partkey AS lbl FROM li
        |)$rounds
        |SELECT p AS p_partkey, lbl AS community,
@@ -1833,14 +1774,7 @@ object Graph {
   }
 
   def itemCfRecsSql(topK: Int = 3, neighborCap: Int = 20): String =
-    s"""WITH li AS (
-       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |), pairs AS (
-       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-       |    AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2
-       |), sims AS (
+    s"""WITH $weightedPairsCtes, sims AS (
        |  SELECT p, p_to, w FROM (
        |    SELECT pa AS p, pb AS p_to, w FROM pairs
        |    UNION ALL
@@ -2397,18 +2331,7 @@ object Graph {
     */
   private def orientAdj(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val pairs = coPurchasePairs(spark, dir).select(col("pa"), col("pb"))
-    val deg = pairs.select(col("pa").as("n"))
-      .unionByName(pairs.select(col("pb").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val withDeg = pairs
-      .join(deg.select(col("n").as("pa"), col("d").as("da")), "pa")
-      .join(deg.select(col("n").as("pb"), col("d").as("db")), "pb")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("pa") < col("pb"))
-    val ori = graft.Iterate.cut(withDeg.select(
-      when(aFirst, col("pa")).otherwise(col("pb")).as("u"),
-      when(aFirst, col("pb")).otherwise(col("pa")).as("v")))
+    val (_, _, ori) = degreeOriented(spark, dir)
     val adjOut = ori.groupBy(col("u"))
       .agg(array_sort(collect_list(col("v"))).as("nbrs"))
     val adjIn = ori.groupBy(col("v"))
@@ -2454,23 +2377,7 @@ object Graph {
   }
 
   val localClusteringSql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |), deg AS (
-      |  SELECT n, COUNT(*) AS d FROM (
-      |    SELECT pa AS n FROM pairs UNION ALL SELECT pb FROM pairs
-      |  ) GROUP BY n
-      |), ori AS (
-      |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
-      |           THEN pa ELSE pb END AS u,
-      |         CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
-      |           THEN pb ELSE pa END AS v
-      |  FROM pairs JOIN deg da ON da.n = pa JOIN deg db ON db.n = pb
-      |), tri AS (
+    s"""WITH $orientedPairsCtes, tri AS (
       |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
       |  FROM ori e1 JOIN ori e2 ON e1.v = e2.u
       |    JOIN ori e3 ON e3.u = e1.u AND e3.v = e2.v
@@ -2556,23 +2463,7 @@ object Graph {
   }
 
   val edgeSupportSql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |), deg AS (
-      |  SELECT n, COUNT(*) AS d FROM (
-      |    SELECT pa AS n FROM pairs UNION ALL SELECT pb FROM pairs
-      |  ) GROUP BY n
-      |), ori AS (
-      |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
-      |           THEN pa ELSE pb END AS u,
-      |         CASE WHEN da.d < db.d OR (da.d = db.d AND pa < pb)
-      |           THEN pb ELSE pa END AS v
-      |  FROM pairs JOIN deg da ON da.n = pa JOIN deg db ON db.n = pb
-      |), tri AS (
+    s"""WITH $orientedPairsCtes, tri AS (
       |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
       |  FROM ori e1 JOIN ori e2 ON e1.v = e2.u
       |    JOIN ori e3 ON e3.u = e1.u AND e3.v = e2.v
@@ -2859,14 +2750,7 @@ object Graph {
        |FROM census""".stripMargin
 
   val brandAssortativitySql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |), pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |    AND a.l_partkey < b.l_partkey
-      |  GROUP BY 1, 2
-      |), tagged AS (
+    s"""WITH $weightedPairsCtes, tagged AS (
       |  SELECT pa.p_brand AS ba, pb.p_brand AS bb, p.w
       |  FROM pairs p
       |  JOIN part pa ON pa.p_partkey = p.pa

@@ -538,16 +538,7 @@ object Pii {
                         eps: Double = 1.0): DataFrame = {
     import graft.functions.PortableHash
     import org.apache.spark.sql.expressions.Window
-    val perUser = Tables.load(spark, dir, "events")
-      .groupBy(col("event_type"), col("user_id"))
-      .agg((graft.operators.Relational.decSum(col("value"))
-        / count(col("value"))).as("u_mean"))
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("u_mean"), col("user_id"))
-    val ranked = perUser
-      .withColumn("i", row_number().over(w).cast("long"))
-      .withColumn("n",
-        count(lit(1)).over(Window.partitionBy(col("event_type"))))
+    val ranked = Events.rankedUserMeans(spark, dir)
       .withColumn("target", expr("(n + 1) div 2"))
     val u = (PortableHash.md5Long60(concat(col("event_type"), lit("|"),
       col("i").cast("string"))).cast("double") + 0.5) /
@@ -575,18 +566,7 @@ object Pii {
   }
 
   def dpQuantileReleaseSql(eps: Double = 1.0): String =
-    s"""WITH per_user AS (
-       |  SELECT event_type, user_id,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value)
-       |      AS u_mean
-       |  FROM events GROUP BY 1, 2
-       |), ranked AS (
-       |  SELECT event_type, u_mean,
-       |    CAST(row_number() OVER (PARTITION BY event_type
-       |      ORDER BY u_mean, user_id) AS BIGINT) AS i,
-       |    COUNT(*) OVER (PARTITION BY event_type) AS n
-       |  FROM per_user
-       |), keyed AS (
+    s"""WITH ${Events.rankedUserMeansCtes}, keyed AS (
        |  SELECT event_type, u_mean, i, n, (n + 1) // 2 AS target,
        |    ROUND(${-eps / 2.0} * CAST(ABS(i - ((n + 1) // 2)) AS DOUBLE) +
        |      -ln(-ln((CAST(CAST(('0x' || substr(md5(event_type || '|' ||

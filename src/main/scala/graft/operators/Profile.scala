@@ -1060,6 +1060,22 @@ object Profile {
       |FROM m
       |ORDER BY dow, priority""".stripMargin
 
+  /** Lineitem's flags joined to their order's status and priority,
+    * at lineitem grain. */
+  private def lineFlags(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"))
+      .join(Tables.load(spark, dir, "orders")
+          .select(col("o_orderkey").as("l_orderkey"),
+            col("o_orderstatus"), col("o_orderpriority")),
+        "l_orderkey")
+
+  /** The categorical column pairs the association matrices score. */
+  private val flagPairs = Seq(
+    ("l_returnflag", "l_linestatus"),
+    ("o_orderstatus", "o_orderpriority"),
+    ("o_orderpriority", "l_returnflag"))
+
   /** q332 — Cramér's V association matrix for the categorical
     * columns: the pairs among (l_returnflag, l_linestatus,
     * o_orderstatus, o_orderpriority) — at lineitem grain, so the
@@ -1082,17 +1098,8 @@ object Profile {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     // all pairs evaluated at LINEITEM grain (order attributes repeat
     // per line) so the three V values are comparable on one population
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"))
-      .join(Tables.load(spark, dir, "orders")
-          .select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderstatus"), col("o_orderpriority")),
-        "l_orderkey")
-    val pairs = Seq(
-      ("l_returnflag", "l_linestatus"),
-      ("o_orderstatus", "o_orderpriority"),
-      ("o_orderpriority", "l_returnflag"))
-    val per = pairs.map { case (a, b) =>
+    val li = lineFlags(spark, dir)
+    val per = flagPairs.map { case (a, b) =>
       val cells = li.groupBy(col(a).as("va"), col(b).as("vb"))
         .agg(count(lit(1)).as("c"))
       val wA = Window.partitionBy(col("va"))
@@ -2136,6 +2143,19 @@ object Profile {
       |FROM per_type, globals g
       |ORDER BY event_type""".stripMargin
 
+  /** Lineitem ⋈ orders ⋈ supplier for ship lags: l_shipdate,
+    * o_orderdate and the supplier's s_nationkey per line. */
+  private def shippedLines(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.load(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
+    val orders = Tables.load(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_orderdate"))
+    val supp = Tables.load(spark, dir, "supplier")
+      .select(col("s_suppkey"), col("s_nationkey"))
+    li.join(orders, col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+  }
+
   /** q264 — one-way ANOVA of shipping lag across supplier nations:
     * does WHERE a supplier sits explain ship-delay variance? The
     * F statistic with its effect size η² — the continuous-outcome-by-
@@ -2162,14 +2182,7 @@ object Profile {
   def anovaShipLag(spark: SparkSession, dir: String,
                    lateDaysCap: Int = 3650): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 6)
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"))
-    val supp = Tables.load(spark, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val lags = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+    val lags = shippedLines(spark, dir)
       .withColumn("lag_days",
         expr("datediff(l_shipdate, o_orderdate)").cast("double"))
       .filter(col("lag_days").between(0, lateDaysCap))
@@ -2246,14 +2259,7 @@ object Profile {
     */
   def tukeyPairs(spark: SparkSession, dir: String,
                  lateDaysCap: Int = 3650): DataFrame = {
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"))
-    val supp = Tables.load(spark, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val lags = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+    val lags = shippedLines(spark, dir)
       .withColumn("lag", expr("datediff(l_shipdate, o_orderdate)"))
       .filter(col("lag").between(0, lateDaysCap))
     val byGroup = graft.Iterate.cut(lags.groupBy(col("s_nationkey"))
@@ -2341,14 +2347,7 @@ object Profile {
   def brownForsythe(spark: SparkSession, dir: String,
                     lateDaysCap: Int = 3650): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"))
-    val supp = Tables.load(spark, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val gv = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+    val gv = shippedLines(spark, dir)
       .select(col("s_nationkey").as("grp"),
         expr("datediff(l_shipdate, o_orderdate)").as("v"))
       .filter(col("v").between(0, lateDaysCap))
@@ -2446,14 +2445,7 @@ object Profile {
   def welchAnova(spark: SparkSession, dir: String,
                  lateDaysCap: Int = 3650): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"))
-    val supp = Tables.load(spark, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val byGroup = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+    val byGroup = shippedLines(spark, dir)
       .select(col("s_nationkey").as("grp"),
         expr("datediff(l_shipdate, o_orderdate)").as("v"))
       .filter(col("v").between(0, lateDaysCap))
@@ -2810,6 +2802,16 @@ object Profile {
       |FROM scored
       |ORDER BY feature, bucket""".stripMargin
 
+  /** Lineitem ⋈ orders: l_shipdate, o_orderdate and o_orderpriority
+    * per line. */
+  private def prioritizedLines(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.load(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_shipdate"))
+    val orders = Tables.load(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
+    li.join(orders, col("l_orderkey") === col("o_orderkey"))
+  }
+
   /** q269 — Kruskal–Wallis H across order priorities: does priority
     * class shift the ship-lag DISTRIBUTION? The k-group rank-based
     * completion of the two-sample tests (q238 Mann–Whitney is k=2;
@@ -2833,11 +2835,7 @@ object Profile {
     */
   def kruskalWallis(spark: SparkSession, dir: String,
                     lateDaysCap: Int = 3650): DataFrame = {
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val lags = li.join(orders, col("l_orderkey") === col("o_orderkey"))
+    val lags = prioritizedLines(spark, dir)
       .select(col("o_orderpriority").as("grp"),
         expr("datediff(l_shipdate, o_orderdate)").as("lag"))
       .filter(col("lag").between(0, lateDaysCap))
@@ -2963,11 +2961,7 @@ object Profile {
   def jonckheereTerpstra(spark: SparkSession, dir: String,
                          lateDaysCap: Int = 3650): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val gv = li.join(orders, col("l_orderkey") === col("o_orderkey"))
+    val gv = prioritizedLines(spark, dir)
       .select(col("o_orderpriority").as("grp"),
         expr("datediff(l_shipdate, o_orderdate)").as("v"))
       .filter(col("v").between(0, lateDaysCap))
@@ -3624,16 +3618,7 @@ object Profile {
     */
   def theilsUMatrix(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"))
-      .join(Tables.load(spark, dir, "orders")
-          .select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderstatus"), col("o_orderpriority")),
-        "l_orderkey")
-    val pairs = Seq(
-      ("l_returnflag", "l_linestatus"),
-      ("o_orderstatus", "o_orderpriority"),
-      ("o_orderpriority", "l_returnflag"))
+    val li = lineFlags(spark, dir)
     def entTerm(cnt: Column, n: Column): Column =
       round(-(cnt.cast("double") / n.cast("double")) *
         log(cnt.cast("double") / n.cast("double")), 6).cast(dec)
@@ -3644,13 +3629,13 @@ object Profile {
     // explode and one aggregate; everything downstream reads the
     // catalog-sized cut.
     val cellsAll = graft.Iterate.cut(li
-      .select(explode(array(pairs.zipWithIndex.map { case ((a, b), i) =>
+      .select(explode(array(flagPairs.zipWithIndex.map { case ((a, b), i) =>
         struct(lit(i).as("pid"), col(a).as("va"), col(b).as("vb"))
       }: _*)).as("t"))
       .groupBy(col("t.pid").as("pid"), col("t.va").as("va"),
         col("t.vb").as("vb"))
       .agg(count(lit(1)).as("c")))
-    val per = pairs.zipWithIndex.map { case ((a, b), i) =>
+    val per = flagPairs.zipWithIndex.map { case ((a, b), i) =>
       val cells = cellsAll.filter(col("pid") === i)
         .select(col("va"), col("vb"), col("c"))
       val nRow = cells.agg(sum(col("c")).as("n"))
@@ -4569,14 +4554,7 @@ object Profile {
     */
   def processCapability(spark: SparkSession, dir: String,
                         lsl: Int = 0, usl: Int = 60): DataFrame = {
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderdate"))
-    val supp = Tables.load(spark, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val lags = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+    val lags = shippedLines(spark, dir)
       .select(col("s_nationkey"),
         expr("datediff(l_shipdate, o_orderdate)").cast("long").as("x"))
     val g = lags.groupBy(col("s_nationkey"))

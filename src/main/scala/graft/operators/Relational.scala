@@ -1330,8 +1330,7 @@ object Relational {
   def lateCulprits(spark: SparkSession, dir: String,
                    lateDays: Int = 60): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
+    import Temporal.dayOf
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"),
         expr(dayOf("l_shipdate")).as("ship_day"))
@@ -1813,8 +1812,7 @@ object Relational {
     */
   def idleRichCustomers(spark: SparkSession, dir: String,
                         recencyDays: Int = 90): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
+    import Temporal.dayOf
     val cust = Tables.load(spark, dir, "customer")
     val orders = Tables.load(spark, dir, "orders")
       .select(col("o_custkey"), expr(dayOf("o_orderdate")).as("day"))
@@ -2871,6 +2869,54 @@ object Relational {
       |ORDER BY rank""".stripMargin
   }
 
+  /** Per (l_partkey, epoch week of l_shipdate) net revenue `rev` in
+    * integer cents. */
+  private def weeklyPartRevenue(spark: SparkSession, dir: String): DataFrame = {
+    val weekExpr = expr(
+      "(unix_micros(cast(l_shipdate as timestamp)) - " +
+        "pmod(unix_micros(cast(l_shipdate as timestamp)), 86400000000)) " +
+        "div 86400000000 div 7")
+    Tables.load(spark, dir, "lineitem")
+      .select(col("l_partkey"), weekExpr.as("week"),
+        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100,
+          0).cast("long").as("cents"))
+      .groupBy(col("l_partkey"), col("week"))
+      .agg(sum(col("cents")).as("rev"))
+  }
+
+  /** The SQL twin of [[weeklyPartRevenue]]. */
+  private val weeklyRevenueCte: String =
+    """weekly AS (
+      |  SELECT l_partkey, (epoch_ms(l_shipdate) // 86400000) // 7 AS week,
+      |    CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100,
+      |      0) AS BIGINT)) AS BIGINT) AS rev
+      |  FROM lineitem GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** The SQL twin of [[weeklyTopParts]] (`top`). */
+  private def weeklyTopCtes(topK: Int): String =
+    s"""$weeklyRevenueCte, top AS (
+      |  SELECT week, l_partkey, rank FROM (
+      |    SELECT week, l_partkey,
+      |      row_number() OVER (PARTITION BY week
+      |        ORDER BY rev DESC, l_partkey) AS rank
+      |    FROM weekly
+      |  ) WHERE rank <= $topK
+      |)""".stripMargin
+
+  /** Each week's `topK` parts by [[weeklyPartRevenue]] with their
+    * `rank`, checkpointed. */
+  private def weeklyTopParts(spark: SparkSession, dir: String,
+                             topK: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("week"))
+      .orderBy(col("rev").desc, col("l_partkey"))
+    graft.Iterate.cut(
+      weeklyPartRevenue(spark, dir).withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= topK)
+        .select(col("week"), col("l_partkey"), col("rank")))
+  }
+
   /** q373 — weekly trending parts: per ship week, the top-5 parts by
     * week-over-week discounted-revenue GROWTH (consecutive weeks
     * only, joined explicitly on week−1 so a gap week never fakes a
@@ -2891,16 +2937,7 @@ object Relational {
   def weeklyTrendingParts(spark: SparkSession, dir: String,
                           topK: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val weekExpr = expr(
-      "(unix_micros(cast(l_shipdate as timestamp)) - " +
-        "pmod(unix_micros(cast(l_shipdate as timestamp)), 86400000000)) " +
-        "div 86400000000 div 7")
-    val weekly = Tables.load(spark, dir, "lineitem")
-      .select(col("l_partkey"), weekExpr.as("week"),
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100,
-          0).cast("long").as("cents"))
-      .groupBy(col("l_partkey"), col("week"))
-      .agg(sum(col("cents")).as("rev"))
+    val weekly = weeklyPartRevenue(spark, dir)
     val grown = weekly.as("cur")
       .join(weekly.as("prev"),
         col("cur.l_partkey") === col("prev.l_partkey") &&
@@ -2920,12 +2957,7 @@ object Relational {
   }
 
   def weeklyTrendingPartsSql(topK: Int = 5): String =
-    s"""WITH weekly AS (
-       |  SELECT l_partkey, (epoch_ms(l_shipdate) // 86400000) // 7 AS week,
-       |    CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100, 0)
-       |      AS BIGINT)) AS BIGINT) AS rev
-       |  FROM lineitem GROUP BY 1, 2
-       |), grown AS (
+    s"""WITH $weeklyRevenueCte, grown AS (
        |  SELECT cur.week AS week, cur.l_partkey AS l_partkey,
        |    prev.rev AS rev_prev_cents, cur.rev AS rev_cents,
        |    ROUND(CAST(cur.rev AS DOUBLE) / CAST(prev.rev AS DOUBLE), 6)
@@ -3177,10 +3209,7 @@ object Relational {
   def slaAttainmentWilson(spark: SparkSession, dir: String,
                           slaDays: Int = 30,
                           z: Double = 1.959964): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - " +
-        s"pmod(unix_micros(cast($c as timestamp)), 86400000000)) " +
-        "div 86400000000"
+    import Temporal.dayOf
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), expr(dayOf("l_shipdate")).as("ship_day"))
     val o = Tables.load(spark, dir, "orders")
@@ -3958,16 +3987,7 @@ object Relational {
   def leaderboardChurn(spark: SparkSession, dir: String,
                        topK: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val weekExpr = expr(
-      "(unix_micros(cast(l_shipdate as timestamp)) - " +
-        "pmod(unix_micros(cast(l_shipdate as timestamp)), 86400000000)) " +
-        "div 86400000000 div 7")
-    val weekly = Tables.load(spark, dir, "lineitem")
-      .select(col("l_partkey"), weekExpr.as("week"),
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100,
-          0).cast("long").as("cents"))
-      .groupBy(col("l_partkey"), col("week"))
-      .agg(sum(col("cents")).as("rev"))
+    val weekly = weeklyPartRevenue(spark, dir)
     val w = Window.partitionBy(col("week"))
       .orderBy(col("rev").desc, col("l_partkey"))
     val top = graft.Iterate.cut(
@@ -3994,12 +4014,7 @@ object Relational {
   }
 
   def leaderboardChurnSql(topK: Int = 5): String =
-    s"""WITH weekly AS (
-       |  SELECT l_partkey, (epoch_ms(l_shipdate) // 86400000) // 7 AS week,
-       |    CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100,
-       |      0) AS BIGINT)) AS BIGINT) AS rev
-       |  FROM lineitem GROUP BY 1, 2
-       |), top AS (
+    s"""WITH $weeklyRevenueCte, top AS (
        |  SELECT week, l_partkey FROM (
        |    SELECT week, l_partkey,
        |      row_number() OVER (PARTITION BY week
@@ -4045,23 +4060,7 @@ object Relational {
     */
   def leaderboardRankDistance(spark: SparkSession, dir: String,
                               topK: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val weekExpr = expr(
-      "(unix_micros(cast(l_shipdate as timestamp)) - " +
-        "pmod(unix_micros(cast(l_shipdate as timestamp)), 86400000000)) " +
-        "div 86400000000 div 7")
-    val weekly = Tables.load(spark, dir, "lineitem")
-      .select(col("l_partkey"), weekExpr.as("week"),
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100,
-          0).cast("long").as("cents"))
-      .groupBy(col("l_partkey"), col("week"))
-      .agg(sum(col("cents")).as("rev"))
-    val w = Window.partitionBy(col("week"))
-      .orderBy(col("rev").desc, col("l_partkey"))
-    val top = graft.Iterate.cut(
-      weekly.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= topK)
-        .select(col("week"), col("l_partkey"), col("rank")))
+    val top = weeklyTopParts(spark, dir, topK)
     val common = top.as("cur").join(top.as("prev"),
         col("cur.l_partkey") === col("prev.l_partkey") &&
           col("cur.week") === col("prev.week") + 1)
@@ -4091,19 +4090,7 @@ object Relational {
   }
 
   def leaderboardRankDistanceSql(topK: Int = 20): String =
-    s"""WITH weekly AS (
-       |  SELECT l_partkey, (epoch_ms(l_shipdate) // 86400000) // 7 AS week,
-       |    CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100,
-       |      0) AS BIGINT)) AS BIGINT) AS rev
-       |  FROM lineitem GROUP BY 1, 2
-       |), top AS (
-       |  SELECT week, l_partkey, rank FROM (
-       |    SELECT week, l_partkey,
-       |      row_number() OVER (PARTITION BY week
-       |        ORDER BY rev DESC, l_partkey) AS rank
-       |    FROM weekly
-       |  ) WHERE rank <= $topK
-       |), common AS (
+    s"""WITH ${weeklyTopCtes(topK)}, common AS (
        |  SELECT cur.week, cur.l_partkey AS pk,
        |    cur.rank AS r_cur, prev.rank AS r_prev
        |  FROM top cur JOIN top prev
@@ -4153,24 +4140,8 @@ object Relational {
     */
   def leaderboardRbo(spark: SparkSession, dir: String, topK: Int = 20,
                      p: Double = 0.9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dec9 = org.apache.spark.sql.types.DecimalType(28, 9)
-    val weekExpr = expr(
-      "(unix_micros(cast(l_shipdate as timestamp)) - " +
-        "pmod(unix_micros(cast(l_shipdate as timestamp)), 86400000000)) " +
-        "div 86400000000 div 7")
-    val weekly = Tables.load(spark, dir, "lineitem")
-      .select(col("l_partkey"), weekExpr.as("week"),
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100,
-          0).cast("long").as("cents"))
-      .groupBy(col("l_partkey"), col("week"))
-      .agg(sum(col("cents")).as("rev"))
-    val w = Window.partitionBy(col("week"))
-      .orderBy(col("rev").desc, col("l_partkey"))
-    val top = graft.Iterate.cut(
-      weekly.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= topK)
-        .select(col("week"), col("l_partkey"), col("rank")))
+    val top = weeklyTopParts(spark, dir, topK)
     val common = top.as("cur").join(top.as("prev"),
         col("cur.l_partkey") === col("prev.l_partkey") &&
           col("cur.week") === col("prev.week") + 1)
@@ -4206,19 +4177,7 @@ object Relational {
   def leaderboardRboSql(topK: Int = 20, p: Double = 0.9): String = {
     val weights = (1 to topK)
       .map(d => s"($d, ${math.pow(p, d - 1)})").mkString(", ")
-    s"""WITH weekly AS (
-       |  SELECT l_partkey, (epoch_ms(l_shipdate) // 86400000) // 7 AS week,
-       |    CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100,
-       |      0) AS BIGINT)) AS BIGINT) AS rev
-       |  FROM lineitem GROUP BY 1, 2
-       |), top AS (
-       |  SELECT week, l_partkey, rank FROM (
-       |    SELECT week, l_partkey,
-       |      row_number() OVER (PARTITION BY week
-       |        ORDER BY rev DESC, l_partkey) AS rank
-       |    FROM weekly
-       |  ) WHERE rank <= $topK
-       |), common AS (
+    s"""WITH ${weeklyTopCtes(topK)}, common AS (
        |  SELECT cur.week,
        |    GREATEST(cur.rank, prev.rank) AS maxr
        |  FROM top cur JOIN top prev
@@ -4715,8 +4674,7 @@ object Relational {
     val li = Tables.load(spark, dir, "lineitem")
     val ord = Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderdate"))
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
+    import Temporal.dayOf
     val base = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .withColumn("lag_days",
         expr(dayOf("l_shipdate")) - expr(dayOf("o_orderdate")))

@@ -265,27 +265,52 @@ object Similarity {
     topK(scored, k)
   }
 
-  /** DuckDB twin of [[knnIvf]]: same decimal-exact label centroids
-    * (q35's statement), REAL-cast to match Spark's float centroid
-    * arrays, same argmax-cosine assignment, same nprobe=1 probe +
-    * rerank.
-    */
-  val knnIvfSql: String =
-    s"""WITH cent_long AS (
+  /** The SQL twin of [[labelCentroids]] as `cent` (`key`, c_emb):
+    * decimal-exact per-label means, REAL-cast like Spark's float
+    * centroid arrays. */
+  private def centroidCtes(key: String): String =
+    s"""cent_long AS (
       |  SELECT label, i - 1 AS dim,
       |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
       |      / COUNT(embedding[i]) AS centroid
       |  FROM embeddings, generate_series(1, 64) AS t(i)
       |  GROUP BY label, i
       |), cent AS (
-      |  SELECT label AS cell, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
+      |  SELECT $key, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
       |  FROM cent_long GROUP BY label
-      |), assigned AS (
-      |  SELECT e.vec_id, e.embedding, c.cell
+      |)""".stripMargin
+
+  /** Every vector's argmax-cosine centroid cell (`assigned`: vec_id,
+    * `column`, cell). */
+  private def assignedCellCtes(column: String): String =
+    s"""${centroidCtes("label AS cell")}, assigned AS (
+      |  SELECT e.vec_id, $column, c.cell
       |  FROM embeddings e CROSS JOIN cent c
       |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
       |    ORDER BY ${cosSql("e.embedding", "c.c_emb")} DESC, c.cell) = 1
-      |), q AS (
+      |)""".stripMargin
+
+  /** Vectors in long form (`lf`) and their per-label 9dp means as
+    * `name` (label, dim, cv). */
+  private def longCentroidCtes(name: String): String =
+    s"""lf AS (
+      |  SELECT vec_id, label, i - 1 AS dim,
+      |    CAST(embedding[i] AS DOUBLE) AS v
+      |  FROM embeddings, generate_series(1, 64) AS t(i)
+      |), $name AS (
+      |  SELECT label, dim,
+      |    ROUND(CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE)
+      |      / COUNT(v), 9) AS cv
+      |  FROM lf GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** DuckDB twin of [[knnIvf]]: same decimal-exact label centroids
+    * (q35's statement), REAL-cast to match Spark's float centroid
+    * arrays, same argmax-cosine assignment, same nprobe=1 probe +
+    * rerank.
+    */
+  val knnIvfSql: String =
+    s"""WITH ${assignedCellCtes("e.embedding")}, q AS (
       |  SELECT vec_id AS query_id, embedding AS q_emb, cell
       |  FROM assigned WHERE vec_id < 8
       |), scored AS (
@@ -1105,16 +1130,7 @@ object Similarity {
   }
 
   val centroidConfusionSql: String =
-    s"""WITH cent_long AS (
-      |  SELECT label, i - 1 AS dim,
-      |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-      |      / COUNT(embedding[i]) AS centroid
-      |  FROM embeddings, generate_series(1, 64) AS t(i)
-      |  GROUP BY label, i
-      |), cent AS (
-      |  SELECT label, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-      |  FROM cent_long GROUP BY label
-      |), sizes AS (
+    s"""WITH ${centroidCtes("label")}, sizes AS (
       |  SELECT label, COUNT(*) AS n FROM embeddings GROUP BY label
       |)
       |SELECT a.label AS label_a, b.label AS label_b,
@@ -1157,16 +1173,7 @@ object Similarity {
   }
 
   def embeddingDriftProfileSql(lowSim: Double = 0.1): String =
-    s"""WITH cent_long AS (
-      |  SELECT label, i - 1 AS dim,
-      |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-      |      / COUNT(embedding[i]) AS centroid
-      |  FROM embeddings, generate_series(1, 64) AS t(i)
-      |  GROUP BY label, i
-      |), cent AS (
-      |  SELECT label, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-      |  FROM cent_long GROUP BY label
-      |), scored AS (
+    s"""WITH ${centroidCtes("label")}, scored AS (
       |  SELECT e.label,
       |    ROUND(${cosSql("e.embedding", "c.c_emb")}, 6) AS cos_c
       |  FROM embeddings e JOIN cent c ON e.label = c.label
@@ -1583,21 +1590,7 @@ object Similarity {
          |      (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))
          |      for i in range(r.s*$dsub + 1, r.s*$dsub + ${dsub + 1})]),
          |    (x, y) -> x + y)""".stripMargin
-    s"""WITH cent_long AS (
-      |  SELECT label, i - 1 AS dim,
-      |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-      |      / COUNT(embedding[i]) AS centroid
-      |  FROM embeddings, generate_series(1, 64) AS t(i)
-      |  GROUP BY label, i
-      |), cent AS (
-      |  SELECT label AS cell, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-      |  FROM cent_long GROUP BY label
-      |), assigned AS (
-      |  SELECT e.vec_id, e.embedding, c.cell
-      |  FROM embeddings e CROSS JOIN cent c
-      |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-      |    ORDER BY ${cosSql("e.embedding", "c.c_emb")} DESC, c.cell) = 1
-      |), cb AS (
+    s"""WITH ${assignedCellCtes("e.embedding")}, cb AS (
       |  SELECT CAST(vec_id AS INT) AS code_id, embedding AS pq_emb
       |  FROM embeddings WHERE vec_id < $ksub
       |), codes AS (
@@ -1910,21 +1903,7 @@ object Similarity {
   }
 
   val clusterNmiSql: String =
-    s"""WITH cent_long AS (
-      |  SELECT label, i - 1 AS dim,
-      |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-      |      / COUNT(embedding[i]) AS centroid
-      |  FROM embeddings, generate_series(1, 64) AS t(i)
-      |  GROUP BY label, i
-      |), cent AS (
-      |  SELECT label AS cell, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-      |  FROM cent_long GROUP BY label
-      |), assigned AS (
-      |  SELECT e.vec_id, e.label, c.cell
-      |  FROM embeddings e CROSS JOIN cent c
-      |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-      |    ORDER BY ${cosSql("e.embedding", "c.c_emb")} DESC, c.cell) = 1
-      |), conf AS (
+    s"""WITH ${assignedCellCtes("e.label")}, conf AS (
       |  SELECT cell, label, COUNT(*) AS n_cl FROM assigned GROUP BY 1, 2
       |), total AS (
       |  SELECT CAST(SUM(n_cl) AS BIGINT) AS n_total FROM conf
@@ -2006,21 +1985,7 @@ object Similarity {
   }
 
   val clusterAriSql: String =
-    s"""WITH cent_long AS (
-      |  SELECT label, i - 1 AS dim,
-      |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-      |      / COUNT(embedding[i]) AS centroid
-      |  FROM embeddings, generate_series(1, 64) AS t(i)
-      |  GROUP BY label, i
-      |), cent AS (
-      |  SELECT label AS cell, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-      |  FROM cent_long GROUP BY label
-      |), assigned AS (
-      |  SELECT e.vec_id, e.label, c.cell
-      |  FROM embeddings e CROSS JOIN cent c
-      |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-      |    ORDER BY ${cosSql("e.embedding", "c.c_emb")} DESC, c.cell) = 1
-      |), conf AS (
+    s"""WITH ${assignedCellCtes("e.label")}, conf AS (
       |  SELECT cell, label, COUNT(*) AS n_cl FROM assigned GROUP BY 1, 2
       |), sij AS (
       |  SELECT CAST(SUM(n_cl * (n_cl - 1)) AS BIGINT) AS s_ij,
@@ -2050,6 +2015,24 @@ object Similarity {
     */
   private def ndcgWeightsE6(k: Int): Seq[Long] =
     (1 to k).map(i => math.round(1e6 / (math.log(i + 1.0) / math.log(2.0))))
+
+  /** Each of the first `nQueries` vectors' top-`k` cosine neighbours
+    * among the rest, with both labels (`ranked`). */
+  private def labeledTopKCtes(nQueries: Int, k: Int): String =
+    s"""q AS (
+      |  SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
+      |  FROM embeddings WHERE vec_id < $nQueries
+      |), scored AS (
+      |  SELECT q.query_id, q.q_label, e.vec_id AS neighbor_id, e.label AS n_label,
+      |    ROUND(${cosSql("q.q_emb", "e.embedding")}, 6) AS cos_sim
+      |  FROM embeddings e, q WHERE e.vec_id >= $nQueries
+      |), ranked AS (
+      |  SELECT query_id, q_label, n_label,
+      |    CAST(row_number() OVER (PARTITION BY query_id
+      |      ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
+      |  FROM scored
+      |  QUALIFY rank <= $k
+      |)""".stripMargin
 
   /** q159 — retrieval quality audit: nDCG@k of the q29 brute-force
     * cosine ranking against label-match relevance (a neighbor is
@@ -2106,20 +2089,7 @@ object Similarity {
       .mkString("CASE ", " ", " ELSE 0 END")
     val idcgCase = (1 to k).map(m => s"WHEN m = $m THEN ${prefix(m - 1)}")
       .mkString("CASE ", " ", " ELSE 0 END")
-    s"""WITH q AS (
-      |  SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
-      |  FROM embeddings WHERE vec_id < $nQueries
-      |), scored AS (
-      |  SELECT q.query_id, q.q_label, e.vec_id AS neighbor_id, e.label AS n_label,
-      |    ROUND(${cosSql("q.q_emb", "e.embedding")}, 6) AS cos_sim
-      |  FROM embeddings e, q WHERE e.vec_id >= $nQueries
-      |), ranked AS (
-      |  SELECT query_id, q_label, n_label,
-      |    CAST(row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-      |  FROM scored
-      |  QUALIFY rank <= $k
-      |), per_q AS (
+    s"""WITH ${labeledTopKCtes(nQueries, k)}, per_q AS (
       |  SELECT query_id, q_label,
       |    CAST(SUM(CASE WHEN n_label = q_label
       |      THEN $wCase ELSE 0 END) AS BIGINT) AS dcg_e6,
@@ -2191,21 +2161,7 @@ object Similarity {
       s"WHEN first_rel_rank = $i THEN ${BigDecimal(1.0 / i)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble}")
       .mkString("CASE ", " ", " ELSE 0.0 END")
-    s"""WITH q AS (
-       |  SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
-       |  FROM embeddings WHERE vec_id < $nQueries
-       |), scored AS (
-       |  SELECT q.query_id, q.q_label, e.vec_id AS neighbor_id,
-       |    e.label AS n_label,
-       |    ROUND(${cosSql("q.q_emb", "e.embedding")}, 6) AS cos_sim
-       |  FROM embeddings e, q WHERE e.vec_id >= $nQueries
-       |), ranked AS (
-       |  SELECT query_id, q_label, n_label,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-       |  FROM scored
-       |  QUALIFY rank <= $k
-       |), per_q AS (
+    s"""WITH ${labeledTopKCtes(nQueries, k)}, per_q AS (
        |  SELECT query_id, q_label,
        |    MIN(CASE WHEN n_label = q_label THEN rank END) AS first_rel_rank
        |  FROM ranked GROUP BY 1, 2
@@ -2514,16 +2470,7 @@ object Similarity {
   }
 
   val silhouetteSql: String =
-    s"""WITH cent_long AS (
-       |  SELECT label, i - 1 AS dim,
-       |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-       |      / COUNT(embedding[i]) AS centroid
-       |  FROM embeddings, generate_series(1, 64) AS t(i)
-       |  GROUP BY label, i
-       |), cent AS (
-       |  SELECT label AS cell, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-       |  FROM cent_long GROUP BY label
-       |), scored AS (
+    s"""WITH ${centroidCtes("label AS cell")}, scored AS (
        |  SELECT e.vec_id, e.label,
        |    MAX(CASE WHEN c.cell = e.label
        |      THEN ROUND(${cosSql("e.embedding", "c.c_emb")}, 6) END) AS cos_own,
@@ -3443,16 +3390,7 @@ object Similarity {
          |)""".stripMargin
     val chain = (1 to iters).map(k =>
       iter(if (k == 1) "c0" else s"c${k - 1}", k)).mkString(",\n")
-    s"""WITH lf AS (
-       |  SELECT vec_id, label, i - 1 AS dim,
-       |    CAST(embedding[i] AS DOUBLE) AS v
-       |  FROM embeddings, generate_series(1, 64) AS t(i)
-       |), c0 AS (
-       |  SELECT label, dim,
-       |    ROUND(CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE)
-       |      / COUNT(v), 9) AS cv
-       |  FROM lf GROUP BY 1, 2
-       |),
+    s"""WITH ${longCentroidCtes("c0")},
        |$chain
        |SELECT s.label, s.dim,
        |  ROUND(s.cv, 6) AS centroid_mean,
@@ -3934,16 +3872,7 @@ object Similarity {
   }
 
   val labelSeparabilitySql: String =
-    """WITH lf AS (
-      |  SELECT vec_id, label, i - 1 AS dim,
-      |    CAST(embedding[i] AS DOUBLE) AS v
-      |  FROM embeddings, generate_series(1, 64) AS t(i)
-      |), cent AS (
-      |  SELECT label, dim,
-      |    ROUND(CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE)
-      |      / COUNT(v), 9) AS cv
-      |  FROM lf GROUP BY 1, 2
-      |), d2 AS (
+    s"""WITH ${longCentroidCtes("cent")}, d2 AS (
       |  SELECT lf.vec_id, lf.label,
       |    CAST(SUM(CAST(ROUND((lf.v - c.cv) * (lf.v - c.cv), 9)
       |      AS DECIMAL(28,9))) AS DOUBLE) AS d2
@@ -4109,16 +4038,7 @@ object Similarity {
   }
 
   val daviesBouldinSql: String =
-    s"""WITH cent_long AS (
-       |  SELECT label, i - 1 AS dim,
-       |    CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
-       |      / COUNT(embedding[i]) AS centroid
-       |  FROM embeddings, generate_series(1, 64) AS t(i)
-       |  GROUP BY label, i
-       |), cent AS (
-       |  SELECT label AS cell, list(CAST(centroid AS REAL) ORDER BY dim) AS c_emb
-       |  FROM cent_long GROUP BY label
-       |), scatter AS (
+    s"""WITH ${centroidCtes("label AS cell")}, scatter AS (
        |  SELECT e.label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        |    ROUND(CAST(SUM(CAST(1.0 - ROUND(${cosSql("e.embedding", "c.c_emb")}, 6)
        |        AS DECIMAL(18,6))) AS DOUBLE)

@@ -142,8 +142,10 @@ object Temporal {
       .orderBy(col("user_id"), col("version"))
   }
 
-  val scd2IntervalsSql: String =
-    """WITH ordered AS (
+  /** Each user's state changes (`changes`): events whose type
+    * differs from the user's previous event. */
+  private val stateChangesCtes: String =
+    """ordered AS (
       |  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id,
       |    lag(event_type) OVER (PARTITION BY user_id
       |      ORDER BY epoch_ms(ts), event_id) AS prev_state
@@ -151,7 +153,20 @@ object Temporal {
       |), changes AS (
       |  SELECT user_id, event_type, ts_ms, event_id FROM ordered
       |  WHERE prev_state IS NULL OR prev_state <> event_type
-      |)
+      |)""".stripMargin
+
+  /** [[stateChangesCtes]] as versioned validity intervals `name`. */
+  private def stateIntervalsCtes(name: String): String =
+    s"""$stateChangesCtes, $name AS (
+      |  SELECT user_id, event_type AS state, ts_ms AS valid_from_ms,
+      |    lead(ts_ms) OVER w AS valid_to_ms,
+      |    CAST(row_number() OVER w AS INT) AS version
+      |  FROM changes
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
+      |)""".stripMargin
+
+  val scd2IntervalsSql: String =
+    s"""WITH $stateChangesCtes
       |SELECT user_id, event_type AS state, ts_ms AS valid_from_ms,
       |  lead(ts_ms) OVER w AS valid_to_ms,
       |  CAST(row_number() OVER w AS INT) AS version,
@@ -210,8 +225,6 @@ object Temporal {
     * group count, not line items.
     */
   def supplierLeadTime(spark: SparkSession, dir: String): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
         expr(dayOf("l_shipdate")).as("ship_day"))
@@ -272,6 +285,56 @@ object Temporal {
       |FROM o CROSS JOIN ad
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  /** Epoch day of date/timestamp column `c` with floor division (the
+    * SQL twin is `epoch_ms(c) // 86400000`). */
+  private[operators] def dayOf(c: String): String =
+    s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
+
+  /** Customer survival steps: per duration `dur` (days from a
+    * customer's first to last order) the events `d_events` (last order
+    * more than `censorDays` before the data's last order day),
+    * `n_censored` and the subject count `n_t`. */
+  private def survivalSteps(spark: SparkSession, dir: String,
+                            censorDays: Int): DataFrame = {
+    val orders = Tables.load(spark, dir, "orders")
+      .select(col("o_custkey"), expr(dayOf("o_orderdate")).as("day"))
+    val subj = orders.groupBy(col("o_custkey"))
+      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
+    val asof = orders.agg(max(col("day")).as("asof_day"))
+    val s = subj.crossJoin(broadcast(asof))
+      .select((col("d1") - col("d0")).as("dur"),
+        when(col("d1") <= col("asof_day") - censorDays, 1L).otherwise(0L).as("ev"))
+    s.groupBy(col("dur"))
+      .agg(sum(col("ev")).as("d_events"),
+        sum(lit(1L) - col("ev")).as("n_censored"),
+        count(lit(1)).as("n_t"))
+  }
+
+  /** The SQL twin of [[survivalSteps]] with the at-risk count `n_risk`
+    * as `r`; `withCensored` keeps the censored count. */
+  private def riskTableCtes(censorDays: Int,
+                            withCensored: Boolean = false): String = {
+    val censored = if (withCensored) " CAST(SUM(1 - ev) AS BIGINT) AS n_censored," else ""
+    s"""d AS (
+      |  SELECT o_custkey, epoch_ms(o_orderdate) // 86400000 AS day FROM orders
+      |), ad AS (
+      |  SELECT MAX(day) AS asof_day FROM d
+      |), subj AS (
+      |  SELECT MAX(day) - MIN(day) AS dur,
+      |    CASE WHEN MAX(day) <= (SELECT asof_day FROM ad) - $censorDays
+      |      THEN 1 ELSE 0 END AS ev
+      |  FROM d GROUP BY o_custkey
+      |), steps AS (
+      |  SELECT dur, CAST(SUM(ev) AS BIGINT) AS d_events,$censored COUNT(*) AS n_t
+      |  FROM subj GROUP BY dur
+      |), r AS (
+      |  SELECT dur, d_events,${if (withCensored) " n_censored," else ""}
+      |    SUM(n_t) OVER (ORDER BY dur DESC
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
+      |  FROM steps
+      |)""".stripMargin
+  }
+
   /** q151 — Kaplan–Meier survival of customer activity: per customer,
     * duration = days between first and last order; the customer
     * counts as a churn EVENT if their last order predates the
@@ -293,20 +356,7 @@ object Temporal {
     */
   def kaplanMeier(spark: SparkSession, dir: String,
                   censorDays: Int = 90): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_custkey"), expr(dayOf("o_orderdate")).as("day"))
-    val subj = orders.groupBy(col("o_custkey"))
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val asof = orders.agg(max(col("day")).as("asof_day"))
-    val s = subj.crossJoin(broadcast(asof))
-      .select((col("d1") - col("d0")).as("dur"),
-        when(col("d1") <= col("asof_day") - censorDays, 1L).otherwise(0L).as("ev"))
-    val steps = s.groupBy(col("dur"))
-      .agg(sum(col("ev")).as("d_events"),
-        sum(lit(1L) - col("ev")).as("n_censored"),
-        count(lit(1)).as("n_t"))
+    val steps = survivalSteps(spark, dir, censorDays)
     val wDesc = Window.orderBy(col("dur").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val wAsc = Window.orderBy(col("dur"))
@@ -331,25 +381,7 @@ object Temporal {
   }
 
   def kaplanMeierSql(censorDays: Int = 90): String =
-    s"""WITH d AS (
-      |  SELECT o_custkey, epoch_ms(o_orderdate) // 86400000 AS day FROM orders
-      |), ad AS (
-      |  SELECT MAX(day) AS asof_day FROM d
-      |), subj AS (
-      |  SELECT MAX(day) - MIN(day) AS dur,
-      |    CASE WHEN MAX(day) <= (SELECT asof_day FROM ad) - $censorDays
-      |      THEN 1 ELSE 0 END AS ev
-      |  FROM d GROUP BY o_custkey
-      |), steps AS (
-      |  SELECT dur, CAST(SUM(ev) AS BIGINT) AS d_events,
-      |    CAST(SUM(1 - ev) AS BIGINT) AS n_censored, COUNT(*) AS n_t
-      |  FROM subj GROUP BY dur
-      |), r AS (
-      |  SELECT dur, d_events, n_censored,
-      |    SUM(n_t) OVER (ORDER BY dur DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
-      |  FROM steps
-      |)
+    s"""WITH ${riskTableCtes(censorDays, withCensored = true)}
       |SELECT dur AS t_day, CAST(n_risk AS BIGINT) AS n_risk, d_events,
       |  n_censored,
       |  CASE WHEN MAX(CASE WHEN d_events = n_risk THEN 1 ELSE 0 END)
@@ -379,20 +411,7 @@ object Temporal {
     */
   def nelsonAalen(spark: SparkSession, dir: String,
                   censorDays: Int = 90): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_custkey"), expr(dayOf("o_orderdate")).as("day"))
-    val subj = orders.groupBy(col("o_custkey"))
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val asof = orders.agg(max(col("day")).as("asof_day"))
-    val s = subj.crossJoin(broadcast(asof))
-      .select((col("d1") - col("d0")).as("dur"),
-        when(col("d1") <= col("asof_day") - censorDays, 1L).otherwise(0L).as("ev"))
-    val steps = s.groupBy(col("dur"))
-      .agg(sum(col("ev")).as("d_events"),
-        sum(lit(1L) - col("ev")).as("n_censored"),
-        count(lit(1)).as("n_t"))
+    val steps = survivalSteps(spark, dir, censorDays)
     val wDesc = Window.orderBy(col("dur").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val wAsc = Window.orderBy(col("dur"))
@@ -411,25 +430,7 @@ object Temporal {
   }
 
   def nelsonAalenSql(censorDays: Int = 90): String =
-    s"""WITH d AS (
-      |  SELECT o_custkey, epoch_ms(o_orderdate) // 86400000 AS day FROM orders
-      |), ad AS (
-      |  SELECT MAX(day) AS asof_day FROM d
-      |), subj AS (
-      |  SELECT MAX(day) - MIN(day) AS dur,
-      |    CASE WHEN MAX(day) <= (SELECT asof_day FROM ad) - $censorDays
-      |      THEN 1 ELSE 0 END AS ev
-      |  FROM d GROUP BY o_custkey
-      |), steps AS (
-      |  SELECT dur, CAST(SUM(ev) AS BIGINT) AS d_events,
-      |    CAST(SUM(1 - ev) AS BIGINT) AS n_censored, COUNT(*) AS n_t
-      |  FROM subj GROUP BY dur
-      |), r AS (
-      |  SELECT dur, d_events, n_censored,
-      |    SUM(n_t) OVER (ORDER BY dur DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
-      |  FROM steps
-      |), h AS (
+    s"""WITH ${riskTableCtes(censorDays, withCensored = true)}, h AS (
       |  SELECT dur, d_events, n_censored, n_risk,
       |    SUM(CAST(ROUND(CAST(d_events AS DOUBLE) / n_risk, 6)
       |      AS DECIMAL(18,6))) OVER (ORDER BY dur
@@ -458,8 +459,6 @@ object Temporal {
     * lag windows partition by brand over it.
     */
   def weeklyDemandFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_quantity"),
         expr(s"(${dayOf("l_shipdate")}) div 7").as("week"))
@@ -671,8 +670,6 @@ object Temporal {
               segA: String = "AUTOMOBILE", segB: String = "BUILDING",
               censorDays: Int = 90): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
     val seg = Tables.load(spark, dir, "customer")
       .filter(col("c_mktsegment").isin(segA, segB))
       .select(col("c_custkey"), col("c_mktsegment").as("seg"))
@@ -809,15 +806,7 @@ object Temporal {
   }
 
   val stateSojournSql: String =
-    """WITH ordered AS (
-      |  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id,
-      |    lag(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY epoch_ms(ts), event_id) AS prev_state
-      |  FROM events
-      |), changes AS (
-      |  SELECT user_id, event_type, ts_ms, event_id FROM ordered
-      |  WHERE prev_state IS NULL OR prev_state <> event_type
-      |), iv AS (
+    s"""WITH $stateChangesCtes, iv AS (
       |  SELECT user_id, event_type AS state, ts_ms AS valid_from_ms,
       |    lead(ts_ms) OVER w AS valid_to_ms,
       |    CAST(row_number() OVER w AS INT) AS version,
@@ -855,6 +844,35 @@ object Temporal {
       |JOIN opens o ON o.state = a.state
       |ORDER BY a.state""".stripMargin
 
+  /** The as-of join inputs: purchases (purchase_id, user_id, p_ms) and
+    * signups (user_id, s_ms, the latest signup_id at that ms). */
+  private def purchasesAndSignups(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val ev = Tables.load(spark, dir, "events")
+      .withColumn("ms", tsMs("ts"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("ms").as("p_ms"))
+    val signups = ev.filter(col("event_type") === "signup")
+      .groupBy(col("user_id"), col("ms").as("s_ms"))
+      .agg(max(col("event_id")).as("signup_id"))
+    (purchases, signups)
+  }
+
+  /** The SQL twin of [[purchasesAndSignups]] (`p`, `s`). */
+  private val purchasesAndSignupsCtes: String =
+    """ev AS (
+      |  SELECT event_id, user_id, epoch_ms(ts) AS ms, event_type
+      |  FROM events
+      |), p AS (
+      |  SELECT event_id AS purchase_id, user_id, ms AS p_ms
+      |  FROM ev WHERE event_type = 'purchase'
+      |), s AS (
+      |  SELECT user_id, ms AS s_ms,
+      |    CAST(MAX(event_id) AS BIGINT) AS signup_id
+      |  FROM ev WHERE event_type = 'signup' GROUP BY 1, 2
+      |)""".stripMargin
+
   /** q296 — as-of join through the NATIVE custom operator
     * ([[graft.plans.AsofJoinExec]] — LogicalPlan + Strategy +
     * SparkPlan, SURVEY §2 tier (c)): each purchase joined to the same
@@ -873,14 +891,7 @@ object Temporal {
     * frame, no row buffering.
     */
   def asofNative(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(spark, dir, "events")
-      .withColumn("ms", Relational.tsMs("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ms").as("p_ms"))
-    val signups = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id"), col("ms").as("s_ms"))
-      .agg(max(col("event_id")).as("signup_id"))
+    val (purchases, signups) = purchasesAndSignups(spark, dir)
     graft.plans.AsofJoinOps
       .asofJoin(purchases, signups, Seq("user_id"), "p_ms", "s_ms")
       .select(col("purchase_id"), col("user_id"), col("p_ms"),
@@ -925,21 +936,7 @@ object Temporal {
   }
 
   val scd2LookupSql: String =
-    """WITH ordered AS (
-      |  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id,
-      |    lag(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY epoch_ms(ts), event_id) AS prev_state
-      |  FROM events
-      |), changes AS (
-      |  SELECT user_id, event_type, ts_ms, event_id FROM ordered
-      |  WHERE prev_state IS NULL OR prev_state <> event_type
-      |), iv AS (
-      |  SELECT user_id, event_type AS state, ts_ms AS valid_from_ms,
-      |    lead(ts_ms) OVER w AS valid_to_ms,
-      |    CAST(row_number() OVER w AS INT) AS version
-      |  FROM changes
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
-      |), p AS (
+    s"""WITH ${stateIntervalsCtes("iv")}, p AS (
       |  SELECT event_id AS purchase_id, user_id, epoch_ms(ts) AS p_ms
       |  FROM events WHERE event_type = 'purchase'
       |)
@@ -1071,14 +1068,7 @@ object Temporal {
     */
   def asofTolerance(spark: SparkSession, dir: String,
                     tolMs: Long = 30L * 86400000L): DataFrame = {
-    val ev = Tables.load(spark, dir, "events")
-      .withColumn("ms", tsMs("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ms").as("p_ms"))
-    val signups = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id"), col("ms").as("s_ms"))
-      .agg(max(col("event_id")).as("signup_id"))
+    val (purchases, signups) = purchasesAndSignups(spark, dir)
     graft.plans.AsofJoinOps
       .asofJoin(purchases, signups, Seq("user_id"), "p_ms", "s_ms",
         tolerance = Some(tolMs))
@@ -1089,17 +1079,7 @@ object Temporal {
   }
 
   def asofToleranceSql(tolMs: Long = 30L * 86400000L): String =
-    s"""WITH ev AS (
-       |  SELECT event_id, user_id, epoch_ms(ts) AS ms, event_type
-       |  FROM events
-       |), p AS (
-       |  SELECT event_id AS purchase_id, user_id, ms AS p_ms
-       |  FROM ev WHERE event_type = 'purchase'
-       |), s AS (
-       |  SELECT user_id, ms AS s_ms,
-       |    CAST(MAX(event_id) AS BIGINT) AS signup_id
-       |  FROM ev WHERE event_type = 'signup' GROUP BY 1, 2
-       |), m AS (
+    s"""WITH $purchasesAndSignupsCtes, m AS (
        |  SELECT p.purchase_id, p.user_id, p.p_ms, s.s_ms, s.signup_id
        |  FROM p ASOF LEFT JOIN s
        |    ON p.user_id = s.user_id AND p.p_ms >= s.s_ms
@@ -1187,14 +1167,7 @@ object Temporal {
     * exchanges on the left).
     */
   def asofBroadcast(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(spark, dir, "events")
-      .withColumn("ms", Relational.tsMs("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ms").as("p_ms"))
-    val signups = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id"), col("ms").as("s_ms"))
-      .agg(max(col("event_id")).as("signup_id"))
+    val (purchases, signups) = purchasesAndSignups(spark, dir)
     graft.plans.AsofJoinOps
       .asofJoinBroadcast(purchases, signups, Seq("user_id"), "p_ms", "s_ms")
       .select(col("purchase_id"), col("user_id"), col("p_ms"),
@@ -1203,17 +1176,7 @@ object Temporal {
   }
 
   val asofNativeSql: String =
-    """WITH ev AS (
-      |  SELECT event_id, user_id, epoch_ms(ts) AS ms, event_type
-      |  FROM events
-      |), p AS (
-      |  SELECT event_id AS purchase_id, user_id, ms AS p_ms
-      |  FROM ev WHERE event_type = 'purchase'
-      |), s AS (
-      |  SELECT user_id, ms AS s_ms,
-      |    CAST(MAX(event_id) AS BIGINT) AS signup_id
-      |  FROM ev WHERE event_type = 'signup' GROUP BY 1, 2
-      |)
+    s"""WITH $purchasesAndSignupsCtes
       |SELECT p.purchase_id, p.user_id, p.p_ms,
       |  s.s_ms AS last_signup_ms, s.signup_id
       |FROM p ASOF LEFT JOIN s
@@ -1235,8 +1198,6 @@ object Temporal {
     * aggregate. Exactness: day arithmetic and counts are integers.
     */
   def backlogCurve(spark: SparkSession, dir: String): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - pmod(unix_micros(cast($c as timestamp)), 86400000000)) div 86400000000"
     val orders = Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), expr(dayOf("o_orderdate")).as("open_day"))
     val done = Tables.load(spark, dir, "lineitem")
@@ -1498,21 +1459,7 @@ object Temporal {
   }
 
   val snapshotDiffSql: String =
-    """WITH ordered AS (
-      |  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id,
-      |    lag(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY epoch_ms(ts), event_id) AS prev_state
-      |  FROM events
-      |), changes AS (
-      |  SELECT user_id, event_type, ts_ms, event_id FROM ordered
-      |  WHERE prev_state IS NULL OR prev_state <> event_type
-      |), iv0 AS (
-      |  SELECT user_id, event_type AS state, ts_ms AS valid_from_ms,
-      |    lead(ts_ms) OVER w AS valid_to_ms,
-      |    CAST(row_number() OVER w AS INT) AS version
-      |  FROM changes
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
-      |), iv AS (
+    s"""WITH ${stateIntervalsCtes("iv0")}, iv AS (
       |  SELECT user_id, state, valid_from_ms, valid_to_ms FROM (
       |    SELECT *, row_number() OVER (PARTITION BY user_id, valid_from_ms
       |      ORDER BY version DESC) AS rn
@@ -1564,10 +1511,6 @@ object Temporal {
     * 1-row span broadcast.
     */
   def littlesLaw(spark: SparkSession, dir: String): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - " +
-        s"pmod(unix_micros(cast($c as timestamp)), 86400000000)) " +
-        "div 86400000000"
     val comp = Tables.load(spark, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(max(expr(dayOf("l_shipdate"))).as("c"))
@@ -1647,10 +1590,6 @@ object Temporal {
     * paths cannot drift on input grain.
     */
   private[graft] def weeklyDemand(spark: SparkSession, dir: String): DataFrame = {
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - " +
-        s"pmod(unix_micros(cast($c as timestamp)), 86400000000)) " +
-        "div 86400000000"
     Tables.load(spark, dir, "lineitem")
       .select(col("l_partkey").as("part"),
         expr(s"(${dayOf("l_shipdate")}) div 7").as("week"),
@@ -1823,10 +1762,6 @@ object Temporal {
   def safetyStock(spark: SparkSession, dir: String,
                   minWeeks: Int = 3, z: Double = 1.645): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val dayOf = (c: String) =>
-      s"(unix_micros(cast($c as timestamp)) - " +
-        s"pmod(unix_micros(cast($c as timestamp)), 86400000000)) " +
-        "div 86400000000"
     val li = Tables.load(spark, dir, "lineitem")
     val wk = li.select(col("l_partkey").as("part"),
         expr(s"(${dayOf("l_shipdate")}) div 7").as("week"), col("l_quantity"))
@@ -1908,24 +1843,7 @@ object Temporal {
       |FROM fitted ORDER BY part""".stripMargin
 
   def rmstLadderSql(censorDays: Int = 90): String =
-    s"""WITH d AS (
-      |  SELECT o_custkey, epoch_ms(o_orderdate) // 86400000 AS day FROM orders
-      |), ad AS (
-      |  SELECT MAX(day) AS asof_day FROM d
-      |), subj AS (
-      |  SELECT MAX(day) - MIN(day) AS dur,
-      |    CASE WHEN MAX(day) <= (SELECT asof_day FROM ad) - $censorDays
-      |      THEN 1 ELSE 0 END AS ev
-      |  FROM d GROUP BY o_custkey
-      |), steps AS (
-      |  SELECT dur, CAST(SUM(ev) AS BIGINT) AS d_events, COUNT(*) AS n_t
-      |  FROM subj GROUP BY dur
-      |), r AS (
-      |  SELECT dur, d_events,
-      |    SUM(n_t) OVER (ORDER BY dur DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
-      |  FROM steps
-      |), km AS (
+    s"""WITH ${riskTableCtes(censorDays)}, km AS (
       |  SELECT dur AS t_day,
       |    CASE WHEN MAX(CASE WHEN d_events = n_risk THEN 1 ELSE 0 END)
       |        OVER w = 1 THEN 0.0
@@ -2008,24 +1926,7 @@ object Temporal {
   }
 
   def greenwoodBandSql(censorDays: Int = 90): String =
-    s"""WITH d AS (
-      |  SELECT o_custkey, epoch_ms(o_orderdate) // 86400000 AS day FROM orders
-      |), ad AS (
-      |  SELECT MAX(day) AS asof_day FROM d
-      |), subj AS (
-      |  SELECT MAX(day) - MIN(day) AS dur,
-      |    CASE WHEN MAX(day) <= (SELECT asof_day FROM ad) - $censorDays
-      |      THEN 1 ELSE 0 END AS ev
-      |  FROM d GROUP BY o_custkey
-      |), steps AS (
-      |  SELECT dur, CAST(SUM(ev) AS BIGINT) AS d_events, COUNT(*) AS n_t
-      |  FROM subj GROUP BY dur
-      |), r AS (
-      |  SELECT dur, d_events,
-      |    SUM(n_t) OVER (ORDER BY dur DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_risk
-      |  FROM steps
-      |), km AS (
+    s"""WITH ${riskTableCtes(censorDays)}, km AS (
       |  SELECT dur AS t_day, CAST(n_risk AS BIGINT) AS n_risk, d_events,
       |    MAX(CASE WHEN d_events = n_risk THEN 1 ELSE 0 END) OVER w
       |      AS hit_zero,

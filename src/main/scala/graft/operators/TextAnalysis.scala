@@ -281,6 +281,99 @@ object TextAnalysis {
       |    / CAST(COUNT(*) AS DOUBLE), 6) AS hapax_share
       |FROM tf GROUP BY source ORDER BY source""".stripMargin
 
+  // Oracle CTEs of the naive-Bayes language model: the Spark side of
+  // every NB query is [[nbScores]], the SQL side interpolates these.
+  private val nbToksCte: String =
+    """toks AS (
+      |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
+      |  FROM (
+      |    SELECT doc_id, lang, unnest(list_filter(
+      |      string_split_regex(lower(text), '\s+'), t -> t <> '')) AS token
+      |    FROM documents
+      |  )
+      |  GROUP BY 1, 2, 3
+      |)""".stripMargin
+
+  private def nbModelCte(train: String, withCnt: Boolean): String =
+    s"""model AS (
+      |  SELECT lang AS c, token,${if (withCnt) " SUM(mult) AS cnt," else ""}
+      |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
+      |  FROM $train GROUP BY 1, 2
+      |)""".stripMargin
+
+  private def nbClassesCtes(train: String): String =
+    s"""vocab AS (
+      |  SELECT COUNT(DISTINCT token) AS v FROM model
+      |), classes AS (
+      |  SELECT lang AS c,
+      |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
+      |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
+      |  FROM $train GROUP BY 1
+      |)""".stripMargin
+
+  /** toks, the 4/5 train and 1/5 test split, the train model and
+    * classes, and the test tokens the model knows (`in_vocab`). */
+  private def nbHoldoutModelCtes(withCnt: Boolean = false): String =
+    s"""$nbToksCte, train AS (
+      |  SELECT * FROM toks WHERE doc_id % 5 <> 0
+      |), test AS (
+      |  SELECT * FROM toks WHERE doc_id % 5 = 0
+      |), ${nbModelCte("train", withCnt)}, ${nbClassesCtes("train")}, in_vocab AS (
+      |  SELECT t.* FROM test t
+      |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
+      |)""".stripMargin
+
+  private val nbSeenCte: String =
+    """seen AS (
+      |  SELECT iv.doc_id, m.c,
+      |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
+      |  FROM in_vocab iv JOIN model m ON m.token = iv.token
+      |  GROUP BY 1, 2
+      |)""".stripMargin
+
+  private val nbScoreSql: String =
+    """CAST(cl.l_prior AS DECIMAL(28,6))
+      |  + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
+      |  - md.m_d * CAST(cl.l_den AS DECIMAL(18,6))""".stripMargin
+
+  private val nbScoreFromSql: String =
+    """FROM md CROSS JOIN classes cl
+      |LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c""".stripMargin
+
+  /** Per (test doc, class) decimal scores over the holdout model. */
+  private val nbTestScoresCtes: String =
+    s"""md AS (
+      |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
+      |  FROM in_vocab GROUP BY 1, 2
+      |), $nbSeenCte, scores AS (
+      |  SELECT md.doc_id, md.true_lang, cl.c,
+      |    $nbScoreSql AS score
+      |  $nbScoreFromSql
+      |)""".stripMargin
+
+  /** The q22 stopword heuristic's prediction on the holdout fifth, as
+    * the `heur` CTE (doc_id, heur_pred) that q358 and q433 join. */
+  private val heurHoldoutCte: String = {
+    val heurPred =
+      """CASE WHEN s_en + s_es + s_fr + s_de > 0 THEN
+        |    CASE WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
+        |         WHEN s_fr > s_en AND s_fr > s_es THEN 'fr'
+        |         WHEN s_es > s_en THEN 'es'
+        |         ELSE 'en' END
+        |  ELSE 'und' END""".stripMargin
+    val en = hitsSql(langStopwords(0)._2)
+    val es = hitsSql(langStopwords(1)._2)
+    val fr = hitsSql(langStopwords(2)._2)
+    val de = hitsSql(langStopwords(3)._2)
+    s"""heur AS (
+       |  SELECT doc_id, $heurPred AS heur_pred FROM (
+       |    SELECT doc_id,
+       |      $en AS s_en, $es AS s_es, $fr AS s_fr, $de AS s_de
+       |    FROM documents WHERE doc_id % 5 = 0
+       |  )
+       |)""".stripMargin
+  }
+
   /** q349 — multinomial naive Bayes language classifier, trained AND
     * evaluated as relational algebra: docs split deterministically
     * (doc_id % 5 == 0 is the held-out fifth), per-(lang, token)
@@ -377,48 +470,7 @@ object TextAnalysis {
   }
 
   val nbLangConfusionSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-      |  FROM (
-      |    SELECT doc_id, lang, unnest(list_filter(
-      |      string_split_regex(lower(text), '\s+'), t -> t <> '')) AS token
-      |    FROM documents
-      |  )
-      |  GROUP BY 1, 2, 3
-      |), train AS (
-      |  SELECT * FROM toks WHERE doc_id % 5 <> 0
-      |), test AS (
-      |  SELECT * FROM toks WHERE doc_id % 5 = 0
-      |), model AS (
-      |  SELECT lang AS c, token, SUM(mult) AS cnt,
-      |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-      |  FROM train GROUP BY 1, 2
-      |), vocab AS (
-      |  SELECT COUNT(DISTINCT token) AS v FROM model
-      |), classes AS (
-      |  SELECT lang AS c,
-      |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-      |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-      |  FROM train GROUP BY 1
-      |), in_vocab AS (
-      |  SELECT t.* FROM test t
-      |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
-      |), md AS (
-      |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
-      |  FROM in_vocab GROUP BY 1, 2
-      |), seen AS (
-      |  SELECT iv.doc_id, m.c,
-      |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
-      |  FROM in_vocab iv JOIN model m ON m.token = iv.token
-      |  GROUP BY 1, 2
-      |), scores AS (
-      |  SELECT md.doc_id, md.true_lang, cl.c,
-      |    CAST(cl.l_prior AS DECIMAL(28,6))
-      |      + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-      |      - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) AS score
-      |  FROM md CROSS JOIN classes cl
-      |  LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
-      |), pred AS (
+    s"""WITH ${nbHoldoutModelCtes(withCnt = true)}, $nbTestScoresCtes, pred AS (
       |  SELECT doc_id, true_lang, c AS pred_lang FROM (
       |    SELECT doc_id, true_lang, c,
       |      row_number() OVER (PARTITION BY doc_id
@@ -484,69 +536,18 @@ object TextAnalysis {
             / (col("n") * col("n")).cast("double")), 6).as("kappa"))
   }
 
-  val classifierKappaSql: String = {
-    val heurPred =
-      """CASE WHEN s_en + s_es + s_fr + s_de > 0 THEN
-        |    CASE WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
-        |         WHEN s_fr > s_en AND s_fr > s_es THEN 'fr'
-        |         WHEN s_es > s_en THEN 'es'
-        |         ELSE 'en' END
-        |  ELSE 'und' END""".stripMargin
-    val en = hitsSql(langStopwords(0)._2)
-    val es = hitsSql(langStopwords(1)._2)
-    val fr = hitsSql(langStopwords(2)._2)
-    val de = hitsSql(langStopwords(3)._2)
-    s"""WITH toks AS (
-       |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-       |  FROM (
-       |    SELECT doc_id, lang, unnest(list_filter(
-       |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
-       |    FROM documents
-       |  )
-       |  GROUP BY 1, 2, 3
-       |), train AS (
-       |  SELECT * FROM toks WHERE doc_id % 5 <> 0
-       |), test AS (
-       |  SELECT * FROM toks WHERE doc_id % 5 = 0
-       |), model AS (
-       |  SELECT lang AS c, token,
-       |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-       |  FROM train GROUP BY 1, 2
-       |), vocab AS (
-       |  SELECT COUNT(DISTINCT token) AS v FROM model
-       |), classes AS (
-       |  SELECT lang AS c,
-       |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-       |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-       |  FROM train GROUP BY 1
-       |), in_vocab AS (
-       |  SELECT t.* FROM test t
-       |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
-       |), md AS (
+  val classifierKappaSql: String =
+    s"""WITH ${nbHoldoutModelCtes()}, md AS (
        |  SELECT doc_id, SUM(mult) AS m_d FROM in_vocab GROUP BY 1
-       |), seen AS (
-       |  SELECT iv.doc_id, m.c,
-       |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
-       |  FROM in_vocab iv JOIN model m ON m.token = iv.token
-       |  GROUP BY 1, 2
-       |), nb AS (
+       |), $nbSeenCte, nb AS (
        |  SELECT doc_id, c AS nb_pred FROM (
        |    SELECT md.doc_id, cl.c,
        |      row_number() OVER (PARTITION BY md.doc_id ORDER BY
-       |        CAST(cl.l_prior AS DECIMAL(28,6))
-       |          + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-       |          - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) DESC,
+       |        $nbScoreSql DESC,
        |        cl.c) AS rk
-       |    FROM md CROSS JOIN classes cl
-       |    LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
+       |    $nbScoreFromSql
        |  ) WHERE rk = 1
-       |), heur AS (
-       |  SELECT doc_id, $heurPred AS heur_pred FROM (
-       |    SELECT doc_id,
-       |      $en AS s_en, $es AS s_es, $fr AS s_fr, $de AS s_de
-       |    FROM documents WHERE doc_id % 5 = 0
-       |  )
-       |), joined AS (
+       |), $heurHoldoutCte, joined AS (
        |  SELECT nb.nb_pred, h.heur_pred
        |  FROM nb JOIN heur h ON h.doc_id = nb.doc_id
        |), tot AS (
@@ -572,7 +573,6 @@ object TextAnalysis {
        |    / (1.0 - CAST(p.pe_num AS DOUBLE) / CAST(t.n * t.n AS DOUBLE)),
        |    6) AS kappa
        |FROM tot t CROSS JOIN pe p""".stripMargin
-  }
 
   /** q352 — label-noise screen (confident-learning-lite): the NB
     * model SELF-TRAINED on the whole labeled corpus re-scores every
@@ -612,26 +612,8 @@ object TextAnalysis {
   }
 
   val labelNoiseScreenSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-      |  FROM (
-      |    SELECT doc_id, lang, unnest(list_filter(
-      |      string_split_regex(lower(text), '\s+'), t -> t <> '')) AS token
-      |    FROM documents
-      |  )
-      |  GROUP BY 1, 2, 3
-      |), model AS (
-      |  SELECT lang AS c, token, SUM(mult) AS cnt,
-      |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-      |  FROM toks GROUP BY 1, 2
-      |), vocab AS (
-      |  SELECT COUNT(DISTINCT token) AS v FROM model
-      |), classes AS (
-      |  SELECT lang AS c,
-      |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-      |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-      |  FROM toks GROUP BY 1
-      |), md AS (
+    s"""WITH $nbToksCte, ${nbModelCte("toks", withCnt = true)},
+      |  ${nbClassesCtes("toks")}, md AS (
       |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
       |  FROM toks GROUP BY 1, 2
       |), seen AS (
@@ -641,11 +623,8 @@ object TextAnalysis {
       |  GROUP BY 1, 2
       |), scores AS (
       |  SELECT md.doc_id, md.true_lang, cl.c,
-      |    CAST(cl.l_prior AS DECIMAL(28,6))
-      |      + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-      |      - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) AS score
-      |  FROM md CROSS JOIN classes cl
-      |  LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
+      |    $nbScoreSql AS score
+      |  $nbScoreFromSql
       |), pred AS (
       |  SELECT doc_id, true_lang, c AS pred_lang, score AS s_pred FROM (
       |    SELECT doc_id, true_lang, c, score,
@@ -1940,6 +1919,27 @@ object TextAnalysis {
       |FROM tc LEFT JOIN nt ON tc.bucket = nt.bucket
       |ORDER BY tc.bucket""".stripMargin
 
+  /** The `topTokens` tokens by document frequency from (token, doc_id,
+    * tf) rows, each with its tf total and its first `postingsCap`
+    * doc ids. */
+  private def topPostings(perDoc: DataFrame, topTokens: Int,
+                          postingsCap: Int): DataFrame = {
+    val stats = perDoc.groupBy(col("token"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("tf_total"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("token")).orderBy(col("doc_id"))
+    val postings = perDoc
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= postingsCap)
+      .groupBy(col("token"))
+      .agg(array_join(sort_array(collect_list(col("doc_id")))
+        .cast("array<string>"), ",").as("postings"))
+    stats.join(postings, "token")
+      .select(col("token"), col("df"), col("tf_total"), col("postings"))
+      .orderBy(col("df").desc, col("token"))
+      .limit(topTokens)
+  }
+
   /** q164 — inverted-index posting lists: the IR-engine artifact
     * itself, materialized as a relation. For the `topTokens` highest-df
     * tokens: document frequency, total term frequency, and the first
@@ -1967,20 +1967,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("token"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-    val stats = perDoc.groupBy(col("token"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("tf_total"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("token")).orderBy(col("doc_id"))
-    val postings = perDoc
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= postingsCap)
-      .groupBy(col("token"))
-      .agg(array_join(sort_array(collect_list(col("doc_id")))
-        .cast("array<string>"), ",").as("postings"))
-    stats.join(postings, "token")
-      .select(col("token"), col("df"), col("tf_total"), col("postings"))
-      .orderBy(col("df").desc, col("token"))
-      .limit(topTokens)
+    topPostings(perDoc, topTokens, postingsCap)
   }
 
   /** q361 — INCREMENTAL index maintenance, graded against the full
@@ -2012,20 +1999,7 @@ object TextAnalysis {
       .localCheckpoint()
     val delta = perDocOf(docs.filter(col("doc_id") % 10 === 0))
     val merged = base.unionByName(delta)
-    val stats = merged.groupBy(col("token"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("tf_total"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("token")).orderBy(col("doc_id"))
-    val postings = merged
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= postingsCap)
-      .groupBy(col("token"))
-      .agg(array_join(sort_array(collect_list(col("doc_id")))
-        .cast("array<string>"), ",").as("postings"))
-    stats.join(postings, "token")
-      .select(col("token"), col("df"), col("tf_total"), col("postings"))
-      .orderBy(col("df").desc, col("token"))
-      .limit(topTokens)
+    topPostings(merged, topTokens, postingsCap)
   }
 
   def invertedIndexSql(topTokens: Int = 100, postingsCap: Int = 10): String =
@@ -3073,52 +3047,16 @@ object TextAnalysis {
   }
 
   def uncertaintySampleSql(budget: Int = 20): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-       |  FROM (
-       |    SELECT doc_id, lang, unnest(list_filter(
-       |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
-       |    FROM documents
-       |  )
-       |  GROUP BY 1, 2, 3
-       |), train AS (
-       |  SELECT * FROM toks WHERE doc_id % 5 <> 0
-       |), test AS (
-       |  SELECT * FROM toks WHERE doc_id % 5 = 0
-       |), model AS (
-       |  SELECT lang AS c, token,
-       |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-       |  FROM train GROUP BY 1, 2
-       |), vocab AS (
-       |  SELECT COUNT(DISTINCT token) AS v FROM model
-       |), classes AS (
-       |  SELECT lang AS c,
-       |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-       |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-       |  FROM train GROUP BY 1
-       |), in_vocab AS (
-       |  SELECT t.* FROM test t
-       |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
-       |), md AS (
+    s"""WITH ${nbHoldoutModelCtes()}, md AS (
        |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
        |  FROM in_vocab GROUP BY 1, 2
-       |), seen AS (
-       |  SELECT iv.doc_id, m.c,
-       |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
-       |  FROM in_vocab iv JOIN model m ON m.token = iv.token
-       |  GROUP BY 1, 2
-       |), scored AS (
+       |), $nbSeenCte, scored AS (
        |  SELECT md.doc_id, md.true_lang, cl.c,
-       |    CAST(cl.l_prior AS DECIMAL(28,6))
-       |      + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-       |      - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) AS score,
+       |    $nbScoreSql AS score,
        |    row_number() OVER (PARTITION BY md.doc_id ORDER BY
-       |      CAST(cl.l_prior AS DECIMAL(28,6))
-       |        + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-       |        - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) DESC,
+       |      $nbScoreSql DESC,
        |      cl.c) AS rk
-       |  FROM md CROSS JOIN classes cl
-       |  LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
+       |  $nbScoreFromSql
        |), top AS (
        |  SELECT doc_id, true_lang, c AS pred_lang, score AS s1
        |  FROM scored WHERE rk = 1
@@ -3192,70 +3130,19 @@ object TextAnalysis {
           .otherwise("no_significant_diff").as("verdict"))
   }
 
-  val mcnemarLangIdSql: String = {
-    val heurPred =
-      """CASE WHEN s_en + s_es + s_fr + s_de > 0 THEN
-        |    CASE WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
-        |         WHEN s_fr > s_en AND s_fr > s_es THEN 'fr'
-        |         WHEN s_es > s_en THEN 'es'
-        |         ELSE 'en' END
-        |  ELSE 'und' END""".stripMargin
-    val en = hitsSql(langStopwords(0)._2)
-    val es = hitsSql(langStopwords(1)._2)
-    val fr = hitsSql(langStopwords(2)._2)
-    val de = hitsSql(langStopwords(3)._2)
-    s"""WITH toks AS (
-       |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-       |  FROM (
-       |    SELECT doc_id, lang, unnest(list_filter(
-       |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
-       |    FROM documents
-       |  )
-       |  GROUP BY 1, 2, 3
-       |), train AS (
-       |  SELECT * FROM toks WHERE doc_id % 5 <> 0
-       |), test AS (
-       |  SELECT * FROM toks WHERE doc_id % 5 = 0
-       |), model AS (
-       |  SELECT lang AS c, token,
-       |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-       |  FROM train GROUP BY 1, 2
-       |), vocab AS (
-       |  SELECT COUNT(DISTINCT token) AS v FROM model
-       |), classes AS (
-       |  SELECT lang AS c,
-       |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-       |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-       |  FROM train GROUP BY 1
-       |), in_vocab AS (
-       |  SELECT t.* FROM test t
-       |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
-       |), md AS (
+  val mcnemarLangIdSql: String =
+    s"""WITH ${nbHoldoutModelCtes()}, md AS (
        |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
        |  FROM in_vocab GROUP BY 1, 2
-       |), seen AS (
-       |  SELECT iv.doc_id, m.c,
-       |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
-       |  FROM in_vocab iv JOIN model m ON m.token = iv.token
-       |  GROUP BY 1, 2
-       |), nb AS (
+       |), $nbSeenCte, nb AS (
        |  SELECT doc_id, true_lang, c AS nb_pred FROM (
        |    SELECT md.doc_id, md.true_lang, cl.c,
        |      row_number() OVER (PARTITION BY md.doc_id ORDER BY
-       |        CAST(cl.l_prior AS DECIMAL(28,6))
-       |          + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-       |          - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) DESC,
+       |        $nbScoreSql DESC,
        |        cl.c) AS rk
-       |    FROM md CROSS JOIN classes cl
-       |    LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
+       |    $nbScoreFromSql
        |  ) WHERE rk = 1
-       |), heur AS (
-       |  SELECT doc_id, $heurPred AS heur_pred FROM (
-       |    SELECT doc_id,
-       |      $en AS s_en, $es AS s_es, $fr AS s_fr, $de AS s_de
-       |    FROM documents WHERE doc_id % 5 = 0
-       |  )
-       |), j AS (
+       |), $heurHoldoutCte, j AS (
        |  SELECT
        |    CASE WHEN h.heur_pred = nb.true_lang THEN 1 ELSE 0 END AS h_ok,
        |    CASE WHEN nb.nb_pred = nb.true_lang THEN 1 ELSE 0 END AS b_ok
@@ -3284,7 +3171,6 @@ object TextAnalysis {
        |    WHEN chi2 > 3.841 THEN 'heur_better'
        |    ELSE 'no_significant_diff' END AS verdict
        |FROM c""".stripMargin
-  }
 
   // ------------------------------------------------------------------
   // Round-12 portable-sketch battery: the q306 KMV precedent (md5-
@@ -3647,48 +3533,7 @@ object TextAnalysis {
   }
 
   def costThresholdSweepSql(fnCost: Int = 5): String =
-    s"""WITH toks AS (
-      |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-      |  FROM (
-      |    SELECT doc_id, lang, unnest(list_filter(
-      |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
-      |    FROM documents
-      |  )
-      |  GROUP BY 1, 2, 3
-      |), train AS (
-      |  SELECT * FROM toks WHERE doc_id % 5 <> 0
-      |), test AS (
-      |  SELECT * FROM toks WHERE doc_id % 5 = 0
-      |), model AS (
-      |  SELECT lang AS c, token, SUM(mult) AS cnt,
-      |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-      |  FROM train GROUP BY 1, 2
-      |), vocab AS (
-      |  SELECT COUNT(DISTINCT token) AS v FROM model
-      |), classes AS (
-      |  SELECT lang AS c,
-      |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-      |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-      |  FROM train GROUP BY 1
-      |), in_vocab AS (
-      |  SELECT t.* FROM test t
-      |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
-      |), md AS (
-      |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
-      |  FROM in_vocab GROUP BY 1, 2
-      |), seen AS (
-      |  SELECT iv.doc_id, m.c,
-      |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
-      |  FROM in_vocab iv JOIN model m ON m.token = iv.token
-      |  GROUP BY 1, 2
-      |), scores AS (
-      |  SELECT md.doc_id, md.true_lang, cl.c,
-      |    CAST(cl.l_prior AS DECIMAL(28,6))
-      |      + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-      |      - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) AS score
-      |  FROM md CROSS JOIN classes cl
-      |  LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
-      |), margins AS (
+    s"""WITH ${nbHoldoutModelCtes(withCnt = true)}, $nbTestScoresCtes, margins AS (
       |  SELECT doc_id, true_lang,
       |    ROUND(CAST(MAX(CASE WHEN c = 'en' THEN score END)
       |      - MAX(CASE WHEN c <> 'en' THEN score END) AS DOUBLE), 6)
@@ -3836,11 +3681,11 @@ object TextAnalysis {
   }
 
   val sourceAblationValueSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, lang, source, token, CAST(COUNT(*) AS BIGINT) AS mult
       |  FROM (
       |    SELECT doc_id, lang, source, unnest(list_filter(
-      |      string_split_regex(lower(text), '\s+'), t -> t <> '')) AS token
+      |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
       |    FROM documents
       |  )
       |  GROUP BY 1, 2, 3, 4
@@ -3901,9 +3746,7 @@ object TextAnalysis {
       |  GROUP BY 1, 2, 3
       |), scores AS (
       |  SELECT md.excl, md.doc_id, md.true_lang, cl.c,
-      |    CAST(cl.l_prior AS DECIMAL(28,6))
-      |      + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-      |      - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) AS score
+      |    $nbScoreSql AS score
       |  FROM md
       |  JOIN classes_loo cl ON cl.excl = md.excl
       |  LEFT JOIN seen s
@@ -3996,18 +3839,22 @@ object TextAnalysis {
         (col("s").cast("double") / lit(topTerms * 1e6)).as("delta"))
   }
 
-  def burrowsDeltaSql(topTerms: Int = 50, topK: Int = 10): String =
-    s"""WITH tf AS (
+  /** Per-(source, token) counts and per-source token totals. */
+  private val sourceTfCtes: String =
+    """tf AS (
       |  SELECT source, token, CAST(COUNT(*) AS BIGINT) AS m
       |  FROM (
       |    SELECT source, unnest(list_filter(
-      |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
+      |      string_split_regex(lower(text), '\s+'), t -> t <> '')) AS token
       |    FROM documents
       |  )
       |  GROUP BY 1, 2
       |), src_tot AS (
       |  SELECT source, CAST(SUM(m) AS BIGINT) AS st FROM tf GROUP BY 1
-      |), kk AS (
+      |)""".stripMargin
+
+  def burrowsDeltaSql(topTerms: Int = 50, topK: Int = 10): String =
+    s"""WITH $sourceTfCtes, kk AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS k FROM src_tot
       |), top AS (
       |  SELECT token FROM (
@@ -4239,17 +4086,7 @@ object TextAnalysis {
   }
 
   def juillandDispersionSql(minCf: Int = 10, topK: Int = 10): String =
-    s"""WITH tf AS (
-      |  SELECT source, token, CAST(COUNT(*) AS BIGINT) AS m
-      |  FROM (
-      |    SELECT source, unnest(list_filter(
-      |      string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
-      |    FROM documents
-      |  )
-      |  GROUP BY 1, 2
-      |), src_tot AS (
-      |  SELECT source, CAST(SUM(m) AS BIGINT) AS st FROM tf GROUP BY 1
-      |), k AS (
+    s"""WITH $sourceTfCtes, k AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS k FROM src_tot
       |), rel AS (
       |  SELECT t.token, t.m,
@@ -4448,48 +4285,7 @@ object TextAnalysis {
   }
 
   val nbCalibrationEceSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, lang, token, CAST(COUNT(*) AS BIGINT) AS mult
-      |  FROM (
-      |    SELECT doc_id, lang, unnest(list_filter(
-      |      string_split_regex(lower(text), '\s+'), t -> t <> '')) AS token
-      |    FROM documents
-      |  )
-      |  GROUP BY 1, 2, 3
-      |), train AS (
-      |  SELECT * FROM toks WHERE doc_id % 5 <> 0
-      |), test AS (
-      |  SELECT * FROM toks WHERE doc_id % 5 = 0
-      |), model AS (
-      |  SELECT lang AS c, token, SUM(mult) AS cnt,
-      |    ROUND(log10(SUM(mult) + 1), 6) AS l_num
-      |  FROM train GROUP BY 1, 2
-      |), vocab AS (
-      |  SELECT COUNT(DISTINCT token) AS v FROM model
-      |), classes AS (
-      |  SELECT lang AS c,
-      |    ROUND(log10(COUNT(DISTINCT doc_id)), 6) AS l_prior,
-      |    ROUND(log10(SUM(mult) + (SELECT v FROM vocab)), 6) AS l_den
-      |  FROM train GROUP BY 1
-      |), in_vocab AS (
-      |  SELECT t.* FROM test t
-      |  JOIN (SELECT DISTINCT token FROM model) m ON m.token = t.token
-      |), md AS (
-      |  SELECT doc_id, lang AS true_lang, SUM(mult) AS m_d
-      |  FROM in_vocab GROUP BY 1, 2
-      |), seen AS (
-      |  SELECT iv.doc_id, m.c,
-      |    SUM(iv.mult * CAST(m.l_num AS DECIMAL(18,6))) AS sum_num
-      |  FROM in_vocab iv JOIN model m ON m.token = iv.token
-      |  GROUP BY 1, 2
-      |), scores AS (
-      |  SELECT md.doc_id, md.true_lang, cl.c,
-      |    CAST(cl.l_prior AS DECIMAL(28,6))
-      |      + COALESCE(s.sum_num, CAST(0 AS DECIMAL(18,6)))
-      |      - md.m_d * CAST(cl.l_den AS DECIMAL(18,6)) AS score
-      |  FROM md CROSS JOIN classes cl
-      |  LEFT JOIN seen s ON s.doc_id = md.doc_id AND s.c = cl.c
-      |), sc AS (
+    s"""WITH ${nbHoldoutModelCtes(withCnt = true)}, $nbTestScoresCtes, sc AS (
       |  SELECT doc_id, true_lang, c, score,
       |    MAX(score) OVER (PARTITION BY doc_id) AS smax,
       |    row_number() OVER (PARTITION BY doc_id

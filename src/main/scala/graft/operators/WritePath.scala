@@ -76,6 +76,9 @@ object WritePath {
     * (`migrate.ts:48`) and writes 100-row batches; here the scan and
     * write are distributed and batching is partition-level.
     *
+    * A table without an entry in `keys` is deduplicated on the whole
+    * row (nulls compare equal), so a rerun copies nothing.
+    *
     * Returns (table -> copied row count); failed tables map to -1.
     */
   def migrate(spark: SparkSession, srcDir: String, destDir: String,
@@ -88,7 +91,8 @@ object WritePath {
         // existence guard (E: migrate.ts:43-46)
         require(catalog.contains(t), s"model $t not in catalog")
         val src = Tables.load(spark, srcDir, t, catalog)
-        val k = keys.getOrElse(t, src.columns.take(1).toSeq)
+        // without explicit keys a row is its own key
+        val k = keys.getOrElse(t, src.columns.toSeq)
         val deduped = src.dropDuplicates(k)
         val destPath = s"$destDir/$t.parquet"
         // destination existence via the Hadoop FileSystem of the path
@@ -100,7 +104,11 @@ object WritePath {
         val toWrite =
           if (fs.exists(hPath)) {
             val existing = spark.read.parquet(destPath)
-            deduped.join(existing, k, "left_anti")
+            if (keys.contains(t)) deduped.join(existing, k, "left_anti")
+            // whole-row key: null-safe, so a row holding a null still
+            // matches its earlier copy
+            else deduped.join(existing,
+              k.map(c => deduped(c) <=> existing(c)).reduce(_ && _), "left_anti")
           } else deduped
         // empty-input short-circuit (E3: migrate.ts:53-56); with a
         // required-columns contract the write runs in E2 quarantine

@@ -646,6 +646,50 @@ object Multimodal {
 
   case class AHashRow(doc_id: Long, b0: Int, b1: Int, b2: Int, b3: Int)
 
+  /** The SQL twin of [[bandHammingDups]]' answer, stated as all pairs
+    * (no banding) over `bands` (doc_id, band_idx, band_val). */
+  private def hammingPairsSql(maxDist: Int): String =
+    s"""hashes AS (
+      |  SELECT doc_id,
+      |    MAX(CASE WHEN band_idx = 0 THEN band_val END) AS b0,
+      |    MAX(CASE WHEN band_idx = 1 THEN band_val END) AS b1,
+      |    MAX(CASE WHEN band_idx = 2 THEN band_val END) AS b2,
+      |    MAX(CASE WHEN band_idx = 3 THEN band_val END) AS b3
+      |  FROM bands GROUP BY doc_id
+      |)
+      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |  CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
+      |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
+      |    AS INT) AS hamming
+      |FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
+      |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
+      |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
+      |  <= $maxDist
+      |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Pairs of 64-bit image hashes (four 16-bit bands `b0`..`b3` per
+    * doc) within `maxDist` bits: candidates share one identical band,
+    * then the full hamming distance is verified. */
+  private def bandHammingDups(hashes: DataFrame, maxDist: Int): DataFrame = {
+    val bands = hashes.select(col("doc_id"), posexplode(
+      array(col("b0"), col("b1"), col("b2"), col("b3"))).as(Seq("band_idx", "band_val")))
+    val cand = bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    cand
+      .join(hashes.select(col("doc_id").as("doc_a"), col("b0").as("a0"),
+        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), "doc_a")
+      .join(hashes.select(col("doc_id").as("doc_b"), col("b0").as("c0"),
+        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3")), "doc_b")
+      .withColumn("hamming", expr(
+        "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) + " +
+          "bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"))
+      .filter(col("hamming") <= maxDist)
+      .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
+
   /** q244 — perceptual-hash image near-dup join: every document's 8×8
     * grayscale thumbnail ([[encodeGrayBmp]]) through the REAL BMP
     * decode + average-hash kernel ([[decodeAHashBands]]), then an
@@ -678,23 +722,7 @@ object Multimodal {
         AHashRow(r.doc_id, b(0), b(1), b(2), b(3))
       }
     }.toDF().localCheckpoint() // two consumers: band explode + verify join
-    val bands = hashes.select(col("doc_id"), posexplode(
-      array(col("b0"), col("b1"), col("b2"), col("b3"))).as(Seq("band_idx", "band_val")))
-    val cand = bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    cand
-      .join(hashes.select(col("doc_id").as("doc_a"), col("b0").as("a0"),
-        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), "doc_a")
-      .join(hashes.select(col("doc_id").as("doc_b"), col("b0").as("c0"),
-        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3")), "doc_b")
-      .withColumn("hamming", expr(
-        "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) + " +
-          "bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    bandHammingDups(hashes, maxDist)
   }
 
   case class AviMeta(doc_id: Long, width: Int, height: Int,
@@ -1270,23 +1298,7 @@ object Multimodal {
        |      THEN 1 << (px.i % 16) ELSE 0 END) AS BIGINT) AS band_val
        |  FROM px JOIN tot t ON t.doc_id = px.doc_id
        |  GROUP BY px.doc_id, px.i // 16
-       |), hashes AS (
-       |  SELECT doc_id,
-       |    MAX(CASE WHEN band_idx = 0 THEN band_val END) AS b0,
-       |    MAX(CASE WHEN band_idx = 1 THEN band_val END) AS b1,
-       |    MAX(CASE WHEN band_idx = 2 THEN band_val END) AS b2,
-       |    MAX(CASE WHEN band_idx = 3 THEN band_val END) AS b3
-       |  FROM bands GROUP BY doc_id
-       |)
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-       |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
-       |    AS INT) AS hamming
-       |FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-       |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
-       |  <= $maxDist
-       |ORDER BY doc_a, doc_b""".stripMargin
+       |), ${hammingPairsSql(maxDist)}""".stripMargin
 
   /** 16×16 grayscale thumbnail fixture (the pHash kernel's input —
     * DCT on 8×8 leaves too few AC coefficients): a real 24bpp
@@ -1439,23 +1451,7 @@ object Multimodal {
         PHashRow(r.doc_id, b(0), b(1), b(2), b(3))
       }
     }.toDF().localCheckpoint() // two consumers: band explode + verify join
-    val bands = hashes.select(col("doc_id"), posexplode(
-      array(col("b0"), col("b1"), col("b2"), col("b3"))).as(Seq("band_idx", "band_val")))
-    val cand = bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    cand
-      .join(hashes.select(col("doc_id").as("doc_a"), col("b0").as("a0"),
-        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), "doc_a")
-      .join(hashes.select(col("doc_id").as("doc_b"), col("b0").as("c0"),
-        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3")), "doc_b")
-      .withColumn("hamming", expr(
-        "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) + " +
-          "bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    bandHammingDups(hashes, maxDist)
   }
 
   /** Oracle twin: lumas re-derived from the payload generation (the
@@ -1500,23 +1496,7 @@ object Multimodal {
        |      THEN 1 << (c.bit_i % 16) ELSE 0 END) AS BIGINT) AS band_val
        |  FROM cz c JOIN med USING (doc_id)
        |  GROUP BY 1, 2
-       |), hashes AS (
-       |  SELECT doc_id,
-       |    MAX(CASE WHEN band_idx = 0 THEN band_val END) AS b0,
-       |    MAX(CASE WHEN band_idx = 1 THEN band_val END) AS b1,
-       |    MAX(CASE WHEN band_idx = 2 THEN band_val END) AS b2,
-       |    MAX(CASE WHEN band_idx = 3 THEN band_val END) AS b3
-       |  FROM bands GROUP BY doc_id
-       |)
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-       |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
-       |    AS INT) AS hamming
-       |FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-       |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
-       |  <= $maxDist
-       |ORDER BY doc_a, doc_b""".stripMargin
+       |), ${hammingPairsSql(maxDist)}""".stripMargin
   }
 
   /** Deterministic JPEG-with-EXIF fixture: SOI, one APP1 Exif segment

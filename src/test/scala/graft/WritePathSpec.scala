@@ -15,6 +15,7 @@ import graft.operators.WritePath
 class WritePathSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
+  val sf0001 = "/root/testdata/sf0.001"
 
   private def checkProp(p: Prop): Unit = {
     val res = SCTest.check(
@@ -97,6 +98,34 @@ class WritePathSpec extends AnyFunSuite {
     assert(second("region") === 0L)
     assert(second("nation") === 0L)
     assert(spark.read.parquet(s"$dest/nation.parquet").count() === 25L)
+  }
+
+  test("migrate without keys copies every distinct lineitem row") {
+    val dest = Files.createTempDirectory("graft-migrate-rows").toString
+    val first = WritePath.migrate(spark, sf0001, dest, Seq("lineitem"), Map.empty)
+    assert(first("lineitem") === 6000L)
+    assert(spark.read.parquet(s"$dest/lineitem.parquet").count() === 6000L)
+  }
+
+  test("migrate without keys copies nothing on rerun") {
+    val dest = Files.createTempDirectory("graft-migrate-rerun").toString
+    WritePath.migrate(spark, sf0001, dest, Seq("lineitem"), Map.empty)
+    val second = WritePath.migrate(spark, sf0001, dest, Seq("lineitem"), Map.empty)
+    assert(second("lineitem") === 0L)
+    assert(spark.read.parquet(s"$dest/lineitem.parquet").count() === 6000L)
+  }
+
+  test("migrate without keys matches rows holding a null on rerun") {
+    val src = Files.createTempDirectory("graft-migrate-null-src").toString
+    val dest = Files.createTempDirectory("graft-migrate-null-dest").toString
+    Seq((0, Some("AFRICA")), (1, None), (1, None))
+      .toDF("r_regionkey", "r_name")
+      .write.mode("overwrite").parquet(s"$src/region.parquet")
+    val first = WritePath.migrate(spark, src, dest, Seq("region"), Map.empty)
+    assert(first("region") === 2L)
+    val second = WritePath.migrate(spark, src, dest, Seq("region"), Map.empty)
+    assert(second("region") === 0L)
+    assert(spark.read.parquet(s"$dest/region.parquet").count() === 2L)
   }
 
   test("migrate pipeline driven end-to-end from a parsed schema string (S2)") {
