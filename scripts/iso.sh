@@ -2,6 +2,8 @@
 # Isolated single-/multi-query bench in a fresh JVM — same protocol as
 # Bench.runChild (5 reps, 1 warmup by default). Usage:
 #   scripts/iso.sh q187_cf_holdout_eval[,q153_negative_samples] [reps] [warmup]
+# SPARK_GRAFT_CPUS reaches the child only when it is set; unset, the
+# child uses GraftSession's min(32, nproc) threads, as Bench's own do.
 set -euo pipefail
 NAMES="$1"; REPS="${2:-5}"; WARM="${3:-1}"
 CLS=/root/repo/target/scala-2.13/classes
@@ -11,7 +13,6 @@ cd "$TMP"
 SPARK_GRAFT_ONLY="$NAMES" SPARK_GRAFT_REPS="$REPS" SPARK_GRAFT_WARMUP_REPS="$WARM" \
 SPARK_GRAFT_CHILD=1 \
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 java -Xmx${ISO_XMX:-8g} $MOD -cp "$CLS:/opt/spark/jars/*" graft.Bench 2>/dev/null \
  | python3 -c '
 import json,sys

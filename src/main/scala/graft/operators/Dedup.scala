@@ -3533,8 +3533,8 @@ object Dedup {
         val src = top(0).getString(0); val g = top(0).getLong(1)
         picked = picked :+ ((r, src, g))
         val newCov = sf.filter(col("source") === src).select(col("shingle"))
-        covered = (if (covered == null) newCov
-          else covered.unionByName(newCov).distinct()).localCheckpoint()
+        covered = graft.Iterate.cut(if (covered == null) newCov
+          else covered.unionByName(newCov).distinct())
         remaining = remaining.filter(col("source") =!= src)
       }
     }

@@ -1408,16 +1408,15 @@ object Graph {
           count(lit(1)).as("deg")))
     val landmarks = adj.orderBy(col("deg").desc, col("src").asc).limit(k)
       .select(col("src").as("walk_id"))
-    var cur = landmarks.select(col("walk_id"), col("walk_id").as("node"))
-      .localCheckpoint()
+    var cur = graft.Iterate.cut(
+      landmarks.select(col("walk_id"), col("walk_id").as("node")))
     var out = cur.withColumn("step", lit(0))
     for (t <- 1 to steps) {
       val idx = pmod(graft.functions.PortableHash.md5Long32(
         concat_ws("|", col("walk_id"), lit(t), col("node"))), col("deg"))
-      cur = cur.join(adj, cur("node") === adj("src"))
+      cur = graft.Iterate.cut(cur.join(adj, cur("node") === adj("src"))
         .select(col("walk_id"),
-          element_at(col("nbrs"), (idx + 1).cast("int")).as("node"))
-        .localCheckpoint()
+          element_at(col("nbrs"), (idx + 1).cast("int")).as("node")))
       out = out.unionByName(cur.withColumn("step", lit(t)))
     }
     out.select(col("walk_id"), col("step"), col("node"))

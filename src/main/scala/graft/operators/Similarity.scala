@@ -342,19 +342,17 @@ object Similarity {
     val hashOrd = Seq(PortableHash.md5Long32(col("vec_id")), col("vec_id"))
     val seeds = emb.select(col("vec_id"), col("embedding"))
       .orderBy(hashOrd: _*).limit(kCells)
-    var centroids = seeds
+    var centroids = graft.Iterate.cut(seeds
       .withColumn("cell", row_number().over(Window.orderBy(hashOrd: _*)) - 1)
-      .select(col("cell"), transform(col("embedding"), v => v.cast("float")).as("c_emb"))
-      .localCheckpoint()
+      .select(col("cell"), transform(col("embedding"), v => v.cast("float")).as("c_emb")))
     (0 until iters).foreach { _ =>
       val assigned = assignCells(spark, emb, centroids, nprobe = 1)
       // decimal-exact mean: centroids independent of partitioning, so
       // the recall report is rerun-stable
-      centroids = centroidArrays(
+      centroids = graft.Iterate.cut(centroidArrays(
         assigned.select(col("cell").as("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
           .groupBy(col("label"), col("dim"))
-          .agg((Relational.decSum(col("v").cast("double")) / count(col("v"))).as("centroid")))
-        .localCheckpoint()
+          .agg((Relational.decSum(col("v").cast("double")) / count(col("v"))).as("centroid"))))
     }
     centroids
   }
@@ -1334,10 +1332,9 @@ object Similarity {
           .as("sub"))): _*)).as("x"))
       .select(col("vec_id"), col("x.s").as("s"), col("x.sub").as("sub"))
       .localCheckpoint() // reused every Lloyd round
-    var cb = subs.filter(col("vec_id") < ksub)
+    var cb = graft.Iterate.cut(subs.filter(col("vec_id") < ksub)
       .select(col("s"), col("vec_id").cast("int").as("code_id"),
-        col("sub").as("c_sub"))
-      .localCheckpoint()
+        col("sub").as("c_sub")))
     (0 until iters).foreach { _ =>
       val asg = subs.join(broadcast(cb), "s")
         .withColumn("d", l2sq(col("sub"), col("c_sub")))
@@ -1353,10 +1350,9 @@ object Similarity {
         .groupBy(col("s"), col("code_id"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
           e => e.getField("c").cast("float")).as("c_new"))
-      cb = cb.join(means, Seq("s", "code_id"), "left")
+      cb = graft.Iterate.cut(cb.join(means, Seq("s", "code_id"), "left")
         .select(col("s"), col("code_id"),
-          coalesce(col("c_new"), col("c_sub")).as("c_sub"))
-        .localCheckpoint()
+          coalesce(col("c_new"), col("c_sub")).as("c_sub")))
     }
     cb
   }
@@ -3048,18 +3044,16 @@ object Similarity {
     def distTo(v: Array[Float]): Column =
       round(lit(1.0) - cosine(spark, col("embedding"), typedLit(v)), 6)
     var picked = Vector[(Int, Long, Option[Double])]((1, seedId, None))
-    var md = emb
-      .select(col("vec_id"), col("embedding"), distTo(vecOf(seedId)).as("md"))
-      .localCheckpoint()
+    var md = graft.Iterate.cut(emb
+      .select(col("vec_id"), col("embedding"), distTo(vecOf(seedId)).as("md")))
     for (i <- 2 to k) {
       val top = md.orderBy(col("md").desc, col("vec_id").asc)
         .select(col("vec_id"), col("md")).head
       val cid = top.getLong(0)
       picked :+= ((i, cid, Some(top.getDouble(1))))
       if (i < k)
-        md = md.select(col("vec_id"), col("embedding"),
-            least(col("md"), distTo(vecOf(cid))).as("md"))
-          .localCheckpoint()
+        md = graft.Iterate.cut(md.select(col("vec_id"), col("embedding"),
+            least(col("md"), distTo(vecOf(cid))).as("md")))
     }
     picked.toDF("round", "center_id", "sel_dist").orderBy(col("round"))
   }

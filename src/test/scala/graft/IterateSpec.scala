@@ -37,6 +37,24 @@ class IterateSpec extends AnyFunSuite {
     } finally spark.conf.set(Iterate.ReliableFlag, "false")
   }
 
+  test("reliable mode: kmeansCentroids cuts its loop state through " +
+      "Iterate.cut and matches local-mode centroids") {
+    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    def centroids() = graft.operators.Similarity.kmeansCentroids(spark, emb)
+      .as[(Int, Seq[Float])].collect().toSeq.sortBy(_._1)
+    val local = centroids()
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck-kmeans")
+    spark.sparkContext.setCheckpointDir(ckDir.toString)
+    spark.conf.set(Iterate.ReliableFlag, "true")
+    try {
+      assert(centroids() === local)
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(ckDir).iterator().asScala.toList
+      assert(files.exists(_.getFileName.toString.startsWith("part-")),
+        s"no checkpoint part files under $ckDir")
+    } finally spark.conf.set(Iterate.ReliableFlag, "false")
+  }
+
   test("reliable mode: connectedComponents writes replicated checkpoints " +
       "and matches local-mode labels") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
