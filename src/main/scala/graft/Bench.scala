@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.util.RawValue
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark driver. Two modes:
@@ -209,42 +210,49 @@ object Bench {
 
   /** Run `graft.Bench` in a fresh JVM restricted to `names`; return the
     * child's full-fidelity bench_detail.json content. Children inherit
-    * SPARK_GRAFT_CHILD=1 so the recursion is structurally closed.
+    * SPARK_GRAFT_CHILD=1 so the recursion is structurally closed. The
+    * child's working directory is deleted once its line is read, also
+    * after a timeout or a failure.
     */
   private def runChild(names: Seq[String], reps: Int, warmup: Int,
       xmx: String, timeoutSec: Long): Option[String] = try {
-    val javaBin = new java.io.File(new java.io.File(
-      System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-    val classes = new java.io.File(getClass.getProtectionDomain
-      .getCodeSource.getLocation.toURI).getAbsolutePath
-    val cp = classes + java.io.File.pathSeparator + "/opt/spark/jars/*"
-    val modOpts = org.apache.spark.launcher.JavaModuleOptions
-      .defaultModuleOptions().split("\\s+").toSeq.filter(_.nonEmpty)
-    val cmd = Seq(javaBin, s"-Xmx$xmx") ++ modOpts ++
-      Seq("-cp", cp, "graft.Bench")
     val tmp = java.nio.file.Files.createTempDirectory("graft-child").toFile
-    val outFile = new java.io.File(tmp, "out.json")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.directory(tmp) // child's bench_detail.json lands here, not ours
-    pb.redirectOutput(outFile)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val env = pb.environment()
-    env.put("SPARK_GRAFT_ONLY", names.mkString(","))
-    env.put("SPARK_GRAFT_REPS", reps.toString)
-    env.put("SPARK_GRAFT_WARMUP_REPS", warmup.toString)
-    env.put("SPARK_GRAFT_CHILD", "1")
-    env.put("SPARK_GRAFT_SF_DIR", envSfDir)
-    env.put("SPARK_GRAFT_CPUS", GraftSession.defaultThreads.toString)
-    val p = pb.start()
-    val finished = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-    if (!finished) { p.destroyForcibly(); None }
-    else {
-      val f = new java.io.File(tmp, "bench_detail.json")
-      // fall back to stdout (the detail line is printed before the
-      // file write, so a failed write still leaves it parseable)
-      Some(new String(java.nio.file.Files.readAllBytes(
-        (if (f.exists) f else outFile).toPath), "UTF-8"))
-    }
+    try {
+      val javaBin = new java.io.File(new java.io.File(
+        System.getProperty("java.home"), "bin"), "java").getAbsolutePath
+      val classes = new java.io.File(getClass.getProtectionDomain
+        .getCodeSource.getLocation.toURI).getAbsolutePath
+      val cp = classes + java.io.File.pathSeparator + "/opt/spark/jars/*"
+      val modOpts = org.apache.spark.launcher.JavaModuleOptions
+        .defaultModuleOptions().split("\\s+").toSeq.filter(_.nonEmpty)
+      val cmd = Seq(javaBin, s"-Xmx$xmx") ++ modOpts ++
+        Seq("-cp", cp, "graft.Bench")
+      val outFile = new java.io.File(tmp, "out.json")
+      val pb = new ProcessBuilder(cmd: _*)
+      pb.directory(tmp) // child's bench_detail.json lands here, not ours
+      pb.redirectOutput(outFile)
+      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+      val env = pb.environment()
+      env.put("SPARK_GRAFT_ONLY", names.mkString(","))
+      env.put("SPARK_GRAFT_REPS", reps.toString)
+      env.put("SPARK_GRAFT_WARMUP_REPS", warmup.toString)
+      env.put("SPARK_GRAFT_CHILD", "1")
+      env.put("SPARK_GRAFT_SF_DIR", envSfDir)
+      env.put("SPARK_GRAFT_CPUS", GraftSession.defaultThreads.toString)
+      val p = pb.start()
+      val finished = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
+      if (!finished) {
+        // reap the killed child before its directory is deleted
+        p.destroyForcibly().waitFor(60, java.util.concurrent.TimeUnit.SECONDS)
+        None
+      } else {
+        val f = new java.io.File(tmp, "bench_detail.json")
+        // fall back to stdout (the detail line is printed before the
+        // file write, so a failed write still leaves it parseable)
+        Some(new String(java.nio.file.Files.readAllBytes(
+          (if (f.exists) f else outFile).toPath), "UTF-8"))
+      }
+    } finally FileUtils.deleteQuietly(tmp)
   } catch { case e: Throwable =>
     System.err.println(s"[bench] child run failed: ${e.getMessage}")
     None

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedLit}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,19 +64,6 @@ case class ArrayCountIn(child: Expression, words: Seq[String])
 }
 
 object ArrayCountIn {
-  /** Idempotently register; the word set rides in as an array literal
-    * evaluated at plan-build time.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_array_count_in",
-      exprs => ArrayCountIn(exprs(0),
-        exprs(1).eval(null).asInstanceOf[ArrayData].toArray[UTF8String](
-          org.apache.spark.sql.types.StringType).toSeq.map(_.toString)),
-      "built-in")
-
-  def countIn(spark: SparkSession, arr: Column, words: Seq[String]): Column = {
-    register(spark)
-    call_function("graft_array_count_in", arr, typedLit(words))
-  }
+  def countIn(arr: Column, words: Seq[String]): Column =
+    column(ArrayCountIn(expression(arr), words))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Maximum multiplicity of any element in an `array<string>` column
@@ -80,12 +80,5 @@ case class ArrayMaxFreq(child: Expression) extends UnaryExpression {
 }
 
 object ArrayMaxFreq {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_array_max_freq", exprs => ArrayMaxFreq(exprs(0)), "built-in")
-
-  def maxFreq(spark: SparkSession, arr: Column): Column = {
-    register(spark)
-    call_function("graft_array_max_freq", arr)
-  }
+  def maxFreq(arr: Column): Column = column(ArrayMaxFreq(expression(arr)))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -100,16 +100,6 @@ object CharWindowHashes {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def register(spark: SparkSession, l: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_char_window_hashes_$l", { exprs =>
-        require(exprs.length == 1,
-          s"graft_char_window_hashes_$l expects 1 argument, got ${exprs.length}")
-        CharWindowHashes(exprs.head, l)
-      }, "built-in")
-
-  def windowHashes(spark: SparkSession, text: Column, l: Int): Column = {
-    register(spark, l)
-    call_function(s"graft_char_window_hashes_$l", text)
-  }
+  def windowHashes(text: Column, l: Int): Column =
+    column(CharWindowHashes(expression(text), l))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Fused cosine similarity over two `array<float>` columns as a native
@@ -98,13 +98,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Idempotently register and return a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_cosine", a, b)
-  }
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

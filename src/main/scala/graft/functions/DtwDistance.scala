@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Dynamic-time-warping distance of two `array<double>` series with
@@ -111,13 +111,6 @@ case class DtwDistance(left: Expression, right: Expression)
 }
 
 object DtwDistance {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dtw_distance",
-      exprs => DtwDistance(exprs(0), exprs(1)), "built-in")
-
-  def dtw(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dtw_distance", a, b)
-  }
+  def dtw(a: Column, b: Column): Column =
+    column(DtwDistance(expression(a), expression(b)))
 }

@@ -5,12 +5,12 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -126,17 +126,7 @@ case class HeavyHitters(
 }
 
 object HeavyHitters {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters",
-      exprs => HeavyHitters(exprs(0),
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int]),
-      "built-in")
-
   /** Aggregate Column: map<item, estimate> of ≤ k heavy hitters. */
-  def heavyHitters(spark: SparkSession, item: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_heavy_hitters", item,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def heavyHitters(item: Column, k: Int): Column =
+    column(HeavyHitters(expression(item), k).toAggregateExpression())
 }

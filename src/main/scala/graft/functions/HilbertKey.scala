@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Hilbert-curve distance of a 2-D point as a native codegen'd
@@ -86,19 +86,8 @@ object HilbertKey {
     d
   }
 
-  def register(spark: SparkSession, bits: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_hilbert_$bits", { exprs =>
-        require(exprs.length == 2,
-          s"graft_hilbert_$bits expects 2 arguments, got ${exprs.length}")
-        HilbertKey(exprs.head, exprs(1), bits)
-      }, "built-in")
-
-  def hilbertKey(spark: SparkSession, x: Column, y: Column,
-                 bits: Int = 16): Column = {
-    register(spark, bits)
-    call_function(s"graft_hilbert_$bits", x, y)
-  }
+  def hilbertKey(x: Column, y: Column, bits: Int = 16): Column =
+    column(HilbertKey(expression(x), expression(y), bits))
 
   /** Unrolled DuckDB twin: one CTE level per bit (the loop-carried
     * x/y/d as materialized columns — the same reason the Spark side

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -98,17 +98,7 @@ case class MinHashSketch(
 }
 
 object MinHashSketch {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashSketch(exprs(0),
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int]),
-      "built-in")
-
   /** Aggregate Column: array<bigint> MinHash signature of the group. */
-  def minhash(spark: SparkSession, shingle: Column, numHashes: Int): Column = {
-    register(spark)
-    call_function("graft_minhash", shingle,
-      org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhash(shingle: Column, numHashes: Int): Column =
+    column(MinHashSketch(expression(shingle), numHashes).toAggregateExpression())
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,25 +53,5 @@ object NfcNormalize {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", { exprs =>
-        // arity guard: without it, SQL `graft_nfc()` would surface as an
-        // IndexOutOfBoundsException from the builder instead of the
-        // standard wrong-number-of-arguments analysis error
-        if (exprs.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_nfc`",
-              "expectedNum" -> "1",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        NfcNormalize(exprs.head)
-      }, "built-in")
-
-  def nfcCol(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("graft_nfc", c)
-  }
+  def nfcCol(c: Column): Column = column(NfcNormalize(expression(c)))
 }

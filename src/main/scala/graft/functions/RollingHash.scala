@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,17 +94,5 @@ object RollingHash {
     (h * 131L + (chars * 31L + code)) % Modulus
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", { exprs =>
-        // extra arguments must be an error, not silently discarded
-        require(exprs.length == 1,
-          s"graft_rolling_hash expects 1 argument, got ${exprs.length}")
-        RollingHash(exprs.head)
-      }, "built-in")
-
-  def rollingHash(spark: SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function("graft_rolling_hash", tokens)
-  }
+  def rollingHash(tokens: Column): Column = column(RollingHash(expression(tokens)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Fused sign-bit Hamming distance over two `array<float>` columns as
@@ -83,13 +83,6 @@ case class SignHamming(left: Expression, right: Expression)
 }
 
 object SignHamming {
-  /** Idempotently register and return a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_hamming", exprs => SignHamming(exprs(0), exprs(1)), "built-in")
-
-  def signHamming(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_sign_hamming", a, b)
-  }
+  def signHamming(a: Column, b: Column): Column =
+    column(SignHamming(expression(a), expression(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /** Floor index into a SORTED `array<bigint>`: the LARGEST i with
@@ -79,13 +79,6 @@ case class SortedFloorIndex(left: Expression, right: Expression)
 }
 
 object SortedFloorIndex {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_floor_index",
-      exprs => SortedFloorIndex(exprs(0), exprs(1)), "built-in")
-
-  def floorIndex(spark: SparkSession, arr: Column, t: Column): Column = {
-    register(spark)
-    call_function("graft_sorted_floor_index", arr, t)
-  }
+  def floorIndex(arr: Column, t: Column): Column =
+    column(SortedFloorIndex(expression(arr), expression(t)))
 }

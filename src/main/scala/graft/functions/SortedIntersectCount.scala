@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** |A ∩ B| of two SORTED `array<bigint>` columns as one codegen'd
@@ -80,13 +80,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-
-  def intersectCount(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_sorted_intersect_count", a, b)
-  }
+  def intersectCount(a: Column, b: Column): Column =
+    column(SortedIntersectCount(expression(a), expression(b)))
 }

@@ -110,7 +110,6 @@ object TextFunctions {
         coalesce(ascii(substring(t, 1, 1)).cast("long"), lit(0L)))) % 1000000007L)
 
   /** Fused codegen'd form of [[rollingFingerprintHof]]. */
-  def rollingFingerprint(spark: org.apache.spark.sql.SparkSession,
-                         text: Column): Column =
-    graft.functions.RollingHash.rollingHash(spark, tokens(text))
+  def rollingFingerprint(text: Column): Column =
+    graft.functions.RollingHash.rollingHash(tokens(text))
 }

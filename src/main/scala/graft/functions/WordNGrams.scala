@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -84,17 +84,5 @@ case class WordNGrams(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object WordNGrams {
-  /** Idempotently register and return a Column-level handle. The width
-    * rides in as a literal so the registry lambda stays (exprs -> expr).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => WordNGrams(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-
-  def ngrams(spark: SparkSession, toks: Column, n: Int): Column = {
-    register(spark)
-    call_function("graft_ngrams", toks, lit(n))
-  }
+  def ngrams(toks: Column, n: Int): Column = column(WordNGrams(expression(toks), n))
 }

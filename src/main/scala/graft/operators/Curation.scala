@@ -953,10 +953,10 @@ object Curation {
       TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
       TextFunctions.punctCount(col("text")).cast("long").as("n_punct"),
       graft.functions.ArrayCountIn
-        .countIn(spark, TextFunctions.tokens(col("text")), stopAll)
+        .countIn(TextFunctions.tokens(col("text")), stopAll)
         .cast("long").as("stop_hits"),
       graft.functions.ArrayMaxFreq
-        .maxFreq(spark, TextFunctions.tokens(col("text")))
+        .maxFreq(TextFunctions.tokens(col("text")))
         .cast("long").as("max_freq"))
     // First failing rule (1-based position in the cascade); survivors → 0.
     val firstFail = when(col("n_tokens") < 20, 1)

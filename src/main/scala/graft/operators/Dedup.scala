@@ -81,7 +81,7 @@ object Dedup {
 
   def exactNormalized(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val nfcText = graft.functions.NfcNormalize.nfcCol(spark, col("text"))
+    val nfcText = graft.functions.NfcNormalize.nfcCol(col("text"))
     val w = Window.partitionBy(col("norm_fp"))
     docs.select(col("doc_id"),
         (nfcText =!= col("text")).cast("int").as("nfc_changed"),
@@ -114,7 +114,7 @@ object Dedup {
       .withColumn("n", size(col("toks")))
       .filter(col("n") >= k)
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.WordNGrams.ngrams(docs.sparkSession, col("toks"), k)
+        graft.functions.WordNGrams.ngrams(col("toks"), k)
       )).as("shingle"))
 
   /** Each doc's distinct k-token shingles as CTE `name` (doc_id,
@@ -747,10 +747,9 @@ object Dedup {
     * [[graft.functions.MinHashSketch]] aggregate (bit-equal to the
     * composable min-column form AND to DuckDB; see PipelineSpec).
     */
-  private def minhashSignatures(spark: SparkSession, kept: DataFrame,
-                                numHashes: Int): DataFrame = {
+  private def minhashSignatures(kept: DataFrame, numHashes: Int): DataFrame = {
     val sig = kept.groupBy(col("doc_id"))
-      .agg(graft.functions.MinHashSketch.minhash(spark, col("shingle"), numHashes).as("sig"))
+      .agg(graft.functions.MinHashSketch.minhash(col("shingle"), numHashes).as("sig"))
     sig.select(col("doc_id") +:
       (0 until numHashes).map(i => col("sig").getItem(i).as(s"h$i")): _*)
   }
@@ -991,7 +990,7 @@ object Dedup {
                       threshold: Double = 0.6): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val sig = minhashSignatures(spark, kept, numHashes)
+    val sig = minhashSignatures(kept, numHashes)
     // band keys via one explode (a union of per-band selects would
     // recompute the signature aggregation once per band — the plan
     // audit showed 19 shuffles); the bucket is the '|'-joined slice —
@@ -1145,7 +1144,7 @@ object Dedup {
       .withColumn("n", size(col("toks")))
       .filter(col("n") >= 3)
       .select(col("doc_id"), explode(
-        graft.functions.WordNGrams.ngrams(df.sparkSession, col("toks"), 3)
+        graft.functions.WordNGrams.ngrams(col("toks"), 3)
       ).as("g"))
     val ev = tri(evalDocs).select(col("g")).distinct()
     // broadcast semi-join FIRST, per-doc distinct count AFTER: only
@@ -1301,7 +1300,7 @@ object Dedup {
       def grams(df: DataFrame) = df
         .filter(size(col("toks")) >= n)
         .select(col("doc_id"), explode(
-          graft.functions.WordNGrams.ngrams(spark, col("toks"), n)).as("g"))
+          graft.functions.WordNGrams.ngrams(col("toks"), n)).as("g"))
       val ev = grams(toks.filter(col("bucket") < evalPct))
         .select(col("g")).distinct()
       grams(toks.filter(col("bucket") >= evalPct))
@@ -1449,7 +1448,7 @@ object Dedup {
       .withColumn("n", size(col("toks")))
       .filter(col("n") >= 3)
       .select(col("doc_id"), explode(
-        graft.functions.WordNGrams.ngrams(df.sparkSession, col("toks"), 3)
+        graft.functions.WordNGrams.ngrams(col("toks"), 3)
       ).as("g"))
     val ev = tri(docs.filter(col("bucket") < evalPct))
       .select(col("g")).distinct().localCheckpoint()
@@ -1619,7 +1618,7 @@ object Dedup {
     val ori = graft.Iterate.cut(withDeg.select(
       when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("u"),
       when(aFirst, col("doc_b")).otherwise(col("doc_a")).as("v")))
-    val tri = Graph.orientedTriangles(spark, ori)
+    val tri = Graph.orientedTriangles(ori)
     val summary = deg.agg(
       count(lit(1)).as("n_nodes"),
       (sum(col("d")) / 2).cast("long").as("n_edges"),
@@ -2397,7 +2396,7 @@ object Dedup {
                            numHashes: Int = 24, bands: Int = 8): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val sig = minhashSignatures(spark, kept, numHashes).localCheckpoint()
+    val sig = minhashSignatures(kept, numHashes).localCheckpoint()
     val banded = bandBuckets(sig, numHashes, bands).localCheckpoint()
     val candidates = bandCandidates(banded)
     val agree = (0 until numHashes)
@@ -2467,7 +2466,7 @@ object Dedup {
                        numHashes: Int = 24, bands: Int = 8): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val sig = minhashSignatures(spark, kept, numHashes).localCheckpoint()
+    val sig = minhashSignatures(kept, numHashes).localCheckpoint()
     val banded = bandBuckets(sig, numHashes, bands)
     val candidates = bandCandidates(banded)
     val agreeFull = (0 until numHashes)
@@ -3157,7 +3156,7 @@ object Dedup {
     */
   def linkageWeights(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val nfcText = graft.functions.NfcNormalize.nfcCol(spark, col("text"))
+    val nfcText = graft.functions.NfcNormalize.nfcCol(col("text"))
     val base = docs.select(col("doc_id"), col("lang"), col("source"),
         col("n_chars"),
         md5(regexp_replace(trim(translate(nfcText, AsciiUpper, AsciiLower)),
@@ -3362,7 +3361,7 @@ object Dedup {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= k)
       .select(col("doc_id"),
-        transform(graft.functions.WordNGrams.ngrams(spark, col("toks"), k),
+        transform(graft.functions.WordNGrams.ngrams(col("toks"), k),
           g => PortableHash.md5Long32(g)).as("gh"))
     val fps = grams.select(col("doc_id"),
         explode(array_distinct(transform(

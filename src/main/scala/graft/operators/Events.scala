@@ -8366,7 +8366,7 @@ object Events {
     pa.join(pb, col("type_a") < col("type_b"))
       .select(col("type_a"), col("type_b"),
         round(l1, 6).as("l1"),
-        round(graft.functions.DtwDistance.dtw(spark, col("pa"), col("pb")), 6)
+        round(graft.functions.DtwDistance.dtw(col("pa"), col("pb")), 6)
           .as("dtw"))
       .orderBy(col("type_a"), col("type_b"))
   }

@@ -387,15 +387,14 @@ object Graph {
   /** The triangle count (`n_triangles`) of a degree-oriented edge list
     * `ori` (u, v): per edge, |N⁺(u) ∩ N⁺(v)| over sorted out-adjacency
     * arrays. */
-  private[operators] def orientedTriangles(spark: SparkSession,
-                                           ori: DataFrame): DataFrame = {
+  private[operators] def orientedTriangles(ori: DataFrame): DataFrame = {
     val adj = ori.groupBy(col("u"))
       .agg(array_sort(collect_list(col("v"))).as("nbrs"))
     ori
       .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
       .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"))
       .agg(coalesce(sum(graft.functions.SortedIntersectCount.intersectCount(
-        spark, col("nu"), col("nv"))), lit(0L)).as("n_triangles"))
+        col("nu"), col("nv"))), lit(0L)).as("n_triangles"))
   }
 
   /** Co-purchase pairs, node degrees, and every pair oriented from its
@@ -445,7 +444,7 @@ object Graph {
     // intersection (2.5 s): per-edge work is |N⁺(u)|+|N⁺(v)|, bounded
     // by the orientation's out-degree cap (~√m), and nothing larger
     // than an adjacency array is ever materialized.
-    val tri = orientedTriangles(spark, ori)
+    val tri = orientedTriangles(ori)
     val summary = deg.agg(
       count(lit(1)).as("n_nodes"),
       (sum(expr("d * (d - 1)")) / 2).cast("long").as("n_wedges"))
@@ -2345,7 +2344,7 @@ object Graph {
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val (ori, adjOut, adjIn) = orientAdj(spark, dir)
     def ic(a: Column, b: Column) =
-      graft.functions.SortedIntersectCount.intersectCount(spark, a, b)
+      graft.functions.SortedIntersectCount.intersectCount(a, b)
     // every oriented triangle u→v→w (u→w) has one SOURCE wedge (u,v):
     // |N⁺(u)∩N⁺(v)| credits u and v; and one CLOSING edge (v,w):
     // |N⁻(v)∩N⁻(w)| credits w. Two intersection passes, NO
@@ -2425,7 +2424,7 @@ object Graph {
     */
   def edgeSupport(spark: SparkSession, dir: String): DataFrame = {
     val (ori, adjOut, adjIn) = orientAdj(spark, dir)
-    val credits = edgeSupportCounts(spark, ori, adjOut, adjIn)
+    val credits = edgeSupportCounts(ori, adjOut, adjIn)
     ori.join(credits, Seq("u", "v"), "left")
       .select(coalesce(col("support"), lit(0L)).as("support"))
       .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))
@@ -2443,10 +2442,10 @@ object Graph {
     * sort row ever holds more than one array. Edges in no triangle
     * are ABSENT — callers left-join and coalesce to 0.
     */
-  private def edgeSupportCounts(spark: SparkSession, ori: DataFrame,
+  private def edgeSupportCounts(ori: DataFrame,
       adjOut: DataFrame, adjIn: DataFrame): DataFrame = {
     def ic(a: Column, b: Column) =
-      graft.functions.SortedIntersectCount.intersectCount(spark, a, b)
+      graft.functions.SortedIntersectCount.intersectCount(a, b)
     // lAdj/rAdj keyed by their own key column (adjOut: "u", adjIn:
     // "v"), re-keyed to the edge's endpoint: left side to u, right to v
     def pass(lAdj: DataFrame, lKey: String,
@@ -2495,8 +2494,7 @@ object Graph {
     * — shared-edge double triangle survives at k=3, dissolves at
     * k=4; a clique keeps everything.
     */
-  def kTrussPeel(spark: SparkSession, edges: DataFrame, k: Int,
-                 maxRounds: Int = 50): DataFrame = {
+  def kTrussPeel(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
     var cur = graft.Iterate.cut(
       edges.select(least(col("pa"), col("pb")).as("pa"),
@@ -2523,7 +2521,7 @@ object Graph {
       // per-edge support via the three corner-role intersections (the
       // q276 form — skinny per-role passes, no per-triangle explode
       // and no multi-array join rows inside the fixpoint)
-      val support = edgeSupportCounts(spark, ori, adjOut, adjIn)
+      val support = edgeSupportCounts(ori, adjOut, adjIn)
         .select(least(col("u"), col("v")).as("pa"),
           greatest(col("u"), col("v")).as("pb"), col("support"))
       cur = graft.Iterate.cut(

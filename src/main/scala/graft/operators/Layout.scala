@@ -121,7 +121,7 @@ object Layout {
                    cellShift: Int = 14): DataFrame = {
     val li = Tables.load(spark, dir, "lineitem")
     li.select(col("l_partkey"), col("l_suppkey"),
-        graft.functions.HilbertKey.hilbertKey(spark,
+        graft.functions.HilbertKey.hilbertKey(
           col("l_partkey"), col("l_suppkey")).as("hkey"))
       .withColumn("hcell", shiftright(col("hkey"), cellShift))
       .groupBy(col("hcell"))
@@ -256,12 +256,11 @@ object Layout {
       |GROUP BY 1, 2
       |ORDER BY l.l_suppkey""".stripMargin
 
-  def writeHilbertOrdered(spark: SparkSession, df: DataFrame,
-                          xCol: String, yCol: String,
+  def writeHilbertOrdered(df: DataFrame, xCol: String, yCol: String,
                           path: String, numFiles: Int): Unit = {
     val (bx, by) = colBitsBoth(df, xCol, yCol)
     val bits = math.max(bx, by)
-    df.withColumn("__h", graft.functions.HilbertKey.hilbertKey(spark,
+    df.withColumn("__h", graft.functions.HilbertKey.hilbertKey(
         shiftleft(col(xCol).cast("long"), bits - bx),
         shiftleft(col(yCol).cast("long"), bits - by), bits))
       .repartitionByRange(numFiles, col("__h"))

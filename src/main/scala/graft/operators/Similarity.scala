@@ -44,8 +44,8 @@ object Similarity {
   /** Numerically identical to `dot(a,b)/(norm(a)*norm(b))` but fused
     * into one codegen'd loop — see [[graft.functions.CosineSimilarity]].
     */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column =
-    graft.functions.CosineSimilarity.cosine(spark, a, b)
+  def cosine(a: Column, b: Column): Column =
+    graft.functions.CosineSimilarity.cosine(a, b)
 
   /** DuckDB twin of [[cosine]] over two list expressions: list_reduce
     * over the zipped per-element double products preserves the same
@@ -113,7 +113,7 @@ object Similarity {
     val scored = emb.filter(col("vec_id") >= nQueries)
       .crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     topK(scored, k)
   }
 
@@ -171,7 +171,7 @@ object Similarity {
     val scored = emb.filter(col("vec_id") >= nQueries)
       .join(broadcast(queries), "bucket")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     topK(scored, k)
   }
 
@@ -229,10 +229,9 @@ object Similarity {
     * the vector scan, keep the argmax-cosine cell per vector (and with
     * `nprobe` > 1, the top-nprobe cells — the multi-probe query path).
     */
-  def assignCells(spark: SparkSession, df: DataFrame,
-                  centroids: DataFrame, nprobe: Int): DataFrame = {
+  def assignCells(df: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
     val scored = df.crossJoin(broadcast(centroids))
-      .withColumn("c_sim", cosine(spark, col("embedding"), col("c_emb")))
+      .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("c_sim").desc, col("cell"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
@@ -254,14 +253,14 @@ object Similarity {
              k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = centroidArrays(labelCentroids(spark, dir))
-    val assigned = assignCells(spark, emb, centroids, nprobe = 1).localCheckpoint()
+    val assigned = assignCells(emb, centroids, nprobe = 1).localCheckpoint()
     val queries = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
     // probe own cell only, exact rerank inside
     val scored = assigned.filter(col("vec_id") >= nQueries)
       .join(broadcast(queries), "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     topK(scored, k)
   }
 
@@ -333,7 +332,7 @@ object Similarity {
     * assign → per-cell/per-dim mean rounds, each round one shuffle on
     * (cell, dim) with map-side combine. Returns (cell, c_emb).
     */
-  def kmeansCentroids(spark: SparkSession, emb: DataFrame, kCells: Int = 16,
+  def kmeansCentroids(emb: DataFrame, kCells: Int = 16,
                       iters: Int = 3): DataFrame = {
     // seed selection: orderBy+limit plans as TakeOrderedAndProject
     // (distributed per-partition top-k, driver merge of kCells rows) —
@@ -346,7 +345,7 @@ object Similarity {
       .withColumn("cell", row_number().over(Window.orderBy(hashOrd: _*)) - 1)
       .select(col("cell"), transform(col("embedding"), v => v.cast("float")).as("c_emb")))
     (0 until iters).foreach { _ =>
-      val assigned = assignCells(spark, emb, centroids, nprobe = 1)
+      val assigned = assignCells(emb, centroids, nprobe = 1)
       // decimal-exact mean: centroids independent of partitioning, so
       // the recall report is rerun-stable
       centroids = graft.Iterate.cut(centroidArrays(
@@ -376,10 +375,9 @@ object Similarity {
     * Iterating the function converges geometrically on the max load
     * (each pass halves surviving hot cells).
     */
-  def rebalanceIvfCells(spark: SparkSession, emb: DataFrame,
-                        centroids: DataFrame,
+  def rebalanceIvfCells(emb: DataFrame, centroids: DataFrame,
                         factor: Double = 2.0): DataFrame = {
-    val assigned = assignCells(spark, emb, centroids, nprobe = 1)
+    val assigned = assignCells(emb, centroids, nprobe = 1)
       .localCheckpoint() // consumed by counts + both seed passes
     val counts = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val meanN = counts.agg((sum(col("n")).cast("double") /
@@ -393,19 +391,19 @@ object Similarity {
     val wCell = Window.partitionBy(col("cell"))
     val seedA = hotMembers
       .withColumn("rk", row_number().over(wCell.orderBy(
-        cosine(spark, col("embedding"), col("c_emb")).asc, col("vec_id"))))
+        cosine(col("embedding"), col("c_emb")).asc, col("vec_id"))))
       .filter(col("rk") === 1)
       .select(col("cell"), col("embedding").as("seed_a"))
     val withA = hotMembers.join(broadcast(seedA), "cell")
     val seedB = withA
       .withColumn("rk", row_number().over(wCell.orderBy(
-        cosine(spark, col("embedding"), col("seed_a")).asc, col("vec_id"))))
+        cosine(col("embedding"), col("seed_a")).asc, col("vec_id"))))
       .filter(col("rk") === 1)
       .select(col("cell"), col("embedding").as("seed_b"))
     val split = withA.join(broadcast(seedB), "cell")
       .withColumn("side",
-        (cosine(spark, col("embedding"), col("seed_b")) >
-          cosine(spark, col("embedding"), col("seed_a"))).cast("int"))
+        (cosine(col("embedding"), col("seed_b")) >
+          cosine(col("embedding"), col("seed_a"))).cast("int"))
     val splitCentroids = centroidArrays(split
         .select(concat_ws("_", col("cell"), col("side")).as("label"),
           posexplode(col("embedding")).as(Seq("dim", "v")))
@@ -441,15 +439,15 @@ object Similarity {
                    k: Int = 10, kCells: Int = 16, iters: Int = 3,
                    nprobe: Int = 2, spill: Int = 1): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = kmeansCentroids(spark, emb, kCells, iters)
-    val corpus = assignCells(spark, emb.filter(col("vec_id") >= nQueries), centroids, spill)
+    val centroids = kmeansCentroids(emb, kCells, iters)
+    val corpus = assignCells(emb.filter(col("vec_id") >= nQueries), centroids, spill)
       .localCheckpoint()
-    val queries = assignCells(spark, emb.filter(col("vec_id") < nQueries), centroids, nprobe)
+    val queries = assignCells(emb.filter(col("vec_id") < nQueries), centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
     val scored = corpus
       .join(broadcast(queries), "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     // multi-probe can see the same neighbor from <= nprobe cells
     topK(scored.dropDuplicates("query_id", "neighbor_id"), k)
   }
@@ -465,8 +463,8 @@ object Similarity {
                     kCells: Int = 16, iters: Int = 3,
                     spill: Int = 1): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = kmeansCentroids(spark, emb, kCells, iters)
-    assignCells(spark, emb, centroids, nprobe = spill)
+    val centroids = kmeansCentroids(emb, kCells, iters)
+    assignCells(emb, centroids, nprobe = spill)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexPath/corpus")
     centroids.write.mode("overwrite").parquet(s"$indexPath/centroids")
     centroids
@@ -482,7 +480,7 @@ object Similarity {
   def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String,
                     nQueries: Int = 8, k: Int = 10, nprobe: Int = 2): DataFrame = {
     val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val queries = assignCells(spark,
+    val queries = assignCells(
         Tables.load(spark, dir, "embeddings").filter(col("vec_id") < nQueries),
         centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
@@ -495,7 +493,7 @@ object Similarity {
       .filter(col("vec_id") >= nQueries)
     val scored = corpus.join(broadcast(queries), "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     topK(scored.dropDuplicates("query_id", "neighbor_id"), k)
   }
 
@@ -529,7 +527,7 @@ object Similarity {
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         col("a.label").as("label"),
-        round(cosine(spark, col("a.embedding"), col("b.embedding")), 6).as("cos_sim"))
+        round(cosine(col("a.embedding"), col("b.embedding")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
       .orderBy(col("vec_a"), col("vec_b"))
   }
@@ -558,7 +556,7 @@ object Similarity {
     val sh = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), array_distinct(
-        graft.functions.WordNGrams.ngrams(spark, col("toks"), 3)).as("sh"))
+        graft.functions.WordNGrams.ngrams(col("toks"), 3)).as("sh"))
     val scored = pairs
       .join(sh.select(col("doc_id").as("vec_a"), col("sh").as("sa")), "vec_a")
       .join(sh.select(col("doc_id").as("vec_b"), col("sh").as("sb")), "vec_b")
@@ -737,7 +735,7 @@ object Similarity {
     val scored = emb.filter(col("vec_id") >= nQueries)
       .crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.SignHamming.signHamming(spark, col("q_emb"),
+        graft.functions.SignHamming.signHamming(col("q_emb"),
           col("embedding")).as("hd"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -840,7 +838,7 @@ object Similarity {
       .select(col("query_id"), col("a_label"),
         (col("label") === col("a_label")).as("same_label"),
         col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6)
+        round(cosine(col("q_emb"), col("embedding")), 6)
           .as("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"), col("same_label"))
@@ -932,7 +930,7 @@ object Similarity {
         col("a.query_id") === col("b.query_id") &&
           col("a.neighbor_id") < col("b.neighbor_id"))
       .select(col("a.query_id").as("query_id"),
-        round(lit(1.0) - cosine(spark, col("a.embedding"),
+        round(lit(1.0) - cosine(col("a.embedding"),
           col("b.embedding")), 6).as("d"))
     pairs.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -1123,7 +1121,7 @@ object Similarity {
       .join(sizes.select(col("label").as("label_b"), col("n").as("n_b")), "label_b")
     a.crossJoin(b).filter(col("label_a") < col("label_b"))
       .select(col("label_a"), col("label_b"), col("n_a"), col("n_b"),
-        round(cosine(spark, col("ea"), col("eb")), 6).as("cos_centroids"))
+        round(cosine(col("ea"), col("eb")), 6).as("cos_centroids"))
       .orderBy(col("label_a"), col("label_b"))
   }
 
@@ -1159,7 +1157,7 @@ object Similarity {
     val cent = centroidArrays(labelCentroids(spark, dir))
       .withColumnRenamed("cell", "label")
     emb.join(broadcast(cent), "label")
-      .withColumn("cos_c", round(cosine(spark, col("embedding"), col("c_emb")), 6))
+      .withColumn("cos_c", round(cosine(col("embedding"), col("c_emb")), 6))
       .groupBy(col("label"))
       .agg(
         count(lit(1)).as("n_vecs"),
@@ -1457,7 +1455,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = centroidArrays(labelCentroids(spark, dir))
     // two consumers (query + corpus split): one assignment pass
-    val assigned = assignCells(spark, emb, centroids, nprobe = 1).localCheckpoint()
+    val assigned = assignCells(emb, centroids, nprobe = 1).localCheckpoint()
     val codebooks = pqCodebooks(emb, ksub)
     val corpus = assigned.filter(col("vec_id") >= nQueries)
     val codes = pqCodes(corpus.select(col("vec_id"), col("embedding")),
@@ -1517,9 +1515,9 @@ object Similarity {
                        kmeansCells: Boolean = true): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids =
-      if (kmeansCells) kmeansCentroids(spark, emb, kCells = 16, iters = 3)
+      if (kmeansCells) kmeansCentroids(emb, kCells = 16, iters = 3)
       else centroidArrays(labelCentroids(spark, dir))
-    knnIvfPqResidualCore(spark, emb, centroids, nQueries, k, m, dsub, ksub,
+    knnIvfPqResidualCore(emb, centroids, nQueries, k, m, dsub, ksub,
       nprobe, trainIters)
   }
 
@@ -1529,13 +1527,12 @@ object Similarity {
     * (one cell = every candidate, residual = identity), which is how
     * the spec measures the residual term in isolation.
     */
-  def knnIvfPqResidualCore(spark: SparkSession, emb: DataFrame,
-                           centroids: DataFrame, nQueries: Int,
+  def knnIvfPqResidualCore(emb: DataFrame, centroids: DataFrame, nQueries: Int,
                            k: Int, m: Int, dsub: Int, ksub: Int,
                            nprobe: Int, trainIters: Int = 2): DataFrame = {
     def residual(v: Column, c: Column) =
       zip_with(v, c, (a, b) => (a.cast("double") - b.cast("double")).cast("float"))
-    val assigned = assignCells(spark, emb, centroids, nprobe = 1)
+    val assigned = assignCells(emb, centroids, nprobe = 1)
       .join(broadcast(centroids), "cell")
       .withColumn("res", residual(col("embedding"), col("c_emb")))
       .localCheckpoint() // codebooks + corpus split share one pass
@@ -1551,7 +1548,7 @@ object Similarity {
       .agg(min(struct(col("d"), col("code_id"))).as("w"))
       .select(col("vec_id").as("neighbor_id"), col("s"),
         col("w.code_id").as("code"))
-    val qAssigned = assignCells(spark, emb.filter(col("vec_id") < nQueries),
+    val qAssigned = assignCells(emb.filter(col("vec_id") < nQueries),
         centroids, nprobe)
       .join(broadcast(centroids), "cell")
       .select(col("vec_id").as("query_id"), col("cell"),
@@ -1651,7 +1648,7 @@ object Similarity {
     val annTop = emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(qv))
       .select(col("vec_id").as("doc_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("doc_id")).limit(r)
       .withColumn("rank_ann", row_number().over(
         Window.orderBy(col("cos_sim").desc, col("doc_id"))).cast("int"))
@@ -1754,13 +1751,13 @@ object Similarity {
       .orderBy(col("adc").desc, col("neighbor_id"))
     val cand = indexed.crossJoin(broadcast(queries))
       .select(col("query_id"), col("neighbor_id"), col("embedding"),
-        cosine(spark, col("q_emb"), col("deq")).as("adc"))
+        cosine(col("q_emb"), col("deq")).as("adc"))
       .withColumn("crk", row_number().over(wC))
       .filter(col("crk") <= nCand)
     val rescored = cand
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     topK(rescored, k)
   }
   /** q342 — SQ8 reconstruction-error audit per dimension: the index
@@ -1861,7 +1858,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = centroidArrays(labelCentroids(spark, dir))
     val conf = graft.Iterate.cut(
-      assignCells(spark, emb, centroids, nprobe = 1)
+      assignCells(emb, centroids, nprobe = 1)
         .groupBy(col("cell"), col("label"))
         .agg(count(lit(1)).as("n_cl")))
     val total = conf.agg(sum(col("n_cl")).as("n_total"))
@@ -1957,7 +1954,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = centroidArrays(labelCentroids(spark, dir))
     val conf = graft.Iterate.cut(
-      assignCells(spark, emb, centroids, nprobe = 1)
+      assignCells(emb, centroids, nprobe = 1)
         .groupBy(col("cell"), col("label"))
         .agg(count(lit(1)).as("n_cl")))
     val sij = conf.agg(sum(col("n_cl") * (col("n_cl") - 1)).as("s_ij"),
@@ -2201,7 +2198,7 @@ object Similarity {
         col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        round(cosine(spark, col("a.embedding"), col("b.embedding")), 6)
+        round(cosine(col("a.embedding"), col("b.embedding")), 6)
           .as("cos_sim"))
     val directed = pairs.select(col("va").as("src"), col("vb").as("dst"), col("cos_sim"))
       .unionByName(pairs.select(col("vb").as("src"), col("va").as("dst"), col("cos_sim")))
@@ -2276,7 +2273,7 @@ object Similarity {
     val scored = emb.filter(col("vec_id") >= nEval)
       .crossJoin(broadcast(eval))
       .select(col("vec_id"), col("eval_id"),
-        round(cosine(spark, col("embedding"), col("e_emb")), 6).as("cos_sim"))
+        round(cosine(col("embedding"), col("e_emb")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos_sim").desc, col("eval_id"))
@@ -2447,7 +2444,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val cent = centroidArrays(labelCentroids(spark, dir))
     val scored = emb.crossJoin(broadcast(cent))
-      .withColumn("cos_c", round(cosine(spark, col("embedding"), col("c_emb")), 6))
+      .withColumn("cos_c", round(cosine(col("embedding"), col("c_emb")), 6))
       .groupBy(col("vec_id"), col("label"))
       .agg(
         max(when(col("cell") === col("label"), col("cos_c"))).as("cos_own"),
@@ -2565,7 +2562,7 @@ object Similarity {
     val scored = emb.filter(col("vec_id") >= nQueries)
       .crossJoin(broadcast(queries))
       .select(col("query_id"), col("q_label"), col("vec_id"), col("label"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     val pos = scored.where(col("label") === col("q_label"))
@@ -2750,7 +2747,7 @@ object Similarity {
     val rotated = rotateEmbeddings(emb, r).localCheckpoint()
     val zero = spark.range(1).select(lit(0).cast("int").as("cell"),
       array((0 until dim).map(_ => lit(0f)): _*).as("c_emb"))
-    knnIvfPqResidualCore(spark, rotated, zero, nQueries, k, m, dsub, ksub,
+    knnIvfPqResidualCore(rotated, zero, nQueries, k, m, dsub, ksub,
       nprobe = 1, trainIters = trainIters)
   }
 
@@ -2770,8 +2767,8 @@ object Similarity {
                           dim: Int = 64): DataFrame = {
     val r = opqRotation(spark, emb, m, dim)
     val rotated = rotateEmbeddings(emb, r).localCheckpoint()
-    val centroids = kmeansCentroids(spark, rotated, kCells, iters = 3)
-    knnIvfPqResidualCore(spark, rotated, centroids, nQueries, k, m, dsub,
+    val centroids = kmeansCentroids(rotated, kCells, iters = 3)
+    knnIvfPqResidualCore(rotated, centroids, nQueries, k, m, dsub,
       ksub, nprobe, trainIters)
   }
 
@@ -2804,7 +2801,7 @@ object Similarity {
         .select(col("vec_id"), slice(col("embedding"), 1, p).as("embedding"))
         .crossJoin(broadcast(queries))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+          round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cos_sim").desc, col("neighbor_id"))
       scored.withColumn("rank", row_number().over(w))
@@ -2885,7 +2882,7 @@ object Similarity {
     val scored = emb.filter(col("vec_id") >= nQueries)
       .crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     val cand = scored.withColumn("rank", row_number().over(wTop))
@@ -2900,7 +2897,7 @@ object Similarity {
           col("x.neighbor_id") =!= col("y.neighbor_id"))
       .select(col("x.query_id").as("query_id"),
         col("x.neighbor_id").as("a"), col("y.neighbor_id").as("b"),
-        round(cosine(spark, col("x.embedding"), col("y.embedding")), 6)
+        round(cosine(col("x.embedding"), col("y.embedding")), 6)
           .as("sim_ab"))
       .localCheckpoint() // kCand²-bounded; reused every round
     def e6(c: Column): Column = round(c * lit(1e6)).cast("long")
@@ -3042,7 +3039,7 @@ object Similarity {
     def vecOf(id: Long): Array[Float] =
       emb.filter(col("vec_id") === id).head.getSeq[Float](1).toArray
     def distTo(v: Array[Float]): Column =
-      round(lit(1.0) - cosine(spark, col("embedding"), typedLit(v)), 6)
+      round(lit(1.0) - cosine(col("embedding"), typedLit(v)), 6)
     var picked = Vector[(Int, Long, Option[Double])]((1, seedId, None))
     var md = graft.Iterate.cut(emb
       .select(col("vec_id"), col("embedding"), distTo(vecOf(seedId)).as("md")))
@@ -3127,7 +3124,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("true_label"),
         col("vec_id").as("neighbor_id"), col("label").as("n_label"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
@@ -3532,7 +3529,7 @@ object Similarity {
     val scored = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6)
+        round(cosine(col("q_emb"), col("embedding")), 6)
           .as("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -3647,7 +3644,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("true_label"),
         col("vec_id").as("neighbor_id"), col("label").as("n_label"),
-        round(cosine(spark, col("q_emb"), col("embedding")), 6)
+        round(cosine(col("q_emb"), col("embedding")), 6)
           .as("cos_sim"))
     val wQ = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -3669,7 +3666,7 @@ object Similarity {
     val sigma = emb.crossJoin(broadcast(cands))
       .filter(col("vec_id") =!= col("pid"))
       .select(col("pid"), col("vec_id").as("other_id"),
-        round(cosine(spark, col("p_emb"), col("embedding")), 6)
+        round(cosine(col("p_emb"), col("embedding")), 6)
           .as("s_cos"))
       .withColumn("rank", row_number().over(wP))
       .filter(col("rank") === k)
@@ -3924,7 +3921,7 @@ object Similarity {
     val kth = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("d", lit(1.0) -
-        round(cosine(spark, col("embedding"), col("q_emb")), 6))
+        round(cosine(col("embedding"), col("q_emb")), 6))
       .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("d").asc, col("vec_id"))))
       .filter(col("rk") === k)
@@ -4008,7 +4005,7 @@ object Similarity {
     val cent = centroidArrays(labelCentroids(spark, dir)).localCheckpoint()
     val scatter = emb
       .join(broadcast(cent.select(col("cell").as("label"), col("c_emb"))), "label")
-      .withColumn("d", lit(1.0) - round(cosine(spark, col("embedding"), col("c_emb")), 6))
+      .withColumn("d", lit(1.0) - round(cosine(col("embedding"), col("c_emb")), 6))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         round(Relational.decSum(col("d")) / count(lit(1)).cast("double"), 6)
@@ -4016,7 +4013,7 @@ object Similarity {
     val ca = cent.select(col("cell").as("la"), col("c_emb").as("ea"))
     val cb = cent.select(col("cell").as("lb"), col("c_emb").as("eb"))
     val pairs = ca.join(cb, col("la") =!= col("lb"))
-      .withColumn("m", lit(1.0) - round(cosine(spark, col("ea"), col("eb")), 6))
+      .withColumn("m", lit(1.0) - round(cosine(col("ea"), col("eb")), 6))
     val r = pairs
       .join(scatter.select(col("label").as("la"), col("s_i").as("sa")), "la")
       .join(scatter.select(col("label").as("lb"), col("s_i").as("sb")), "lb")

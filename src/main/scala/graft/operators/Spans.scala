@@ -181,7 +181,7 @@ object Spans {
         // outgrows broadcast, shuffle (doc_id, pos, rh) alone and
         // re-join text by doc_id.
         val winCol =
-          graft.functions.CharWindowHashes.windowHashes(spark, col("text"), l)
+          graft.functions.CharWindowHashes.windowHashes(col("text"), l)
         val dupRoll = eligible.select(explode(winCol).as("rh"))
           .groupBy(col("rh")).agg(count(lit(1)).as("n"))
           .filter(col("n") > 1).select(col("rh"))
@@ -214,7 +214,7 @@ object Spans {
         length(col("text")).cast("long").as("n_chars"))
     val grams = docs.filter(col("n_chars") >= l)
       .select(col("doc_id"), posexplode(
-        graft.functions.CharWindowHashes.windowHashes(spark, col("text"), l)))
+        graft.functions.CharWindowHashes.windowHashes(col("text"), l)))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col").as("g"))
     dupExtentCore(docs, grams, l)

@@ -53,7 +53,7 @@ object TextAnalysis {
     val base = docs.select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
     val withScores = langStopwords.foldLeft(base) { case (df, (lang, words)) =>
       df.withColumn(s"s_$lang",
-        graft.functions.ArrayCountIn.countIn(spark, col("toks"), words))
+        graft.functions.ArrayCountIn.countIn(col("toks"), words))
     }
     val s = langStopwords.map { case (lang, _) => lang -> col(s"s_$lang") }.toMap
     val pred = when(s.values.reduce(_ + _) > 0,
@@ -867,8 +867,8 @@ object TextAnalysis {
     docs.select(col("doc_id"), tokens(col("text")).as("toks"))
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("n_distinct", size(array_distinct(col("toks"))))
-      .withColumn("bg", graft.functions.WordNGrams.ngrams(spark, col("toks"), 2))
-      .withColumn("top_cnt", graft.functions.ArrayMaxFreq.maxFreq(spark, col("bg")))
+      .withColumn("bg", graft.functions.WordNGrams.ngrams(col("toks"), 2))
+      .withColumn("top_cnt", graft.functions.ArrayMaxFreq.maxFreq(col("bg")))
       .withColumn("total_bi", when(col("n_tokens") >= 2, col("n_tokens") - 1))
       .withColumn("distinct_bi", when(col("n_tokens") >= 2,
         size(array_distinct(col("bg")))))
@@ -934,7 +934,7 @@ object TextAnalysis {
     // lossless because tokens() cannot contain whitespace
     val bg = base.filter(col("n") >= 2)
       .select(col("doc_id"), explode(
-        graft.functions.WordNGrams.ngrams(spark, col("toks"), 2)).as("bigram"))
+        graft.functions.WordNGrams.ngrams(col("toks"), 2)).as("bigram"))
       .select(col("doc_id"),
         substring_index(col("bigram"), " ", 1).as("w1"),
         substring_index(col("bigram"), " ", -1).as("w2"))
@@ -1089,7 +1089,7 @@ object TextAnalysis {
         col("doc_id"),
         contentFingerprint(col("text")).as("content_fp"),
         bagFingerprint(col("text")).as("bag_fp"),
-        rollingFingerprint(spark, col("text")).as("rolling_fp"))
+        rollingFingerprint(col("text")).as("rolling_fp"))
       .orderBy(col("doc_id"))
   }
 
@@ -1139,7 +1139,7 @@ object TextAnalysis {
     // filter+size form is CodegenFallback in every scored row
     val withTf = terms.zipWithIndex.foldLeft(docs) { case (d, (t, i)) =>
       d.withColumn(s"tf$i",
-        graft.functions.ArrayCountIn.countIn(corpus.sparkSession, col("toks"), Seq(t)))
+        graft.functions.ArrayCountIn.countIn(col("toks"), Seq(t)))
     }.localCheckpoint() // two consumers: the stats aggregate + scoring
     val statAggs = Seq(
       count(lit(1)).as("n_docs"),
@@ -1227,7 +1227,7 @@ object TextAnalysis {
       .select(col("source"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("source"), explode(
-        graft.functions.WordNGrams.ngrams(spark, col("toks"), 3)).as("tg"))
+        graft.functions.WordNGrams.ngrams(col("toks"), 3)).as("tg"))
     tri.groupBy(col("source"), col("tg"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("source"))
@@ -1284,7 +1284,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("source"), explode(array_distinct(
-        graft.functions.WordNGrams.ngrams(spark, col("toks"), 3))).as("shingle"))
+        graft.functions.WordNGrams.ngrams(col("toks"), 3))).as("shingle"))
       .localCheckpoint()
     val bp = sh.groupBy(col("source"), col("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -1662,7 +1662,7 @@ object TextAnalysis {
                              k: Int = 50): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     docs.select(explode(tokens(col("text"))).as("token"))
-      .agg(graft.functions.HeavyHitters.heavyHitters(spark, col("token"), k).as("hh"))
+      .agg(graft.functions.HeavyHitters.heavyHitters(col("token"), k).as("hh"))
       .select(explode(col("hh")).as(Seq("token", "est_count")))
       .orderBy(col("est_count").desc, col("token"))
   }
@@ -1750,7 +1750,7 @@ object TextAnalysis {
     val base = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
     val bg = base.filter(size(col("toks")) >= 2)
       .select(explode(
-        graft.functions.WordNGrams.ngrams(spark, col("toks"), 2)).as("bigram"))
+        graft.functions.WordNGrams.ngrams(col("toks"), 2)).as("bigram"))
       .select(substring_index(col("bigram"), " ", 1).as("w1"),
         substring_index(col("bigram"), " ", -1).as("w2"))
     val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
@@ -2586,7 +2586,7 @@ object TextAnalysis {
     val withScores = arrs.foldLeft(base) { case (df0, (p, arr)) =>
       langStopwords.foldLeft(df0) { case (df, (lang, words)) =>
         df.withColumn(s"${p}_$lang",
-          graft.functions.ArrayCountIn.countIn(spark, arr, words))
+          graft.functions.ArrayCountIn.countIn(arr, words))
       }
     }
     def predOf(p: String): Column = {
@@ -2675,7 +2675,7 @@ object TextAnalysis {
     val withScores = langStopwords.foldLeft(base) {
       case (df, (lang, words)) =>
         df.withColumn(s"s_$lang",
-          graft.functions.ArrayCountIn.countIn(spark, col("toks"), words))
+          graft.functions.ArrayCountIn.countIn(col("toks"), words))
     }
     val scores = langStopwords.map { case (l, _) => col(s"s_$l") }
     val best = greatest(scores: _*)
@@ -3381,7 +3381,7 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= shingleK)
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.WordNGrams.ngrams(spark, col("toks"), shingleK)))
+        graft.functions.WordNGrams.ngrams(col("toks"), shingleK)))
         .as("token"))
     val train = sh.filter(col("doc_id") % 2 === 0)
       .select(col("token")).distinct()

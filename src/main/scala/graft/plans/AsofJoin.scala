@@ -330,7 +330,7 @@ object AsofJoinOps {
       .withColumn("__asof_times",
         org.apache.spark.sql.functions.expr(
           "transform(__asof_arr, x -> x.__t)"))
-    val idx = graft.functions.SortedFloorIndex.floorIndex(spark,
+    val idx = graft.functions.SortedFloorIndex.floorIndex(
       col("__asof_times"), col("__asof_lt"))
     val joined = l2.join(
         org.apache.spark.sql.functions.broadcast(dim), keys, "left")

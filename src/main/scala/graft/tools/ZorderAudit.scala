@@ -28,7 +28,7 @@ object ZorderAudit {
     val li = Tables.load(spark, sfDir, "lineitem")
     val nFiles = 64
     Layout.writeZOrdered(li, "l_partkey", "l_suppkey", s"$base/z", nFiles)
-    Layout.writeHilbertOrdered(spark, li, "l_partkey", "l_suppkey",
+    Layout.writeHilbertOrdered(li, "l_partkey", "l_suppkey",
       s"$base/h", nFiles)
     li.repartition(nFiles).write.mode("overwrite").parquet(s"$base/u")
 

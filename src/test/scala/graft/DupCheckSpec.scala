@@ -141,6 +141,22 @@ class DupCheckSpec extends AnyFunSuite {
     assert(section.contains(s"${used.size} variables"),
       s"README's Bench section should state '${used.size} variables'")
   }
+
+  test("src/main builds custom expressions as Columns, never through a SQL function name") {
+    val root = new java.io.File("src/main")
+    assume(root.isDirectory) // repo-relative; skip outside the repo
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    val hits = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("createOrReplaceTempFunction") ||
+            l.contains("call_function(") => s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, "build the expression with GraftSqlBridge.column " +
+      "instead of registering a SQL name:\n" + hits.mkString("\n"))
+  }
 }
 
 /** Orchestrator plumbing: the chunk-merge path reads child

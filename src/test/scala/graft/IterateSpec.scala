@@ -40,7 +40,7 @@ class IterateSpec extends AnyFunSuite {
   test("reliable mode: kmeansCentroids cuts its loop state through " +
       "Iterate.cut and matches local-mode centroids") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    def centroids() = graft.operators.Similarity.kmeansCentroids(spark, emb)
+    def centroids() = graft.operators.Similarity.kmeansCentroids(emb)
       .as[(Int, Seq[Float])].collect().toSeq.sortBy(_._1)
     val local = centroids()
     val ckDir = java.nio.file.Files.createTempDirectory("graft-ck-kmeans")
@@ -163,16 +163,16 @@ class IterateSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val edges = Seq((10L, 20L), (10L, 30L), (20L, 30L), (20L, 40L), (30L, 40L))
       .toDF("pa", "pb")
-    val k3 = graft.operators.Graph.kTrussPeel(spark, edges, k = 3)
+    val k3 = graft.operators.Graph.kTrussPeel(edges, k = 3)
       .as[(Long, Long)].collect().toSeq
     assert(k3 === Seq((10L, 20L), (10L, 30L), (20L, 30L), (20L, 40L), (30L, 40L)))
     // k=4 needs every edge in >= 2 triangles: the spine survives round
     // 1 alone, then has no triangle -> empty fixpoint
-    assert(graft.operators.Graph.kTrussPeel(spark, edges, k = 4).isEmpty)
+    assert(graft.operators.Graph.kTrussPeel(edges, k = 4).isEmpty)
     // 4-clique: every edge sits in exactly 2 triangles -> 4-truss keeps all 6
     val clique = (for { a <- Seq(1L, 2L, 3L, 4L); b <- Seq(1L, 2L, 3L, 4L)
       if a < b } yield (a, b)).toDF("pa", "pb")
-    assert(graft.operators.Graph.kTrussPeel(spark, clique, k = 4).count() === 6L)
+    assert(graft.operators.Graph.kTrussPeel(clique, k = 4).count() === 6L)
   }
 
   test("degreeAssortativity: star graph scores exactly -1") {

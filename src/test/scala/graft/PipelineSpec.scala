@@ -58,7 +58,7 @@ class PipelineSpec extends AnyFunSuite {
       (Array(0.1f, -0.2f, 0.3f), Array(-0.4f, 0.5f, -0.6f))
     ).toDF("a", "b")
     val r = df.select(
-      Similarity.cosine(spark, $"a", $"b").as("fused"),
+      Similarity.cosine($"a", $"b").as("fused"),
       (Similarity.dot($"a", $"b") / (Similarity.norm($"a") * Similarity.norm($"b"))).as("hof"))
       .collect()
     r.foreach(row => assert(row.getDouble(0) === row.getDouble(1)))
@@ -68,7 +68,7 @@ class PipelineSpec extends AnyFunSuite {
     val df = Seq(
       (Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f))
-    ).toDF("a", "b").select(Similarity.cosine(spark, $"a", $"b").as("c"))
+    ).toDF("a", "b").select(Similarity.cosine($"a", $"b").as("c"))
     val r = df.as[Double].collect()
     assert(math.abs(r(0) - 1.0) < 1e-12)
     assert(r(1) === 0.0)
@@ -95,7 +95,7 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("doc_id", "shingle")
     val n = 8
     val sketch = df.groupBy($"doc_id")
-      .agg(graft.functions.MinHashSketch.minhash(spark, $"shingle", n).as("sig"))
+      .agg(graft.functions.MinHashSketch.minhash($"shingle", n).as("sig"))
       .orderBy($"doc_id").as[(Long, Seq[Long])].collect().toSeq
     // the Column form is exactly what the DuckDB oracle states:
     // MIN((a_i * x + b_i) % p) with x = md5 word % p
@@ -116,7 +116,7 @@ class PipelineSpec extends AnyFunSuite {
     assert((a, b) === colAB)
     // partial/merge path: repartitioned input must yield the same sketch
     val sketchShuffled = df.repartition(5).groupBy($"doc_id")
-      .agg(graft.functions.MinHashSketch.minhash(spark, $"shingle", n).as("sig"))
+      .agg(graft.functions.MinHashSketch.minhash($"shingle", n).as("sig"))
       .orderBy($"doc_id").as[(Long, Seq[Long])].collect().toSeq
     assert(sketchShuffled === sketch)
   }
@@ -132,18 +132,38 @@ class PipelineSpec extends AnyFunSuite {
       "mixed 😀emoji and ascii",
       "", "   \t  "
     ).toDF("text").select(
-      TextFunctions.rollingFingerprint(spark, $"text").as("fused"),
+      TextFunctions.rollingFingerprint($"text").as("fused"),
       TextFunctions.rollingFingerprintHof($"text").as("hof"))
     df.collect().foreach(r => assert(r.getLong(0) === r.getLong(1), r))
     // null element nulls the fold (HOF parity), declared nullable
-    graft.functions.RollingHash.register(spark)
-    val withNull = spark.sql(
-      "SELECT graft_rolling_hash(array('a', CAST(NULL AS STRING))) AS h")
+    import graft.functions.RollingHash.rollingHash
+    val withNull = spark.range(1).select(
+      rollingHash(array(lit("a"), lit(null).cast("string"))).as("h"))
     assert(withNull.schema("h").nullable)
     assert(withNull.head().isNullAt(0))
     // wrong input type is an analysis error, not runtime garbage
     intercept[org.apache.spark.sql.AnalysisException](
-      spark.sql("SELECT graft_rolling_hash(array(1, 2))").head())
+      spark.range(1).select(rollingHash(array(lit(1), lit(2)))).head())
+  }
+
+  test("a helper's Column resolves in a session that never built it") {
+    // built before either session sees them: each Column carries its
+    // Catalyst expression, not a SQL name registered in one session
+    val cos = graft.functions.CosineSimilarity.cosine($"a", $"b").as("cos")
+    val grams = graft.functions.WordNGrams.ngrams($"toks", 2).as("grams")
+    val sig = graft.functions.MinHashSketch.minhash($"shingle", 4).as("sig")
+    def results(s: org.apache.spark.sql.SparkSession) = {
+      val rows = s.createDataFrame(Seq(
+        (1L, Seq(1.0f, 2.0f), Seq(2.0f, 1.0f), Seq("a", "b", "c")),
+        (2L, Seq(0.5f, 0.0f), Seq(1.0f, 0.0f), Seq("x", "y"))))
+        .toDF("id", "a", "b", "toks")
+      (rows.select($"id", cos, grams).orderBy($"id").collect().toSeq,
+        rows.select($"id", explode($"toks").as("shingle"))
+          .groupBy($"id").agg(sig).orderBy($"id").collect().toSeq)
+    }
+    val mine = results(spark)
+    assert(mine._1.size === 2 && mine._2.size === 2)
+    assert(results(spark.newSession()) === mine)
   }
 
   test("property: JVM md5 pair equals the Column form on arbitrary unicode") {
@@ -323,9 +343,9 @@ class PipelineSpec extends AnyFunSuite {
       exact.map { case (q, t) =>
         got.getOrElse(q, Set.empty).count(t).toDouble / t.size }.sum / exact.size
     }
-    val residual = recall(Similarity.knnIvfPqResidualCore(spark, emb, centers,
+    val residual = recall(Similarity.knnIvfPqResidualCore(emb, centers,
       nQueries = 8, k = 10, m = 8, dsub = 8, ksub = 16, nprobe = 1))
-    val rawFlat = recall(Similarity.knnIvfPqResidualCore(spark, emb, zero,
+    val rawFlat = recall(Similarity.knnIvfPqResidualCore(emb, zero,
       nQueries = 8, k = 10, m = 8, dsub = 8, ksub = 16, nprobe = 1))
     assert(residual > rawFlat,
       s"clustered residual $residual did not beat raw flat $rawFlat")
@@ -379,7 +399,7 @@ class PipelineSpec extends AnyFunSuite {
         got.getOrElse(q, Set.empty).count(t).toDouble / t.size }.sum / exact.size
     }
     val zero = Seq((0, Array.fill(64)(0f))).toDF("cell", "c_emb")
-    val plain = recall(Similarity.knnIvfPqResidualCore(spark, emb, zero,
+    val plain = recall(Similarity.knnIvfPqResidualCore(emb, zero,
       nQueries = 8, k = 10, m = 8, dsub = 8, ksub = 16, nprobe = 1))
     val opq = recall(Similarity.knnPqOpq(spark, emb))
     assert(opq > plain, s"OPQ recall $opq did not beat plain trained PQ $plain")
@@ -433,8 +453,8 @@ class PipelineSpec extends AnyFunSuite {
       exact.map { case (q, t) =>
         got.getOrElse(q, Set.empty).count(t).toDouble / t.size }.sum / exact.size
     }
-    val plainCells = Similarity.kmeansCentroids(spark, emb, kCells = 4, iters = 3)
-    val plain = recall(Similarity.knnIvfPqResidualCore(spark, emb, plainCells,
+    val plainCells = Similarity.kmeansCentroids(emb, kCells = 4, iters = 3)
+    val plain = recall(Similarity.knnIvfPqResidualCore(emb, plainCells,
       nQueries = 8, k = 10, m = 8, dsub = 8, ksub = 16, nprobe = 2))
     val opq = recall(Similarity.knnIvfPqResidualOpq(spark, emb,
       nprobe = 2, kCells = 4))
@@ -453,13 +473,13 @@ class PipelineSpec extends AnyFunSuite {
     val emb = vecs.toDF("vec_id", "embedding")
     val centroids = Seq((0, v(1f, 0f, 0f, 0f)), (1, v(0f, 1f, 0f, 0f)))
       .toDF("cell", "c_emb")
-    val before = Similarity.assignCells(spark, emb, centroids, 1)
+    val before = Similarity.assignCells(emb, centroids, 1)
       .groupBy($"cell").count().as[(Int, Long)].collect().toMap
     assert(before(0) === 40L && before(1) === 10L)
-    val rebalanced = Similarity.rebalanceIvfCells(spark, emb, centroids,
+    val rebalanced = Similarity.rebalanceIvfCells(emb, centroids,
       factor = 1.5)
     assert(rebalanced.count() === 3) // hot cell split, cold kept
-    val after = Similarity.assignCells(spark, emb, rebalanced, 1)
+    val after = Similarity.assignCells(emb, rebalanced, 1)
       .groupBy($"cell").count().as[(Int, Long)].collect().toMap
     assert(after.values.sum === 50L) // no vector lost or duplicated
     assert(after.values.max < 40L,
@@ -467,7 +487,7 @@ class PipelineSpec extends AnyFunSuite {
     // the split separates the two lobes: max load near 20, not 39
     assert(after.values.max <= 25L, s"unbalanced split: $after")
     // determinism: a second run yields the identical centroid frame
-    val again = Similarity.rebalanceIvfCells(spark, emb, centroids,
+    val again = Similarity.rebalanceIvfCells(emb, centroids,
       factor = 1.5)
     assert(rebalanced.orderBy($"cell").collect().toSeq ===
       again.orderBy($"cell").collect().toSeq)

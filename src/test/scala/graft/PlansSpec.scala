@@ -500,7 +500,7 @@ class PlansSpec extends AnyFunSuite {
     val probes = Seq(5L, 10L, 19L, 20L, 30L, 35L, 99L).toDF("t")
       .withColumn("arr", typedlit(arr))
     val got = probes.withColumn("idx",
-        graft.functions.SortedFloorIndex.floorIndex(spark, $"arr", $"t"))
+        graft.functions.SortedFloorIndex.floorIndex($"arr", $"t"))
       .select($"t", $"idx").as[(Long, Int)].collect().toMap
     // floor = LAST index <= t (ties land on the last duplicate)
     assert(got === Map(5L -> -1, 10L -> 0, 19L -> 0, 20L -> 2,
@@ -514,7 +514,7 @@ class PlansSpec extends AnyFunSuite {
     val edge = Seq((Seq.empty[Long], Some(7L)), (arr, None))
       .toDF("arr", "t")
       .withColumn("idx",
-        graft.functions.SortedFloorIndex.floorIndex(spark, $"arr", $"t"))
+        graft.functions.SortedFloorIndex.floorIndex($"arr", $"t"))
       .select($"idx").as[Option[Int]].collect().toSeq
     assert(edge === Seq(Some(-1), None))
   }

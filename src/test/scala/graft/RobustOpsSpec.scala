@@ -149,7 +149,7 @@ class RobustOpsSpec extends AnyFunSuite {
   test("prefixJaccardPairs equals brute-force all-pairs on testdata (losslessness)") {
     val docs = Tables.load(spark, sf0001, "documents")
     val sh = docs.select($"doc_id", explode(array_distinct(
-        graft.functions.WordNGrams.ngrams(spark, graft.functions.TextFunctions.tokens($"text"), 3)))
+        graft.functions.WordNGrams.ngrams(graft.functions.TextFunctions.tokens($"text"), 3)))
         .as("shingle"))
     val sets = sh.groupBy($"doc_id")
       .agg(sort_array(collect_list($"shingle")).as("sset"), count(lit(1)).as("n"))
@@ -330,13 +330,13 @@ class RobustOpsSpec extends AnyFunSuite {
     // returned wrong scores instead of failing
     val df = Seq((Array(1.0f, 2.0f), Array(1.0, 2.0))).toDF("f", "d")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(graft.operators.Similarity.cosine(spark, $"f", $"d")).collect()
+      df.select(graft.operators.Similarity.cosine($"f", $"d")).collect()
     }
     assert(e.getMessage.contains("graft_cosine") ||
       e.getMessage.toLowerCase.contains("data type mismatch"))
     // float/float still works
     val ok = df.select(
-      graft.operators.Similarity.cosine(spark, $"f", $"f")).as[Double].head()
+      graft.operators.Similarity.cosine($"f", $"f")).as[Double].head()
     assert(math.abs(ok - 1.0) < 1e-12)
   }
 
@@ -349,7 +349,7 @@ class RobustOpsSpec extends AnyFunSuite {
       (Array(1L, 2L), Array(3L, 4L)))                  // disjoint
       .toDF("a", "b")
     val got = df.select(
-      SortedIntersectCount.intersectCount(spark, $"a", $"b")).as[Long]
+      SortedIntersectCount.intersectCount($"a", $"b")).as[Long]
       .collect().toSeq
     assert(got === Seq(2L, 0L, 2L, 0L))
     // agrees with size(array_intersect(...)) on sorted set inputs —
@@ -363,7 +363,7 @@ class RobustOpsSpec extends AnyFunSuite {
     val pq = java.nio.file.Files.createTempDirectory("graft-sic").toString
     df.write.mode("overwrite").parquet(pq)
     val plan = spark.read.parquet(pq)
-      .select(SortedIntersectCount.intersectCount(spark, $"a", $"b"))
+      .select(SortedIntersectCount.intersectCount($"a", $"b"))
       .queryExecution.executedPlan.toString
     // codegen stages print with the "*(n)" prefix; a CodegenFallback
     // expression would demote its Project to an unstarred node
@@ -372,7 +372,7 @@ class RobustOpsSpec extends AnyFunSuite {
     // wrong element type is an analysis error, not silent garbage
     val bad = Seq((Array(1, 2), Array(1, 2))).toDF("x", "y")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      bad.select(SortedIntersectCount.intersectCount(spark, $"x", $"y")).collect()
+      bad.select(SortedIntersectCount.intersectCount($"x", $"y")).collect()
     }
     assert(e.getMessage.contains("graft_sorted_intersect_count") ||
       e.getMessage.toLowerCase.contains("data type mismatch"))
@@ -384,7 +384,7 @@ class RobustOpsSpec extends AnyFunSuite {
     val p = Prop.forAll(arr, arr) { (a: Array[Long], b: Array[Long]) =>
       val df = Seq((a, b)).toDF("a", "b")
       val got = df.select(graft.functions.SortedIntersectCount
-        .intersectCount(spark, $"a", $"b")).as[Long].head()
+        .intersectCount($"a", $"b")).as[Long].head()
       got == a.toSet.intersect(b.toSet).size.toLong
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), p)
@@ -1198,7 +1198,7 @@ class RobustOpsSpec extends AnyFunSuite {
         (i.toLong, t, "en", t.length.toLong) })
       val sh = Tables.load(spark, dir, "documents")
         .select($"doc_id", explode(array_distinct(
-          graft.functions.WordNGrams.ngrams(spark,
+          graft.functions.WordNGrams.ngrams(
             graft.functions.TextFunctions.tokens($"text"), 3))).as("shingle"))
       val sets = sh.groupBy($"doc_id")
         .agg(sort_array(collect_list($"shingle")).as("sset"), count(lit(1)).as("n"))

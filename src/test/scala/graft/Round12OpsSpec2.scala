@@ -173,7 +173,7 @@ class Round12OpsSpec2 extends AnyFunSuite {
         (x, y) => ((x > 0) =!= (y > 0)).cast("int")),
       lit(0), (acc, v) => acc + v)
     val diff = pairs.select(
-        graft.functions.SignHamming.signHamming(spark, col("a_emb"),
+        graft.functions.SignHamming.signHamming(col("a_emb"),
           col("b_emb")).as("fused"),
         composable.as("comp"))
       .filter(col("fused") =!= col("comp"))
@@ -181,7 +181,7 @@ class Round12OpsSpec2 extends AnyFunSuite {
     // length mismatch -> NULL, not a truncated prefix distance
     val mism = Seq((Seq(1.0f, -2.0f), Seq(1.0f)))
       .toDF("a", "b")
-      .select(graft.functions.SignHamming.signHamming(spark, col("a"),
+      .select(graft.functions.SignHamming.signHamming(col("a"),
         col("b")).as("hd"))
       .as[Option[Int]].collect()
     assert(mism.head.isEmpty)

@@ -225,8 +225,8 @@ class Round12OpsSpec3 extends AnyFunSuite {
     val b = a.drop(2) ++ Seq(0.0, 0.0)
     val df = Seq((a, a, b)).toDF("x", "same", "shifted")
     val r = df.select(
-      graft.functions.DtwDistance.dtw(spark, col("x"), col("same")).as("d0"),
-      graft.functions.DtwDistance.dtw(spark, col("x"), col("shifted")).as("ds"),
+      graft.functions.DtwDistance.dtw(col("x"), col("same")).as("d0"),
+      graft.functions.DtwDistance.dtw(col("x"), col("shifted")).as("ds"),
       aggregate(zip_with(col("x"), col("shifted"), (p, q) => abs(p - q)),
         lit(0.0), (acc, v) => acc + v).as("l1s"))
       .as[(Double, Double, Double)].head()

@@ -121,7 +121,7 @@ class TextOpsSpec extends AnyFunSuite {
     } yield (n, toks)
     val p = Prop.forAll(gen) { case (n, toks) =>
       val df = Seq(Tuple1(toks)).toDF("toks").withColumn("m", size($"toks"))
-      val fused = df.select(WordNGrams.ngrams(spark, $"toks", n).as("g"))
+      val fused = df.select(WordNGrams.ngrams($"toks", n).as("g"))
         .as[Seq[String]].head()
       val composable = df.select(expr(
         s"transform(sequence(0, m - $n), i -> concat_ws(' ', slice(toks, i + 1, $n)))"
@@ -133,7 +133,7 @@ class TextOpsSpec extends AnyFunSuite {
     // below-width arrays yield an EMPTY array (the composable form's
     // descending sequence() would misbehave there; callers pre-filter)
     val short = Seq(Tuple1(Seq("only"))).toDF("toks")
-      .select(graft.functions.WordNGrams.ngrams(spark, $"toks", 3).as("g"))
+      .select(graft.functions.WordNGrams.ngrams($"toks", 3).as("g"))
       .as[Seq[String]].head()
     assert(short === Seq.empty)
   }
@@ -146,8 +146,8 @@ class TextOpsSpec extends AnyFunSuite {
     val p = Prop.forAll(gen) { toks =>
       val df = Seq(Tuple1(toks)).toDF("toks")
       val fused = df.select(
-        graft.functions.ArrayMaxFreq.maxFreq(spark, $"toks").as("mf"),
-        graft.functions.ArrayCountIn.countIn(spark, $"toks", words).as("ci"))
+        graft.functions.ArrayMaxFreq.maxFreq($"toks").as("mf"),
+        graft.functions.ArrayCountIn.countIn($"toks", words).as("ci"))
         .as[(Option[Long], Long)].head()
       val expectMf = if (toks.isEmpty) None
         else Some(toks.groupBy(identity).values.map(_.length).max.toLong)
@@ -262,7 +262,7 @@ class TextOpsSpec extends AnyFunSuite {
              pre + cs.map(_._2).mkString + post)
     val p = Prop.forAll(gen) { case (decomposed, precomposed) =>
       val out = Seq(decomposed, precomposed, "plain ascii").toDF("s")
-        .select(NfcNormalize.nfcCol(spark, $"s").as("n"))
+        .select(NfcNormalize.nfcCol($"s").as("n"))
         .as[String].collect().toSeq
       out(0) == precomposed && out(1) == precomposed && out(2) == "plain ascii"
     }
@@ -302,18 +302,6 @@ class TextOpsSpec extends AnyFunSuite {
       (1L, 1L, 0), (2L, 1L, 1),   // ASCII fold merges
       (3L, 3L, 0), (4L, 4L, 0),   // dotted-I stays distinct
       (5L, 5L, 0)))               // non-ASCII case difference preserved
-  }
-
-  test("graft_nfc SQL: wrong arity is an analysis error, not an index crash") {
-    graft.functions.NfcNormalize.register(spark)
-    val e0 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_nfc()").collect()
-    }
-    assert(e0.getMessage.contains("graft_nfc"))
-    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_nfc('a', 'b')").collect()
-    }
-    assert(e2.getMessage.contains("graft_nfc"))
   }
 
   test("vocabularyHeavyHitters: MG presence and undercount bounds vs exact") {
