@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** Lineage truncation policy for the iterative fixpoint operators
   * (near-dup cluster propagation, alternating-star connected
@@ -44,5 +44,16 @@ object Iterate {
           "SparkContext.setCheckpointDir(<fault-tolerant path>) first")
       df.checkpoint()
     } else df.localCheckpoint()
+  }
+
+  /** [[cut]], returning with the cut frame the value of `metric`, a
+    * long-valued aggregate over its rows (say `count(lit(1))`), observed
+    * on the cut's own job: a loop that tests the state it just cut
+    * (empty? grown? changed?) runs no probe job for it.
+    */
+  def cutObserved(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val observed = Observation()
+    val out = cut(df.observe(observed, metric.as("m")))
+    (out, observed.get("m").asInstanceOf[Long])
   }
 }

@@ -97,7 +97,8 @@ object Tables {
     * long under `spark.sql.legacy.parquet.nanosAsLong`) and as
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ);
     * both generations are normalized here to a micros TimestampType so
-    * every downstream operator sees one type.
+    * every downstream operator sees one type. The physical schema is
+    * inferred once per file version and JVM (see [[readParquet]]).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     load(spark, dir, name, schemas)
@@ -110,13 +111,47 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String,
            catalog: Map[String, StructType]): DataFrame = {
     require(catalog.contains(name), s"unknown table: $name")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     val wantsTs = catalog(name).fields.exists(f =>
       f.name == "ts" && f.dataType == TimestampType)
     if (wantsTs && df.columns.contains("ts") &&
         df.schema("ts").dataType != TimestampType)
       normalizeEventTs(df)
     else df
+  }
+
+  /** Inferred (physical) Parquet schema per path, with the stamp it was
+    * inferred under: the path's listing (name, length, modification
+    * time of each file) and the session's Parquet settings. Inference
+    * is a footer-scan job on every `spark.read.parquet`; with the
+    * schema passed in, a read of an unchanged file runs none. A
+    * rewrite changes the listing, so the next load infers again.
+    */
+  private type Stamp = (Seq[(String, Long, Long)], Map[String, String])
+
+  private val inferredSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val listing =
+      try Some(fs.listStatus(p).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+      catch { case _: java.io.FileNotFoundException => None }
+    listing match {
+      // a missing path fails in the reader, with its usual error
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val stamp: Stamp = (files, spark.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.") })
+        val schema = inferredSchemas.compute(fs.makeQualified(p).toString,
+          (_, old) =>
+            if (old != null && old._1 == stamp) old
+            else (stamp, spark.read.parquet(path).schema))._2
+        spark.read.schema(schema).parquet(path)
+    }
   }
 
   /** Physical-`ts` → micros TimestampType — the single place the

@@ -57,8 +57,8 @@ object CurationPipeline {
     val docs = Tables.load(spark, dir, "documents")
 
     // 1. near-dup clustering: canonical representatives only
-    val canon = Dedup.dedupClusters(spark, dir)
-      .filter(col("is_canonical") === 1)
+    val canon = Dedup.clusterMembers(spark, dir)
+      .filter(col("doc_id") === col("rep_id"))
       .select(col("doc_id"))
     val deduped = docs.join(canon, Seq("doc_id"), "left_semi")
 

@@ -249,14 +249,19 @@ object Dedup {
     * both sides) so no inverted-index key fans out quadratically.
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String, k: Int = 3,
-                        threshold: Double = 0.6, dfCap: Int = 200): DataFrame = {
+                        threshold: Double = 0.6, dfCap: Int = 200): DataFrame =
+    jaccardPairs(spark, dir, k, threshold, dfCap).orderBy(col("doc_a"), col("doc_b"))
+
+  /** [[ngramJaccardPairs]] without its order, for the consumers that
+    * regroup or materialize the pairs: a global sort costs them a
+    * range-sampling job and an exchange whose order nothing reads. */
+  private def jaccardPairs(spark: SparkSession, dir: String, k: Int = 3,
+                           threshold: Double = 0.6, dfCap: Int = 200): DataFrame =
     sharedShingleCounts(spark, dir, k, dfCap)
       .withColumn("jaccard",
         round(col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   val ngramJaccardPairsSql: String =
     s"""WITH $shingleCtes, $sharedShinglesCtes
@@ -290,7 +295,7 @@ object Dedup {
                          threshold: Double = 0.6, dfCap: Int = 200)
       : DataFrame = {
     val byK = ks.map { k =>
-      k -> graft.Iterate.cut(ngramJaccardPairs(spark, dir, k, threshold, dfCap))
+      k -> graft.Iterate.cut(jaccardPairs(spark, dir, k, threshold, dfCap))
     }.toMap
     val base = byK(baselineK).select(col("doc_a"), col("doc_b"))
     val rows = byK.toSeq.sortBy(_._1).map { case (k, pairs) =>
@@ -405,7 +410,7 @@ object Dedup {
   def pairAuditSample(spark: SparkSession, dir: String,
                       perBucket: Int = 5): DataFrame = {
     import graft.functions.PortableHash
-    val pairs = ngramJaccardPairs(spark, dir)
+    val pairs = jaccardPairs(spark, dir)
     val bucketed = pairs.withColumn("bucket",
       least(expr("CAST(ROUND(jaccard * 1000000, 0) AS BIGINT) div 100000"),
         lit(9L)).cast("int"))
@@ -478,10 +483,9 @@ object Dedup {
       .agg(count(lit(1)).as("n_blocks"),
         // integer div: Column./ is DOUBLE division
         sum(expr("c * (c - 1) div 2")).as("cand_pairs"))
-    val gold = graft.Iterate.cut(
-      ngramJaccardPairs(spark, dir, k, threshold, dfCap)
-        .select(col("doc_a"), col("doc_b")))
-    val nGold = gold.count()
+    val (gold, nGold) = graft.Iterate.cutObserved(
+      jaccardPairs(spark, dir, k, threshold, dfCap)
+        .select(col("doc_a"), col("doc_b")), count(lit(1)))
     val covered = gold
       .join(keyed.select(col("strategy"), col("doc_id").as("doc_a"),
         col("key").as("key_a")), "doc_a")
@@ -571,7 +575,7 @@ object Dedup {
   def dedupThresholdCurve(spark: SparkSession, dir: String, k: Int = 3,
                           thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9),
                           dfCap: Int = 200): DataFrame = {
-    val pairs = ngramJaccardPairs(spark, dir, k, thresholds.min, dfCap)
+    val pairs = jaccardPairs(spark, dir, k, thresholds.min, dfCap)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
     val gridDf = spark.range(1)
@@ -757,22 +761,51 @@ object Dedup {
   /** q38 — dedup clustering: connected components over the near-dup
     * pair graph, each doc mapped to its cluster representative
     * (min doc_id reachable). Iterative min-label propagation — the
-    * loop is driver-controlled but every round is a pair of SHUFFLE
+    * loop is driver-controlled; round 1 is one aggregate over the edge
+    * list and every later round a pair of SHUFFLE
     * joins keyed on doc_id (round-2 rework: no broadcast of the label
     * table — at 100 TB web-corpus dup rates it is not broadcastable,
     * and SHUFFLE_HASH pins the strategy so AQE cannot flip the
     * locally-tiny table back to broadcast; the benched plan is the
-    * 100 TB plan). Convergence is folded into the round's output: the
-    * previous label rides along as `old_rep`, so the probe is a filter
-    * over the just-checkpointed round — no extra join job.
+    * 100 TB plan). Convergence is observed on the round's own cut:
+    * the previous label rides along as `old_rep` and the cut counts
+    * the rows that changed — no extra job.
     * Convergence in O(cluster diameter) rounds (near-dup clusters are
     * tiny, so 2-3). The oracle states the same fixpoint as a recursive
     * transitive-closure CTE.
     */
   def dedupClusters(spark: SparkSession, dir: String, k: Int = 3,
                     threshold: Double = 0.6, maxIters: Int = 50,
-                    requireConverged: Boolean = false): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents").select(col("doc_id"))
+                    requireConverged: Boolean = false): DataFrame =
+    members(spark, dir, k, threshold, maxIters, requireConverged)
+      .withColumn("is_canonical", (col("doc_id") === col("rep_id")).cast("int"))
+      .orderBy(col("doc_id"))
+
+  /** Every document's q38 cluster representative `(doc_id, rep_id)`,
+    * unsorted — the label relation the cluster consumers (q80, q89,
+    * q118, q192, q233, q326, q330 and the q63 curation pipeline)
+    * regroup. Throws when the fixpoint did not converge: a partial
+    * labeling splits true clusters.
+    */
+  def clusterMembers(spark: SparkSession, dir: String): DataFrame =
+    members(spark, dir, 3, 0.6, 50, requireConverged = true)
+
+  /** The edge-node labels of [[clusterMembers]] joined back to every
+    * document, a singleton being its own representative. */
+  private def members(spark: SparkSession, dir: String, k: Int,
+                      threshold: Double, maxIters: Int,
+                      requireConverged: Boolean): DataFrame =
+    Tables.load(spark, dir, "documents").select(col("doc_id"))
+      .join(edgeLabels(spark, dir, k, threshold, maxIters, requireConverged),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
+
+  /** The memoized labels `(doc_id, rep_id)` of the docs that have a
+    * near-dup edge, checked for convergence: a failure when
+    * `requireConverged`, a stderr warning otherwise. */
+  private def edgeLabels(spark: SparkSession, dir: String, k: Int,
+                         threshold: Double, maxIters: Int,
+                         requireConverged: Boolean): DataFrame = {
     val (labels, converged) = clusterLabels(spark, dir, k, threshold, maxIters)
     if (!converged) {
       val msg = s"[dedupClusters] not converged after $maxIters rounds — " +
@@ -785,10 +818,7 @@ object Dedup {
       if (requireConverged) throw new IllegalStateException(msg)
       System.err.println(s"$msg (WARNING)")
     }
-    docs.join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
-      .withColumn("is_canonical", (col("doc_id") === col("rep_id")).cast("int"))
-      .orderBy(col("doc_id"))
+    labels
   }
 
   /** Session-scoped memo of the propagation fixpoint: one CC run per
@@ -822,42 +852,71 @@ object Dedup {
       (spark, dir, k, threshold, maxIters),
       _ => computeClusterLabels(spark, dir, k, threshold, maxIters))
 
-  private def computeClusterLabels(spark: SparkSession, dir: String, k: Int,
-                                   threshold: Double,
-                                   maxIters: Int): (DataFrame, Boolean) = {
+  /** The label fixpoint. Its edge list (both directions of every
+    * near-dup pair) is the one materialization every round reads.
+    * The starting labels (every node its own representative) are never
+    * materialized: round 1 reads the edges alone, each node taking the
+    * least of itself and its neighbors. Each round is cut with the
+    * count of labels it changed observed on the cut itself, so
+    * convergence costs no job. With `maxIters` 0 the starting labels
+    * are returned, not converged.
+    */
+  private[graft] def computeClusterLabels(spark: SparkSession, dir: String, k: Int,
+                                          threshold: Double,
+                                          maxIters: Int): (DataFrame, Boolean) = {
     labelsComputeCount.incrementAndGet()
-    // materialize the pair list once — every iteration reads edges
-    val pairs = graft.Iterate.cut(ngramJaccardPairs(spark, dir, k, threshold)
-      .select(col("doc_a"), col("doc_b")))
     // propagation runs only over nodes that appear in edges (the
-    // near-dup graph is a sliver of the corpus), then joins back once.
-    val edges = graft.Iterate.cut(pairs.unionByName(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    // near-dup graph is a sliver of the corpus), then joins back once
+    val edges = graft.Iterate.cut(fixpointEdges(spark, dir, k, threshold))
     // Iterative lineage is TRUNCATED each round (Iterate.cut —
     // localCheckpoint locally, reliable checkpoint when
     // spark.graft.checkpoint.reliable is on): without truncation every
     // downstream action re-runs the whole jaccard subtree per
     // reference (profiled: 3x slower end-to-end).
-    var labels = graft.Iterate.cut(edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("rep_id", col("doc_id")))
+    def cutRound(next: DataFrame): (DataFrame, Boolean) = {
+      val (cut, changed) = graft.Iterate.cutObserved(next,
+        count_if(col("rep_id") =!= col("old_rep")))
+      (cut.select(col("doc_id"), col("rep_id")), changed == 0L)
+    }
+    var labels = edges.select(col("doc_a").as("doc_id")).distinct()
+      .withColumn("rep_id", col("doc_id"))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
       iter += 1
-      val neighborMin = edges
-        .join(labels.hint("shuffle_hash"), edges("doc_b") === labels("doc_id"))
-        .groupBy(col("doc_a").as("nm_doc_id"))
-        .agg(min(col("rep_id")).as("n_rep"))
-      val next = graft.Iterate.cut(labels
-        .join(neighborMin.hint("shuffle_hash"),
-          labels("doc_id") === col("nm_doc_id"), "left")
-        .select(col("doc_id"), col("rep_id").as("old_rep"),
-          least(col("rep_id"), coalesce(col("n_rep"), col("rep_id"))).as("rep_id")))
-      converged = next.filter(col("rep_id") =!= col("old_rep")).isEmpty
-      labels = next.select(col("doc_id"), col("rep_id"))
+      val (next, done) = cutRound(
+        if (iter == 1) edges
+          .groupBy(col("doc_a").as("doc_id"))
+          .agg(min(col("doc_b")).as("n_rep"))
+          .select(col("doc_id"), col("doc_id").as("old_rep"),
+            least(col("doc_id"), col("n_rep")).as("rep_id"))
+        else {
+          val neighborMin = edges
+            .join(labels.hint("shuffle_hash"), edges("doc_b") === labels("doc_id"))
+            .groupBy(col("doc_a").as("nm_doc_id"))
+            .agg(min(col("rep_id")).as("n_rep"))
+          // every labeled node has a neighbor, so the join is inner:
+          // both joins then read labels through one exchange
+          labels
+            .join(neighborMin.hint("shuffle_hash"),
+              labels("doc_id") === col("nm_doc_id"))
+            .select(col("doc_id"), col("rep_id").as("old_rep"),
+              least(col("rep_id"), col("n_rep")).as("rep_id"))
+        })
+      labels = next
+      converged = done
     }
     (labels, converged)
   }
+
+  /** Both directions `(doc_a, doc_b)` of every near-dup pair. */
+  private[graft] def fixpointEdges(spark: SparkSession, dir: String, k: Int,
+                                   threshold: Double): DataFrame =
+    jaccardPairs(spark, dir, k, threshold)
+      .select(explode(array(
+        struct(col("doc_a"), col("doc_b")),
+        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
+      .select(col("e.doc_a"), col("e.doc_b"))
 
   /** Alternating large-star/small-star connected components — the
     * O(log n)-round shuffle-only CC (Kiveris et al., "Connected
@@ -879,7 +938,7 @@ object Dedup {
         greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    var e = graft.Iterate.cut(orient(edges0))
+    var (e, eRows) = graft.Iterate.cutObserved(orient(edges0), count(lit(1)))
     var done = false
     var i = 0
     while (!done && i < maxIters) {
@@ -894,12 +953,13 @@ object Dedup {
         .select(col("dst").as("src"), col("m").as("dst"))))
       // small-star: connect u and all its (smaller) neighbors to the min
       val mins2 = ls.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      val ss = graft.Iterate.cut(orient(ls.join(mins2, "src")
+      val (ss, ssRows) = graft.Iterate.cutObserved(orient(ls.join(mins2, "src")
         .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(mins2.select(col("src"), col("m").as("dst")))))
+        .unionByName(mins2.select(col("src"), col("m").as("dst")))), count(lit(1)))
       // fixpoint: the (distinct) edge set stopped changing
-      done = ss.count() == e.count() && ss.except(e).isEmpty
+      done = ssRows == eRows && ss.except(e).isEmpty
       e = ss
+      eRows = ssRows
     }
     if (!done)
       System.err.println(s"[connectedComponents] WARNING: not converged " +
@@ -1486,7 +1546,7 @@ object Dedup {
     * stderr warning the analytics path tolerates.
     */
   def clusterSplit(spark: SparkSession, dir: String): DataFrame =
-    dedupClusters(spark, dir, requireConverged = true)
+    clusterMembers(spark, dir)
       .withColumn("split",
         when(graft.functions.PortableHash.md5Long32(col("rep_id")) % 10 < 8,
           lit("train")).otherwise(lit("val")))
@@ -1525,7 +1585,7 @@ object Dedup {
   def foldAudit(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import graft.functions.TextFunctions.tokenCount
     val folds = graft.Iterate.cut(
-      dedupClusters(spark, dir, requireConverged = true)
+      clusterMembers(spark, dir)
         .select(col("doc_id"), col("rep_id"),
           pmod(PortableHash.md5Long32(col("rep_id")), lit(k.toLong))
             .as("fold")))
@@ -1684,7 +1744,7 @@ object Dedup {
           coalesce(sum(col("t")), lit(0L)).as("tokens_removable"))
     val exactDups = exact(spark, dir).filter(col("is_dup") === 1)
       .select(col("doc_id"))
-    val clusterDups = dedupClusters(spark, dir, requireConverged = true)
+    val clusterDups = clusterMembers(spark, dir)
       .filter(col("doc_id") =!= col("rep_id")).select(col("doc_id"))
     val span = spanDedupStats(spark, dir)
     row("exact", exactDups)
@@ -1773,8 +1833,7 @@ object Dedup {
     // under-counts n_members/total_chars — integrity-bearing, so a
     // non-converged propagation is a hard failure here (like q80's
     // split), not the stderr warning the analytics path tolerates.
-    val labeled = dedupClusters(spark, dir, requireConverged = true)
-      .join(docs, "doc_id")
+    val labeled = clusterMembers(spark, dir).join(docs, "doc_id")
     val w = Window.partitionBy(col("rep_id"))
       .orderBy(col("n_chars").desc, col("doc_id"))
     val survivors = labeled
@@ -1819,44 +1878,45 @@ object Dedup {
     * per-source breakdown is what locates a contaminated or
     * boilerplate-heavy feed; the corpus-wide numbers alone can't.
     *
-    * Scale: one (source) aggregate over fingerprints + a rep-keyed
-    * size aggregate over precomputed labels — everything
-    * map-side-combinable. [[dedupReportCore]] takes the (doc_id,
-    * rep_id) labels as an INPUT so a pipeline that already ran the
-    * q38 fixpoint (or any CC variant) reuses it; the [[dedupReport]]
-    * wrapper computes them only for standalone grading.
+    * Scale: a rep-keyed size window over the precomputed labels, one
+    * doc-keyed join and one (source) aggregate, map-side-combinable.
+    * [[dedupReportCore]] takes the (doc_id, rep_id) labels as an INPUT
+    * so a pipeline that already ran the q38 fixpoint (or any CC
+    * variant) reuses it; the [[dedupReport]] wrapper reads the
+    * session's memoized edge-node labels — a singleton is a cluster of
+    * one and never counts, so the labels need not cover it.
     */
   def dedupReport(spark: SparkSession, dir: String): DataFrame =
     dedupReportCore(
       Tables.load(spark, dir, "documents"),
-      dedupClusters(spark, dir, requireConverged = true))
+      edgeLabels(spark, dir, 3, 0.6, 50, requireConverged = true))
 
   /** q108 core over precomputed cluster labels `(doc_id, rep_id)` —
     * see [[dedupReport]]; same core/wrapper split as
     * [[decontaminationCore]]. Labels must be a complete (converged)
-    * clustering: an unconverged label set can split one true cluster
-    * and undercount `n_near_members`.
+    * clustering of the docs in clusters of two or more: an
+    * unconverged label set can split one true cluster and undercount
+    * `n_near_members`.
     */
   def dedupReportCore(docs: DataFrame, labels: DataFrame): DataFrame = {
-    val exact = docs
-      .select(col("source"), contentFingerprint(col("text")).as("fp"))
+    val near = labels.select(col("doc_id"),
+        count(lit(1)).over(Window.partitionBy(col("rep_id"))).as("n_members"))
+      .filter(col("n_members") > 1)
+      .select(col("doc_id"), lit(1L).as("is_near"))
+    docs.select(col("doc_id"), col("source"),
+        contentFingerprint(col("text")).as("fp"))
+      .join(near, Seq("doc_id"), "left")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("fp")).as("n_distinct"))
+        countDistinct(col("fp")).as("n_distinct"),
+        count(col("is_near")).as("n_near_members"))
       .withColumn("n_exact_removed", col("n_docs") - col("n_distinct"))
-    val labeled = labels.select(col("doc_id"), col("rep_id"))
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-    val csize = labeled.groupBy(col("rep_id")).agg(count(lit(1)).as("n_members"))
-    val near = labeled.join(csize, "rep_id")
-      .filter(col("n_members") > 1)
-      .groupBy(col("source")).agg(count(lit(1)).as("n_near_members"))
-    exact.join(near, Seq("source"), "left")
       .select(col("source"), col("n_docs"), col("n_exact_removed"),
         round(col("n_exact_removed").cast("double") / col("n_docs"), 6)
           .as("exact_dup_frac"),
-        coalesce(col("n_near_members"), lit(0L)).as("n_near_members"),
-        round(coalesce(col("n_near_members"), lit(0L)).cast("double")
-          / col("n_docs"), 6).as("near_dup_frac"))
+        col("n_near_members"),
+        round(col("n_near_members").cast("double") / col("n_docs"), 6)
+          .as("near_dup_frac"))
       .orderBy(col("source"))
   }
 
@@ -1900,7 +1960,7 @@ object Dedup {
     * aggregate.
     */
   def dupProvenance(spark: SparkSession, dir: String): DataFrame = {
-    val labels = dedupClusters(spark, dir, requireConverged = true)
+    val labels = clusterMembers(spark, dir)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val withSrc = labels.join(docs, "doc_id")
@@ -2309,8 +2369,7 @@ object Dedup {
     * run, this is two tiny aggregates.
     */
   def clusterSizeHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val labels = dedupClusters(spark, dir, requireConverged = true)
-    labels.groupBy(col("rep_id")).agg(count(lit(1)).as("csize"))
+    clusterMembers(spark, dir).groupBy(col("rep_id")).agg(count(lit(1)).as("csize"))
       .groupBy(col("csize"))
       .agg(count(lit(1)).as("n_clusters"),
         sum(col("csize")).as("n_docs"),
@@ -2550,7 +2609,7 @@ object Dedup {
     */
   def dupDistanceSpectrum(spark: SparkSession, dir: String, k: Int = 3,
                           threshold: Double = 0.6): DataFrame = {
-    val pairs = ngramJaccardPairs(spark, dir, k, threshold)
+    val pairs = jaccardPairs(spark, dir, k, threshold)
       .withColumn("dist", col("doc_b") - col("doc_a"))
       // floor(log2(dist)) as pure INTEGER arithmetic: the bit length
       // of dist minus one (bin() renders the minimal binary string in
@@ -2622,7 +2681,7 @@ object Dedup {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         graft.functions.TextFunctions.qualityScore(col("text")).as("q"))
-    val removable = ngramJaccardPairs(spark, dir, k, threshold)
+    val removable = jaccardPairs(spark, dir, k, threshold)
       .select(col("doc_b").as("doc_id")).distinct()
     val flagged = docs.join(removable.withColumn("is_dup", lit(1L)),
         Seq("doc_id"), "left")
@@ -2730,7 +2789,7 @@ object Dedup {
     * and joins their pair lists — audit cost is pair-list sized.
     */
   def lshAgreementAudit(spark: SparkSession, dir: String): DataFrame = {
-    val exact = ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b"))
+    val exact = jaccardPairs(spark, dir).select(col("doc_a"), col("doc_b"))
     val lsh = minhashLshPairs(spark, dir).select(col("doc_a"), col("doc_b"))
     val nE = exact.agg(count(lit(1)).as("n_exact"))
     val nL = lsh.agg(count(lit(1)).as("n_lsh"))
@@ -2896,8 +2955,8 @@ object Dedup {
         contentFingerprint(col("text")).as("fp"))
       .withColumn("is_exact_surv",
         (col("doc_id") === min(col("doc_id")).over(w)).cast("int"))
-    val labels = dedupClusters(spark, dir)
-      .select(col("doc_id"), col("is_canonical"))
+    val labels = clusterMembers(spark, dir)
+      .select(col("doc_id"), (col("doc_id") === col("rep_id")).cast("int").as("is_canonical"))
     docs.join(labels, "doc_id")
       .groupBy(col("source"))
       .agg(
@@ -3288,7 +3347,7 @@ object Dedup {
   def dedupConsensus(spark: SparkSession, dir: String): DataFrame = {
     def tag(df: DataFrame, name: String): DataFrame =
       df.select(col("doc_a"), col("doc_b"), lit(name).as("det"))
-    val dets = tag(ngramJaccardPairs(spark, dir), "ngram")
+    val dets = tag(jaccardPairs(spark, dir), "ngram")
       .unionByName(tag(minhashLshPairs(spark, dir), "minhash"))
       .unionByName(tag(simhashPairs(spark, dir), "simhash"))
       .unionByName(tag(winnowCandidates(spark, dir), "winnow"))
@@ -3431,7 +3490,7 @@ object Dedup {
     */
   def lshSCurve(spark: SparkSession, dir: String, bands: Int = 8,
                 rows: Int = 3): DataFrame = {
-    val truePairs = ngramJaccardPairs(spark, dir)
+    val truePairs = jaccardPairs(spark, dir)
     val caught = minhashLshPairs(spark, dir)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("caught"))
     val binned = truePairs

@@ -252,8 +252,8 @@ object Graph {
     // iteration
     val edgesW = graft.Iterate.cut(edges.join(wdeg, "src")
       .repartition(col("src")))
-    val nodes = graft.Iterate.cut(li.select(col("l_partkey").as("p")).distinct())
-    val n = nodes.count()
+    val (nodes, n) = graft.Iterate.cutObserved(
+      li.select(col("l_partkey").as("p")).distinct(), count(lit(1)))
     val r0 = Scale / n
     val teleport = ((dampDen - dampNum) * Scale / dampDen) / n
     val seeded = nodes.select(col("p"), lit(teleport).as("tel_e12"),
@@ -337,10 +337,10 @@ object Graph {
       .select(col("l_partkey")).distinct()
     val brands = Tables.load(spark, dir, "part")
       .select(col("p_partkey").as("p"), (col("p_brand") === seedBrand).as("is_seed"))
-    val nodes = graft.Iterate.cut(li.select(col("l_partkey").as("p"))
+    val (nodes, nSeeds) = graft.Iterate.cutObserved(li.select(col("l_partkey").as("p"))
       .join(broadcast(brands), Seq("p"), "left")
-      .select(col("p"), coalesce(col("is_seed"), lit(false)).as("is_seed")))
-    val nSeeds = nodes.filter(col("is_seed")).count()
+      .select(col("p"), coalesce(col("is_seed"), lit(false)).as("is_seed")),
+      count_if(col("is_seed")))
     require(nSeeds > 0, s"personalizedPagerank: no seed parts for brand $seedBrand")
     val telSeed = ((dampDen - dampNum) * Scale / dampDen) / nSeeds
     val r0Seed = Scale / nSeeds
@@ -952,13 +952,14 @@ object Graph {
       // one checkpointed degree table per round; survivors are a
       // narrow filter over it, and at the fixpoint it IS the answer
       // (the filter dropped nothing), so no post-loop re-join
-      degs = graft.Iterate.cut(edges
+      val (next, survivors) = graft.Iterate.cutObserved(edges
         .join(surv, "u")
         .join(surv.withColumnRenamed("u", "v"), "v")
         .groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
-        .filter(col("core_deg") >= k))
+        .filter(col("core_deg") >= k), count(lit(1)))
+      degs = next
       surv = degs.select(col("u"))
-      n = surv.count()
+      n = survivors
     }
     if (n != prevN)
       throw new IllegalStateException(
@@ -1196,18 +1197,21 @@ object Graph {
       java.util.List.of(org.apache.spark.sql.Row(seed, 0)),
       org.apache.spark.sql.types.StructType.fromDDL(schema))
     var frontier = visited
+    var frontierRows = 1L
     var h = 1
-    while (h <= maxHops && !frontier.isEmpty) {
+    while (h <= maxHops && frontierRows > 0) {
       // frontier checkpointed for the same reason as q297's loop: the
-      // emptiness probe, the next join and the union each re-derive it
-      val next = graft.Iterate.cut(
+      // next join and the union each re-derive it; its row count is
+      // observed on the cut
+      val (next, nextRows) = graft.Iterate.cutObserved(
         frontier.select(col("p_partkey").as("src"))
           .join(edges, "src")
           .select(col("dst").as("p_partkey")).distinct()
           .join(visited.select("p_partkey"), Seq("p_partkey"), "left_anti")
-          .withColumn("hop", lit(h)))
+          .withColumn("hop", lit(h)), count(lit(1)))
       visited = graft.Iterate.cut(visited.unionByName(next))
       frontier = next
+      frontierRows = nextRows
       h += 1
     }
     visited.orderBy(col("hop"), col("p_partkey"))
@@ -1261,15 +1265,15 @@ object Graph {
     val lmIdx = landmarks.select(col("landmark"),
         (row_number().over(Window.orderBy(col("landmark"))) - 1).as("bit"))
       .localCheckpoint() // consumers: seeds + every round's bit explode
-    var visited = graft.Iterate.cut(lmIdx.select(
+    var (visited, frontierRows) = graft.Iterate.cutObserved(lmIdx.select(
       col("landmark").as("p"),
-      expr("shiftleft(CAST(1 AS BIGINT), bit)").as("mask")))
+      expr("shiftleft(CAST(1 AS BIGINT), bit)").as("mask")), count(lit(1)))
     var out = lmIdx.select(col("landmark"), col("landmark").as("p"),
       lit(0).as("hop"))
     var frontier = visited // (p, mask of landmarks that arrived here)
     var h = 1
-    while (h <= maxHops && !frontier.isEmpty) {
-      val next = graft.Iterate.cut(frontier
+    while (h <= maxHops && frontierRows > 0) {
+      val (next, nextRows) = graft.Iterate.cutObserved(frontier
         .select(col("p").as("src"), col("mask"))
         .join(edges, "src")
         .groupBy(col("dst").as("p"))
@@ -1277,7 +1281,7 @@ object Graph {
         .join(visited.select(col("p"), col("mask").as("vm")), Seq("p"), "left")
         .select(col("p"),
           expr("m & ~coalesce(vm, CAST(0 AS BIGINT))").as("mask"))
-        .filter(col("mask") =!= 0L))
+        .filter(col("mask") =!= 0L), count(lit(1)))
       visited = graft.Iterate.cut(visited.unionByName(next)
         .groupBy(col("p")).agg(expr("bit_or(mask)").as("mask")))
       out = out.unionByName(next
@@ -1287,6 +1291,7 @@ object Graph {
         .join(broadcast(lmIdx), "bit")
         .select(col("landmark"), col("p"), lit(h).as("hop")))
       frontier = next
+      frontierRows = nextRows
       h += 1
     }
     out
@@ -2496,13 +2501,12 @@ object Graph {
     */
   def kTrussPeel(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
-    var cur = graft.Iterate.cut(
+    var (cur, curRows) = graft.Iterate.cutObserved(
       edges.select(least(col("pa"), col("pb")).as("pa"),
-        greatest(col("pa"), col("pb")).as("pb")).distinct())
+        greatest(col("pa"), col("pb")).as("pb")).distinct(), count(lit(1)))
     var done = false
     var rounds = 0
     while (!done && rounds < maxRounds) {
-      val before = cur.count()
       val deg = cur.select(col("pa").as("n"))
         .unionByName(cur.select(col("pb").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -2524,12 +2528,13 @@ object Graph {
       val support = edgeSupportCounts(ori, adjOut, adjIn)
         .select(least(col("u"), col("v")).as("pa"),
           greatest(col("u"), col("v")).as("pb"), col("support"))
-      cur = graft.Iterate.cut(
+      val (next, nextRows) = graft.Iterate.cutObserved(
         cur.join(support, Seq("pa", "pb"), "left")
           .filter(coalesce(col("support"), lit(0L)) >= k - 2)
-          .select(col("pa"), col("pb")))
-      val after = cur.count()
-      done = after == before
+          .select(col("pa"), col("pb")), count(lit(1)))
+      done = nextRows == curRows
+      cur = next
+      curRows = nextRows
       rounds += 1
     }
     require(done, s"kTrussPeel: no fixpoint within $maxRounds rounds")

@@ -90,13 +90,19 @@ object Similarity {
     * only its own top-k rows per query — the shuffle into nQueries
     * partitions carries O(partitions * k), NOT the full scored set
     * (round-2 fix for VERDICT wrong #1; asserted in PlansSpec).
+    * That window exchange is the only one: the nQueries * k result is
+    * ordered in one partition, not through a range exchange and its
+    * sampling job. (A `repartitionByRange(query_id)` under the window
+    * would plan the partial limit after its exchange and shuffle the
+    * whole scored set.)
     */
   private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+      .coalesce(1)
+      .sortWithinPartitions(col("query_id"), col("rank"))
   }
 
   /** q29 — brute-force cosine top-k (oracle-checked): for each query
@@ -225,17 +231,25 @@ object Similarity {
         s => s.getField("centroid").cast("float")).as("c_emb"))
       .select(col("label").as("cell"), col("c_emb"))
 
-  /** Nearest-centroid assignment: broadcast the K centroids against
-    * the vector scan, keep the argmax-cosine cell per vector (and with
-    * `nprobe` > 1, the top-nprobe cells — the multi-probe query path).
+  /** Nearest-centroid assignment: broadcast the K centroids as one
+    * row against the vector scan, keep the argmax-cosine cell per
+    * vector (and with `nprobe` > 1, the top-nprobe cells — the
+    * multi-probe query path). A narrow map: each vector ranks the K
+    * cells itself, so nothing is shuffled by vector.
     */
   def assignCells(df: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
-    val scored = df.crossJoin(broadcast(centroids))
-      .withColumn("c_sim", cosine(col("embedding"), col("c_emb")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cell"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
-      .select(df.columns.map(col) :+ col("cell"): _*)
+    // K rows: collected in one task, no exchange
+    val cells = centroids.coalesce(1)
+      .agg(collect_list(struct(col("cell"), col("c_emb"))).as("cells"))
+    // descending (c_sim, -cell, cell) is (c_sim DESC, cell ASC): NaN
+    // sorts first and null last, as in a window's ORDER BY
+    val ranked = sort_array(transform(col("cells"), c => struct(
+      cosine(col("embedding"), c.getField("c_emb")).as("c_sim"),
+      (-c.getField("cell")).as("neg_cell"), c.getField("cell").as("cell"))),
+      asc = false)
+    df.crossJoin(broadcast(cells))
+      .select(df.columns.map(col) :+ explode(slice(ranked, 1, nprobe)).as("best"): _*)
+      .select(df.columns.map(col) :+ col("best.cell").as("cell"): _*)
   }
 
   /** q37 — IVF ANN (oracle-checked in round 2): the per-label
@@ -252,7 +266,7 @@ object Similarity {
   def knnIvf(spark: SparkSession, dir: String, nQueries: Int = 8,
              k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = centroidArrays(labelCentroids(spark, dir))
+    val centroids = labelCentroidArrays(spark, dir)
     val assigned = assignCells(emb, centroids, nprobe = 1).localCheckpoint()
     val queries = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
@@ -630,13 +644,22 @@ object Similarity {
     * with map-side combine; the long form avoids an array
     * reassembly and is directly oracle-comparable.
     */
-  def labelCentroids(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings")
-    emb.select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
+  def labelCentroids(spark: SparkSession, dir: String): DataFrame =
+    labelCentroidMeans(spark, dir).orderBy(col("label"), col("dim"))
+
+  /** [[labelCentroids]] without its order. */
+  private def labelCentroidMeans(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "embeddings")
+      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy(col("label"), col("dim"))
       .agg((Relational.decSum(col("v").cast("double")) / count(col("v"))).as("centroid"))
-      .orderBy(col("label"), col("dim"))
-  }
+
+  /** The q35 centroids as (cell, c_emb) arrays, the IVF quantizer and
+    * the centroid-routed audits' input. [[centroidArrays]]'
+    * `array_sort` fixes the dim order, so the long form is read
+    * unsorted. */
+  def labelCentroidArrays(spark: SparkSession, dir: String): DataFrame =
+    centroidArrays(labelCentroidMeans(spark, dir))
 
   val labelCentroidsSql: String =
     """SELECT label, i - 1 AS dim,
@@ -1112,7 +1135,7 @@ object Similarity {
     * corpus — shared shape with q35).
     */
   def centroidConfusion(spark: SparkSession, dir: String): DataFrame = {
-    val cent = centroidArrays(labelCentroids(spark, dir))
+    val cent = labelCentroidArrays(spark, dir)
     val sizes = Tables.load(spark, dir, "embeddings")
       .groupBy(col("label")).agg(count(lit(1)).as("n"))
     val a = cent.select(col("cell").as("label_a"), col("c_emb").as("ea"))
@@ -1154,7 +1177,7 @@ object Similarity {
   def embeddingDriftProfile(spark: SparkSession, dir: String,
                             lowSim: Double = 0.1): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val cent = centroidArrays(labelCentroids(spark, dir))
+    val cent = labelCentroidArrays(spark, dir)
       .withColumnRenamed("cell", "label")
     emb.join(broadcast(cent), "label")
       .withColumn("cos_c", round(cosine(col("embedding"), col("c_emb")), 6))
@@ -1453,7 +1476,7 @@ object Similarity {
   def knnIvfPq(spark: SparkSession, dir: String, nQueries: Int = 8,
                k: Int = 10, m: Int = 8, dsub: Int = 8, ksub: Int = 16): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = centroidArrays(labelCentroids(spark, dir))
+    val centroids = labelCentroidArrays(spark, dir)
     // two consumers (query + corpus split): one assignment pass
     val assigned = assignCells(emb, centroids, nprobe = 1).localCheckpoint()
     val codebooks = pqCodebooks(emb, ksub)
@@ -1516,7 +1539,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids =
       if (kmeansCells) kmeansCentroids(emb, kCells = 16, iters = 3)
-      else centroidArrays(labelCentroids(spark, dir))
+      else labelCentroidArrays(spark, dir)
     knnIvfPqResidualCore(emb, centroids, nQueries, k, m, dsub, ksub,
       nprobe, trainIters)
   }
@@ -1856,7 +1879,7 @@ object Similarity {
     */
   def clusterNmi(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = centroidArrays(labelCentroids(spark, dir))
+    val centroids = labelCentroidArrays(spark, dir)
     val conf = graft.Iterate.cut(
       assignCells(emb, centroids, nprobe = 1)
         .groupBy(col("cell"), col("label"))
@@ -1952,7 +1975,7 @@ object Similarity {
     */
   def clusterAri(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = centroidArrays(labelCentroids(spark, dir))
+    val centroids = labelCentroidArrays(spark, dir)
     val conf = graft.Iterate.cut(
       assignCells(emb, centroids, nprobe = 1)
         .groupBy(col("cell"), col("label"))
@@ -2442,7 +2465,7 @@ object Similarity {
     */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val cent = centroidArrays(labelCentroids(spark, dir))
+    val cent = labelCentroidArrays(spark, dir)
     val scored = emb.crossJoin(broadcast(cent))
       .withColumn("cos_c", round(cosine(col("embedding"), col("c_emb")), 6))
       .groupBy(col("vec_id"), col("label"))
@@ -4002,7 +4025,7 @@ object Similarity {
     */
   def daviesBouldin(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val cent = centroidArrays(labelCentroids(spark, dir)).localCheckpoint()
+    val cent = labelCentroidArrays(spark, dir).localCheckpoint()
     val scatter = emb
       .join(broadcast(cent.select(col("cell").as("label"), col("c_emb"))), "label")
       .withColumn("d", lit(1.0) - round(cosine(col("embedding"), col("c_emb")), 6))

@@ -57,9 +57,9 @@ object StreamingCdc {
           else destShape.limit(0)
         val post = WritePath
           .applyCdc(base, batch, keys, opCol, versionCol, seqCol)
-          // materialize BEFORE touching the files it was read from —
-          // a lazy overwrite of its own input would corrupt the swap
-          .localCheckpoint()
+        // the post-image goes to its own path and the snapshot it reads
+        // is deleted only after that write has finished, so the lazy
+        // plan never reads a file the swap has touched
         val stage = new org.apache.hadoop.fs.Path(destPath + "_stage")
         post.write.mode(SaveMode.Overwrite).parquet(stage.toString)
         fs.delete(hPath, true)

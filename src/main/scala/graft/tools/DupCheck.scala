@@ -199,6 +199,8 @@ object DupCheck {
     val out = Seq.newBuilder[String]
     def site(f: AnyRef): String = f.getClass.getName.takeWhile(_ != '/')
     def fromProduct(p: Product): Unit = p.productIterator.foreach {
+      // a Seq, Set or Map is a Function1 too: a data field, not a site
+      case _: scala.collection.Iterable[_] => ()
       case f: scala.Function1[_, _] => out += site(f)
       case f: scala.Function2[_, _, _] => out += site(f)
       case f: scala.Function3[_, _, _, _] => out += site(f)

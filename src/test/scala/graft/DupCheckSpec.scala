@@ -104,6 +104,23 @@ class DupCheckSpec extends AnyFunSuite {
     assert(DupCheck.planDigest(a) === DupCheck.planDigest(a2))
   }
 
+  test("a collection-valued expression field is data, not a closure site") {
+    val spark = SharedSpark.spark
+    import org.apache.spark.sql.functions.{array, col, lit, udf}
+    import graft.functions.ArrayCountIn.countIn
+    val words = Seq("the", "a", "of")
+    def counted(ws: Seq[String]) =
+      spark.range(1).select(countIn(array(lit("the"), lit("cat")), ws).as("n"))
+    // a List and an ArraySeq of the same words plan the same tree
+    assert(DupCheck.planDigest(counted(words.toList)) ===
+      DupCheck.planDigest(counted(scala.collection.immutable.ArraySeq(words: _*))))
+    // two closures from different sites still digest apart
+    val plusOne = udf((x: Long) => x + 1)
+    val plusTwo = udf((x: Long) => x + 2)
+    assert(DupCheck.planDigest(spark.range(1).select(plusOne(col("id")))) !==
+      DupCheck.planDigest(spark.range(1).select(plusTwo(col("id")))))
+  }
+
   test("every planScreenExclusions entry names a currently-registered query") {
     val names = SparkEntry.queries.keySet
     DupCheck.planScreenExclusions.keys.foreach { n =>

@@ -55,6 +55,45 @@ class IterateSpec extends AnyFunSuite {
     } finally spark.conf.set(Iterate.ReliableFlag, "false")
   }
 
+  test("reliable mode: the label fixpoint cuts every round through " +
+      "Iterate.cut, observes convergence on the cut and matches local mode") {
+    import graft.operators.Dedup
+    val dir = SharedSpark.sf0001
+    def labels(maxIters: Int): (Seq[(Long, Long)], Boolean) = {
+      val (l, converged) = Dedup.computeClusterLabels(spark, dir, 3, 0.6, maxIters)
+      (l.as[(Long, Long)].collect().toSeq.sorted, converged)
+    }
+    val local = labels(50)
+    assert(local._2 && local._1.nonEmpty)
+    // the fewest rounds that converge: the round after the last change
+    val rounds = (1 to 50).find(labels(_)._2).get
+    assert(rounds >= 2)
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck-labels")
+    spark.sparkContext.setCheckpointDir(ckDir.toString)
+    spark.conf.set(Iterate.ReliableFlag, "true")
+    try {
+      assert(labels(50) === local)
+      assert(labels(rounds)._2)
+      assert(!labels(rounds - 1)._2)
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(ckDir).iterator().asScala.toList
+      assert(files.exists(_.getFileName.toString.startsWith("part-")),
+        s"no checkpoint part files under $ckDir")
+    } finally spark.conf.set(Iterate.ReliableFlag, "false")
+  }
+
+  test("label fixpoint without near-dup edges: empty labels, converged in one round") {
+    import graft.operators.Dedup
+    val dir = java.nio.file.Files.createTempDirectory("graft-noedge").toString
+    Seq((1L, "alpha beta gamma delta", "en", "s", 22L),
+      (2L, "one two three four", "en", "s", 18L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val (l, converged) = Dedup.computeClusterLabels(spark, dir, 3, 0.6, 1)
+    assert(converged && l.count() == 0)
+    assert(!Dedup.computeClusterLabels(spark, dir, 3, 0.6, 0)._2)
+  }
+
   test("reliable mode: connectedComponents writes replicated checkpoints " +
       "and matches local-mode labels") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
@@ -91,8 +130,10 @@ class IterateSpec extends AnyFunSuite {
       .defaultModuleOptions().split("\\s+").toSeq.filter(_.nonEmpty)
     val tmp = java.nio.file.Files.createTempDirectory("graft-drill").toFile
     val outFile = new java.io.File(tmp, "out.txt")
+    // the drill's checkpoint dir goes where this JVM's temp files go
+    val tmpOpt = s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}"
     val pb = new ProcessBuilder(
-      (Seq(javaBin, "-Xmx4g") ++ modOpts ++
+      (Seq(javaBin, "-Xmx4g", tmpOpt) ++ modOpts ++
         Seq("-cp", cp, "graft.tools.RecoveryDrill")): _*)
     pb.directory(tmp)
     pb.redirectOutput(outFile)

@@ -146,6 +146,38 @@ class PipelineSpec extends AnyFunSuite {
       spark.range(1).select(rollingHash(array(lit(1), lit(2)))).head())
   }
 
+  test("assignCells: an exact cosine tie goes to the lower cell") {
+    // cells 5 and 3 hold the same centroid, listed higher cell first
+    val cent = Seq((5, Seq(1.0f, 0.0f)), (3, Seq(1.0f, 0.0f)), (4, Seq(0.0f, 1.0f)))
+      .toDF("cell", "c_emb")
+    val vecs = Seq((1L, Seq(2.0f, 0.5f))).toDF("vec_id", "embedding")
+    assert(Similarity.assignCells(vecs, cent, nprobe = 1)
+      .select($"vec_id", $"cell").as[(Long, Int)].collect().toSeq === Seq((1L, 3)))
+    assert(Similarity.assignCells(vecs, cent, nprobe = 2)
+      .select($"cell").as[Int].collect().toSet === Set(3, 5))
+  }
+
+  test("assignCells with nprobe = 2 returns the rows of the window form") {
+    import org.apache.spark.sql.expressions.Window
+    val dir = SharedSpark.sf0001
+    // a zero vector scores NaN against every cell: NaN sorts first in
+    // both forms and the cell order breaks the tie
+    val emb = graft.Tables.load(spark, dir, "embeddings")
+      .select($"vec_id", $"embedding")
+      .unionByName(Seq((-1L, Seq.fill(64)(0.0f))).toDF("vec_id", "embedding"))
+    val cent = Similarity.labelCentroidArrays(spark, dir)
+    val window = emb.crossJoin(broadcast(cent))
+      .withColumn("c_sim", Similarity.cosine($"embedding", $"c_emb"))
+      .withColumn("rn", row_number().over(Window.partitionBy($"vec_id")
+        .orderBy($"c_sim".desc, $"cell")))
+      .filter($"rn" <= 2)
+      .select($"vec_id", $"cell").as[(Long, Int)].collect().toSeq.sorted
+    val narrow = Similarity.assignCells(emb, cent, nprobe = 2)
+      .select($"vec_id", $"cell").as[(Long, Int)].collect().toSeq.sorted
+    assert(window.size === 2 * emb.count())
+    assert(narrow === window)
+  }
+
   test("a helper's Column resolves in a session that never built it") {
     // built before either session sees them: each Column carries its
     // Catalyst expression, not a SQL name registered in one session

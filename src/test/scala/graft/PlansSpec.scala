@@ -24,6 +24,18 @@ class PlansSpec extends AnyFunSuite {
       s"no partial WindowGroupLimit:\n$plan")
   }
 
+  test("the label fixpoint's edge list and labelCentroidArrays plan no sort") {
+    // both feed internal consumers that regroup them: a global sort
+    // would cost a range-sampling job and an exchange nothing reads
+    val dir = SharedSpark.sf0001
+    Seq(operators.Dedup.fixpointEdges(spark, dir, 3, 0.6),
+      operators.Similarity.labelCentroidArrays(spark, dir)).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert("\\bSort \\[".r.findFirstIn(plan).isEmpty &&
+        !plan.contains("rangepartitioning"), plan)
+    }
+  }
+
   test("alpha mix sampling plans a PARTIAL WindowGroupLimit from the literal budget") {
     // q94's two-step rank filter: the literal budget bound (not the
     // data-dependent quota) is what InferWindowGroupLimit needs — pin

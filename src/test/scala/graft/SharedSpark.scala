@@ -7,4 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SharedSpark {
   lazy val spark: SparkSession = GraftSession(threads = 4)
+
+  /** The sf0.001 test tables (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
 }
