@@ -86,12 +86,12 @@ object Bench {
     * unreadable (q544 0.58→13.7 s, q545 1.9 isolated vs 33.3 worst
     * rep). The orchestrator quarantines them into their OWN fresh
     * child at reps=1; q551/q552 additionally carry isolation pins for
-    * a clean 5-rep fresh-JVM median.
+    * a clean 5-rep fresh-JVM median. Declared once, with what each
+    * replay runs, as the plan screen's exclusions (a replay's builder
+    * returns a local snapshot, not an operator tree).
     */
-  val streamingReplays: Seq[String] = Seq(
-    "q533_streaming_croston", "q543_streaming_cdc",
-    "q551_streaming_interval_join", "q552_streaming_dedup_eviction",
-    "q554_streaming_sessions")
+  val streamingReplays: Seq[String] =
+    tools.DupCheck.planScreenExclusions.keys.toSeq.sorted
 
   /** Non-graded scale-path twins benched alongside the graded suite
     * (no oracle — sketch forms with engine-specific interpolation;
@@ -100,7 +100,8 @@ object Bench {
     * SparkSession.
     */
   private val extraSpecs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    // q42/q60's approx_percentile form (QuantilesSpec bounds error)
+    // q42/q60's approx_percentile form (PipelineSpec "approx
+    // quantiles track the exact rank-selection form" bounds the error)
     "x01_quantiles_sketch" -> ((s, d) => operators.Curation.lengthQuantilesApprox(s, d)),
     // q90's scale twin: sketch quintile boundaries broadcast back —
     // no single-partition ntile sorts (RobustOpsSpec bounds the drift)
@@ -488,19 +489,13 @@ object Bench {
     * checkpoint blocks asynchronously and lags the rep cadence, so in
     * r14's shared chunk JVMs the litter itself got measured (q370
     * 41.9→67.5→75.6 s across reps vs 11.5 isolated; q384 25.8→61.3).
-    * Memo-backed blocks are protected: their cross-query steady-state
-    * reuse is the deployed semantics (round-8 verdict item 2), and
-    * unpersisting a lineage-truncated frame would break, not slow,
-    * its next consumer.
+    * Memo-backed blocks ([[Iterate.memoRddIds]]) are protected: their
+    * cross-query steady-state reuse is the deployed semantics (round-8
+    * verdict item 2), and unpersisting a lineage-truncated frame would
+    * break, not slow, its next consumer.
     */
   private[graft] def reclaimCheckpoints(spark: SparkSession): Unit = {
-    val keep: Set[Int] =
-      (operators.Dedup.memoFrames ++ operators.Graph.memoFrames)
-        .flatMap { df =>
-          df.queryExecution.analyzed.collect {
-            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-          }
-        }.toSet
+    val keep = Iterate.memoRddIds
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!keep.contains(id))
         try rdd.unpersist(blocking = true)
@@ -572,12 +567,12 @@ object Bench {
         // dropped here; localCheckpoint blocks are unpersisted
         // SYNCHRONOUSLY (reclaimCheckpoints — round-14 item 2: the
         // async ContextCleaner lagged the rep cadence and the litter
-        // got measured). The memos (Dedup labels/shingles, Graph
-        // pairs) are deliberately protected: one fixpoint per
-        // session is the deployed semantics (round-8 verdict item 2
-        // — q38/q50/q80/q89/q108 share the labels), so medians
-        // report the shared-fixpoint steady state; the cold first
-        // rep stays visible in "runs" and "spread".
+        // got measured). The memos (Iterate.memo: Dedup labels and
+        // shingles, Graph pairs) are deliberately protected: one
+        // fixpoint per session is the deployed semantics (round-8
+        // verdict item 2 — q38/q50/q80/q89/q108 share the labels), so
+        // medians report the shared-fixpoint steady state; the cold
+        // first rep stays visible in "runs" and "spread".
         spark.catalog.clearCache()
         reclaimCheckpoints(spark)
         secs

@@ -354,7 +354,7 @@ object Curation {
     val t = rows.select(col("doc_id"), col("weight"),
       md5Bucket(col("doc_id")).as("hkey"))
       .withColumn("bucket", expr(s"hkey div ${4294967296L / nBuckets}"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val wLocal = Window.partitionBy(col("bucket"))
       .orderBy(col("hkey"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1507,7 +1507,7 @@ object Curation {
       .rowsBetween(Window.unboundedPreceding, -1)
     val c = t.withColumn("cum_before",
         coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-      .localCheckpoint() // one window pass feeds every budget + totals
+      .transform(graft.Iterate.cut) // one window pass feeds every budget + totals
     val budgetCol = explode(array(budgets.map(lit): _*)).as("budget")
     val fragged = c.select(col("*"), budgetCol)
       .withColumn("crosses",
@@ -2167,7 +2167,7 @@ object Curation {
         lit(buckets.toLong)))
     val docBuckets = toks.groupBy(col("doc_id"), col("source"), col("b"))
       .agg(count(lit(1)).as("cd"))
-      .localCheckpoint() // consumers: both pool counts + the scoring join
+      .transform(graft.Iterate.cut) // consumers: both pool counts + the scoring join
     val domain = spark.range(buckets).select(col("id").as("b"))
     def pool(cond: Column): DataFrame = domain
       .join(docBuckets.filter(cond).groupBy(col("b"))
@@ -3452,7 +3452,7 @@ object Curation {
       .select(col("doc_id"), col("lang"), col("source"))
     val cells = docs.filter(pmod(col("doc_id"), lit(mod)) === 0)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val langM = docs.groupBy(col("lang")).agg(count(lit(1)).as("lm"))
     val srcM = docs.groupBy(col("source")).agg(count(lit(1)).as("sm"))
     def adjust(df: DataFrame, marginDf: DataFrame, key: String,

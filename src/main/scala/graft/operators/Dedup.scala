@@ -21,12 +21,13 @@ import graft.functions.TextFunctions._
   * buckets) bound pair generation; high-frequency shingles are pruned
   * (df cap) so no single reduce key explodes.
   *
-  * Intermediate lifecycle: multi-consumer intermediates are
-  * `localCheckpoint()`ed (eager), not `persist()`ed — same one-time
-  * materialization, but storage is reclaimed by the ContextCleaner as
-  * soon as the frame is unreferenced, so a 47-query Bench session does
-  * not accumulate CacheManager entries (round-1 ADVICE). At 100 TB the
-  * same role is played by a reliable checkpoint dir or a staging table.
+  * Intermediate lifecycle: multi-consumer intermediates are cut
+  * eagerly through [[graft.Iterate.cut]], not `persist()`ed — same
+  * one-time materialization, but storage is reclaimed by the
+  * ContextCleaner as soon as the frame is unreferenced, so a long Bench
+  * session does not accumulate CacheManager entries (round-1 ADVICE).
+  * Under `spark.graft.checkpoint.reliable` the same cuts write to the
+  * reliable checkpoint dir instead (the 100 TB posture).
   */
 object Dedup {
 
@@ -184,44 +185,24 @@ object Dedup {
     * was also tried: same ballpark locally, but the window sorts the
     * full shingle table by a high-cardinality string key instead of
     * map-side combining — the aggregate form is the scale shape.)
+    *
+    * The table is the shared front of q26/q27/q54/q66/q86/q112 (and
+    * q38's pair build), memoized ([[graft.Iterate.memo]]) so one
+    * session pays the tokenize + df-cap shuffle once per distinct
+    * (input plan, k, dfCap). Keyed by the CANONICALIZED logical plan of
+    * the input frame — two loads of the same parquet path canonicalize
+    * equal, while any filtered/synthetic docs frame keys its own entry.
     */
-  /** Session memo for [[keptShingles]]: the tokenized, df-capped
-    * shingle table is the shared front of q26/q27/q54/q66/q86/q112
-    * (and q38's pair build), so one session pays the tokenize +
-    * df-cap shuffle once per distinct (input plan, k, dfCap). Keyed
-    * by the CANONICALIZED logical plan of the input frame — two
-    * loads of the same parquet path canonicalize equal, while any
-    * filtered/synthetic docs frame keys its own entry. Deterministic
-    * input ⇒ reuse is semantics-free (the labels-memo argument).
-    */
-  private val shingleMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Int, Int), DataFrame]()
-
-  private[graft] def clearShingleMemo(): Unit = shingleMemo.clear()
-
-  /** Live memoized frames (bench rep-hygiene: their checkpoint blocks
-    * must survive the between-rep unpersist sweep — see
-    * [[graft.Bench.reclaimCheckpoints]]).
-    */
-  private[graft] def memoFrames: Seq[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    shingleMemo.values.asScala.toSeq ++
-      labelsMemo.values.asScala.map(_._1).toSeq
-  }
-
   private def keptShingles(docs: DataFrame, k: Int, dfCap: Int): DataFrame =
-    shingleMemo.computeIfAbsent(
-      (docs.sparkSession, docs.queryExecution.logical.canonicalized, k, dfCap),
-      _ => {
-        val sh = shingles(docs, k).localCheckpoint()
-        val rare = sh.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= dfCap)
-          .select("shingle")
-        sh.join(rare, "shingle").localCheckpoint()
-      })
+    graft.Iterate.memo(docs.sparkSession,
+        ("keptShingles", docs.queryExecution.logical.canonicalized, k, dfCap)) {
+      val sh = shingles(docs, k).transform(graft.Iterate.cut)
+      val rare = sh.groupBy(col("shingle"))
+        .agg(count(lit(1)).as("df"))
+        .filter(col("df") <= dfCap)
+        .select("shingle")
+      sh.join(rare, "shingle").transform(graft.Iterate.cut)
+    }
 
   /** Every doc pair sharing a df-capped k-shingle: `n_shared`, and each
     * side's shingle count `n_a`, `n_b`. */
@@ -474,7 +455,7 @@ object Dedup {
         col("doc_id"), expr("CAST(n_chars div 64 AS STRING)").as("key")))
       .unionByName(docs.select(lit("prefix_hash").as("strategy"),
         col("doc_id"), md5(substring(lower(col("text")), 1, 32)).as("key")))
-      .localCheckpoint() // consumers: block sizes + two gold joins
+      .transform(graft.Iterate.cut) // consumers: block sizes + two gold joins
     val nDocs = docs.count()
     val allPairs = nDocs * (nDocs - 1) / 2
     val cand = keyed.groupBy(col("strategy"), col("key"))
@@ -821,36 +802,24 @@ object Dedup {
     labels
   }
 
-  /** Session-scoped memo of the propagation fixpoint: one CC run per
-    * (session, dir, k, threshold, maxIters) — q38/q80/q89/q108 and
-    * the q63 pipeline all consume the SAME labels, so a session that
-    * grades or composes several of them pays for the fixpoint once
-    * (round-8 verdict finding: q108 embedded a full recompute). The
-    * held frame is the post-[[graft.Iterate.cut]] label table for
-    * edge nodes only — a sliver of the corpus — and holding the
-    * reference merely keeps its (small) checkpoint blocks alive for
-    * the session. Deterministic inputs ⇒ reuse is semantics-free.
-    * [[clearLabelsMemo]] drops the references (tests; long sessions
-    * switching corpora).
-    */
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Int, Double, Int), (DataFrame, Boolean)]()
-
-  private[graft] def clearLabelsMemo(): Unit = labelsMemo.clear()
-
   /** Fixpoint executions this JVM (tests assert memo hits). */
   private[graft] val labelsComputeCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Converged-or-not propagation labels over the near-dup edge set;
-    * memoized (see [[labelsMemo]]). Returns (labels(doc_id, rep_id)
-    * for edge nodes, converged).
+  /** Converged-or-not propagation labels over the near-dup edge set:
+    * (labels(doc_id, rep_id) for edge nodes, converged). Memoized
+    * ([[graft.Iterate.memo]]): one fixpoint per (session, dir, k,
+    * threshold, maxIters) — q38/q80/q89/q108 and the q63 pipeline all
+    * consume the SAME labels, so a session that grades or composes
+    * several of them pays for the fixpoint once (round-8 verdict
+    * finding: q108 embedded a full recompute). The held frame is the
+    * post-[[graft.Iterate.cut]] label table for edge nodes only — a
+    * sliver of the corpus.
     */
   private def clusterLabels(spark: SparkSession, dir: String, k: Int,
                             threshold: Double, maxIters: Int): (DataFrame, Boolean) =
-    labelsMemo.computeIfAbsent(
-      (spark, dir, k, threshold, maxIters),
-      _ => computeClusterLabels(spark, dir, k, threshold, maxIters))
+    graft.Iterate.memo(spark, ("clusterLabels", dir, k, threshold, maxIters)) {
+      computeClusterLabels(spark, dir, k, threshold, maxIters)
+    }
 
   /** The label fixpoint. Its edge list (both directions of every
     * near-dup pair) is the one materialization every round reads.
@@ -1055,7 +1024,7 @@ object Dedup {
     // recompute the signature aggregation once per band — the plan
     // audit showed 19 shuffles); the bucket is the '|'-joined slice —
     // a plain string equi-join key both engines state identically
-    val banded = bandBuckets(sig, numHashes, bands).localCheckpoint()
+    val banded = bandBuckets(sig, numHashes, bands).transform(graft.Iterate.cut)
     val candidates = bandCandidates(banded)
     // exact-Jaccard verification of candidates ONLY (no all-pairs work:
     // the candidate set is the LSH payoff — keep it that way).
@@ -1125,7 +1094,7 @@ object Dedup {
             .as("bucket"))): _*)).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -1276,7 +1245,7 @@ object Dedup {
     val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
     val tokCounts = tok.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // both join sides + totals
+      .transform(graft.Iterate.cut) // both join sides + totals
     val totals = tokCounts.groupBy(col("doc_id")).agg(sum(col("c")).as("tot"))
     val minSum = cand
       .join(tokCounts.select(col("doc_id").as("doc_a"), col("token"),
@@ -1353,7 +1322,7 @@ object Dedup {
     val toks = Tables.load(spark, dir, "documents")
       .withColumn("bucket", PortableHash.md5Long32(col("doc_id")) % 100)
       .select(col("doc_id"), col("bucket"), tokens(col("text")).as("toks"))
-      .localCheckpoint() // one tokenization feeds every n
+      .transform(graft.Iterate.cut) // one tokenization feeds every n
     val corpusDocs = toks.filter(col("bucket") >= evalPct)
       .agg(count(lit(1)).as("n_corpus"))
     val perN = ns.map { n =>
@@ -1511,7 +1480,7 @@ object Dedup {
         graft.functions.WordNGrams.ngrams(col("toks"), 3)
       ).as("g"))
     val ev = tri(docs.filter(col("bucket") < evalPct))
-      .select(col("g")).distinct().localCheckpoint()
+      .select(col("g")).distinct().transform(graft.Iterate.cut)
     // driver scalars: the eval set's cardinality sizes the filter; the
     // filter itself is an executor-side distributed build (TreeAggregate
     // under stat.bloomFilter), collected as bits, then shipped back in
@@ -1736,7 +1705,7 @@ object Dedup {
     import graft.functions.TextFunctions.tokenCount
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), tokenCount(col("text")).cast("long").as("t"))
-      .localCheckpoint() // consumers: corpus total + two flag joins
+      .transform(graft.Iterate.cut) // consumers: corpus total + two flag joins
     val total = docs.agg(sum(col("t")).as("corpus_tokens"))
     def row(name: String, flagged: org.apache.spark.sql.DataFrame) =
       flagged.join(docs, "doc_id")
@@ -2041,7 +2010,7 @@ object Dedup {
                          tNum: Int = 3, tDen: Int = 5,
                          streamVerify: Boolean = false): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val sh = shingles(docs, k).localCheckpoint()
+    val sh = shingles(docs, k).transform(graft.Iterate.cut)
     val dfTab = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
     val wN = Window.partitionBy(col("doc_id"))
@@ -2144,7 +2113,7 @@ object Dedup {
     val sf = shingles(docs, k)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), col("shingle")).distinct()
-      .localCheckpoint() // three consumers: sizes + both join sides
+      .transform(graft.Iterate.cut) // three consumers: sizes + both join sides
     val sizes = sf.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     val shared = sf.as("a")
       .join(sf.as("b"), col("a.shingle") === col("b.shingle") &&
@@ -2188,7 +2157,7 @@ object Dedup {
     val sf = shingles(docs, k)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), col("shingle"))
-      .localCheckpoint() // two consumers: sizes + the pair tagging
+      .transform(graft.Iterate.cut) // two consumers: sizes + the pair tagging
     val sizes = sf.groupBy(col("source"))
       .agg(approx_count_distinct(col("shingle"), rsd).as("n_sh"))
     val pairList = sizes.select(col("source").as("source_a"))
@@ -2274,7 +2243,7 @@ object Dedup {
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("source")).orderBy(col("h"))))
       .filter(col("rn") <= kMin).drop("rn")
-      .localCheckpoint() // consumers: per-source estimates + pair tagging
+      .transform(graft.Iterate.cut) // consumers: per-source estimates + pair tagging
     val est = sk.groupBy(col("source"))
       .agg(count(lit(1)).as("n_k"), max(col("h")).as("kth"))
       .withColumn("est", round(
@@ -2455,8 +2424,8 @@ object Dedup {
                            numHashes: Int = 24, bands: Int = 8): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val sig = minhashSignatures(kept, numHashes).localCheckpoint()
-    val banded = bandBuckets(sig, numHashes, bands).localCheckpoint()
+    val sig = minhashSignatures(kept, numHashes).transform(graft.Iterate.cut)
+    val banded = bandBuckets(sig, numHashes, bands).transform(graft.Iterate.cut)
     val candidates = bandCandidates(banded)
     val agree = (0 until numHashes)
       .map(i => (col(s"sa.h$i") === col(s"sb.h$i")).cast("long")).reduce(_ + _)
@@ -2525,7 +2494,7 @@ object Dedup {
                        numHashes: Int = 24, bands: Int = 8): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val kept = keptShingles(docs, k, dfCap = 200)
-    val sig = minhashSignatures(kept, numHashes).localCheckpoint()
+    val sig = minhashSignatures(kept, numHashes).transform(graft.Iterate.cut)
     val banded = bandBuckets(sig, numHashes, bands)
     val candidates = bandCandidates(banded)
     val agreeFull = (0 until numHashes)
@@ -2753,7 +2722,7 @@ object Dedup {
     */
   def noveltyScores(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val sh = shingles(docs, k).localCheckpoint() // two consumers
+    val sh = shingles(docs, k).transform(graft.Iterate.cut) // two consumers
     val first = sh.groupBy(col("shingle")).agg(min(col("doc_id")).as("first_doc"))
     sh.join(first, "shingle")
       .groupBy(col("doc_id"))
@@ -3220,12 +3189,12 @@ object Dedup {
         col("n_chars"),
         md5(regexp_replace(trim(translate(nfcText, AsciiUpper, AsciiLower)),
           "\\s+", " ")).as("norm_fp"))
-      .localCheckpoint() // three consumers: reps, matches, successors
+      .transform(graft.Iterate.cut) // three consumers: reps, matches, successors
     val bAttrs = base.select(col("doc_id").as("doc_b"),
       col("lang").as("lang_b"), col("source").as("source_b"),
       col("n_chars").as("len_b"))
     val matchPairs = minhashLshPairs(spark, dir)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
+      .select(col("doc_a"), col("doc_b")).transform(graft.Iterate.cut)
     val matches = matchPairs
       .join(base.withColumnRenamed("doc_id", "doc_a"), "doc_a")
       .join(bAttrs, "doc_b")
@@ -3427,10 +3396,10 @@ object Dedup {
           sequence(lit(0), greatest(size(col("gh")) - w, lit(0))),
           i => array_min(slice(col("gh"), i + lit(1), lit(w))))))
           .as("fp"))
-      .localCheckpoint() // df aggregate + join-back read one explode
+      .transform(graft.Iterate.cut) // df aggregate + join-back read one explode
     val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap).select("fp")
-    val kept = fps.join(rare, "fp").localCheckpoint()
+    val kept = fps.join(rare, "fp").transform(graft.Iterate.cut)
     kept.as("a").join(kept.as("b"), "fp")
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -3557,7 +3526,7 @@ object Dedup {
     * only division is the final coverage share.
     *
     * Scale: the corpus-sized work is ONE (source, shingle) distinct
-    * (localCheckpointed; the q110 shuffle); each greedy round is a
+    * (cut once; the q110 shuffle); each greedy round is a
     * shingle-keyed anti-join against the covered set plus a
     * |sources|-row aggregate — rounds are a stated constant, and the
     * covered set is bounded by the distinct-shingle universe, never
@@ -3571,7 +3540,7 @@ object Dedup {
     val sf = shingles(docs, k)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), col("shingle")).distinct()
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val total = sf.select(col("shingle")).distinct().count()
     val allSources = sf.select(col("source")).distinct()
     var picked = Vector.empty[(Int, String, Long)] // (round, source, gain)
@@ -3711,7 +3680,7 @@ object Dedup {
       .select(col("doc_id"), col("s").as("slot"),
         (col("fill_m") + (col("fill_s") - col("s")) * lit(fillC)).as("dens"),
         col("m").isNull.cast("long").as("was_empty"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val empties = sig.groupBy(col("doc_id")).agg(sum(col("was_empty")).as("n_empty"))
     pairs
       .join(sig.select(col("doc_id").as("doc_a"), col("slot"),

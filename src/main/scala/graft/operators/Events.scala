@@ -590,7 +590,7 @@ object Events {
     val st = withSessionIds(ev, gapMinutes)
       .select(col("user_id"), col("session_id"), col("event_type"))
       .distinct()
-      .localCheckpoint() // three consumers: totals, singles, pair join
+      .transform(graft.Iterate.cut) // three consumers: totals, singles, pair join
     val total = st.select(col("user_id"), col("session_id")).distinct()
       .agg(count(lit(1)).as("n_sessions"))
     val singles = st.groupBy(col("event_type")).agg(count(lit(1)).as("n_single"))
@@ -1362,7 +1362,7 @@ object Events {
     val sess = sessionize(spark, dir)
       .select(col("session_start_ms").as("s_ms"),
         col("session_end_ms").as("e_ms"))
-      .localCheckpoint() // consumers: spans + the two endpoint histograms
+      .transform(graft.Iterate.cut) // consumers: spans + the two endpoint histograms
     val spans = sess.withColumn("hour_start_ms",
       explode(sequence(expr(s"(s_ms div $hourMs) * $hourMs"),
         expr(s"(e_ms div $hourMs) * $hourMs"), lit(hourMs))))
@@ -4608,7 +4608,7 @@ object Events {
       .agg((graft.operators.Relational.decSum(col("value"))
         / count(col("value"))).as("u_mean"))
       .withColumn("um", round(col("u_mean"), 6))
-      .localCheckpoint() // consumers: observed arms + the perm explode
+      .transform(graft.Iterate.cut) // consumers: observed arms + the perm explode
     def armDiff(df: DataFrame, grp: Column,
                 keys: Seq[Column]): DataFrame =
       df.groupBy(keys: _*)
@@ -5070,7 +5070,7 @@ object Events {
     val nDegen = wins.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_windows"),
         sum((col("sig") === 0.0).cast("long")).as("n_degenerate"))
-    val usable = wins.filter(col("sig") > 0.0).localCheckpoint()
+    val usable = wins.filter(col("sig") > 0.0).transform(graft.Iterate.cut)
     val d2 = aggregate(
       zip_with(col("a.warr"), col("b.warr"), (x, y) => {
         val za = (x.cast("double") - col("a.mu")) / col("a.sig")
@@ -5463,7 +5463,7 @@ object Events {
     */
   def fanoLadder(spark: SparkSession, dir: String,
                  grains: Seq[Int] = Seq(1, 7, 28)): DataFrame = {
-    val dense = denseDailyCounts(spark, dir).localCheckpoint()
+    val dense = denseDailyCounts(spark, dir).transform(graft.Iterate.cut)
     val perGrain = grains.map { g =>
       dense.withColumn("bucket", expr(s"day div $g"))
         .groupBy(col("event_type"), col("bucket"))
@@ -6270,7 +6270,7 @@ object Events {
       .groupBy(col("event_type"), col("user_id"))
       .agg(round(graft.operators.Relational.decSum(col("value"))
         / count(col("value")), 6).as("x"))
-      .localCheckpoint() // consumers: the point mean + the ×R explode
+      .transform(graft.Iterate.cut) // consumers: the point mean + the ×R explode
     val point = perUser.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_users"),
         (sum(col("x").cast(dec)).cast("double") /
@@ -6404,7 +6404,7 @@ object Events {
       .withColumn("v", coalesce(col("v"), lit(0.0)))
       .withColumn("x", col("day").cast("double"))
       .withColumn("dow", pmod(col("day"), lit(7)))
-      .localCheckpoint() // consumers: the global and the DOW aggregate
+      .transform(graft.Iterate.cut) // consumers: the global and the DOW aggregate
     val g = dense.groupBy(col("event_type")).agg(
       count(lit(1)).as("n"),
       dsum(col("v")).as("sy"),
@@ -8019,7 +8019,7 @@ object Events {
           sum(when(expr("idx % 2 = 0"), col("a"))).as("x0"),
           sum(when(expr("idx % 2 = 1"), col("a"))).as("x1"))
         .filter(col("np") === 2)
-        .localCheckpoint()
+        .transform(graft.Iterate.cut)
       cur = paired.select(col("event_type"), col("blk").as("idx"),
         (col("x0") + col("x1")).as("a"))
       paired.select(col("event_type"),
@@ -8274,7 +8274,7 @@ object Events {
           * (col("s").cast("double") / col("n").cast("double")),
         lit(0.0)))).cast("long"))
       .filter(col("nxt").isNotNull)
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val a = dense.select(col("event_type"), col("day").as("di"),
       col("v").as("xi"), col("nxt").as("yi"), col("sig_int"))
     val b = dense.select(col("event_type"), col("day").as("dj"),
@@ -8450,7 +8450,7 @@ object Events {
     */
   def hurstLadder(spark: SparkSession, dir: String,
                   blockSizes: Seq[Int] = Seq(4, 7, 14)): DataFrame = {
-    val dense = denseDailyCounts(spark, dir).localCheckpoint()
+    val dense = denseDailyCounts(spark, dir).transform(graft.Iterate.cut)
     val perN = blockSizes.map { n =>
       val byBlock = Window.partitionBy(col("event_type"), col("block"))
       val ordered = byBlock.orderBy(col("day"))
@@ -9122,7 +9122,7 @@ object Events {
                     c: Double = 1.345): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     val daily = dailyValues(spark, dir)
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val wMed = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val med = daily
       .withColumn("rn", row_number().over(wMed))
@@ -9275,7 +9275,7 @@ object Events {
       .withColumn("g", col("us") - col("prev"))
       .withColumn("g2", lead(col("g"), 1).over(w))
       .filter(col("g").isNotNull)
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val mom = gaps.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("g")).as("sg"),
         sum(sq(col("g"))).cast("double").as("sgg"))
@@ -9397,7 +9397,7 @@ object Events {
       .withColumn("f7", lag(col("v"), 7).over(w))
       .filter(col("f1").isNotNull && col("f7").isNotNull)
       .select(col("event_type"), (col("f1") - col("f7")).as("d"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val stats = diffs.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("d")).as("sd1"),
         sum(col("d") * col("d")).as("sdd"))
@@ -9499,7 +9499,7 @@ object Events {
     val counts = pairs.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("c"))
     val totals = counts.groupBy(col("from_type")).agg(sum(col("c")).as("r"))
-    val edges = counts.join(totals, "from_type").localCheckpoint()
+    val edges = counts.join(totals, "from_type").transform(graft.Iterate.cut)
     val k = edges.select(col("from_type")).distinct().count()
     var pi = edges.select(col("from_type").as("t")).distinct()
       .withColumn("p", lit(1000000000000L / k))
@@ -9687,7 +9687,7 @@ object Events {
     */
   def snRobustScale(spark: SparkSession, dir: String): DataFrame = {
     val daily = dailyValues(spark, dir)
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val pairs = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type") &&
           col("a.day") =!= col("b.day"))
@@ -9935,7 +9935,7 @@ object Events {
     */
   def medianSpellProfile(spark: SparkSession, dir: String): DataFrame = {
     val daily = dailyValues(spark, dir)
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val wMed = Window.partitionBy(col("event_type")).orderBy(col("v"), col("day"))
     val med = daily
       .withColumn("rn", row_number().over(wMed))
@@ -10444,7 +10444,7 @@ object Events {
       .where(col("a.event_type") =!= col("b.event_type"))
       .select(col("a.event_type").as("type_x"), col("b.event_type").as("type_y"),
         col("day"), col("a.v").as("x"), col("b.v").as("y"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val ols = xy.groupBy(col("type_x"), col("type_y"))
       .agg(count(lit(1)).as("n"),
         dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),

@@ -22,50 +22,21 @@ object Graph {
     */
   @volatile private[graft] var lastRounds: Int = 0
 
-  /** Session memo of the weighted co-purchase pair list (pa < pb, w =
-    * co-occurrence count) — the expensive lineitem self-join that both
-    * PageRank (q107) and the triangle census (q115) start from. Same
-    * reuse argument as the Dedup labels memo: deterministic input ⇒
-    * semantics-free sharing; the held frame is the checkpointed edge
-    * list, cold cost lands on the first consumer.
-    */
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Int), DataFrame]()
-
-  private[graft] def clearPairsMemo(): Unit = pairsMemo.clear()
-
-  /** Session memo of the distinct customer–part purchase edge list —
-    * the orders⋈lineitem distinct that HITS (q131) and the
-    * substitution miner (q148) both start from. Same deterministic-
-    * input sharing argument as [[pairsMemo]]; the held frame is
-    * checkpointed, so each consumer's repartition reads the
+  /** The distinct customer–part purchase edge list — the
+    * orders⋈lineitem distinct that HITS (q131) and the substitution
+    * miner (q148) both start from — cut and memoized per (session, dir)
+    * ([[graft.Iterate.memo]]), so each consumer's repartition reads the
     * materialized blocks instead of re-running the join.
     */
-  private val custPartMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]()
-
-  private[graft] def clearCustPartMemo(): Unit = custPartMemo.clear()
-
-  /** Live memoized frames (bench rep-hygiene: their checkpoint blocks
-    * must survive the between-rep unpersist sweep — see
-    * [[graft.Bench.reclaimCheckpoints]]).
-    */
-  private[graft] def memoFrames: Seq[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    pairsMemo.values.asScala.toSeq ++ custPartMemo.values.asScala.toSeq
-  }
-
   private[graft] def custPartEdges(spark: SparkSession, dir: String): DataFrame =
-    custPartMemo.computeIfAbsent((spark, dir), _ => {
+    graft.Iterate.memo(spark, ("custPartEdges", dir)) {
       val orders = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
       graft.Iterate.cut(orders.join(li, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p")).distinct())
-    })
+    }
 
   /** Pair fan-out is O(Σ basket²): harmless on TPC-H (≤7 items/order)
     * but a real corpus's hot carts need a guard, so baskets truncate
@@ -103,13 +74,19 @@ object Graph {
       .agg(count(lit(1)).as("w"))
   }
 
+  /** The weighted co-purchase pair list (pa < pb, w = co-occurrence
+    * count) — the expensive lineitem self-join that both PageRank
+    * (q107) and the triangle census (q115) start from — cut and
+    * memoized per (session, dir, basketCap) ([[graft.Iterate.memo]]);
+    * the cold cost lands on the first consumer.
+    */
   private[graft] def coPurchasePairs(spark: SparkSession, dir: String,
       basketCap: Int = DefaultBasketCap): DataFrame =
-    pairsMemo.computeIfAbsent((spark, dir, basketCap), _ => {
+    graft.Iterate.memo(spark, ("coPurchasePairs", dir, basketCap)) {
       val li = Tables.load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       graft.Iterate.cut(basketCappedPairs(li, basketCap))
-    })
+    }
 
   /** The SQL twin of [[coPurchasePairs]]' input: `li` (distinct
     * order × part) and the `pairs` CTE over it, pa < pb; `select` is
@@ -1264,7 +1241,7 @@ object Graph {
     // stable landmark -> bit index (the window runs over k rows)
     val lmIdx = landmarks.select(col("landmark"),
         (row_number().over(Window.orderBy(col("landmark"))) - 1).as("bit"))
-      .localCheckpoint() // consumers: seeds + every round's bit explode
+      .transform(graft.Iterate.cut) // consumers: seeds + every round's bit explode
     var (visited, frontierRows) = graft.Iterate.cutObserved(lmIdx.select(
       col("landmark").as("p"),
       expr("shiftleft(CAST(1 AS BIGINT), bit)").as("mask")), count(lit(1)))
@@ -1483,7 +1460,7 @@ object Graph {
     * engines) rounded to 6dp; the total row sums the rounded
     * contributions in DECIMAL(18,6) — order-independent.
     *
-    * Scale: the pair list is the one heavy input ([[pairsMemo]] —
+    * Scale: the pair list is the one heavy input ([[coPurchasePairs]] —
     * built once per session, checkpointed); brands join it twice on
     * the part key (the part side is dimension-sized → broadcast);
     * everything else aggregates to |brands| rows. No fixpoint — the
@@ -1832,7 +1809,7 @@ object Graph {
       .unionByName(coPurchasePairs(spark, dir).select(col("pb").as("p")))
       .distinct()
     val exposure = recs.groupBy(col("p_partkey"))
-      .agg(count(lit(1)).as("x")).localCheckpoint()
+      .agg(count(lit(1)).as("x")).transform(graft.Iterate.cut)
     val m = exposure.count()
     val wAsc = Window.orderBy(col("x").asc, col("p_partkey").asc)
     val gini = exposure

@@ -619,7 +619,7 @@ object Pii {
     val counts = Tables.load(spark, dir, "events")
       .select(col("event_type"), col("user_id")).distinct()
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_users"))
-      .localCheckpoint() // consumed once per peeling round
+      .transform(graft.Iterate.cut) // consumed once per peeling round
     val epsRound = eps / k
     var picks: DataFrame = null
     var remaining = counts

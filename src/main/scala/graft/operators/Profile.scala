@@ -2352,7 +2352,7 @@ object Profile {
         expr("datediff(l_shipdate, o_orderdate)").as("v"))
       .filter(col("v").between(0, lateDaysCap))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // median scan + deviation aggregate share it
+      .transform(graft.Iterate.cut) // median scan + deviation aggregate share it
     val wCum = Window.partitionBy(col("grp")).orderBy(col("v"))
     val wAll = Window.partitionBy(col("grp"))
     val med = gv
@@ -2966,7 +2966,7 @@ object Profile {
         expr("datediff(l_shipdate, o_orderdate)").as("v"))
       .filter(col("v").between(0, lateDaysCap))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // grid + sizes + groups share one aggregate
+      .transform(graft.Iterate.cut) // grid + sizes + groups share one aggregate
     val dense = gv.select(col("grp")).distinct()
       .crossJoin(gv.select(col("v")).distinct())
       .join(gv, Seq("grp", "v"), "left")
@@ -3168,7 +3168,7 @@ object Profile {
       .withColumn("r", row_number().over(wOrd))
       .withColumn("cn", sum(col("n")).over(wOrd))
       .withColumn("cp", sum(col("pos")).over(wOrd))
-      .localCheckpoint() // tiny; read three times below
+      .transform(graft.Iterate.cut) // tiny; read three times below
     // prefix boundaries j0 = 0..m-1 (r=0 is the empty prefix)
     val pref = cum.select(col("r").as("j0"), col("cn").as("pn"),
         col("cp").as("pp"))
@@ -4425,7 +4425,7 @@ object Profile {
     val cums = bins
       .withColumn("cum", sum(col("cnt")).over(W.orderBy(col("z"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val tot = cums.agg(max(col("cum")).as("n"), min(col("z")).as("zmin"),
       max(col("z")).as("zmax"))
     // rank-selected boundaries: b_i = min z with cum >= (n*i) div B

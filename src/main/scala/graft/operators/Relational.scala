@@ -3638,7 +3638,7 @@ object Relational {
       .join(broadcast(Tables.load(spark, dir, "customer")
         .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))),
         "o_custkey")
-      .localCheckpoint() // consumers: point estimate + the ×R explode
+      .transform(graft.Iterate.cut) // consumers: point estimate + the ×R explode
     val wDesc = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("cents").desc, col("o_custkey"))
     val wSeg = Window.partitionBy(col("c_mktsegment"))
@@ -4549,7 +4549,7 @@ object Relational {
       dsumDec(col("y")).as("sy"),
       dsumDec(round(col("x") * col("x"), 6)).as("sxx"),
       dsumDec(round(col("x") * col("y"), 6)).as("sxy"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     def slopeOf(df: DataFrame): DataFrame = df
       .withColumn("den", nullif(
         col("n").cast("double") * col("sxx").cast("double")
@@ -4993,7 +4993,7 @@ object Relational {
           .cast("double").as("fin"))
       .withColumn("base", coalesce(col("base"), lit(0.0)))
       .withColumn("fin", coalesce(col("fin"), lit(0.0)))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val typeG = cells.groupBy(col("p_type"))
       .agg(sum(col("base").cast(dec)).cast("double").as("tb"),
         sum(col("fin").cast(dec)).cast("double").as("tf"))

@@ -171,7 +171,7 @@ object Similarity {
     // projection) feeds both the query and corpus branches
     val emb = Tables.load(spark, dir, "embeddings")
       .withColumn("bucket", lshBucket(col("embedding"), nBits))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("bucket"))
     val scored = emb.filter(col("vec_id") >= nQueries)
@@ -267,7 +267,7 @@ object Similarity {
              k: Int = 10): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = labelCentroidArrays(spark, dir)
-    val assigned = assignCells(emb, centroids, nprobe = 1).localCheckpoint()
+    val assigned = assignCells(emb, centroids, nprobe = 1).transform(graft.Iterate.cut)
     val queries = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
     // probe own cell only, exact rerank inside
@@ -392,7 +392,7 @@ object Similarity {
   def rebalanceIvfCells(emb: DataFrame, centroids: DataFrame,
                         factor: Double = 2.0): DataFrame = {
     val assigned = assignCells(emb, centroids, nprobe = 1)
-      .localCheckpoint() // consumed by counts + both seed passes
+      .transform(graft.Iterate.cut) // consumed by counts + both seed passes
     val counts = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val meanN = counts.agg((sum(col("n")).cast("double") /
       count(lit(1))).as("mean_n"))
@@ -401,7 +401,7 @@ object Similarity {
       .select(col("cell"))
     val hotMembers = assigned.join(broadcast(hot), "cell")
       .join(centroids, "cell")
-      .localCheckpoint() // windows + assignment reuse one frame
+      .transform(graft.Iterate.cut) // windows + assignment reuse one frame
     val wCell = Window.partitionBy(col("cell"))
     val seedA = hotMembers
       .withColumn("rk", row_number().over(wCell.orderBy(
@@ -455,7 +455,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = kmeansCentroids(emb, kCells, iters)
     val corpus = assignCells(emb.filter(col("vec_id") >= nQueries), centroids, spill)
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val queries = assignCells(emb.filter(col("vec_id") < nQueries), centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
     val scored = corpus
@@ -498,7 +498,7 @@ object Similarity {
         Tables.load(spark, dir, "embeddings").filter(col("vec_id") < nQueries),
         centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     // partition pruning: restrict the corpus scan to the probed cells
     val probedCells = queries.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
@@ -1352,7 +1352,7 @@ object Similarity {
         struct(lit(s).as("s"), slice(col("embedding"), s * dsub + 1, dsub)
           .as("sub"))): _*)).as("x"))
       .select(col("vec_id"), col("x.s").as("s"), col("x.sub").as("sub"))
-      .localCheckpoint() // reused every Lloyd round
+      .transform(graft.Iterate.cut) // reused every Lloyd round
     var cb = graft.Iterate.cut(subs.filter(col("vec_id") < ksub)
       .select(col("s"), col("vec_id").cast("int").as("code_id"),
         col("sub").as("c_sub")))
@@ -1478,7 +1478,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val centroids = labelCentroidArrays(spark, dir)
     // two consumers (query + corpus split): one assignment pass
-    val assigned = assignCells(emb, centroids, nprobe = 1).localCheckpoint()
+    val assigned = assignCells(emb, centroids, nprobe = 1).transform(graft.Iterate.cut)
     val codebooks = pqCodebooks(emb, ksub)
     val corpus = assigned.filter(col("vec_id") >= nQueries)
     val codes = pqCodes(corpus.select(col("vec_id"), col("embedding")),
@@ -1558,7 +1558,7 @@ object Similarity {
     val assigned = assignCells(emb, centroids, nprobe = 1)
       .join(broadcast(centroids), "cell")
       .withColumn("res", residual(col("embedding"), col("c_emb")))
-      .localCheckpoint() // codebooks + corpus split share one pass
+      .transform(graft.Iterate.cut) // codebooks + corpus split share one pass
     val corpusRes = assigned.filter(col("vec_id") >= nQueries)
       .select(col("vec_id"), col("cell"), col("res"))
     val codebooks = trainedPqCodebooks(
@@ -1767,7 +1767,7 @@ object Similarity {
     // the quantized index: built once, reused per query (LSH precedent)
     val indexed = corpus
       .select(col("vec_id").as("neighbor_id"), col("embedding"), deq.as("deq"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val wC = Window.partitionBy(col("query_id"))
@@ -2767,7 +2767,7 @@ object Similarity {
                k: Int = 10, m: Int = 8, dsub: Int = 8, ksub: Int = 16,
                trainIters: Int = 2, dim: Int = 64): DataFrame = {
     val r = opqRotation(spark, emb, m, dim)
-    val rotated = rotateEmbeddings(emb, r).localCheckpoint()
+    val rotated = rotateEmbeddings(emb, r).transform(graft.Iterate.cut)
     val zero = spark.range(1).select(lit(0).cast("int").as("cell"),
       array((0 until dim).map(_ => lit(0f)): _*).as("c_emb"))
     knnIvfPqResidualCore(rotated, zero, nQueries, k, m, dsub, ksub,
@@ -2789,7 +2789,7 @@ object Similarity {
                           kCells: Int = 16, trainIters: Int = 2,
                           dim: Int = 64): DataFrame = {
     val r = opqRotation(spark, emb, m, dim)
-    val rotated = rotateEmbeddings(emb, r).localCheckpoint()
+    val rotated = rotateEmbeddings(emb, r).transform(graft.Iterate.cut)
     val centroids = kmeansCentroids(rotated, kCells, iters = 3)
     knnIvfPqResidualCore(rotated, centroids, nQueries, k, m, dsub,
       ksub, nprobe, trainIters)
@@ -2815,7 +2815,7 @@ object Similarity {
   def dimTruncationRecall(spark: SparkSession, dir: String,
                           nQueries: Int = 8, k: Int = 10,
                           prefixes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").localCheckpoint()
+    val emb = Tables.load(spark, dir, "embeddings").transform(graft.Iterate.cut)
     def bruteTop(p: Int): DataFrame = {
       val queries = emb.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("query_id"),
@@ -2831,7 +2831,7 @@ object Similarity {
         .filter(col("rank") <= k)
         .select(col("query_id"), col("neighbor_id"))
     }
-    val exact = bruteTop(64).localCheckpoint()
+    val exact = bruteTop(64).transform(graft.Iterate.cut)
     prefixes.map { p =>
       bruteTop(p).join(exact, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).as("hits"))
@@ -2910,7 +2910,7 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     val cand = scored.withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= kCand)
-      .localCheckpoint() // bounded (nQueries×kCand); reused every round
+      .transform(graft.Iterate.cut) // bounded (nQueries×kCand); reused every round
     val withVec = cand.select(col("query_id"), col("neighbor_id"),
         col("cos_sim"))
       .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
@@ -2922,7 +2922,7 @@ object Similarity {
         col("x.neighbor_id").as("a"), col("y.neighbor_id").as("b"),
         round(cosine(col("x.embedding"), col("y.embedding")), 6)
           .as("sim_ab"))
-      .localCheckpoint() // kCand²-bounded; reused every round
+      .transform(graft.Iterate.cut) // kCand²-bounded; reused every round
     def e6(c: Column): Column = round(c * lit(1e6)).cast("long")
     val scoreDen = lit(lamDen.toDouble * 1e6)
     var selected = cand.filter(col("rank") === 1)
@@ -3057,7 +3057,7 @@ object Similarity {
   def kCenterCoreset(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     import spark.implicits._
     val emb = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
+      .select(col("vec_id"), col("embedding")).transform(graft.Iterate.cut)
     val seedId = emb.agg(min(col("vec_id"))).head.getLong(0)
     def vecOf(id: Long): Array[Float] =
       emb.filter(col("vec_id") === id).head.getSeq[Float](1).toArray
@@ -3338,7 +3338,7 @@ object Similarity {
     * is q35's decimal-mean centroid rounded at 9dp.
     *
     * Scale: the long-form vector table (|vectors| × dims) is built
-    * once and localCheckpointed; each iteration is one
+    * once and cut (Iterate.cut); each iteration is one
     * vector-grain distance aggregate + one (label, dim) weighted
     * aggregate with the (640-row) centroid frame broadcast.
     */
@@ -3349,7 +3349,7 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("dim", "v0")))
       .withColumn("v", col("v0").cast("double")).drop("v0")
-      .localCheckpoint() // consumers: seed + every iteration
+      .transform(graft.Iterate.cut) // consumers: seed + every iteration
     val seed = lf.groupBy(col("label"), col("dim"))
       .agg(round(Relational.decSum(col("v")) / count(col("v")), 9)
         .as("cv"))
@@ -3675,7 +3675,7 @@ object Similarity {
     val poolList = scored.withColumn("rank", row_number().over(wQ))
       .filter(col("rank") <= pool)
       .withColumn("d", lit(1.0) - col("cos_sim"))
-      .localCheckpoint() // three consumers: candidates, re-rank, base
+      .transform(graft.Iterate.cut) // three consumers: candidates, re-rank, base
     // σ pass: every point that can appear on EITHER side of a scaled
     // score — pool candidates ∪ the queries themselves
     val candIds = poolList.select(col("neighbor_id").as("pid"))
@@ -4025,7 +4025,7 @@ object Similarity {
     */
   def daviesBouldin(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    val cent = labelCentroidArrays(spark, dir).localCheckpoint()
+    val cent = labelCentroidArrays(spark, dir).transform(graft.Iterate.cut)
     val scatter = emb
       .join(broadcast(cent.select(col("cell").as("label"), col("c_emb"))), "label")
       .withColumn("d", lit(1.0) - round(cosine(col("embedding"), col("c_emb")), 6))
@@ -4108,7 +4108,7 @@ object Similarity {
     val dec28 = org.apache.spark.sql.types.DecimalType(28, 6)
     val emb = Tables.load(spark, dir, "embeddings")
     val samp = fixedSample(emb, sampleN)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
+      .select(col("vec_id"), col("embedding")).transform(graft.Iterate.cut)
     val xs = samp.select(col("vec_id"),
         posexplode(col("embedding")).as(Seq("i", "xf")))
       .withColumn("x", col("xf").cast("double"))
@@ -4192,7 +4192,7 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings")
     val samp = fixedSample(emb, sampleN)
       .select(col("vec_id"), col("label").as("true_label"), col("embedding"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val sampIds = samp.select(col("vec_id"))
     val train = emb.join(broadcast(sampIds), Seq("vec_id"), "left_anti")
     val cx = train.select(col("label"), posexplode(col("embedding")).as(Seq("i", "xf")))

@@ -70,7 +70,7 @@ object Skew {
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint() // consumers: partition stats + the rank map
+      .transform(graft.Iterate.cut) // consumers: partition stats + the rank map
     val stats = parted.groupBy(col("__pid"))
       .agg(count(lit(1)).as("c"), min(col("__mid")).as("m0"))
       .collect() // one row PER PARTITION — metadata-sized by design

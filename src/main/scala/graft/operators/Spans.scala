@@ -66,7 +66,7 @@ object Spans {
     // materialize the span explode once
     val spans = spanize(docs, w)
       .withColumn("span_fp", md5(col("span_text")))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val totals = spans.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"))
     // the globally-first occurrence per fingerprint, text carried in
@@ -227,7 +227,7 @@ object Spans {
   private def dupExtentCore(docs: DataFrame, gramsIn: DataFrame,
                             l: Int): DataFrame = {
     val grams = gramsIn
-      .localCheckpoint() // two consumers: dup-hash set + position filter
+      .transform(graft.Iterate.cut) // two consumers: dup-hash set + position filter
     val dupG = grams.groupBy(col("g"))
       .agg(count(lit(1)).as("n_sites"))
       .filter(col("n_sites") > 1)

@@ -1204,7 +1204,7 @@ object Temporal {
       .groupBy(col("l_orderkey").as("o_orderkey"))
       .agg(max(expr(dayOf("l_shipdate"))).as("done_day"))
     val joined = orders.join(done, Seq("o_orderkey"), "left")
-      .localCheckpoint() // consumers: bounds + two histograms
+      .transform(graft.Iterate.cut) // consumers: bounds + two histograms
     val opens = joined.groupBy(col("open_day").as("day"))
       .agg(count(lit(1)).as("n_open"))
     val closes = joined.filter(col("done_day").isNotNull)
@@ -1436,7 +1436,7 @@ object Temporal {
         col("valid_to_ms"), col("version"))
       .withColumn("rn", row_number().over(wFrom))
       .filter(col("rn") === 1).drop("rn")
-      .localCheckpoint() // probed twice (T1 and T2)
+      .transform(graft.Iterate.cut) // probed twice (T1 and T2)
     val bounds = Tables.load(spark, dir, "events")
       .agg(min(Relational.tsMs("ts")).as("a"),
         max(Relational.tsMs("ts")).as("b"))

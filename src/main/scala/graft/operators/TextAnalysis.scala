@@ -514,7 +514,7 @@ object TextAnalysis {
     val heur = langIdQuery(spark, dir)
       .filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("lang_pred").as("heur_pred"))
-    val joined = nb.join(heur, "doc_id").localCheckpoint()
+    val joined = nb.join(heur, "doc_id").transform(graft.Iterate.cut)
     val totals = joined.agg(count(lit(1)).as("n"),
       sum(when(col("nb_pred") === col("heur_pred"), 1L).otherwise(0L))
         .as("n_agree"))
@@ -938,8 +938,8 @@ object TextAnalysis {
       .select(col("doc_id"),
         substring_index(col("bigram"), " ", 1).as("w1"),
         substring_index(col("bigram"), " ", -1).as("w2"))
-      .localCheckpoint()
-    // The count tables are materialized (localCheckpoint), not left as
+      .transform(graft.Iterate.cut)
+    // The count tables are materialized (Iterate.cut), not left as
     // lazy aggregates, for two reasons: (a) c1 derives from c2, so an
     // unmaterialized c2 would be computed twice; (b) a lazy aggregate
     // keeps its agg partitioning, so the scoring SMJ's build child is
@@ -949,9 +949,9 @@ object TextAnalysis {
     // the join, and the Zipf-hot w1 partition splits at runtime —
     // asserted in TextOpsSpec.
     val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val vocab = base.select(explode(col("toks")).as("t"))
       .agg(countDistinct(col("t")).as("v"))
     val scored = bg
@@ -1140,7 +1140,7 @@ object TextAnalysis {
     val withTf = terms.zipWithIndex.foldLeft(docs) { case (d, (t, i)) =>
       d.withColumn(s"tf$i",
         graft.functions.ArrayCountIn.countIn(col("toks"), Seq(t)))
-    }.localCheckpoint() // two consumers: the stats aggregate + scoring
+    }.transform(graft.Iterate.cut) // two consumers: the stats aggregate + scoring
     val statAggs = Seq(
       count(lit(1)).as("n_docs"),
       sum(col("dl")).cast("double").as("sum_dl")) ++
@@ -1285,7 +1285,7 @@ object TextAnalysis {
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("source"), explode(array_distinct(
         graft.functions.WordNGrams.ngrams(col("toks"), 3))).as("shingle"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val bp = sh.groupBy(col("source"), col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -1974,7 +1974,7 @@ object TextAnalysis {
     * rebuild: the corpus splits into a BASE (doc_id % 10 ≠ 0, the
     * already-indexed 90%) and a DELTA (the new 10%); the base's
     * (token, doc, tf) posting rows are materialized ONCE
-    * (localCheckpoint — at 100 TB this is the stored index, and the
+    * (Iterate.cut — at 100 TB this is the stored index, and the
     * whole point: the delta path tokenizes ONLY the new documents),
     * the delta's rows union in, and stats/postings re-aggregate on
     * the merged rows. The oracle is q164's full-rebuild SQL — the
@@ -1996,7 +1996,7 @@ object TextAnalysis {
     // the stored index: built from the base corpus and FROZEN (the
     // delta path never re-reads base text)
     val base = perDocOf(docs.filter(col("doc_id") % 10 =!= 0))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val delta = perDocOf(docs.filter(col("doc_id") % 10 === 0))
     val merged = base.unionByName(delta)
     topPostings(merged, topTokens, postingsCap)
@@ -2075,7 +2075,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("token"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // three consumers: dl, df, postings join
+      .transform(graft.Iterate.cut) // three consumers: dl, df, postings join
     val dl = perDoc.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val corpus = dl.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).cast("double").as("sum_dl"))
@@ -3499,7 +3499,7 @@ object TextAnalysis {
       .withColumn("margin", round((col("s_en") - col("s_other"))
         .cast("double"), 6))
       .withColumn("is_pos", (col("true_lang") === "en").cast("long"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val ranked = margins
       .withColumn("rn", row_number().over(Window.partitionBy(lit(1))
         .orderBy(col("margin"), col("doc_id"))))
@@ -3610,12 +3610,12 @@ object TextAnalysis {
         explode(tokens(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("lang"), col("source"), col("token"))
       .agg(count(lit(1)).as("mult"))
-    val train = toksAll.filter(col("doc_id") % 5 =!= 0).localCheckpoint()
+    val train = toksAll.filter(col("doc_id") % 5 =!= 0).transform(graft.Iterate.cut)
     val test = toksAll.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("lang"), col("token"), col("mult"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val excl = train.select(col("source").as("excl")).distinct()
-      .unionByName(Seq("__none__").toDF("excl")).localCheckpoint()
+      .unionByName(Seq("__none__").toDF("excl")).transform(graft.Iterate.cut)
     val cntFull = train.groupBy(col("lang").as("c"), col("token"))
       .agg(sum(col("mult")).as("cnt"))
     val cntSrc = train.groupBy(col("source").as("excl"),
@@ -3627,7 +3627,7 @@ object TextAnalysis {
       .filter(col("cnt_loo") > 0)
       .withColumn("l_num", round(log10(col("cnt_loo") + 1), 6))
       .select(col("excl"), col("c"), col("token"), col("l_num"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val vocabLoo = modelLoo.groupBy(col("excl"))
       .agg(countDistinct(col("token")).as("v"))
     val clsFull = train.groupBy(col("lang").as("c"))
@@ -3665,7 +3665,7 @@ object TextAnalysis {
     val acc = pred.groupBy(col("excl"))
       .agg(count(lit(1)).as("n_eval"),
         sum((col("c") === col("true_lang")).cast("long")).as("n_correct"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val full = acc.filter(col("excl") === "__none__")
       .select((col("n_correct").cast("double") / col("n_eval").cast("double"))
         .as("acc_full_raw"))
@@ -3804,7 +3804,7 @@ object TextAnalysis {
       .select(col("source"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("m"))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val srcTot = tf.groupBy(col("source")).agg(sum(col("m")).as("st"))
     val k = srcTot.count().toInt // |sources| — catalog-sized scalar
     val top = tf.groupBy(col("token")).agg(sum(col("m")).as("cf"))
@@ -3978,7 +3978,7 @@ object TextAnalysis {
       .withColumn("prev", lag(col("w"), 1).over(wnd))
       .filter(col("prev").isNotNull)
       .select(col("prev"), col("w")).distinct()
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val cont = bigramTypes.groupBy(col("w"))
       .agg(count(lit(1)).as("n_contexts"))
     val totBig = bigramTypes.agg(count(lit(1)).as("n_bigram_types"))
@@ -4075,7 +4075,7 @@ object TextAnalysis {
       .withColumn("d", round(lit(1.0) -
         (sqrt(greatest(col("var_r"), lit(0.0))) / nullif(col("mean_r"), lit(0.0)))
           / math.sqrt(k - 1.0), 6))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val topD = stats.orderBy(col("d").desc, col("token")).limit(topK)
       .withColumn("bucket", lit("most_dispersed"))
     val botD = stats.orderBy(col("d").asc, col("token")).limit(topK)

@@ -151,7 +151,7 @@ object WritePath {
                            required: Seq[String]): (Long, Long) = {
     val bad = required.map(col(_).isNull)
       .reduceOption(_ || _).getOrElse(lit(false))
-    val flagged = df.withColumn("__bad", bad).localCheckpoint()
+    val flagged = df.withColumn("__bad", bad).transform(graft.Iterate.cut)
     val good = flagged.filter(!col("__bad")).drop("__bad")
     val badRows = flagged.filter(col("__bad")).drop("__bad")
     val nGood = good.count()
@@ -355,7 +355,7 @@ object WritePath {
     // could pick different rows on version ties
     val merged = upsert(existing.filter(datePred),
       incomingP.withColumn("p_date", col("p_date").cast("date")),
-      keys, versionCol).localCheckpoint()
+      keys, versionCol).transform(graft.Iterate.cut)
     // a partition whose ONLY rows moved away ends up empty — dynamic
     // overwrite cannot write an empty partition, so its directory must
     // be dropped explicitly or the stale rows survive. One extra

@@ -14,7 +14,7 @@ import graft.Tables
   * so there is NO inference pre-scan of 100 TB; parsing is
   * per-partition streaming; malformed lines land in an audit frame
   * (the poison-pill discipline of `KafkaShaped`, applied to files).
-  * One materialization (`localCheckpoint`) feeds both outputs — also
+  * One materialization (`Iterate.cut`) feeds both outputs — also
   * sidestepping Spark's restriction on queries that select only the
   * internal corrupt-record column from a raw JSON scan.
   */
@@ -48,7 +48,7 @@ object Jsonl {
       .withColumn("parsed", from_json(col("value"), schema, Map(
         "mode" -> "PERMISSIVE",
         "columnNameOfCorruptRecord" -> "_corrupt_record")))
-      .localCheckpoint()
+      .transform(graft.Iterate.cut)
     val bad = col("parsed").isNull ||
       col("parsed._corrupt_record").isNotNull || col("parsed.doc_id").isNull
     val clean = raw.filter(!bad).select(col("parsed.*")).drop("_corrupt_record")
@@ -95,7 +95,7 @@ object Jsonl {
         col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint() // consumers: partition stats + the write
+      .transform(graft.Iterate.cut) // consumers: partition stats + the write
     val stats = parted.groupBy(col("__pid"))
       .agg(sum(col("__bytes")).as("b"))
       .collect() // one row PER PARTITION — metadata-sized by design

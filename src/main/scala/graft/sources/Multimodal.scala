@@ -721,7 +721,7 @@ object Multimodal {
         val b = decodeAHashBands(encodeGrayBmp(r.payload))
         AHashRow(r.doc_id, b(0), b(1), b(2), b(3))
       }
-    }.toDF().localCheckpoint() // two consumers: band explode + verify join
+    }.toDF().transform(graft.Iterate.cut) // two consumers: band explode + verify join
     bandHammingDups(hashes, maxDist)
   }
 
@@ -1222,7 +1222,7 @@ object Multimodal {
       rows.map { r =>
         DHashRow(r.doc_id, decodeDHashBands(encodeGrayBmp(r.payload), nBands))
       }
-    }.toDF().localCheckpoint() // two consumers: band explode + verify join
+    }.toDF().transform(graft.Iterate.cut) // two consumers: band explode + verify join
     val bands = hashes.select(col("doc_id"),
       posexplode(col("bands")).as(Seq("band_idx", "band_val")))
     val cand = bands.as("a").join(bands.as("b"), Seq("band_idx", "band_val"))
@@ -1450,7 +1450,7 @@ object Multimodal {
         val b = decodePHashBands(encodeGrayBmp16(r.payload))
         PHashRow(r.doc_id, b(0), b(1), b(2), b(3))
       }
-    }.toDF().localCheckpoint() // two consumers: band explode + verify join
+    }.toDF().transform(graft.Iterate.cut) // two consumers: band explode + verify join
     bandHammingDups(hashes, maxDist)
   }
 

@@ -153,7 +153,8 @@ object DupCheck {
     * here: the five graded streaming replays EXECUTE their stream
     * inside the builder and return a materialized LocalRelation — the
     * digest would hash result data, not an operator tree (and building
-    * the DataFrame costs a full replay).
+    * the DataFrame costs a full replay). This map is the one
+    * declaration of the replays: `Bench.streamingReplays` is its keys.
     */
   val planScreenExclusions: Map[String, String] = Map(
     "q533_streaming_croston" ->

@@ -14,7 +14,7 @@ object IvfRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession()
-    val exact = Similarity.knnBrute(spark, dir).localCheckpoint()
+    val exact = Similarity.knnBrute(spark, dir).transform(graft.Iterate.cut)
     // baseline: the oracle-checked label-centroid IVF (q37, nprobe=1)
     val labelRec = Similarity.ivfRecall(Similarity.knnIvf(spark, dir), exact)
     println(f"label-cells nprobe=1 mean_recall@10=" +

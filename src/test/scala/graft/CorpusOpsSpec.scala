@@ -72,7 +72,7 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("dedupClusters memoizes the fixpoint per (session, dir, params)") {
-    Dedup.clearLabelsMemo()
+    Iterate.clearMemo()
     val before = Dedup.labelsComputeCount.get()
     Dedup.dedupClusters(spark, sf0001).count()
     val afterFirst = Dedup.labelsComputeCount.get()

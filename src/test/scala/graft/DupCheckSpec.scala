@@ -174,6 +174,31 @@ class DupCheckSpec extends AnyFunSuite {
     assert(hits.isEmpty, "build the expression with GraftSqlBridge.column " +
       "instead of registering a SQL name:\n" + hits.mkString("\n"))
   }
+
+  test("src/main materializes only through Iterate: no raw checkpoint, no session memo map") {
+    val root = new java.io.File("src/main")
+    assume(root.isDirectory) // repo-relative; skip outside the repo
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    val sessionMap = """ConcurrentHashMap\[\s*\(\s*SparkSession""".r
+    val hits = files(root)
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "Iterate.scala")
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        val lines = text.split("\n", -1)
+        def at(i: Int) = s"${f.getPath}:${i + 1}: ${lines(i).trim}"
+        val cuts = lines.indices.collect {
+          case i if lines(i).contains(".localCheckpoint(") ||
+              lines(i).contains(".checkpoint(") => at(i)
+        }
+        // a multi-line type argument still names its key on the next line
+        val memos = sessionMap.findAllMatchIn(text)
+          .map(m => at(text.substring(0, m.start).count(_ == '\n'))).toSeq
+        cuts ++ memos
+      }
+    assert(hits.isEmpty, "cut with Iterate.cut and memoize with Iterate.memo, " +
+      "so the session's checkpoint policy covers it:\n" + hits.mkString("\n"))
+  }
 }
 
 /** Orchestrator plumbing: the chunk-merge path reads child

@@ -82,6 +82,53 @@ class IterateSpec extends AnyFunSuite {
     } finally spark.conf.set(Iterate.ReliableFlag, "false")
   }
 
+  test("reliable mode: q26's shingle table cuts write replicated checkpoints " +
+      "and the pairs match local mode") {
+    import graft.operators.Dedup
+    // q26 cuts nothing but the memoized shingle table (tokenize, then
+    // df-cap join-back): both of those cuts must follow the flag
+    def pairs(): Seq[(Long, Long, Double)] = {
+      Iterate.clearMemo()
+      Dedup.ngramJaccardPairs(spark, SharedSpark.sf0001)
+        .as[(Long, Long, Double)].collect().toSeq
+    }
+    val local = pairs()
+    assert(local.nonEmpty)
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck-shingles")
+    spark.sparkContext.setCheckpointDir(ckDir.toString)
+    spark.conf.set(Iterate.ReliableFlag, "true")
+    try {
+      assert(pairs() === local)
+      import scala.jdk.CollectionConverters._
+      val rddDirs = java.nio.file.Files.walk(ckDir).iterator().asScala.toList
+        .filter(_.getFileName.toString.startsWith("rdd-"))
+      assert(rddDirs.size === 2, s"expected the two shingle cuts under $ckDir")
+      assert(rddDirs.forall(d => java.nio.file.Files.list(d).iterator().asScala
+        .exists(_.getFileName.toString.startsWith("part-"))))
+    } finally {
+      spark.conf.set(Iterate.ReliableFlag, "false")
+      Iterate.clearMemo()
+    }
+  }
+
+  test("Iterate.memo: q38's labels build reaches the shingle memo inside " +
+      "its own build, in a fresh session after clearMemo") {
+    import graft.operators.Dedup
+    val dir = SharedSpark.sf0001
+    val expect = Dedup.dedupClusters(spark, dir).as[(Long, Long, Int)]
+      .collect().toSeq
+    Iterate.clearMemo()
+    val s = spark.newSession()
+    val before = Dedup.labelsComputeCount.get()
+    val got = Dedup.dedupClusters(s, dir).as[(Long, Long, Int)].collect().toSeq
+    assert(got === expect && got.nonEmpty)
+    assert(Dedup.labelsComputeCount.get() === before + 1)
+    // both entries are now held: a second call in the session is a hit
+    Dedup.dedupClusters(s, dir).count()
+    assert(Dedup.labelsComputeCount.get() === before + 1)
+    assert(Iterate.memoRddIds.nonEmpty)
+  }
+
   test("label fixpoint without near-dup edges: empty labels, converged in one round") {
     import graft.operators.Dedup
     val dir = java.nio.file.Files.createTempDirectory("graft-noedge").toString
@@ -273,7 +320,7 @@ class IterateSpec extends AnyFunSuite {
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph.brandModularity(spark, dir)
       .as[(String, Long, Long, Long, Double)].collect().toSeq
     assert(out === Seq(

@@ -480,7 +480,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("q337 bucketed history join: zero hash exchanges, same answer as the flat layout") {
-    graft.operators.Layout.clearBucketMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Layout
       .bucketedHistoryJoin(spark, "/root/testdata/sf0.001")
     val plan = out.queryExecution.executedPlan.toString

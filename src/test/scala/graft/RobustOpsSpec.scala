@@ -670,7 +670,7 @@ class RobustOpsSpec extends AnyFunSuite {
       lineitem = Seq((1L, 10L), (1L, 20L), (1L, 30L),
         (2L, 10L), (2L, 40L), (3L, 40L), (3L, 50L)),
       events = Seq((1L, 1000L, 1L, "view", 0.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph.kCore(spark, dir, k = 2, minW = 1L)
       .as[(Long, Long)].collect().toSeq
     assert(out === Seq((10L, 2L), (20L, 2L), (30L, 2L)))
@@ -921,7 +921,7 @@ class RobustOpsSpec extends AnyFunSuite {
   }
 
   test("recExposureAudit: bounds hold and recommended set stays inside the catalog") {
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val r = graft.operators.Graph.recExposureAudit(spark, sf0001)
       .as[(Long, Long, Double, Double, Double)].collect().head
     val (nCat, nRec, cov, gini, topShare) = r
@@ -930,7 +930,7 @@ class RobustOpsSpec extends AnyFunSuite {
     assert(gini >= 0.0 && gini < 1.0)
     // the top decile holds at least its proportional share
     assert(topShare >= 0.1 - 1e-6 && topShare <= 1.0)
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
   }
 
   test("brierDecomposition: the five-term generalized identity closes; terms signed correctly") {
@@ -973,18 +973,18 @@ class RobustOpsSpec extends AnyFunSuite {
       lineitem = Seq((1L, 10L), (1L, 20L), (2L, 20L), (2L, 30L),
         (3L, 30L), (3L, 40L)),
       events = Seq((1L, 1000L, 1L, "view", 0.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph.landmarkCloseness(spark, dir, k = 2)
       .as[(Long, Long, Long, Double)].collect().toSeq
     // closeness(20): d(10)=1, d(30)=1, d(40)=2 -> 3/4; symmetric for 30
     assert(out === Seq((20L, 3L, 4L, 0.75), (30L, 3L, 4L, 0.75)))
     // maxHops=1 truncates the far end: only the 2 direct neighbors
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val capped = graft.operators.Graph
       .landmarkCloseness(spark, dir, k = 2, maxHops = 1)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(capped === Seq((20L, 2L, 2L, 1.0), (30L, 2L, 2L, 1.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
   }
 
   test("lfAudit: diagonal carries coverage with zero conflict, counts reconcile") {
@@ -1011,7 +1011,7 @@ class RobustOpsSpec extends AnyFunSuite {
   test("coPurchasePairs: basketCap never binds on TPC-H shapes, truncates hot baskets deterministically") {
     // capped (default 1024) == effectively-uncapped on real sf0.001
     // lineitem — TPC-H baskets hold <=7 items, so the guard is free
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val capped = graft.operators.Graph.coPurchasePairs(spark, sf0001)
       .as[(Long, Long, Long)].collect().toSet
     val uncapped = graft.operators.Graph
@@ -1027,7 +1027,7 @@ class RobustOpsSpec extends AnyFunSuite {
       lineitem = Seq((1L, 10L), (1L, 20L), (1L, 30L), (1L, 40L), (1L, 50L),
         (2L, 40L), (2L, 50L)),
       events = Seq((1L, 1000L, 1L, "view", 0.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val hot = graft.operators.Graph.coPurchasePairs(spark, dir, basketCap = 3)
       .as[(Long, Long, Long)].collect().toSet
     assert(hot === Set((10L, 20L, 1L), (10L, 30L, 1L), (20L, 30L, 1L),
@@ -1037,11 +1037,11 @@ class RobustOpsSpec extends AnyFunSuite {
       orders = Seq((1L, 1L, "O", 1.0, 86400000L)),
       lineitem = Seq((1L, 10L), (1L, 10L), (1L, 20L)),
       events = Seq((1L, 1000L, 1L, "view", 0.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val d = graft.operators.Graph.coPurchasePairs(spark, dup)
       .as[(Long, Long, Long)].collect().toSet
     assert(d === Set((10L, 20L, 1L)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
   }
 
   test("cfHoldoutEval train-set pairing routes through the basket cap: capped == uncapped on TPC-H, truncated on hot baskets") {
@@ -1114,7 +1114,7 @@ class RobustOpsSpec extends AnyFunSuite {
       lineitem = Seq((1L, 10L), (2L, 20L), (3L, 10L), (4L, 20L),
         (5L, 30L), (5L, 40L)),
       events = Seq((1L, 1000L, 1L, "view", 0.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph.substitutionCandidates(spark, dir)
       .as[(Int, Long, Long, Long, Long, Long)].collect().toSeq
     // (10,20): 2 shared customers, zero co-baskets -> the one candidate;
@@ -1130,7 +1130,7 @@ class RobustOpsSpec extends AnyFunSuite {
       lineitem = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
         (3L, 10L), (3L, 30L)),
       events = Seq((1L, 1000L, 1L, "view", 0.0)))
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph.marketBasket(spark, dir)
       .as[(Int, Long, Long, Long, Long, Long, Long, Double, Double, Double, Double)]
       .collect().toSeq
@@ -1157,7 +1157,7 @@ class RobustOpsSpec extends AnyFunSuite {
           orders = Seq((1L, 1L, "O", 1.0, 86400000L)),
           lineitem = li,
           events = Seq((1L, 1000L, 1L, "view", 0.0)))
-        graft.operators.Graph.clearPairsMemo()
+        Iterate.clearMemo()
         // brute force: adjacency over all within-basket pairs, peel
         // to fixpoint at k=2, report degrees inside the surviving set
         val edges = bs.flatMap(parts =>
@@ -1337,7 +1337,7 @@ class RobustOpsSpec extends AnyFunSuite {
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    graft.operators.Graph.clearCustPartMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph
       .negativeSamples(spark, dir, custPct = 100, k = 2)
       .as[(Long, Int, Long)].collect().toSeq
@@ -1369,7 +1369,7 @@ class RobustOpsSpec extends AnyFunSuite {
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val out = graft.operators.Graph
       .personalizedPagerank(spark, dir, seedBrand = "BrandS", iters = 1)
       .as[(Long, Boolean, Long)].collect().toSeq
@@ -1389,7 +1389,7 @@ class RobustOpsSpec extends AnyFunSuite {
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir2/part.parquet")
-    graft.operators.Graph.clearPairsMemo()
+    Iterate.clearMemo()
     val ppr = graft.operators.Graph
       .personalizedPagerank(spark, dir2, seedBrand = "BrandS", iters = 3)
       .select($"p_partkey", $"rank_e12").as[(Long, Long)].collect().toSeq
