@@ -189,8 +189,9 @@ object Relational {
   // with l_returnflag='N', snapshots=lineitem keyed by l_shipdate,
   // dimension joins = supplier⋈nation (App⋈Developer).
   //
-  // Physical posture (SURVEY §4): three hash aggregations + one window
-  // + broadcast dimension joins. The reference's global MAX(...) OVER ()
+  // Physical posture (SURVEY §4): one per-supplier hash aggregation
+  // over lineitem (after the category-size aggregate it looks up) +
+  // broadcast dimension joins. The reference's global MAX(...) OVER ()
   // (lib.ts:380-381) would serialize everything through one partition,
   // so it is computed as a 1-row aggregate broadcast-cross-joined back
   // (W2→A6 rewrite) — the 100 TB-safe form.
@@ -202,56 +203,53 @@ object Relational {
       Tables.load(spark, dir, "nation"),
       Tables.load(spark, dir, "part"))
 
-  /** Core dataflow with injectable inputs (micro-fixture tests feed
-    * literal frames exercising the NULL/tie traps, FIXTURES.md §2).
+  /** The per-app CTEs q03 and q48 share (the reference re-states them
+    * verbatim, lib.ts:341-375 vs lib.ts:430-472) as ONE groupBy over
+    * lineitem, so a query reads lineitem for them once:
+    *  - category_sizes (COUNT(DISTINCT app) per category) is looked up
+    *    per row, and rank_scores is SUM(1/(pos+1) * LOG10(size + 1)); a
+    *    row without a category adds NULL, as the reference's inner join
+    *    drops it;
+    *  - recommendation_metrics is the `l_returnflag = 'N'` rows' COUNT
+    *    and SUM(1/(pos+1)); an app without such a row reads COUNT 0 and
+    *    SUM NULL, what the reference's left join gives after COALESCE;
+    *  - app_categories is ARRAY_AGG(DISTINCT brand) made deterministic
+    *    via array_sort (SURVEY A4), flattened to a string for byte-stable
+    *    oracle comparison; part is a lookup (p_partkey is its key);
+    *  - latest_snapshots is the max of the `snap` struct, whose field
+    *    order is the reference's row_number order: DESC NULLS LAST on
+    *    every key is the struct max, where a NULL field sorts lowest.
+    *    (l_orderkey, l_linenumber) is NOT unique in the synthetic data,
+    *    so l_extendedprice joins the tiebreak, and every output of the
+    *    pick joins it (`snapTail`) — ties on all keys then agree on
+    *    every output column, making the pick value-stable across
+    *    engines and reruns.
     */
-  // ---- shared popularity CTE builders (used by q03 AND q48 — the
-  // reference re-states these CTEs verbatim in both queries,
-  // lib.ts:341-385 vs lib.ts:430-466; one definition here) ----
-
-  /** rank_scores (lib.ts:347-354 / 436-443): category_sizes folded in
-    * — SUM(1/(pos+1) * LOG10(category size + 1)) per app.
-    */
-  private def rankScoresOf(li: DataFrame): DataFrame = {
-    // category_sizes (lib.ts:342-346): COUNT(DISTINCT app) per category
+  private def appStatsOf(li: DataFrame, prt: DataFrame,
+                         snapTail: Seq[String]): DataFrame = {
     val catSizes = li.groupBy(col("l_partkey"))
       .agg(countDistinct(col("l_suppkey")).as("total_apps"))
-    li.select(col("l_partkey"), col("l_suppkey"), col("l_linenumber"))
-      .join(catSizes, "l_partkey")
+    val pos = lit(1.0) / (col("l_linenumber") + 1)
+    val isRec = col("l_returnflag") === "N"
+    val snapKeys = Seq("l_shipdate", "l_orderkey", "l_linenumber", "l_extendedprice") ++ snapTail
+    // an app is a non-null l_suppkey (a NULL group joins no supplier).
+    // The stats are ONE struct-valued aggregate: Spark prunes unread
+    // aggregate columns one by one, so the global maxes, which read two
+    // of them, would otherwise get their own copy of the aggregate, with
+    // its own exchange and lineitem scan, instead of reusing this one's
+    li.filter(col("l_suppkey").isNotNull)
+      .join(catSizes, Seq("l_partkey"), "left")
+      .join(broadcast(prt.select(col("p_partkey"), col("p_brand"))),
+        col("l_partkey") === col("p_partkey"), "left")
       .groupBy(col("l_suppkey"))
-      .agg(sum((lit(1.0) / (col("l_linenumber") + 1)) * log10(col("total_apps") + 1))
-        .as("category_rank_score"))
+      .agg(struct(
+        count_if(isRec).cast(IntegerType).as("rec_count"),
+        sum(when(isRec, pos)).as("rec_score"),
+        sum(log10(col("total_apps") + 1) * pos).as("category_rank_score"),
+        concat_ws("|", array_sort(collect_set(col("p_brand")))).as("brands"),
+        max(struct(snapKeys.map(col): _*)).as("snap")).as("app"))
+      .select(col("l_suppkey"), col("app.*"))
   }
-
-  /** recommendation_metrics (lib.ts:355-362; the difficulty variant at
-    * lib.ts:444-449 omits the COUNT — `withCount` mirrors that).
-    */
-  private def recMetricsOf(li: DataFrame, withCount: Boolean): DataFrame = {
-    val base = li.filter(col("l_returnflag") === "N").groupBy(col("l_suppkey"))
-    val score = sum(lit(1.0) / (col("l_linenumber") + 1)).as("rec_score")
-    if (withCount) base.agg(count(lit(1)).cast(IntegerType).as("rec_count"), score)
-    else base.agg(score)
-  }
-
-  /** supplier left-joined with both score CTEs (lib.ts:376-384). */
-  private def scoresBaseOf(sup: DataFrame, recMetrics: DataFrame,
-                           rankScores: DataFrame): DataFrame =
-    sup
-      .join(recMetrics, sup("s_suppkey") === recMetrics("l_suppkey"), "left")
-      .drop("l_suppkey")
-      .join(rankScores, sup("s_suppkey") === rankScores("l_suppkey"), "left")
-      .drop("l_suppkey")
-
-  /** The global maxes as a broadcast 1-row frame (W2→A6 rewrite of
-    * `MAX(COALESCE(x, 0)) OVER ()`, lib.ts:380-381/455-456): rec/cat
-    * scores are sums of positive terms, so MAX(COALESCE(x, 0)) over
-    * all apps == COALESCE(MAX(x), 0) over the aggregates — computable
-    * without touching the joined base again.
-    */
-  private def maxesOf(recMetrics: DataFrame, rankScores: DataFrame): DataFrame =
-    recMetrics.agg(coalesce(max(col("rec_score")), lit(0.0)).as("max_rec"))
-      .crossJoin(rankScores.agg(
-        coalesce(max(col("category_rank_score")), lit(0.0)).as("max_cat")))
 
   /** The popularity blend (lib.ts:393-394 / 463-465), replicated
     * EXACTLY (SURVEY F2 — don't "fix"): numerators are
@@ -267,51 +265,31 @@ object Relational {
           lit(0.3) * (nullif(coalesce(col("category_rank_score"), lit(0.0)), lit(0.0)) /
             nullif(col("max_cat"), lit(1.0))), 6)
 
+  /** scores (lib.ts:376-385 / 450-466): supplier left-joined with the
+    * app stats, plus `popularity`. The global maxes are a broadcast
+    * 1-row aggregate of the same stats frame (W2→A6 rewrite of
+    * `MAX(COALESCE(x, 0)) OVER ()`): the scores are sums of positive
+    * terms, so that equals COALESCE(MAX(x), 0) over the stats, and AQE
+    * reuses the stats' exchange for it instead of reading lineitem again.
+    */
+  private def scoresOf(sup: DataFrame, stats: DataFrame): DataFrame = {
+    val maxes = stats.agg(
+      coalesce(max(col("rec_score")), lit(0.0)).as("max_rec"),
+      coalesce(max(col("category_rank_score")), lit(0.0)).as("max_cat"))
+    sup.join(stats, sup("s_suppkey") === stats("l_suppkey"), "left")
+      .drop("l_suppkey")
+      .crossJoin(broadcast(maxes))
+      .withColumn("popularity", popularityBlend)
+  }
+
+  /** Core dataflow with injectable inputs (micro-fixture tests feed
+    * literal frames exercising the NULL/tie traps, FIXTURES.md §2).
+    */
   def popularityCore(li: DataFrame, sup: DataFrame, nat: DataFrame,
                      prt: DataFrame): DataFrame = {
-    val rankScores = rankScoresOf(li)
-    val recMetrics = recMetricsOf(li, withCount = true)
-
-    // app_categories (lib.ts:363-369): ARRAY_AGG(DISTINCT ...) made
-    // deterministic via array_sort (SURVEY A4), flattened to a string
-    // for byte-stable oracle comparison.
-    val appCategories = li.select(col("l_suppkey"), col("l_partkey"))
-      .join(broadcast(prt), li("l_partkey") === prt("p_partkey"))
-      .groupBy(col("l_suppkey"))
-      .agg(concat_ws("|", array_sort(collect_set(col("p_brand")))).as("brands"))
-
-    // latest_snapshots (lib.ts:370-375): latest lineitem per supplier.
-    // (l_orderkey, l_linenumber) is NOT unique in the synthetic data,
-    // so l_extendedprice joins the tiebreak — ties on all four keys
-    // then agree on every output column, making the pick value-stable
-    // across engines and reruns.
-    val wSnap = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate").desc, col("l_orderkey").desc, col("l_linenumber").desc,
-        col("l_extendedprice").desc)
-    val latestSnap = li.withColumn("rn", row_number().over(wSnap))
-      .filter(col("rn") === 1)
-      .select(col("l_suppkey"), col("l_shipdate").as("last_shipdate"),
-        col("l_extendedprice").as("last_price"))
-
-    // scores (lib.ts:376-385) with the global max as broadcast scalars.
-    // The per-app aggregates feed both the join and their global max;
-    // deriving the maxes from these small aggregates (not from the
-    // joined `base`) keeps the duplicated work to one extra
-    // scan+partial-agg rather than the whole join tree. (Persisting
-    // them instead measured SLOWER locally — cache materialization
-    // barriers beat the recompute at this scale; at 100 TB flip to
-    // .persist() or reuse a checkpointed aggregate table.)
-    val base = scoresBaseOf(sup, recMetrics, rankScores)
-    val maxes = maxesOf(recMetrics, rankScores)
-    val scored = base.crossJoin(broadcast(maxes))
-      .withColumn("popularity", popularityBlend)
-
+    val scored = scoresOf(sup, appStatsOf(li, prt, Nil))
     scored
       .join(broadcast(nat), scored("s_nationkey") === nat("n_nationkey"), "left")
-      .join(appCategories, scored("s_suppkey") === appCategories("l_suppkey"), "left")
-      .drop("l_suppkey")
-      .join(latestSnap, scored("s_suppkey") === latestSnap("l_suppkey"), "left")
-      .drop("l_suppkey")
       .select(
         col("s_suppkey").as("app_key"),
         col("s_name").as("app_name"),
@@ -320,8 +298,8 @@ object Relational {
         round(coalesce(col("rec_score"), lit(0.0)), 6).as("rec_score"),
         round(coalesce(col("category_rank_score"), lit(0.0)), 6).as("category_rank_score"),
         coalesce(col("brands"), lit("")).as("categories"),
-        date_format(col("last_shipdate"), "MM-dd-yyyy").as("last_snapshot_date"),
-        col("last_price"),
+        date_format(col("snap.l_shipdate"), "MM-dd-yyyy").as("last_snapshot_date"),
+        col("snap.l_extendedprice").as("last_price"),
         col("popularity"))
       // Postgres ORDER BY ... DESC is NULLS FIRST (SURVEY O1).
       .orderBy(col("popularity").desc_nulls_first, col("app_key"))
@@ -392,7 +370,10 @@ object Relational {
       .withColumn("difficulty_score",
         round(log10(col("total_apps") + 1) * (col("avg_rating") / 1000.0) *
               log10(col("total_reviews") + 1), 6))
-      .orderBy(col("difficulty_score").desc_nulls_first, col("p_brand"))
+      // one row per brand: sorted in one partition, with no range
+      // sampling job or range exchange
+      .coalesce(1)
+      .sortWithinPartitions(col("difficulty_score").desc_nulls_first, col("p_brand"))
   }
 
   val difficultySql: String =
@@ -428,27 +409,14 @@ object Relational {
     val sup = Tables.load(spark, dir, "supplier")
     val prt = Tables.load(spark, dir, "part")
 
-    // popularity_scores (lib.ts:431-466): the shared CTE builders —
-    // rec_metrics without the COUNT (lib.ts:444-449), same
-    // NULLIF(COALESCE(x,0),0) / NULLIF(max,1) blend as q03
-    val rankScores = rankScoresOf(li)
-    val recMetrics = recMetricsOf(li, withCount = false)
-    val base = scoresBaseOf(sup, recMetrics, rankScores)
-    val maxes = maxesOf(recMetrics, rankScores)
-    val popScores = base.crossJoin(broadcast(maxes))
-      .select(col("s_suppkey"), popularityBlend.as("popularity"))
-
-    // latest_snapshots (lib.ts:468-472): reviews = latest quantity.
-    // l_quantity is an OUTPUT of this pick, so it must be in the
-    // tiebreak (rows tying on all ordering keys then agree on it) —
-    // otherwise Spark and the oracle can legitimately pick different
-    // quantities on a full tie.
-    val wSnap = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate").desc, col("l_orderkey").desc, col("l_linenumber").desc,
-        col("l_extendedprice").desc, col("l_quantity").desc)
-    val latestSnap = li.withColumn("rn", row_number().over(wSnap))
-      .filter(col("rn") === 1)
-      .select(col("l_suppkey").as("ls_suppkey"), col("l_quantity").as("last_reviews"))
+    // popularity_scores and latest_snapshots (lib.ts:431-472): the
+    // shared app stats — rec_metrics' COUNT (absent at lib.ts:444-449)
+    // goes unread, same NULLIF(COALESCE(x,0),0) / NULLIF(max,1) blend
+    // as q03; reviews = the latest snapshot's quantity, so l_quantity
+    // ends the snapshot tiebreak
+    val popScores = scoresOf(sup, appStatsOf(li, prt, Seq("l_quantity")))
+      .select(col("s_suppkey"), col("popularity"),
+        col("snap.l_quantity").as("last_reviews"))
 
     // app_categories (lib.ts:473-477): the RAW history join — one row
     // per lineitem row, NOT distinct (reference semantics)
@@ -458,7 +426,6 @@ object Relational {
     // final rollup (lib.ts:478-491)
     val agg = popScores
       .join(appCats, popScores("s_suppkey") === col("ac_suppkey"))
-      .join(latestSnap, popScores("s_suppkey") === col("ls_suppkey"), "left")
       .groupBy(col("p_brand"))
       .agg(
         countDistinct(col("s_suppkey")).as("total_apps"),

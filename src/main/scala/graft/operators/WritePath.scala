@@ -103,21 +103,25 @@ object WritePath {
         val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
         val toWrite =
           if (fs.exists(hPath)) {
-            val existing = spark.read.parquet(destPath)
+            // the copy's own schema: inferring it would scan footers
+            val existing = spark.read.schema(deduped.schema).parquet(destPath)
             if (keys.contains(t)) deduped.join(existing, k, "left_anti")
             // whole-row key: null-safe, so a row holding a null still
             // matches its earlier copy
             else deduped.join(existing,
               k.map(c => deduped(c) <=> existing(c)).reduce(_ && _), "left_anti")
           } else deduped
-        // empty-input short-circuit (E3: migrate.ts:53-56); with a
-        // required-columns contract the write runs in E2 quarantine
-        // mode (contract-violating rows isolated, copy proceeds)
+        // empty-input short-circuit (E3: migrate.ts:53-56): the copy is
+        // cut once and counted on that job, and only a non-empty cut is
+        // written (the writer would commit an empty part file for an
+        // empty one). With a required-columns contract the write runs in
+        // E2 quarantine mode (contract-violating rows isolated, copy
+        // proceeds)
         val n = required.get(t).filter(_.nonEmpty) match {
           case Some(req) => appendWithQuarantine(toWrite, destPath, req)._1
           case None =>
-            val c = toWrite.count()
-            if (c > 0) toWrite.write.mode(SaveMode.Append).parquet(destPath)
+            val (cut, c) = graft.Iterate.cutObserved(toWrite, count(lit(1)))
+            if (c > 0) cut.write.mode(SaveMode.Append).parquet(destPath)
             c
         }
         // structured progress logging (E6: migrate.ts:39, 66, 72)
@@ -407,10 +411,11 @@ object WritePath {
     * replicating a source that DELETES needs tombstones, not just
     * ON CONFLICT upserts. Per key, the highest-version change wins
     * (on a version tie the delete wins — tombstone durability:
-    * `orderBy(version desc, op asc)` sorts 'D' first); a winning
-    * delete drops the key, winners I/U flow through [[upsert]]'s
-    * last-writer-wins union. Re-applying the same change set is a
-    * no-op (idempotent — the recovery contract, tested).
+    * `orderBy(version desc, op asc)` sorts 'D' first); every changed
+    * key leaves the snapshot, and the winning I/U rows are appended —
+    * [[upsert]]'s last-writer-wins union, without its window, as the
+    * winners are one row per key already. Re-applying the same change
+    * set is a no-op (idempotent — the recovery contract, tested).
     *
     * Determinism: pass `seqCol` (a per-change sequence/offset id, the
     * thing every CDC log carries) to fully tiebreak the winner window
@@ -420,8 +425,8 @@ object WritePath {
     * would be pick-any, so the post-image could differ across runs.
     *
     * Scale: one window over the CHANGES (batch-sized, not
-    * snapshot-sized), one anti-join for tombstones, and upsert's
-    * anti-join + union — all co-partitioned on the key.
+    * snapshot-sized), one anti-join of the snapshot and a union — all
+    * co-partitioned on the key.
     */
   def applyCdc(base: DataFrame, changes: DataFrame, keys: Seq[String],
                opCol: String, versionCol: String,
@@ -431,14 +436,12 @@ object WritePath {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
     val latest = changes.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val tombstones = latest.filter(col(opCol) === "D")
-      .select(keys.map(col): _*)
     // op and the synthetic sequence are change-stream bookkeeping, not
-    // destination columns (versionCol survival is upsert's decision)
+    // destination columns; the version survives only as one
     val upserts = latest.filter(col(opCol) =!= "D").drop(opCol)
-      .drop(seqCol.toSeq: _*)
-    val survivors = base.join(tombstones, keys, "left_anti")
-    upsert(survivors, upserts, keys, versionCol)
+      .drop((seqCol.toSeq ++ Seq(versionCol).filterNot(base.columns.contains)): _*)
+    base.join(latest.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(upserts)
   }
 
   def upsertCustomers(spark: SparkSession, dir: String): DataFrame = {

@@ -52,8 +52,10 @@ object StreamingCdc {
         // destination schema = batch minus the change-stream
         // bookkeeping columns (applyCdc drops them from winners too)
         val destShape = seqCol.foldLeft(batch.drop(opCol))(_ drop _)
+        // the snapshot has the batch's shape: read it with that schema
+        // rather than infer it (a footer-scan job per batch)
         val base =
-          if (fs.exists(hPath)) spark.read.parquet(destPath)
+          if (fs.exists(hPath)) spark.read.schema(destShape.schema).parquet(destPath)
           else destShape.limit(0)
         val post = WritePath
           .applyCdc(base, batch, keys, opCol, versionCol, seqCol)

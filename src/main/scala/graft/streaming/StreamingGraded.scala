@@ -265,15 +265,17 @@ object StreamingGraded {
       }
       // materialize the bounded snapshot locally so the temp dir can be
       // deleted NOW (round-13 advice: one leaked dir per invocation
-      // across 3+ bench reps) instead of surviving until JVM exit
-      val snapRows = spark.read.parquet(dest)
-        .select(col("user_id"), col("last_type"), col("v").as("version"))
-        .collect().toSeq // bounded: <= userSample rows
+      // across 3+ bench reps) instead of surviving until JVM exit. Its
+      // schema is the change stream's without `op`, and its rows
+      // (bounded: <= userSample) are ordered by user_id, nulls first,
+      // on the driver
+      val snapRows = spark.read.schema("user_id BIGINT, last_type STRING, v BIGINT")
+        .parquet(dest).collect().toSeq
+        .sortBy(r => Option.when(!r.isNullAt(0))(r.getLong(0)))
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(snapRows).asJava),
         outSchema)
-        .orderBy(col("user_id"))
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq

@@ -1,32 +1,21 @@
 package graft
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The curation pass's fixed cost. In Spark 4.1 every new session
-  * recompiles the generated code of each stage it runs, and with AQE
-  * every stage is its own job, so the job count of q38, q108 and q37 in
-  * a new session is what the pass pays per session. Job counts repeat
-  * exactly from run to run.
+/** The curation pass's fixed cost. With AQE every stage is its own
+  * job, and in a new session each stage compiles its generated code
+  * again: on the driver because one pass generates more classes than
+  * the codegen cache holds (`spark.sql.codegen.cache.maxEntries`, 100),
+  * and in the tasks because each session's tasks run under the
+  * session's own artifact class loader, which is part of the cache key.
+  * So the job count of q38, q108 and q37 in a new session is what the
+  * pass pays per session. Job counts repeat exactly from run to run.
   */
 class CurationJobsSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   private val sf0001 = SharedSpark.sf0001
-
-  /** Jobs that `f` starts, counted after the listener bus drained. */
-  private def jobsOf(s: SparkSession)(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = s.sparkContext
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { f; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(l)
-    n.get()
-  }
+  import SharedSpark.jobsOf
 
   test("one curation pass (q38, q108, q37) in a new session runs at most 36 jobs") {
     val s = spark.newSession()

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,6 +109,20 @@ class RelationalSpec extends AnyFunSuite {
     assert(out.length === 1)
     // rec_score = 1/(0+1) = 1 = max_rec => NULLIF(max_rec, 1) is NULL
     assert(out.head.isNullAt(out.head.fieldIndex("popularity")))
+  }
+
+  test("popularityCore scans lineitem at most twice") {
+    // the category sizes and one per-supplier aggregate; the global
+    // maxes reuse that aggregate's exchange (before: 7 scans)
+    val Seq(li, sup, nat, prt) = Seq("lineitem", "supplier", "nation", "part")
+      .map(Tables.load(spark, SharedSpark.sf0001, _))
+    val df = Relational.popularityCore(li, sup, nat, prt)
+    df.collect()
+    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == "lineitem.parquet") => s
+    }
+    assert(scans.nonEmpty && scans.size <= 2, df.queryExecution.executedPlan.toString)
   }
 
   test("lateCulprits: sole-late wins, shared-late and single-supplier orders drop") {

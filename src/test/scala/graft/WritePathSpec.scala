@@ -128,6 +128,17 @@ class WritePathSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dest/region.parquet").count() === 2L)
   }
 
+  test("a rerun with nothing to copy leaves the destination's file listing unchanged") {
+    val dest = Files.createTempDirectory("graft-migrate-listing").toString
+    val keys = Map("lineitem" -> Tables.schemas("lineitem").fieldNames.toSeq)
+    def listing = new java.io.File(s"$dest/lineitem.parquet").listFiles()
+      .map(f => (f.getName, f.length, f.lastModified)).sorted.toSeq
+    assert(WritePath.migrate(spark, sf0001, dest, Seq("lineitem"), keys)("lineitem") === 6000L)
+    val before = listing
+    assert(WritePath.migrate(spark, sf0001, dest, Seq("lineitem"), keys)("lineitem") === 0L)
+    assert(listing === before)
+  }
+
   test("migrate pipeline driven end-to-end from a parsed schema string (S2)") {
     // the reference's design: schema.prisma decides what gets copied
     // (migrate.ts:83-93) — table list AND catalog both come from the
