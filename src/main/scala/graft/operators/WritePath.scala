@@ -366,13 +366,8 @@ object WritePath {
     // collect over the (affected-slice-sized) merge output.
     val mergedDates = merged.select(col("p_date").cast("string"))
       .distinct().collect().map(r => Option(r.getString(0))).toSet
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode(SaveMode.Overwrite).partitionBy("p_date").parquet(destPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    merged.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("p_date").parquet(destPath)
     val emptied =
       affected.filterNot(d => mergedDates.contains(Some(d))).map(d => s"p_date=$d") ++
         (if (hasNullDate && !mergedDates.contains(None))

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the last-touch attribution (q91,
   * operators.Events.lastTouchAttribution): per user, remember the most
@@ -12,22 +11,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * streaming shape: the as-of lookup is O(1) per event with bounded
   * state, no matter how long the user's history grows.
   *
-  * Ordering discipline is StreamingEvents.orderedAnalytics' frontier
-  * contract: rows sort within the micro-batch by (ts_ms, event_id);
-  * an event at or below the per-user lexicographic frontier is late
-  * and dropped. For frontier-respecting input the emitted
-  * attributions equal the batch window's per-purchase channels
-  * exactly (asserted in StreamingSpec against q91's operator).
-  *
-  * (State-schema note: TouchState is the flatMapGroupsWithState state
-  * type; changing its fields invalidates existing checkpoints.)
+  * A StreamFold.inOrder fold over (ts_ms, event_id): a late event is
+  * dropped. For frontier-respecting input the emitted attributions
+  * equal the batch window's per-purchase channels exactly (asserted in
+  * StreamingSpec against q91's operator).
   */
 object StreamingAttribution {
 
   case class TouchInput(user_id: Long, event_id: Long, ts_ms: Long,
                         event_type: String, value: Double)
-  /** lastTouch = "" until a touch is seen ("direct" attribution). */
-  case class TouchState(lastTouch: String, lastTs: Long, lastId: Long)
   case class Attribution(user_id: Long, event_id: Long, ts_ms: Long,
                          channel: String, value: Double)
 
@@ -35,31 +27,16 @@ object StreamingAttribution {
 
   def attribute(events: Dataset[TouchInput]): Dataset[Attribution] = {
     import events.sparkSession.implicits._
-    events
+    val touches = events
       .filter(e => TouchTypes.contains(e.event_type) || e.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchState, Attribution](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[TouchInput], state: GroupState[TouchState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-          var st = state.getOption.getOrElse(
-            TouchState("", Long.MinValue, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Attribution]
-          sorted.foreach { r =>
-            if (r.ts_ms < st.lastTs ||
-                (r.ts_ms == st.lastTs && r.event_id <= st.lastId)) {
-              // at or below the (ts, id) frontier: dropped as late
-            } else {
-              if (r.event_type == "purchase")
-                out += Attribution(user, r.event_id, r.ts_ms,
-                  if (st.lastTouch.isEmpty) "direct" else st.lastTouch, r.value)
-              val touch =
-                if (TouchTypes.contains(r.event_type)) r.event_type else st.lastTouch
-              st = TouchState(touch, r.ts_ms, r.event_id)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    // state: the last touch type, "" until a touch is seen ("direct")
+    StreamFold.inOrder(touches)(_.user_id, r => (r.ts_ms, r.event_id)) {
+      (prev: Option[(StreamFold.Pos, String)], r: TouchInput) =>
+        val lastTouch = prev.fold("")(_._2)
+        val out = Option.when(r.event_type == "purchase")(
+          Attribution(r.user_id, r.event_id, r.ts_ms,
+            if (lastTouch.isEmpty) "direct" else lastTouch, r.value))
+        (if (TouchTypes.contains(r.event_type)) r.event_type else lastTouch, out)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q354's burst compaction
   * (`operators.Events.burstCompaction`): the same per-(user, type)
@@ -14,18 +13,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the debounce a 100 TB ingest runs at the edge, emitting only
   * burst heads downstream.
   *
-  * Determinism contract (the StreamingEvents discipline): rows sort
-  * within the micro-batch by (ts_ms, event_id); for replayed
-  * frontier-ordered input the emitted CLOSED bursts equal the batch
-  * q354 rows exactly, minus each key's final still-open burst
-  * (spec-asserted both ways). Idle-timeout flushing is
-  * ProcessingTime-based and therefore OFF in deterministic tests.
+  * A StreamFold.gapSessions fold: rows sort within the micro-batch by
+  * (ts_ms, event_id); for replayed frontier-ordered input the emitted
+  * CLOSED bursts equal the batch q354 rows exactly, minus each key's
+  * final still-open burst (spec-asserted both ways). Idle-timeout
+  * flushing is ProcessingTime-based and therefore OFF in
+  * deterministic tests.
   */
 object StreamingBurst {
 
   case class BurstInput(user_id: Long, event_id: Long, ts_ms: Long,
                         event_type: String)
-  case class BurstState(keptId: Long, start: Long, last: Long, n: Long)
   case class BurstOut(user_id: Long, event_type: String,
                       kept_event_id: Long, burst_start_ms: Long,
                       burst_end_ms: Long, n_absorbed: Long, n_dropped: Long)
@@ -33,42 +31,11 @@ object StreamingBurst {
   def compact(events: Dataset[BurstInput], gapMs: Long = 60000L,
               idleTimeout: Boolean = true): Dataset[BurstOut] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[BurstState, BurstOut](
-        OutputMode.Append, timeoutConf) {
-        (key: (Long, String), rows: Iterator[BurstInput],
-         state: GroupState[BurstState]) =>
-          val (user, typ) = key
-          def close(s: BurstState): BurstOut =
-            BurstOut(user, typ, s.keptId, s.start, s.last, s.n, s.n - 1)
-          if (rows.isEmpty && state.hasTimedOut) {
-            val out = state.getOption.map(close).iterator
-            state.remove()
-            out
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-            var cur = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[BurstOut]
-            sorted.foreach { r =>
-              cur match {
-                case Some(s) if r.ts_ms - s.last <= gapMs =>
-                  cur = Some(s.copy(last = r.ts_ms, n = s.n + 1))
-                case Some(s) =>
-                  out += close(s)
-                  cur = Some(BurstState(r.event_id, r.ts_ms, r.ts_ms, 1L))
-                case None =>
-                  cur = Some(BurstState(r.event_id, r.ts_ms, r.ts_ms, 1L))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (idleTimeout) state.setTimeoutDuration(gapMs)
-            }
-            out.iterator
-          }
-      }
+    // state: the kept (first) event id of the open burst
+    StreamFold.gapSessions(events, gapMs, idleTimeout)(
+      e => (e.user_id, e.event_type), r => (r.ts_ms, r.event_id))(_.event_id)(
+      (keptId, _) => keptId,
+      { case ((user, typ), s) =>
+        BurstOut(user, typ, s.state, s.start, s.last, s.n, s.n - 1) })
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of Croston's intermittent-demand method (q496,
   * operators.Temporal.crostonDemand): per part, fold each arriving
@@ -16,51 +15,34 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * for in-order weekly input ẑ, p̂ and ẑ/p̂ equal q496's columns
   * EXACTLY once both sides round at 6dp (the halvings are IEEE-exact
   * doubles; asserted across a micro-batch boundary in
-  * Round12OpsSpec4 on a shared fixture). Weeks at or below the
-  * per-part frontier (duplicates/late) are dropped, matching the
+  * Round12OpsSpec4 on a shared fixture). A StreamFold.inOrder fold
+  * over the week: a duplicate or late week is dropped, matching the
   * batch input's weekly-aggregate uniqueness; the demand-class
   * quadrant needs full-series moments and stays batch-only.
-  *
-  * (State-schema note: CrostonState is the flatMapGroupsWithState
-  * state type; changing its fields invalidates existing checkpoints.)
   */
 object StreamingCroston {
 
   case class WeeklyDemand(part: Long, week: Long, z: Double)
-  case class CrostonState(lastWeek: Long, nWk: Long, zHat: Double, pHat: Double)
+  /** pHat is None until a second demand week gives an interval. */
+  case class CrostonState(nWk: Long, zHat: Double, pHat: Option[Double])
   case class CrostonOut(part: Long, week: Long, n_wk: Long,
                         z_hat: Double, p_hat: Option[Double],
                         croston: Option[Double])
 
   def forecasts(weekly: Dataset[WeeklyDemand]): Dataset[CrostonOut] = {
     import weekly.sparkSession.implicits._
-    weekly
-      .groupByKey(_.part)
-      .flatMapGroupsWithState[CrostonState, CrostonOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (part: Long, rows: Iterator[WeeklyDemand], state: GroupState[CrostonState]) =>
-          val sorted = rows.toSeq.sortBy(_.week)
-          var st = state.getOption.getOrElse(
-            CrostonState(Long.MinValue, 0L, 0.0, Double.NaN))
-          val out = scala.collection.mutable.ArrayBuffer.empty[CrostonOut]
-          sorted.foreach { r =>
-            if (r.week <= st.lastWeek) {
-              // at or below the week frontier: duplicate/late, dropped
-            } else if (st.lastWeek == Long.MinValue) {
-              // series head: ẑ seeds at the first demand, no interval yet
-              st = CrostonState(r.week, 1L, r.z, Double.NaN)
-              out += CrostonOut(part, r.week, 1L, r.z, None, None)
-            } else {
-              val gap = (r.week - st.lastWeek).toDouble
-              val zHat = (r.z + st.zHat) / 2
-              val pHat = if (st.pHat.isNaN) gap else (gap + st.pHat) / 2
-              st = CrostonState(r.week, st.nWk + 1, zHat, pHat)
-              out += CrostonOut(part, r.week, st.nWk, zHat, Some(pHat),
-                Some(zHat / pHat))
-            }
-          }
-          state.update(st)
-          out.iterator
+    StreamFold.inOrder(weekly)(_.part, r => (r.week, 0L)) {
+      (prev: Option[(StreamFold.Pos, CrostonState)], r: WeeklyDemand) => prev match {
+        case None =>
+          // series head: ẑ seeds at the first demand, no interval yet
+          (CrostonState(1L, r.z, None), Some(CrostonOut(r.part, r.week, 1L, r.z, None, None)))
+        case Some(((lastWeek, _), st)) =>
+          val gap = (r.week - lastWeek).toDouble
+          val zHat = (r.z + st.zHat) / 2
+          val pHat = st.pHat.fold(gap)(p => (gap + p) / 2)
+          (CrostonState(st.nWk + 1, zHat, Some(pHat)),
+            Some(CrostonOut(r.part, r.week, st.nWk + 1, zHat, Some(pHat), Some(zHat / pHat))))
       }
+    }
   }
 }

@@ -1,15 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the two-sided CUSUM chart (q364,
   * operators.Events.cusumChart): per event type, fold each arriving
   * daily total into the same scaled-integer recurrence the batch
   * chart uses — S⁺' = max(0, S⁺ + v − μ − k), S⁻' = max(0, S⁻ + μ −
   * v − k), all in e6-scaled BIGINTs — and emit the chart row the
-  * moment the day closes. State per type is three integers (last
-  * day, S⁺, S⁻): O(1) per key, independent of history length.
+  * moment the day closes. State per type is two integers (S⁺, S⁻)
+  * beside the day frontier: O(1) per key, independent of history
+  * length.
   *
   * Calibration contract: the batch chart derives μ (series mean) and
   * d (mean absolute deviation; k = d div 2, h = 5d) from the WHOLE
@@ -19,17 +19,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window and broadcast — and with parameters equal to the batch
   * stats its v/S⁺/S⁻/alert columns equal q364's EXACTLY for in-order
   * daily input (asserted in StreamingSpec on a shared fixture,
-  * across a micro-batch boundary). Days at or below the per-type
-  * frontier (duplicates/late) are dropped, matching the batch
+  * across a micro-batch boundary). A StreamFold.inOrder fold over
+  * the day: a duplicate or late day is dropped, matching the batch
   * daily-aggregate uniqueness.
-  *
-  * (State-schema note: CusumState is the flatMapGroupsWithState
-  * state type; changing its fields invalidates existing checkpoints.)
   */
 object StreamingCusum {
 
   case class DailyInput(event_type: String, day: Long, v_e6: Long)
-  case class CusumState(lastDay: Long, sHi: Long, sLo: Long)
+  case class CusumState(sHi: Long, sLo: Long)
   case class CusumOut(event_type: String, day: Long, v_e6: Long,
                       s_hi: Long, s_lo: Long, is_alert: Int)
 
@@ -39,36 +36,19 @@ object StreamingCusum {
   def chart(daily: Dataset[DailyInput],
             params: Map[String, (Long, Long)]): Dataset[CusumOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[DailyInput], state: GroupState[CusumState]) =>
-          params.get(typ) match {
-            case None => Iterator.empty
-            case Some((mu, d)) =>
-              // batch uses Spark `div` on BIGINTs (truncation); d is a
-              // mean |dev| so non-negative — Long./ matches exactly
-              val k = d / 2
-              val h = 5 * d
-              val sorted = rows.toSeq.sortBy(_.day)
-              var st = state.getOption
-                .getOrElse(CusumState(Long.MinValue, 0L, 0L))
-              val out = scala.collection.mutable.ArrayBuffer.empty[CusumOut]
-              sorted.foreach { r =>
-                if (r.day <= st.lastDay) {
-                  // at or below the day frontier: duplicate/late, dropped
-                } else {
-                  val sHi = math.max(0L, st.sHi + r.v_e6 - mu - k)
-                  val sLo = math.max(0L, st.sLo + mu - r.v_e6 - k)
-                  st = CusumState(r.day, sHi, sLo)
-                  out += CusumOut(typ, r.day, r.v_e6, sHi, sLo,
-                    if (sHi > h || sLo > h) 1 else 0)
-                }
-              }
-              state.update(st)
-              out.iterator
-          }
-      }
+    StreamFold.inOrder(daily.filter(r => params.contains(r.event_type)))(
+        _.event_type, r => (r.day, 0L)) {
+      (prev: Option[(StreamFold.Pos, CusumState)], r: DailyInput) =>
+        val (mu, d) = params(r.event_type)
+        // batch uses Spark `div` on BIGINTs (truncation); d is a
+        // mean |dev| so non-negative — Long./ matches exactly
+        val k = d / 2
+        val h = 5 * d
+        val st = prev.fold(CusumState(0L, 0L))(_._2)
+        val sHi = math.max(0L, st.sHi + r.v_e6 - mu - k)
+        val sLo = math.max(0L, st.sLo + mu - r.v_e6 - k)
+        (CusumState(sHi, sLo), Some(CusumOut(r.event_type, r.day, r.v_e6,
+          sHi, sLo, if (sHi > h || sLo > h) 1 else 0)))
+    }
   }
 }

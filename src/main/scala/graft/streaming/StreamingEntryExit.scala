@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q246's entry/exit session analytics
   * (`operators.Events.entryExit`): the same 30-minute-gap sessionizer
@@ -13,10 +12,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * bounce/top-exit table is an ordinary downstream groupBy — state
   * size stays O(1) per active user, never per event.
   *
-  * Determinism contract (the StreamingEvents discipline): within a
-  * micro-batch events sort by (ts_ms, event_id) — the batch
-  * operator's exact window order — so a replayed log emits the
-  * identical session tuples the batch q246 derives (spec-bound).
+  * A StreamFold.gapSessions fold: within a micro-batch events sort by
+  * (ts_ms, event_id) — the batch operator's exact window order — so a
+  * replayed log emits the identical session tuples the batch q246
+  * derives (spec-bound).
   * Idle-timeout flushing is ProcessingTime-based and therefore OFF in
   * deterministic tests.
   */
@@ -24,50 +23,16 @@ object StreamingEntryExit {
 
   case class EEInput(user_id: Long, event_id: Long, ts_ms: Long,
                      event_type: String)
-  case class EEState(start: Long, last: Long, n: Long,
-                     entry: String, exit: String)
+  case class EEState(entry: String, exit: String)
   case class EEOut(user_id: Long, entry_type: String, exit_type: String,
                    n_events: Long)
 
   def sessions(events: Dataset[EEInput], gapMs: Long,
                idleTimeout: Boolean = true): Dataset[EEOut] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[EEState, EEOut](
-        OutputMode.Append, timeoutConf) {
-        (user: Long, rows: Iterator[EEInput], state: GroupState[EEState]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            val out = state.getOption
-              .map(s => EEOut(user, s.entry, s.exit, s.n)).iterator
-            state.remove()
-            out
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-            var cur = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[EEOut]
-            sorted.foreach { r =>
-              cur match {
-                case Some(s) if r.ts_ms - s.last <= gapMs =>
-                  cur = Some(EEState(s.start, r.ts_ms, s.n + 1, s.entry,
-                    r.event_type))
-                case Some(s) =>
-                  out += EEOut(user, s.entry, s.exit, s.n)
-                  cur = Some(EEState(r.ts_ms, r.ts_ms, 1, r.event_type,
-                    r.event_type))
-                case None =>
-                  cur = Some(EEState(r.ts_ms, r.ts_ms, 1, r.event_type,
-                    r.event_type))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (idleTimeout) state.setTimeoutDuration(gapMs)
-            }
-            out.iterator
-          }
-      }
+    StreamFold.gapSessions(events, gapMs, idleTimeout)(
+      _.user_id, r => (r.ts_ms, r.event_id))(r => EEState(r.event_type, r.event_type))(
+      (s, r) => s.copy(exit = r.event_type),
+      (user, s) => EEOut(user, s.state.entry, s.state.exit, s.n))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
 
@@ -13,8 +12,8 @@ import graft.Tables
   * both modes, which is the point of building them Spark-first.
   *
   * Scale posture: watermark + windowed aggregation is incremental
-  * state keyed by (window, type); sessionization state is per-user via
-  * flatMapGroupsWithState with event-time timeout. At 100 TB/day both
+  * state keyed by (window, type); the ordered and sessionization folds
+  * keep per-user state through StreamFold. At 100 TB/day both
   * shard across executors by their group key — no driver state.
   */
 object StreamingEvents {
@@ -57,11 +56,10 @@ object StreamingEvents {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
   case class SessionInput(user_id: Long, event_id: Long, ts_ms: Long, value: Double)
-  case class SessionState(start: Long, last: Long, n: Long, value: Double)
   case class SessionOut(user_id: Long, session_start_ms: Long, session_end_ms: Long,
                         n_events: Long, session_value: Double)
 
-  case class OrdState(seq: Int, lastTs: Long, lastId: Long, runMicros: Long)
+  case class OrdState(seq: Int, runMicros: Long)
   case class OrdOut(user_id: Long, event_id: Long, ts_ms: Long, seq: Int,
                     gap_ms: Option[Long], running_value: Double)
 
@@ -71,99 +69,40 @@ object StreamingEvents {
     * and are deliberately absent — a streaming system can only emit
     * them one event late, which changes the output contract.
     *
-    * Ordering discipline: rows are sorted within the micro-batch by
-    * (ts_ms, event_id); an event at or below the per-user processed
-    * frontier — (ts_ms, event_id) LEXICOGRAPHIC, so an equal-ts event
-    * with a lower id arriving in a later micro-batch is late too, not
-    * mis-sequenced after its tiebreak predecessor — is dropped (the
-    * watermark contract, same late-data stance as the windowed
-    * aggregates above). For frontier-respecting input the streamed
-    * rows equal the batch window exactly. The running sum
-    * accumulates in integer micro-units with the same scale-6 HALF_UP
-    * rounding as the batch form's DECIMAL(18,6), so streamed values
-    * equal the batch window exactly (asserted in StreamingSpec).
-    * State per user is four scalars — bounded regardless of history.
-    * (State-schema note: OrdState is the flatMapGroupsWithState state
-    * type; changing its fields invalidates existing checkpoints — a
-    * restart after such a change needs a fresh checkpoint directory.)
+    * A StreamFold.inOrder fold over (ts_ms, event_id): a late event is
+    * dropped, the same late-data stance as the windowed aggregates
+    * above. For frontier-respecting input the streamed rows equal the
+    * batch window exactly. The running sum accumulates in integer
+    * micro-units with the same scale-6 HALF_UP rounding as the batch
+    * form's DECIMAL(18,6), so streamed values equal the batch window
+    * exactly (asserted in StreamingSpec). State per user is two
+    * scalars — bounded regardless of history.
     */
   def orderedAnalytics(events: Dataset[SessionInput]): Dataset[OrdOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[OrdState, OrdOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[SessionInput], state: GroupState[OrdState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-          var st = state.getOption.getOrElse(
-            OrdState(0, Long.MinValue, Long.MinValue, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[OrdOut]
-          sorted.foreach { r =>
-            if (st.seq > 0 && (r.ts_ms < st.lastTs ||
-                (r.ts_ms == st.lastTs && r.event_id <= st.lastId))) {
-              // at or below the (ts, id) frontier: dropped as late
-            } else {
-              val micros = BigDecimal(r.value)
-                .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP)
-                .underlying.movePointRight(6).longValueExact
-              val run = st.runMicros + micros
-              val gap = if (st.seq == 0) None else Some(r.ts_ms - st.lastTs)
-              out += OrdOut(user, r.event_id, r.ts_ms, st.seq + 1, gap,
-                run.toDouble / 1e6)
-              st = OrdState(st.seq + 1, r.ts_ms, r.event_id, run)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    StreamFold.inOrder(events)(_.user_id, r => (r.ts_ms, r.event_id)) {
+      (prev: Option[(StreamFold.Pos, OrdState)], r: SessionInput) =>
+        val micros = BigDecimal(r.value)
+          .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP)
+          .underlying.movePointRight(6).longValueExact
+        val st = prev.fold(OrdState(1, micros)) { case (_, s) =>
+          OrdState(s.seq + 1, s.runMicros + micros) }
+        val gap = prev.map { case ((lastTs, _), _) => r.ts_ms - lastTs }
+        (st, Some(OrdOut(r.user_id, r.event_id, r.ts_ms, st.seq, gap,
+          st.runMicros.toDouble / 1e6)))
+    }
   }
 
-  /** Stateful sessionization via flatMapGroupsWithState: a session
+  /** Stateful sessionization, a StreamFold.gapSessions fold: a session
     * closes when a later event crosses the gap, or when the
-    * processing-time timeout fires after `gapMs` of silence — without
-    * the timeout, an idle user's last session would sit in state
-    * forever (flatMapGroupsWithState only runs for a key on new data
-    * or timeout).
+    * processing-time timeout fires after `gapMs` of silence.
     */
   def sessionize(events: Dataset[SessionInput], gapMs: Long,
                  idleTimeout: Boolean = true): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      // deterministic mode for tests: wall-clock timeouts make
-      // micro-batch emission timing nondeterministic
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, timeoutConf) {
-        (user: Long, rows: Iterator[SessionInput], state: GroupState[SessionState]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            // idle past the gap: flush the open session
-            val out = state.getOption
-              .map(s => SessionOut(user, s.start, s.last, s.n, s.value)).iterator
-            state.remove()
-            out
-          } else {
-            // Sort within the micro-batch: bounded per-user state.
-            val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-            var cur = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-            sorted.foreach { r =>
-              cur match {
-                case Some(s) if r.ts_ms - s.last <= gapMs =>
-                  cur = Some(SessionState(s.start, r.ts_ms, s.n + 1, s.value + r.value))
-                case Some(s) =>
-                  out += SessionOut(user, s.start, s.last, s.n, s.value)
-                  cur = Some(SessionState(r.ts_ms, r.ts_ms, 1, r.value))
-                case None =>
-                  cur = Some(SessionState(r.ts_ms, r.ts_ms, 1, r.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (idleTimeout) state.setTimeoutDuration(gapMs)
-            }
-            out.iterator
-          }
-      }
+    StreamFold.gapSessions(events, gapMs, idleTimeout)(
+      _.user_id, r => (r.ts_ms, r.event_id))(_.value)(
+      (value, r) => value + r.value,
+      (user, s) => SessionOut(user, s.start, s.last, s.n, s.state))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the EWMA control chart (q173,
   * operators.Events.ewmaControl): per event type, fold each arriving
@@ -19,53 +18,38 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * against 3× the mean |dev| of the WHOLE series, which no causal
   * operator can know mid-stream — the twin thresholds against the
   * running mean |dev| up to and including the current day
-  * (`alert_running`), the standard on-line control-chart form. Days
-  * at or below the per-type frontier (duplicates/late) are dropped,
-  * matching the batch input's daily-aggregate uniqueness.
-  *
-  * (State-schema note: EwmaState is the flatMapGroupsWithState state
-  * type; changing its fields invalidates existing checkpoints.)
+  * (`alert_running`), the standard on-line control-chart form. A
+  * StreamFold.inOrder fold over the day: a duplicate or late day is
+  * dropped, matching the batch input's daily-aggregate uniqueness.
   */
 object StreamingEwma {
 
   case class DailyInput(event_type: String, day: Long, v_e6: Long)
-  case class EwmaState(lastDay: Long, ewmaE6: Long, nDev: Long, sumAbs: Long)
+  case class EwmaState(ewmaE6: Long, nDev: Long, sumAbs: Long)
   case class EwmaOut(event_type: String, day: Long, v_e6: Long, ewma_e6: Long,
                      dev_e6: Option[Long], alert_running: Option[Int])
 
   def chart(daily: Dataset[DailyInput]): Dataset[EwmaOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[DailyInput], state: GroupState[EwmaState]) =>
-          val sorted = rows.toSeq.sortBy(_.day)
-          var st = state.getOption.getOrElse(EwmaState(Long.MinValue, 0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[EwmaOut]
-          sorted.foreach { r =>
-            if (r.day <= st.lastDay) {
-              // at or below the day frontier: duplicate/late, dropped
-            } else if (st.lastDay == Long.MinValue) {
-              // series head: EWMA seeds at the observed value, no dev
-              st = EwmaState(r.day, r.v_e6, 0L, 0L)
-              out += EwmaOut(typ, r.day, r.v_e6, r.v_e6, None, None)
-            } else {
-              val dev = r.v_e6 - st.ewmaE6
-              val nDev = st.nDev + 1
-              val sumAbs = st.sumAbs + math.abs(dev)
-              val alert = if (math.abs(dev) * nDev > sumAbs * 3) 1 else 0
-              // batch uses Spark's `div`. For BIGINT operands Spark div
-              // TRUNCATES toward zero (it is floor only for nonnegative
-              // numerators), so mirror with Long./ — negative daily
-              // totals take the same truncated quotient on both paths
-              val ewmaFloor = (r.v_e6 + 4 * st.ewmaE6) / 5
-              st = EwmaState(r.day, ewmaFloor, nDev, sumAbs)
-              out += EwmaOut(typ, r.day, r.v_e6, ewmaFloor, Some(dev), Some(alert))
-            }
-          }
-          state.update(st)
-          out.iterator
+    StreamFold.inOrder(daily)(_.event_type, r => (r.day, 0L)) {
+      (prev: Option[(StreamFold.Pos, EwmaState)], r: DailyInput) => prev match {
+        case None =>
+          // series head: EWMA seeds at the observed value, no dev
+          (EwmaState(r.v_e6, 0L, 0L),
+            Some(EwmaOut(r.event_type, r.day, r.v_e6, r.v_e6, None, None)))
+        case Some((_, st)) =>
+          val dev = r.v_e6 - st.ewmaE6
+          val nDev = st.nDev + 1
+          val sumAbs = st.sumAbs + math.abs(dev)
+          val alert = if (math.abs(dev) * nDev > sumAbs * 3) 1 else 0
+          // batch uses Spark's `div`. For BIGINT operands Spark div
+          // TRUNCATES toward zero (it is floor only for nonnegative
+          // numerators), so mirror with Long./ — negative daily
+          // totals take the same truncated quotient on both paths
+          val ewmaFloor = (r.v_e6 + 4 * st.ewmaE6) / 5
+          (EwmaState(ewmaFloor, nDev, sumAbs),
+            Some(EwmaOut(r.event_type, r.day, r.v_e6, ewmaFloor, Some(dev), Some(alert))))
       }
+    }
   }
 }

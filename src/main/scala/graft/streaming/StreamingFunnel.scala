@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the ordered funnel (q84, operators.Events.funnel):
   * per user, the earliest signup, the earliest click STRICTLY AFTER
@@ -13,69 +12,41 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * regardless of history length — the same collapse
   * StreamingAttribution applies to q91's window.
   *
-  * Ordering discipline is the shared frontier contract
-  * (StreamingEvents.orderedAnalytics): rows sort within the
-  * micro-batch by (ts_ms, event_id); an event at or below the
-  * per-user frontier is late and dropped. For frontier-respecting
-  * input the LAST emitted update per user equals the batch q84 row
-  * exactly (asserted in RobustOpsSpec).
-  *
-  * (State-schema note: FunnelState is the flatMapGroupsWithState
-  * state type; changing its fields invalidates existing checkpoints.)
+  * A StreamFold.inOrder fold over (ts_ms, event_id): a late event is
+  * dropped. For frontier-respecting input the LAST emitted update per
+  * user equals the batch q84 row exactly (asserted in RobustOpsSpec).
   */
 object StreamingFunnel {
 
   case class FunnelInput(user_id: Long, event_id: Long, ts_ms: Long,
                          event_type: String)
-  /** Long.MinValue = step not reached (Option-free for state codec
-    * stability).
-    */
-  case class FunnelState(tSignup: Long, tClick: Long, tPurchase: Long,
-                         lastTs: Long, lastId: Long)
+  case class FunnelState(tSignup: Option[Long], tClick: Option[Long],
+                         tPurchase: Option[Long])
   case class FunnelUpdate(user_id: Long, t_signup: Long,
                           t_click: Option[Long], t_purchase: Option[Long],
                           stage: Int)
 
   private val Steps: Set[String] = Set("signup", "click", "purchase")
-  private val Unset: Long = Long.MinValue
 
   def track(events: Dataset[FunnelInput]): Dataset[FunnelUpdate] = {
     import events.sparkSession.implicits._
-    events
-      .filter(e => Steps.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[FunnelInput], state: GroupState[FunnelState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-          var st = state.getOption.getOrElse(
-            FunnelState(Unset, Unset, Unset, Long.MinValue, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelUpdate]
-          sorted.foreach { r =>
-            if (r.ts_ms < st.lastTs ||
-                (r.ts_ms == st.lastTs && r.event_id <= st.lastId)) {
-              // at or below the (ts, id) frontier: dropped as late
-            } else {
-              val advanced = r.event_type match {
-                case "signup" if st.tSignup == Unset =>
-                  st = st.copy(tSignup = r.ts_ms); true
-                case "click" if st.tSignup != Unset && st.tClick == Unset &&
-                    r.ts_ms > st.tSignup =>
-                  st = st.copy(tClick = r.ts_ms); true
-                case "purchase" if st.tClick != Unset && st.tPurchase == Unset &&
-                    r.ts_ms > st.tClick =>
-                  st = st.copy(tPurchase = r.ts_ms); true
-                case _ => false
-              }
-              st = st.copy(lastTs = r.ts_ms, lastId = r.event_id)
-              if (advanced) out += FunnelUpdate(user, st.tSignup,
-                if (st.tClick == Unset) None else Some(st.tClick),
-                if (st.tPurchase == Unset) None else Some(st.tPurchase),
-                if (st.tPurchase != Unset) 3 else if (st.tClick != Unset) 2 else 1)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    StreamFold.inOrder(events.filter(e => Steps.contains(e.event_type)))(
+        _.user_id, r => (r.ts_ms, r.event_id)) {
+      (prev: Option[(StreamFold.Pos, FunnelState)], r: FunnelInput) =>
+        val st = prev.fold(FunnelState(None, None, None))(_._2)
+        val next = r.event_type match {
+          case "signup" if st.tSignup.isEmpty => st.copy(tSignup = Some(r.ts_ms))
+          case "click" if st.tClick.isEmpty && st.tSignup.exists(r.ts_ms > _) =>
+            st.copy(tClick = Some(r.ts_ms))
+          case "purchase" if st.tPurchase.isEmpty && st.tClick.exists(r.ts_ms > _) =>
+            st.copy(tPurchase = Some(r.ts_ms))
+          case _ => st
+        }
+        // a step is reached only after its predecessor, so the number
+        // of reached steps is the stage
+        (next, for (signup <- next.tSignup if next != st) yield
+          FunnelUpdate(r.user_id, signup, next.tClick, next.tPurchase,
+            Seq(next.tSignup, next.tClick, next.tPurchase).count(_.isDefined)))
+    }
   }
 }

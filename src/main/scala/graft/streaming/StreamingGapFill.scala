@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the LOCF calendar gap-fill (q194,
   * operators.Temporal.gapFillLocf): per user, remember the last
@@ -15,51 +14,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Contract vs batch: for in-order daily input the emitted rows equal
   * `gapFillLocf`'s exactly (asserted in StreamingSpec on a shared
-  * fixture). A day at or below the per-user frontier (duplicate or
-  * late) is dropped — the batch twin's input (a daily aggregate)
+  * fixture). A StreamFold.inOrder fold over the day: a duplicate or
+  * late day is dropped — the batch twin's input (a daily aggregate)
   * cannot contain one. Trailing gaps are not emitted, matching the
   * batch grid which ends at each user's last observation; a
   * production variant would add an event-time timeout to flush
   * "stale as of today" rows, which the batch twin has no analogue of.
-  *
-  * (State-schema note: FillState is the flatMapGroupsWithState state
-  * type; changing its fields invalidates existing checkpoints.)
   */
 object StreamingGapFill {
 
   case class DayInput(user_id: Long, day: Long, v_obs: Double)
-  case class FillState(lastDay: Long, lastVal: Double)
   case class FillOut(user_id: Long, day: Long, v_filled: Double,
                      is_observed: Boolean, gap_age: Long)
 
   def fill(daily: Dataset[DayInput]): Dataset[FillOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FillState, FillOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[DayInput], state: GroupState[FillState]) =>
-          val sorted = rows.toSeq.sortBy(_.day)
-          var st = state.getOption.getOrElse(FillState(Long.MinValue, 0.0))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FillOut]
-          sorted.foreach { r =>
-            if (r.day <= st.lastDay) {
-              // at or below the day frontier: duplicate/late, dropped
-            } else {
-              if (st.lastDay != Long.MinValue) {
-                var d = st.lastDay + 1
-                while (d < r.day) {
-                  out += FillOut(user, d, st.lastVal, is_observed = false,
-                    d - st.lastDay)
-                  d += 1
-                }
-              }
-              out += FillOut(user, r.day, r.v_obs, is_observed = true, 0L)
-              st = FillState(r.day, r.v_obs)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    // state: the last observed value
+    StreamFold.inOrder(daily)(_.user_id, r => (r.day, 0L)) {
+      (prev: Option[(StreamFold.Pos, Double)], r: DayInput) =>
+        val gap = prev.toSeq.flatMap { case ((lastDay, _), lastVal) =>
+          (lastDay + 1 until r.day).map(d =>
+            FillOut(r.user_id, d, lastVal, is_observed = false, d - lastDay)) }
+        (r.v_obs, gap :+ FillOut(r.user_id, r.day, r.v_obs, is_observed = true, 0L))
+    }
   }
 }

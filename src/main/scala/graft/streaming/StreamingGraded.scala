@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,14 +82,6 @@ object StreamingGraded {
     java.nio.file.Files.createTempDirectory(root, "graft-replay-ckpt-")
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(q => java.nio.file.Files.deleteIfExists(q))
-  }
-
   /** Collect a memory sink's rows through `project`, DROP the sink
     * (bench reps must not leak catalog entries), and rebuild the
     * bounded result as a local DataFrame.
@@ -142,7 +135,7 @@ object StreamingGraded {
         mem.addData(batch)
         query.processAllAvailable()
       }
-    } finally { query.stop(); deleteRecursively(ckpt) }
+    } finally { query.stop(); FileUtils.deleteQuietly(ckpt.toFile) }
     val last = Window.partitionBy(col("part")).orderBy(col("week").desc)
     drainSink(spark, sink) { snap =>
       snap
@@ -261,7 +254,7 @@ object StreamingGraded {
             mem.addData(b)
             query.processAllAvailable()
           }
-        } finally { query.stop(); deleteRecursively(ckpt) }
+        } finally { query.stop(); FileUtils.deleteQuietly(ckpt.toFile) }
       }
       // materialize the bounded snapshot locally so the temp dir can be
       // deleted NOW (round-13 advice: one leaked dir per invocation
@@ -276,12 +269,7 @@ object StreamingGraded {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(snapRows).asJava),
         outSchema)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally FileUtils.deleteQuietly(tmp.toFile)
   }
 
   case class SEv(user: Long, id: Long, ts: java.sql.Timestamp)
@@ -366,7 +354,7 @@ object StreamingGraded {
         if (ps.nonEmpty) pMem.addData(ps.map(_._2))
         query.processAllAvailable()
       }
-    } finally { query.stop(); deleteRecursively(ckpt) }
+    } finally { query.stop(); FileUtils.deleteQuietly(ckpt.toFile) }
     drainSink(spark, sink) { t =>
       t.select(col("p_id").as("purchase_id"), col("user_id"),
         expr("unix_micros(p_ts) div 1000").as("p_ms"),
@@ -491,7 +479,7 @@ object StreamingGraded {
       mem.addData((-1L, s"graft q552 sentinel $sink", at(gapSec)))
       query.processAllAvailable()
       pass(gapSec + 1L)
-    } finally { query.stop(); deleteRecursively(ckpt) }
+    } finally { query.stop(); FileUtils.deleteQuietly(ckpt.toFile) }
     drainSink(spark, sink) { t =>
       t.filter(col("doc_id") >= 0)
         .groupBy(col("content_fp"))
@@ -575,7 +563,7 @@ object StreamingGraded {
           new java.sql.Timestamp(maxMs + k * (gapMs + 60000L)), 0.0))
         query.processAllAvailable()
       }
-    } finally { query.stop(); deleteRecursively(ckpt) }
+    } finally { query.stop(); FileUtils.deleteQuietly(ckpt.toFile) }
     drainSink(spark, sink) { t =>
       t.filter(col("user_id") >= 0)
         .select(col("user_id"),

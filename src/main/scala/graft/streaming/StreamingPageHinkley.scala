@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the Page–Hinkley drift detector (q432,
   * operators.Events.pageHinkley): per event type, fold each closed
@@ -9,8 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * running mean over the prefix, 6dp-rounded deviation term
   * accumulated exactly (e6-scaled BIGINT, the decimal-sum twin),
   * running minimum of the cumulative deviation, alarm when
-  * m_t − min m exceeds λ. State per type is four integers + a day
-  * frontier: O(1) per key, independent of history length.
+  * m_t − min m exceeds λ. State per type is four integers beside the
+  * day frontier: O(1) per key, independent of history length.
   *
   * PH's running mean is CAUSAL (unlike q364's whole-series μ), so the
   * only calibration parameter is λ — the batch derives λ = 3σ from
@@ -24,17 +23,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Input contract: the DENSE daily series (zero days included) in
   * day order per type — the batch relation zero-fills its calendar
   * spine, so a twin fed only active days would disagree by design.
-  * Days at or below the per-type frontier are dropped (the
-  * StreamingCusum duplicate/late discipline).
-  *
-  * (State-schema note: PhState is the flatMapGroupsWithState state
-  * type; changing its fields invalidates existing checkpoints.)
+  * A StreamFold.inOrder fold over the day: a duplicate or late day is
+  * dropped.
   */
 object StreamingPageHinkley {
 
   case class DailyInput(event_type: String, day: Long, v: Long)
-  case class PhState(lastDay: Long, t: Long, s: Long, mE6: Long,
-                     runminE6: Long)
+  case class PhState(t: Long, s: Long, mE6: Long, runminE6: Long)
   case class PhOut(event_type: String, day: Long, v: Long, ph: Double,
                    is_alarm: Int)
 
@@ -51,37 +46,17 @@ object StreamingPageHinkley {
   def detect(daily: Dataset[DailyInput],
              lambdas: Map[String, Double]): Dataset[PhOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PhState, PhOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[DailyInput], state: GroupState[PhState]) =>
-          lambdas.get(typ) match {
-            case None => Iterator.empty
-            case Some(lambda) =>
-              val sorted = rows.toSeq.sortBy(_.day)
-              var st = state.getOption
-                .getOrElse(PhState(Long.MinValue, 0L, 0L, 0L, Long.MaxValue))
-              val out = scala.collection.mutable.ArrayBuffer.empty[PhOut]
-              sorted.foreach { r =>
-                if (r.day <= st.lastDay) {
-                  // at or below the day frontier: duplicate/late, dropped
-                } else {
-                  val t = st.t + 1
-                  val s = st.s + r.v
-                  val termE6 =
-                    round6E6(r.v.toDouble - s.toDouble / t.toDouble)
-                  val mE6 = st.mE6 + termE6
-                  val runminE6 = math.min(st.runminE6, mE6)
-                  st = PhState(r.day, t, s, mE6, runminE6)
-                  val ph = (mE6 - runminE6) / 1e6
-                  out += PhOut(typ, r.day, r.v, ph,
-                    if (ph > lambda) 1 else 0)
-                }
-              }
-              state.update(st)
-              out.iterator
-          }
-      }
+    StreamFold.inOrder(daily.filter(r => lambdas.contains(r.event_type)))(
+        _.event_type, r => (r.day, 0L)) {
+      (prev: Option[(StreamFold.Pos, PhState)], r: DailyInput) =>
+        val st = prev.fold(PhState(0L, 0L, 0L, Long.MaxValue))(_._2)
+        val t = st.t + 1
+        val s = st.s + r.v
+        val mE6 = st.mE6 + round6E6(r.v.toDouble - s.toDouble / t.toDouble)
+        val runminE6 = math.min(st.runminE6, mE6)
+        val ph = (mE6 - runminE6) / 1e6
+        (PhState(t, s, mE6, runminE6), Some(PhOut(r.event_type, r.day, r.v, ph,
+          if (ph > lambdas(r.event_type)) 1 else 0)))
+    }
   }
 }

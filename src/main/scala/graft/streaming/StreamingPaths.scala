@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the q132 session-path miner: emits one record per
   * completed event-type TRIGRAM taken consecutively inside a session
@@ -10,53 +9,35 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * multiset for frontier-respecting input — asserted in StreamingSpec
   * against `Events.sessionPaths`'s support column.
   *
-  * State per user is four scalars + two type strings — the (ts, id)
-  * frontier and the sliding pair of predecessor types — bounded
+  * State per user is the sliding pair of predecessor types — bounded
   * regardless of history; no session buffer is kept because a trigram
   * is emittable the moment its third event arrives. A gap break only
   * clears the predecessor pair (the q132 contract: trigrams never
   * cross a session boundary), so no timeout is needed — nothing
   * pending ever has to flush on silence, unlike the sessionize twin.
   *
-  * Late data: an event at or below the per-user (ts_ms, event_id)
-  * LEXICOGRAPHIC frontier is dropped, the same stance (and the same
-  * reasoning about equal-ts tiebreaks) as `orderedAnalytics`.
+  * A StreamFold.inOrder fold over (ts_ms, event_id): a late event is
+  * dropped.
   */
 object StreamingPaths {
 
   case class PathInput(user_id: Long, event_id: Long, ts_ms: Long,
                        event_type: String)
-  case class PathState(lastTs: Long, lastId: Long,
-                       prev1: String, prev2: String)
+  case class PathState(prev1: String, prev2: String)
   case class PathOut(user_id: Long, e1: String, e2: String, e3: String)
 
   def sessionTrigrams(events: Dataset[PathInput],
                       gapMs: Long = 30L * 60000L): Dataset[PathOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[PathState, PathOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[PathInput], state: GroupState[PathState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts_ms, r.event_id))
-          var st = state.getOption.getOrElse(
-            PathState(Long.MinValue, Long.MinValue, null, null))
-          val out = scala.collection.mutable.ArrayBuffer.empty[PathOut]
-          sorted.foreach { r =>
-            val late = st.lastTs != Long.MinValue &&
-              (r.ts_ms < st.lastTs ||
-                (r.ts_ms == st.lastTs && r.event_id <= st.lastId))
-            if (!late) {
-              val gapBreak =
-                st.lastTs != Long.MinValue && r.ts_ms - st.lastTs > gapMs
-              val (p1, p2) =
-                if (gapBreak) (null, null) else (st.prev1, st.prev2)
-              if (p1 != null && p2 != null)
-                out += PathOut(user, p1, p2, r.event_type)
-              st = PathState(r.ts_ms, r.event_id, p2, r.event_type)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    StreamFold.inOrder(events)(_.user_id, r => (r.ts_ms, r.event_id)) {
+      (prev: Option[(StreamFold.Pos, PathState)], r: PathInput) =>
+        // the pair survives only within the session: a gap break (or
+        // the series head) starts it empty
+        val pair = prev.collect {
+          case ((lastTs, _), st) if r.ts_ms - lastTs <= gapMs => st }
+        val out = pair.collect { case PathState(p1, p2) if p1 != null && p2 != null =>
+          PathOut(r.user_id, p1, p2, r.event_type) }
+        (PathState(pair.map(_.prev2).orNull, r.event_type), out)
+    }
   }
 }

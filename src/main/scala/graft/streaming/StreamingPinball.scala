@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the pinball quantile backtest (q369,
   * operators.Events.pinballBacktest): per event type, keep the
@@ -18,16 +17,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the per-day (quantile, v, f, loss) rows equal the batch relation's
   * pre-aggregation rows exactly, so the aggregated means/coverages
   * match q369 (asserted in StreamingSpec on a shared fixture across a
-  * micro-batch boundary). Days at or below the per-type frontier are
-  * dropped.
-  *
-  * (State-schema note: PbState is the flatMapGroupsWithState state
-  * type; changing its fields invalidates existing checkpoints.)
+  * micro-batch boundary). A StreamFold.inOrder fold over the day: a
+  * duplicate or late day is dropped.
   */
 object StreamingPinball {
 
   case class DailyInput(event_type: String, day: Long, v: Double)
-  case class PbState(lastDay: Long, hist: Seq[Double])
   case class PbOut(event_type: String, day: Long, quantile: Double,
                    v: Double, f: Double, loss: Double)
 
@@ -38,33 +33,19 @@ object StreamingPinball {
              quantiles: Seq[Double] = Seq(0.5, 0.9)): Dataset[PbOut] = {
     import daily.sparkSession.implicits._
     val idxs = quantiles.map(q => q -> math.ceil(q * window).toInt)
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PbState, PbOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (typ: String, rows: Iterator[DailyInput], state: GroupState[PbState]) =>
-          val sorted = rows.toSeq.sortBy(_.day)
-          var st = state.getOption.getOrElse(PbState(Long.MinValue, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[PbOut]
-          sorted.foreach { r =>
-            if (r.day <= st.lastDay) {
-              // at or below the day frontier: duplicate/late, dropped
-            } else {
-              if (st.hist.length == window) {
-                val hs = st.hist.sorted
-                idxs.foreach { case (q, i) =>
-                  val f = hs(i - 1)
-                  val loss = round6(
-                    math.max(q * (r.v - f), (q - 1) * (r.v - f)))
-                  out += PbOut(typ, r.day, q, r.v, f, loss)
-                }
-              }
-              val hist = (st.hist :+ r.v).takeRight(window)
-              st = PbState(r.day, hist)
-            }
+    // state: the trailing `window` daily totals, oldest first
+    StreamFold.inOrder(daily)(_.event_type, r => (r.day, 0L)) {
+      (prev: Option[(StreamFold.Pos, Seq[Double])], r: DailyInput) =>
+        val hist = prev.fold(Seq.empty[Double])(_._2)
+        val out = if (hist.length < window) Nil else {
+          val hs = hist.sorted
+          idxs.map { case (q, i) =>
+            val f = hs(i - 1)
+            PbOut(r.event_type, r.day, q, r.v, f,
+              round6(math.max(q * (r.v - f), (q - 1) * (r.v - f))))
           }
-          state.update(st)
-          out.iterator
-      }
+        }
+        ((hist :+ r.v).takeRight(window), out)
+    }
   }
 }

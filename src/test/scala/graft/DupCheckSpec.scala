@@ -199,6 +199,27 @@ class DupCheckSpec extends AnyFunSuite {
     assert(hits.isEmpty, "cut with Iterate.cut and memoize with Iterate.memo, " +
       "so the session's checkpoint policy covers it:\n" + hits.mkString("\n"))
   }
+
+  test("src/main folds keyed streaming state only through StreamFold and the unordered accumulators") {
+    val root = new java.io.File("src/main")
+    assume(root.isDirectory) // repo-relative; skip outside the repo
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    // Update-mode accumulators fold unordered: no frontier, no session
+    val allowed = Set("StreamFold.scala", "StreamingBottomK.scala",
+      "StreamingCountMin.scala", "StreamingHeavyHitters.scala", "StreamingShapley.scala")
+    val hits = files(root)
+      .filter(f => f.getName.endsWith(".scala") && !allowed(f.getName))
+      .flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
+        lines.zipWithIndex.collect {
+          case (l, i) if l.contains(".flatMapGroupsWithState[") =>
+            s"${f.getPath}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(hits.isEmpty, "fold through StreamFold.inOrder or StreamFold.gapSessions, " +
+      "so the frontier and the idle flush stay written once:\n" + hits.mkString("\n"))
+  }
 }
 
 /** Orchestrator plumbing: the chunk-merge path reads child

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingEvents
@@ -1158,5 +1159,119 @@ class StreamingSpec extends AnyFunSuite {
         .as[(String, Long, Double)].collect().toSeq
       assert(replayed === batch)
     } finally q.stop()
+  }
+
+  /** One ordered twin's late-row case: after two micro-batches, a
+    * third holding a row at the key's frontier and one below it must
+    * emit nothing, and the next in-order row must emit `expected`.
+    * Returns the problems found, empty when the twin holds.
+    */
+  private def lateRowProblems[I: Encoder, O: Encoder](name: String,
+      fold: Dataset[I] => Dataset[O], first: Seq[I], second: Seq[I],
+      atFrontier: I, below: I, next: I, expected: Seq[O]): Seq[String] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[I]
+    val q = fold(input.toDS()).writeStream.outputMode("append")
+      .format("memory").queryName(s"late_$name").start()
+    def emitted = spark.table(s"late_$name").as[O].collect().toSeq
+    try {
+      Seq(first, second).foreach { b => input.addData(b); q.processAllAvailable() }
+      val before = emitted
+      input.addData(atFrontier, below)
+      q.processAllAvailable()
+      val late = emitted.diff(before)
+      input.addData(next)
+      q.processAllAvailable()
+      val after = emitted.diff(before).diff(late)
+      (if (late.isEmpty) Nil else Seq(s"$name: the late rows emitted $late")) ++
+        (if (after == expected) Nil
+         else Seq(s"$name: the next row emitted $after, expected $expected"))
+    } finally q.stop()
+  }
+
+  test("every ordered twin drops a row at or below its frontier and folds on unchanged") {
+    import spark.implicits._
+    import graft.streaming._
+    import StreamingEvents.{OrdOut, SessionInput}
+    import StreamingAttribution.{Attribution, TouchInput}
+    import StreamingFunnel.{FunnelInput, FunnelUpdate}
+    import StreamingPaths.{PathInput, PathOut}
+    import StreamingCroston.{CrostonOut, WeeklyDemand}
+    import StreamingGapFill.{DayInput, FillOut}
+    import StreamingTransitions.{TrInput, TrOut}
+    import StreamingEwma.{DailyInput => Ewma}
+    import StreamingCusum.{DailyInput => Cusum}
+    import StreamingPinball.{DailyInput => Pinball}
+    import StreamingPageHinkley.{DailyInput => Ph}
+    val problems = Seq(
+      lateRowProblems[SessionInput, OrdOut]("ordered",
+        StreamingEvents.orderedAnalytics,
+        Seq(SessionInput(1L, 1L, 1000L, 1.0)), Seq(SessionInput(1L, 2L, 2000L, 2.0)),
+        SessionInput(1L, 2L, 2000L, 5.0), SessionInput(1L, 0L, 500L, 7.0),
+        SessionInput(1L, 3L, 3000L, 0.5),
+        Seq(OrdOut(1L, 3L, 3000L, 3, Some(1000L), 3.5))),
+      lateRowProblems[TouchInput, Attribution]("attribution",
+        StreamingAttribution.attribute,
+        Seq(TouchInput(1L, 1L, 1000L, "view", 0.0)),
+        Seq(TouchInput(1L, 2L, 2000L, "click", 0.0)),
+        TouchInput(1L, 2L, 2000L, "purchase", 9.0),
+        TouchInput(1L, 0L, 500L, "purchase", 9.0),
+        TouchInput(1L, 3L, 3000L, "purchase", 10.0),
+        Seq(Attribution(1L, 3L, 3000L, "click", 10.0))),
+      // the frontier is a non-advancing signup, so both late purchases
+      // would advance the funnel if they were folded
+      lateRowProblems[FunnelInput, FunnelUpdate]("funnel", StreamingFunnel.track,
+        Seq(FunnelInput(1L, 1L, 1000L, "signup")),
+        Seq(FunnelInput(1L, 2L, 2000L, "click"), FunnelInput(1L, 3L, 3000L, "signup")),
+        FunnelInput(1L, 3L, 3000L, "purchase"), FunnelInput(1L, 0L, 2500L, "purchase"),
+        FunnelInput(1L, 4L, 4000L, "purchase"),
+        Seq(FunnelUpdate(1L, 1000L, Some(2000L), Some(4000L), 3))),
+      lateRowProblems[PathInput, PathOut]("paths", StreamingPaths.sessionTrigrams(_),
+        Seq(PathInput(1L, 1L, 1000L, "a"), PathInput(1L, 2L, 2000L, "b")),
+        Seq(PathInput(1L, 3L, 3000L, "c")),
+        PathInput(1L, 3L, 3000L, "x"), PathInput(1L, 0L, 500L, "y"),
+        PathInput(1L, 4L, 4000L, "d"),
+        Seq(PathOut(1L, "b", "c", "d"))),
+      lateRowProblems[Ewma, StreamingEwma.EwmaOut]("ewma", StreamingEwma.chart,
+        Seq(Ewma("m", 0L, 10000000L)), Seq(Ewma("m", 1L, 20000000L)),
+        Ewma("m", 1L, 99000000L), Ewma("m", 0L, 5000000L),
+        Ewma("m", 2L, 5000000L),
+        Seq(StreamingEwma.EwmaOut("m", 2L, 5000000L, 10600000L, Some(-7000000L), Some(0)))),
+      lateRowProblems[Cusum, StreamingCusum.CusumOut]("cusum",
+        StreamingCusum.chart(_, Map("m" -> (10000000L, 2000000L))),
+        Seq(Cusum("m", 0L, 10000000L)), Seq(Cusum("m", 1L, 15000000L)),
+        Cusum("m", 1L, 99000000L), Cusum("m", 0L, 99000000L),
+        Cusum("m", 2L, 20000000L),
+        Seq(StreamingCusum.CusumOut("m", 2L, 20000000L, 13000000L, 0L, 1))),
+      lateRowProblems[Pinball, StreamingPinball.PbOut]("pinball",
+        StreamingPinball.losses(_, window = 2, quantiles = Seq(0.5)),
+        Seq(Pinball("m", 0L, 1.0)), Seq(Pinball("m", 1L, 3.0)),
+        Pinball("m", 1L, 100.0), Pinball("m", 0L, 100.0),
+        Pinball("m", 2L, 2.0),
+        Seq(StreamingPinball.PbOut("m", 2L, 0.5, 2.0, 1.0, 0.5))),
+      lateRowProblems[Ph, StreamingPageHinkley.PhOut]("page_hinkley",
+        StreamingPageHinkley.detect(_, Map("m" -> 1.0)),
+        Seq(Ph("m", 0L, 10L)), Seq(Ph("m", 1L, 2L)),
+        Ph("m", 1L, 50L), Ph("m", 0L, 50L),
+        Ph("m", 2L, 20L),
+        Seq(StreamingPageHinkley.PhOut("m", 2L, 20L, 9.333333, 1))),
+      lateRowProblems[WeeklyDemand, CrostonOut]("croston", StreamingCroston.forecasts,
+        Seq(WeeklyDemand(1L, 0L, 4.0)), Seq(WeeklyDemand(1L, 2L, 2.0)),
+        WeeklyDemand(1L, 2L, 9.0), WeeklyDemand(1L, 1L, 9.0),
+        WeeklyDemand(1L, 5L, 6.0),
+        Seq(CrostonOut(1L, 5L, 3L, 4.5, Some(2.5), Some(1.8)))),
+      lateRowProblems[DayInput, FillOut]("gap_fill", StreamingGapFill.fill,
+        Seq(DayInput(1L, 10L, 2.5)), Seq(DayInput(1L, 11L, 3.0)),
+        DayInput(1L, 11L, 9.0), DayInput(1L, 10L, 9.0),
+        DayInput(1L, 13L, 4.0),
+        Seq(FillOut(1L, 12L, 3.0, is_observed = false, 1L),
+          FillOut(1L, 13L, 4.0, is_observed = true, 0L))),
+      lateRowProblems[TrInput, TrOut]("transitions", StreamingTransitions.pairs,
+        Seq(TrInput(1L, 1L, 1000L, "a")), Seq(TrInput(1L, 2L, 2000L, "b")),
+        TrInput(1L, 2L, 2000L, "x"), TrInput(1L, 0L, 500L, "y"),
+        TrInput(1L, 3L, 3000L, "c"),
+        Seq(TrOut(1L, "b", "c")))
+    ).flatten
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }
