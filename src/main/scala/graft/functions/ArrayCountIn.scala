@@ -31,8 +31,23 @@ case class ArrayCountIn(child: Expression, words: Seq[String])
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    ArrayCountIn.countMembers(input.asInstanceOf[ArrayData], set)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => {
+      val setRef = ctx.addReferenceObj("wordSet", set, "java.util.HashSet")
+      s"${classOf[ArrayCountIn].getName}.countMembers($c, $setRef)"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): ArrayCountIn =
+    copy(child = newChild)
+}
+
+object ArrayCountIn {
+
+  /** The kernel, shared by eval and generated code: elements in `set`. */
+  def countMembers(arr: ArrayData, set: java.util.HashSet[UTF8String]): Long = {
     val n = arr.numElements()
     var c = 0L
     var i = 0
@@ -43,27 +58,6 @@ case class ArrayCountIn(child: Expression, words: Seq[String])
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val setRef = ctx.addReferenceObj("wordSet", set, "java.util.HashSet")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val cnt = ctx.freshName("cnt")
-      s"""
-         |int $n = $c.numElements();
-         |long $cnt = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($setRef.contains($c.getUTF8String($i))) $cnt++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ArrayCountIn =
-    copy(child = newChild)
-}
-
-object ArrayCountIn {
   def countIn(arr: Column, words: Seq[String]): Column =
     column(ArrayCountIn(expression(arr), words))
 }

@@ -27,58 +27,37 @@ case class ArrayMaxFreq(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "graft_array_max_freq"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) null
-    else {
-      val counts = new java.util.HashMap[UTF8String, java.lang.Long](n * 2)
-      var best = 0L
-      var i = 0
-      while (i < n) {
-        val k = arr.getUTF8String(i)
-        val c = counts.merge(k, 1L, (a, b) => a + b)
-        if (c > best) best = c
-        i += 1
-      }
-      best
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    ArrayMaxFreq.modeCount(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts")
-      val best = ctx.freshName("best")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val cur = ctx.freshName("cur")
-      val v = ctx.freshName("v")
-      val u8 = classOf[UTF8String].getName
-      // raw-type HashMap: janino's generics support is unreliable
-      s"""
-         |int $n = $c.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  java.util.HashMap $counts = new java.util.HashMap($n * 2);
-         |  long $best = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $u8 $k = $c.getUTF8String($i);
-         |    Object $cur = $counts.get($k);
-         |    long $v = ($cur == null) ? 1L : ((Long) $cur).longValue() + 1L;
-         |    $counts.put($k, java.lang.Long.valueOf($v));
-         |    if ($v > $best) $best = $v;
-         |  }
-         |  ${ev.value} = $best;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      KernelCode.nullable(ev, s"${classOf[ArrayMaxFreq].getName}.modeCount($c)"))
 
   override protected def withNewChildInternal(newChild: Expression): ArrayMaxFreq =
     copy(child = newChild)
 }
 
 object ArrayMaxFreq {
+
+  /** The kernel, shared by eval and generated code: the largest element
+    * count, null for an empty array. */
+  def modeCount(arr: ArrayData): java.lang.Long = {
+    val n = arr.numElements()
+    if (n == 0) return null
+    val counts = new java.util.HashMap[UTF8String, java.lang.Long](n * 2)
+    var best = 0L
+    var i = 0
+    while (i < n) {
+      val k = arr.getUTF8String(i)
+      val cur = counts.get(k)
+      val v = if (cur == null) 1L else cur.longValue + 1L
+      counts.put(k, v)
+      if (v > best) best = v
+      i += 1
+    }
+    best
+  }
+
   def maxFreq(arr: Column): Column = column(ArrayMaxFreq(expression(arr)))
 }

@@ -42,9 +42,7 @@ case class CharWindowHashes(child: Expression, l: Int)
     CharWindowHashes.hashes(input.asInstanceOf[UTF8String], l)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s =>
-      s"${CharWindowHashes.getClass.getName.stripSuffix("$")}$$.MODULE$$" +
-        s".hashes($s, $l)")
+    defineCodeGen(ctx, ev, s => s"${classOf[CharWindowHashes].getName}.hashes($s, $l)")
 
   override protected def withNewChildInternal(newChild: Expression): CharWindowHashes =
     copy(child = newChild)
@@ -67,7 +65,7 @@ object CharWindowHashes {
     r
   }
 
-  /** Shared by interpreted eval and generated code. Returns the
+  /** The kernel, shared by eval and generated code. Returns the
     * (numBytes - l + 1) window hashes, empty when the string is
     * shorter than l.
     */

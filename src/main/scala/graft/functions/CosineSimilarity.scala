@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (`aggregate(zip_with(...))` + two norm aggregates) is built from
   * higher-order functions, which are CodegenFallback — every row pays
   * interpreted lambda dispatch and array allocation. This expression
-  * generates a single fused loop (one pass: dot + both norms), keeping
+  * runs a single fused loop (one pass: dot + both norms), keeping
   * the kNN/near-dup kernels inside WholeStageCodegen.
   *
   * Numerics are identical to the composable form and the DuckDB
@@ -51,9 +51,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
     * than a silently-truncated prefix similarity. Elements must be
     * non-null floats (embedding columns; enforced upstream).
     */
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosineOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      KernelCode.nullable(ev, s"${classOf[CosineSimilarity].getName}.cosineOf($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** The kernel, shared by eval and generated code: one pass for the
+    * dot product and both norms, null on a length mismatch. */
+  def cosineOf(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -67,37 +81,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xv = (double) $a.getFloat($i);
-         |    double $yv = (double) $b.getFloat($i);
-         |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |  }
-         |  ${ev.value} = $dot / (Math.sqrt($na) * Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
   def cosine(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
 }

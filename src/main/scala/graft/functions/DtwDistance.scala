@@ -41,9 +41,26 @@ case class DtwDistance(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  // an empty side => NULL regardless of child nullability
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DtwDistance.dtwOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      KernelCode.nullable(ev, s"${classOf[DtwDistance].getName}.dtwOf($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DtwDistance =
+    copy(left = newLeft, right = newRight)
+}
+
+object DtwDistance {
+
+  /** The kernel, shared by eval and generated code: two rolling
+    * `double[m]` rows per call, null when either side is empty. */
+  def dtwOf(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements(); val m = y.numElements()
     if (n == 0 || m == 0) return null
     val prev = new Array[Double](m)
@@ -70,47 +87,6 @@ case class DtwDistance(left: Expression, right: Expression)
     prev(m - 1)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val prev = ctx.freshName("prev"); val cur = ctx.freshName("cur")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val m3 = ctx.freshName("m3")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |if ($n == 0 || $m == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double[] $prev = new double[$m];
-         |  double[] $cur = new double[$m];
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    double $c = Math.abs($a.getDouble(0) - $b.getDouble($j));
-         |    $prev[$j] = ($j == 0) ? $c : $c + $prev[$j - 1];
-         |  }
-         |  for (int $i = 1; $i < $n; $i++) {
-         |    $cur[0] = Math.abs($a.getDouble($i) - $b.getDouble(0)) + $prev[0];
-         |    for (int $j = 1; $j < $m; $j++) {
-         |      double $c = Math.abs($a.getDouble($i) - $b.getDouble($j));
-         |      double $m3 = Math.min($prev[$j],
-         |        Math.min($prev[$j - 1], $cur[$j - 1]));
-         |      $cur[$j] = $c + $m3;
-         |    }
-         |    System.arraycopy($cur, 0, $prev, 0, $m);
-         |  }
-         |  ${ev.value} = $prev[$m - 1];
-         |}
-       """.stripMargin
-    })
-
-  override def nullable: Boolean = true
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DtwDistance =
-    copy(left = newLeft, right = newRight)
-}
-
-object DtwDistance {
   def dtw(a: Column, b: Column): Column =
     column(DtwDistance(expression(a), expression(b)))
 }

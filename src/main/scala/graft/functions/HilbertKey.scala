@@ -53,8 +53,7 @@ case class HilbertKey(left: Expression, right: Expression, bits: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (x, y) =>
-      s"${HilbertKey.getClass.getName.stripSuffix("$")}$$.MODULE$$" +
-        s".key((long)$x, (long)$y, $bits)")
+      s"${classOf[HilbertKey].getName}.key((long)$x, (long)$y, $bits)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HilbertKey =
@@ -65,7 +64,7 @@ object HilbertKey {
 
   /** xy→d: walk bit levels high to low; at each level pick the
     * quadrant (Gray-coded: (3·rx)⊕ry) and rotate/flip the frame for
-    * the levels below. Shared by interpreted and generated code.
+    * the levels below. The kernel, shared by eval and generated code.
     */
   def key(xIn: Long, yIn: Long, bits: Int): Long = {
     val mask = (1L << bits) - 1

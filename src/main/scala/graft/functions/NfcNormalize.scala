@@ -34,7 +34,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     NfcNormalize.nfc(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfcNormalize.nfc($c)")
+    defineCodeGen(ctx, ev, c => s"${classOf[NfcNormalize].getName}.nfc($c)")
 
   override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
     copy(child = newChild)
@@ -42,7 +42,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
 object NfcNormalize {
 
-  /** Static kernel shared by eval and generated code. Fast path: NFC
+  /** The kernel, shared by eval and generated code. Fast path: NFC
     * normalization is the identity on most real text (and on all
     * ASCII); `isNormalized` is a cheap scan that avoids allocating.
     */

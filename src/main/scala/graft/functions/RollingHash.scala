@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why custom (SURVEY §2.11): the composable form
   * (`aggregate(tokens, ...)` in TextFunctions.rollingFingerprintHof)
   * is a higher-order function — CodegenFallback, interpreted lambda
-  * dispatch per token in q24's hot path. This expression generates one
+  * dispatch per token in q24's hot path. This expression runs one
   * fused loop. Semantics are IDENTICAL to the HOF form (asserted
   * bit-for-bit in PipelineSpec, unicode included): `length` = code
   * point count = UTF8String.numChars, `ascii` = first code point
@@ -42,35 +42,12 @@ case class RollingHash(child: Expression) extends UnaryExpression {
       s"$prettyName requires array<string>, got ${other.catalogString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var h = 0L
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      h = RollingHash.step(h, arr.getUTF8String(i))
-      i += 1
-    }
-    h
-  }
+  override def nullSafeEval(input: Any): Any =
+    RollingHash.foldTokens(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val cls = RollingHash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |int $n = $arr.numElements();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($arr.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $h = $cls.step($h, $arr.getUTF8String($i));
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, arr =>
+      KernelCode.nullable(ev, s"${classOf[RollingHash].getName}.foldTokens($arr)"))
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
@@ -80,14 +57,27 @@ object RollingHash {
   /** Fold modulus: keeps h*131 + code < 2^38 (exact in any engine). */
   val Modulus: Long = 1000000007L
 
-  /** One fold step — shared by interpreted and generated code so the
-    * arithmetic exists once. numChars counts code points (= Spark
-    * `length`); the first code point is read through a one-codepoint
-    * substring (<= 4 bytes copied — same shape as Spark's own Ascii),
-    * matching `ascii` incl. supplementary planes; empty token
-    * contributes code 0.
+  /** The kernel, shared by eval and generated code: the fold over the
+    * tokens left to right, null at the first null token. */
+  def foldTokens(arr: ArrayData): java.lang.Long = {
+    val n = arr.numElements()
+    var h = 0L
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      h = step(h, arr.getUTF8String(i))
+      i += 1
+    }
+    h
+  }
+
+  /** One fold step. numChars counts code points (= Spark `length`);
+    * the first code point is read through a one-codepoint substring
+    * (<= 4 bytes copied — same shape as Spark's own Ascii), matching
+    * `ascii` incl. supplementary planes; empty token contributes
+    * code 0.
     */
-  def step(h: Long, t: UTF8String): Long = {
+  private def step(h: Long, t: UTF8String): Long = {
     val chars = t.numChars().toLong
     val code =
       if (chars == 0) 0L else t.substring(0, 1).toString.codePointAt(0).toLong

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * per-element sign compares) is higher-order functions —
   * CodegenFallback, per-row lambda dispatch and array allocation. At
   * 100 TB the Hamming scan IS the query (one pass over every vector
-  * per probe); this expression generates one fused branch-free loop
-  * and keeps the scan inside WholeStageCodegen. A deploy-grade store
+  * per probe); this expression runs one fused loop and keeps the scan
+  * inside WholeStageCodegen. A deploy-grade store
   * would pre-pack the sign bits into longs and XOR+popcount; the
   * RELATION is identical, which is what the oracle grades.
   *
@@ -44,9 +44,23 @@ case class SignHamming(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SignHamming.hammingOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      KernelCode.nullable(ev, s"${classOf[SignHamming].getName}.hammingOf($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SignHamming =
+    copy(left = newLeft, right = newRight)
+}
+
+object SignHamming {
+
+  /** The kernel, shared by eval and generated code: positions whose
+    * signs differ, null on a length mismatch. */
+  def hammingOf(x: ArrayData, y: ArrayData): Integer = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var hd = 0
@@ -58,31 +72,6 @@ case class SignHamming(left: Expression, right: Expression)
     hd
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val hd = ctx.freshName("hd")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $hd = 0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $hd += (($a.getFloat($i) > 0f) != ($b.getFloat($i) > 0f)) ? 1 : 0;
-         |  }
-         |  ${ev.value} = $hd;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SignHamming =
-    copy(left = newLeft, right = newRight)
-}
-
-object SignHamming {
   def signHamming(a: Column, b: Column): Column =
     column(SignHamming(expression(a), expression(b)))
 }

@@ -42,9 +42,22 @@ case class SortedFloorIndex(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val t = b.asInstanceOf[Long]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedFloorIndex.floorOf(a.asInstanceOf[ArrayData], b.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${classOf[SortedFloorIndex].getName}.floorOf($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedFloorIndex =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedFloorIndex {
+
+  /** The kernel, shared by eval and generated code: the binary search. */
+  def floorOf(arr: ArrayData, t: Long): Int = {
     var lo = 0
     var hi = arr.numElements() - 1
     var ans = -1
@@ -56,29 +69,6 @@ case class SortedFloorIndex(left: Expression, right: Expression)
     ans
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid"); val ans = ctx.freshName("ans")
-      s"""
-         |int $lo = 0;
-         |int $hi = $a.numElements() - 1;
-         |int $ans = -1;
-         |while ($lo <= $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  if ($a.getLong($mid) <= $b) { $ans = $mid; $lo = $mid + 1; }
-         |  else { $hi = $mid - 1; }
-         |}
-         |${ev.value} = $ans;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedFloorIndex =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedFloorIndex {
   def floorIndex(arr: Column, t: Column): Column =
     column(SortedFloorIndex(expression(arr), expression(t)))
 }

@@ -39,9 +39,22 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.mergeCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${classOf[SortedIntersectCount].getName}.mergeCount($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+
+  /** The kernel, shared by eval and generated code: the merge walk. */
+  def mergeCount(x: ArrayData, y: ArrayData): Long = {
     val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < nx && j < ny) {
@@ -53,33 +66,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $i = 0, $j = 0;
-         |long $c = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectCount {
   def intersectCount(a: Column, b: Column): Column =
     column(SortedIntersectCount(expression(a), expression(b)))
 }

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is a higher-order function — CodegenFallback, per-row lambda
   * dispatch plus a `sequence` array allocation — sitting in the
   * hottest text paths (shingles for q26/q27/q54, bigrams for q55/q56,
-  * trigrams for q61). This generates one fused loop building the
+  * trigrams for q61). This runs one fused loop building the
   * output array directly.
   *
   * Semantics are identical to the composable form for n >= 1 on
@@ -31,58 +31,36 @@ case class WordNGrams(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_ngrams"
 
-  private val sep = UTF8String.fromString(" ")
-
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val m = toks.numElements() - n + 1
-    if (m <= 0) new GenericArrayData(Array.empty[Any])
-    else {
-      val out = new Array[Any](m)
-      var i = 0
-      while (i < m) {
-        val parts = new Array[UTF8String](n)
-        var j = 0
-        while (j < n) { parts(j) = toks.getUTF8String(i + j); j += 1 }
-        out(i) = UTF8String.concatWs(sep, parts: _*)
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    WordNGrams.grams(input.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val sepRef = ctx.addReferenceObj("sep", sep, classOf[UTF8String].getName)
-      val m = ctx.freshName("m")
-      val res = ctx.freshName("res")
-      val parts = ctx.freshName("parts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val u8 = classOf[UTF8String].getName
-      val gad = classOf[GenericArrayData].getName
-      s"""
-         |int $m = $c.numElements() - $n + 1;
-         |if ($m <= 0) {
-         |  ${ev.value} = new $gad(new Object[0]);
-         |} else {
-         |  Object[] $res = new Object[$m];
-         |  $u8[] $parts = new $u8[$n];
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $parts[$j] = $c.getUTF8String($i + $j);
-         |    }
-         |    $res[$i] = $u8.concatWs($sepRef, $parts);
-         |  }
-         |  ${ev.value} = new $gad($res);
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"${classOf[WordNGrams].getName}.grams($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): WordNGrams =
     copy(child = newChild)
 }
 
 object WordNGrams {
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** The kernel, shared by eval and generated code: the n-grams,
+    * reusing one `parts` array for the row. */
+  def grams(toks: ArrayData, n: Int): ArrayData = {
+    val m = toks.numElements() - n + 1
+    if (m <= 0) return new GenericArrayData(new Array[Any](0))
+    val out = new Array[Any](m)
+    val parts = new Array[UTF8String](n)
+    var i = 0
+    while (i < m) {
+      var j = 0
+      while (j < n) { parts(j) = toks.getUTF8String(i + j); j += 1 }
+      out(i) = UTF8String.concatWs(Space, parts: _*)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
   def ngrams(toks: Column, n: Int): Column = column(WordNGrams(expression(toks), n))
 }

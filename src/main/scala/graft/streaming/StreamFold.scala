@@ -20,9 +20,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    tiebreak predecessor), or `(day, 0)` for a daily series, where a
   *    duplicate day is dropped. For frontier-respecting input the folded
   *    rows equal the batch window exactly.
-  *  - `gapSessions` keeps no frontier: a row sorts into the open session
-  *    of its micro-batch, so replayed in-order input equals the batch
-  *    gap islands.
+  *  - `gapSessions`' frontier is the open session's last ts: a row
+  *    strictly below it is dropped (it would move the session backwards),
+  *    a row at it extends the session. Within a micro-batch rows sort
+  *    first, so replayed in-order input equals the batch gap islands.
   *
   * State-schema note: a twin's checkpointed state is this object's
   * wrapper (`Folded` or `Session`) around the twin's own state type.
@@ -71,8 +72,9 @@ object StreamFold {
   }
 
   /** Gap sessions: per key, rows sort by `pos` within the micro-batch;
-    * a row within `gapMs` of the open session's last ts extends it,
-    * a farther one closes it (emitting `close`) and opens the next.
+    * a row below the open session's last ts is dropped, one within
+    * `gapMs` of it extends it, a farther one closes it (emitting
+    * `close`) and opens the next.
     * With `idleTimeout` a session idle for `gapMs` of processing time
     * is flushed too — without it an idle key's last session sits in
     * state until its next row (flatMapGroupsWithState only runs for a
@@ -98,13 +100,14 @@ object StreamFold {
             val out = Seq.newBuilder[O]
             batch.toSeq.sortBy(pos).foreach { r =>
               val ts = pos(r)._1
-              cur = Some(cur match {
+              cur match {
+                case Some(s) if ts < s.last => // late: dropped
                 case Some(s) if ts - s.last <= gapMs =>
-                  Session(s.start, ts, s.n + 1, extend(s.state, r))
+                  cur = Some(Session(s.start, ts, s.n + 1, extend(s.state, r)))
                 case closed =>
                   closed.foreach(s => out += close(k, s))
-                  Session(ts, ts, 1L, open(r))
-              })
+                  cur = Some(Session(ts, ts, 1L, open(r)))
+              }
             }
             cur.foreach { s =>
               state.update(s)

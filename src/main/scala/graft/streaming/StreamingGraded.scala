@@ -531,7 +531,6 @@ object StreamingGraded {
       .map(r => SessEv(r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
       .sortBy(e => (e.ts.getTime, e.user_id))
       .toIndexedSeq
-    val maxMs = feed.last.ts.getTime
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[SessEv]
     val sink = s"session_window_replay_${runSeq.incrementAndGet()}"
@@ -557,11 +556,14 @@ object StreamingGraded {
       // real session's end + gap; the second forces the micro-batch in
       // which that watermark is applied, flushing all closed sessions
       // (append-mode results materialize one batch after the data that
-      // advanced the watermark — the q552 padding-batch lesson)
-      Seq(1L, 2L).foreach { k =>
-        mem.addData(SessEv(-1L,
-          new java.sql.Timestamp(maxMs + k * (gapMs + 60000L)), 0.0))
-        query.processAllAvailable()
+      // advanced the watermark — the q552 padding-batch lesson); an
+      // empty feed has no session to flush
+      feed.lastOption.foreach { last =>
+        Seq(1L, 2L).foreach { k =>
+          mem.addData(SessEv(-1L,
+            new java.sql.Timestamp(last.ts.getTime + k * (gapMs + 60000L)), 0.0))
+          query.processAllAvailable()
+        }
       }
     } finally { query.stop(); FileUtils.deleteQuietly(ckpt.toFile) }
     drainSink(spark, sink) { t =>

@@ -200,6 +200,30 @@ class DupCheckSpec extends AnyFunSuite {
       "so the session's checkpoint policy covers it:\n" + hits.mkString("\n"))
   }
 
+  test("graft.functions keeps each kernel in one companion method, called by its class name") {
+    val root = new java.io.File("src/main/scala/graft/functions")
+    assume(root.isDirectory) // repo-relative; skip outside the repo
+    // a hand-written Java kernel needs fresh names; the other two are the
+    // retired spellings of a kernel's class in generated code
+    val banned = Seq("freshName(", "$.MODULE$", "\"graft.functions.")
+    val sources = root.listFiles.toSeq.filter(_.getName.endsWith(".scala"))
+    val hits = sources.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
+      lines.zipWithIndex.collect {
+        case (l, i) if banned.exists(l.contains) => s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    // every generated-code site calls its own companion's kernel
+    val unnamed = sources.filter { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      text.contains("def doGenCode") &&
+        !text.contains(s"$${classOf[${f.getName.stripSuffix(".scala")}].getName}.")
+    }.map(_.getPath)
+    assert(hits.isEmpty && unnamed.isEmpty, "call the companion's kernel from " +
+      "doGenCode through classOf[X].getName:\n" +
+      (hits ++ unnamed).mkString("\n"))
+  }
+
   test("src/main folds keyed streaming state only through StreamFold and the unordered accumulators") {
     val root = new java.io.File("src/main")
     assume(root.isDirectory) // repo-relative; skip outside the repo

@@ -182,6 +182,21 @@ class Round14OpsSpec extends AnyFunSuite {
       "sample must contain at least one multi-event session")
   }
 
+  test("q554 on an empty events table returns the empty relation") {
+    val spark = SharedSpark.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-q554").toString
+    Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val empty = graft.streaming.StreamingGraded.sessionWindowReplay(spark, dir)
+    assert(empty.collect().isEmpty)
+    val graded = graft.streaming.StreamingGraded
+      .sessionWindowReplay(spark, SharedSpark.sf0001)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ===
+      graded.schema.map(f => (f.name, f.dataType)))
+  }
+
   // ---------------- q536 FLAC independent round-trip ----------------
 
   /** Hand-assembled FLAC: STREAMINFO packing 96000 Hz / 6 ch / 24 bps

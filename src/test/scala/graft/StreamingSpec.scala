@@ -1161,6 +1161,55 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("every gap-session twin drops a row below its open session's last ts") {
+    import spark.implicits._
+    import graft.streaming.{StreamingBurst, StreamingEntryExit}
+    import StreamingEvents.{SessionInput, SessionOut}
+    import StreamingBurst.{BurstInput, BurstOut}
+    import StreamingEntryExit.{EEInput, EEOut}
+    // a folded late row would show in the closed session: its count,
+    // its last ts, its value sum or its exit type
+    val problems = Seq(
+      lateSessionProblems[SessionInput, SessionOut]("sessionize",
+        StreamingEvents.sessionize(_, 1000L, idleTimeout = false),
+        ts => SessionInput(1L, ts, ts, ts.toDouble),
+        SessionOut(1L, 5000L, 5000L, 1L, 5000.0)),
+      lateSessionProblems[BurstInput, BurstOut]("burst",
+        StreamingBurst.compact(_, 1000L, idleTimeout = false),
+        ts => BurstInput(1L, ts, ts, "view"),
+        BurstOut(1L, "view", 5000L, 5000L, 5000L, 1L, 0L)),
+      lateSessionProblems[EEInput, EEOut]("entry_exit",
+        StreamingEntryExit.sessions(_, 1000L, idleTimeout = false),
+        ts => EEInput(1L, ts, ts, if (ts == 100L) "late" else "view"),
+        EEOut(1L, "view", "view", 1L))
+    ).flatten
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  /** One gap-session twin's late-row case, gap 1000 ms: micro-batches
+    * with ts 5000, then 100, then 10000. The second must emit nothing
+    * and leave the open session as it was, so the third closes it as
+    * `closed`. Returns the problems found, empty when the twin holds.
+    */
+  private def lateSessionProblems[I: Encoder, O: Encoder](name: String,
+      fold: Dataset[I] => Dataset[O], at: Long => I, closed: O): Seq[String] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[I]
+    val q = fold(input.toDS()).writeStream.outputMode("append")
+      .format("memory").queryName(s"late_session_$name").start()
+    try {
+      val emitted = Seq(5000L, 100L, 10000L).map { ts =>
+        input.addData(at(ts))
+        q.processAllAvailable()
+        spark.table(s"late_session_$name").as[O].collect().toSeq
+      }
+      (if (emitted(1).isEmpty) Nil
+       else Seq(s"$name: the late batch emitted ${emitted(1)}")) ++
+        (if (emitted(2) == Seq(closed)) Nil
+         else Seq(s"$name: the third batch emitted ${emitted(2)}, expected $closed"))
+    } finally q.stop()
+  }
+
   /** One ordered twin's late-row case: after two micro-batches, a
     * third holding a row at the key's frontier and one below it must
     * emit nothing, and the next in-order row must emit `expected`.
